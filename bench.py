@@ -1,14 +1,27 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1), local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+"""Benchmark harness: the HEADLINE queries at $SPARK_GRAFT_SF_DIR (default
+sf0.1), local[$SPARK_GRAFT_CPUS].
 
-Method: one warm-up execution (JVM/codegen warm), then MIN of 3 timed
-runs per query (the timeit estimator: min is the measurement least
-polluted by co-tenant load on a shared host — ambient contention can
-only ever slow a run down, never speed it up); results are materialized
-with the noop sink (full execution, no driver collection cost).
-BASELINE.md records the numbers.
+Each query runs 1 + RUNS times, each time built and executed from an
+empty cache under its own Spark job group. The first run is the warm-up
+(codegen); the wall is the MIN of the other RUNS (min is the estimate
+least polluted by co-tenant load: contention only ever slows a run
+down). Results are materialized with the noop sink. Each run's jobs,
+stages, tasks, shuffle records and input bytes are read from the status
+store (``perfbench.trace.job_group_counters``).
+
+The regression gate is structural. The counters do not depend on host
+speed, so each run compares them with the committed
+``BENCH_PROFILE.json`` entry for its fixture and core count, prints FAIL
+with every query/counter that went up, and rewrites that entry (one line
+per query; a counter that differs between a query's executions is kept
+as its [lowest, highest]). A change that moves a plan commits the
+rewritten file, so the counter diff is what review sees. A fixture/core
+count with no entry is recorded and passes. Walls stay in the payload as
+corroboration.
+
+Prints the full payload as one JSON line (also written to
+``BENCH_LOCAL.json``), then a short summary line.
 """
 
 from __future__ import annotations
@@ -16,17 +29,21 @@ from __future__ import annotations
 import json
 import os
 import re
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from ecommerce_data_pipeline_spark import plans  # noqa: E402
 from ecommerce_data_pipeline_spark.session import get_spark  # noqa: E402
+from perfbench.trace import job_group_counters  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 RUNS = 3
+PROFILE = os.path.join(REPO, "BENCH_PROFILE.json")
 
 HEADLINE = [
     "flagship_revenue",
@@ -259,463 +276,178 @@ HEADLINE = [
 # while the headline suite grows.
 CORE21 = HEADLINE[:21]
 
-# Queries BASELINE.md documents as host-phase-sensitive (r4–r6 drift
-# saga: wide shuffle/aggregation shapes whose walls track the PARALLEL
-# marker, swinging ~2× with hypervisor oversubscription phases while
-# their plans are untouched). Each is bracketed with its own parallel
-# marker measured immediately after its timed runs, so a reader can
-# separate "the host was in a slow phase AT THIS QUERY" from a plan
-# regression without re-running anything (VERDICT r6 task #6).
-PHASE_SENSITIVE = [
-    "doc_novelty_score",
-    "minhash_lsh_neardup",
-    "cross_doc_substring_dups",
-    "q2_min_cost_supplier",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q21_suppliers_kept_waiting",
-    "pivot_priority_counts",
-    # r8 (VERDICT r7 task #3): the siegel re-measure showed a ~15-stage
-    # plan whose wall (0.53 r6 → 0.78 r7 → 0.84 r8 floor at FAST
-    # markers) tracks scheduler-LATENCY phases rather than the parallel
-    # throughput marker; plan audited unchanged, percentile rewrite
-    # prototyped at ≤5% gain and rejected (BASELINE.md r8). Bracket it.
-    "siegel_revenue_trend",
-    # r9 (VERDICT r8 task #5): the five r8 sub-second movers — source
-    # untouched since r7, walls swung 1.25–1.7x with the documented
-    # sub-second band. Bracketing them gives every future round a
-    # per-query marker so the band claim is checkable without re-runs.
-    "ab_welch_ttest_segments",
-    "seasonal_naive_backtest",
-    "revenue_cusum_changepoint",
-    "embedding_lsh_topk",
-    "embedding_cosine_topk",
-    # r10 (VERDICT r9 task #8): the three r9 >1.1x movers — source
-    # untouched, swings inside the documented sub-second/phase band;
-    # bracket them so the r10 re-measure is marker-normalized.
-    # (cross_doc_substring_dups was already bracketed in the r4-6 block.)
-    "leakage_safe_split",
-    "semantic_dedup_keeplist",
-    # r11 (VERDICT r10 task #4): the four r10 >1.4x movers — source
-    # git-verified untouched in r10, inflation carried the broad
-    # ambient-phase signature; bracket them for the marker-normalized
-    # re-measure.
-    "logrank_survival_test",
-    "cf_holdout_hitrate",
-    "stupid_backoff_trigram_score",
-    "rrf_rank_fusion",
-    # r12 (VERDICT r11 task #3): the three r11 >2x movers — code
-    # git-verified untouched since the r10 stamp (the r11 judge diffed
-    # a22d0aa..HEAD), host markers degraded 12-37% the same day;
-    # bracket them for the marker-normalized re-measure.
-    # (leakage_safe_split was already bracketed in the r10 block.)
-    "percentiles_exact",
-    "prefix_filter_jaccard_join",
-    # r13 (VERDICT r12 task #1): the four unbracketed r12 movers —
-    # source git-verified untouched since the r11 stamp
-    # (graph_core_decomposition_full: the only r12 analytics_graph.py
-    # hunks are the modularity fold + an end-of-file append;
-    # friedman/brown_forsythe: hypothesis_ladder.py's net r12 diff is a
-    # single end-of-file append; ivf_probe_recall_curve: pure move to
-    # similarity_ann.py with byte-identical body). The first three are
-    # many-round iterative / multi-stage shapes — the classic
-    # scheduler-latency signature — so the clamp applies as usual.
-    # (q21_suppliers_kept_waiting and semantic_dedup_keeplist, the
-    # other two r12 movers, were already bracketed in earlier blocks.)
-    "graph_core_decomposition_full",
-    "friedman_rank_test_events",
-    "brown_forsythe_variance_test",
-    "ivf_probe_recall_curve",
-]
-
-# Fast-host parallel-marker reference (r5's fast window, the all-time
-# throughput anchor BASELINE.md normalizes against). Normalized wall =
-# wall × REF_PARALLEL_MARKER / marker_at_query — an estimate of what
-# the query would measure on the anchor host phase.
-REF_PARALLEL_MARKER = 0.144
-
-# Regression gate (VERDICT r8 task #7): the trailing rounds' closing
-# core21_normalized stamps (BASELINE.md round sections). A run whose
-# normalized headline exceeds the trailing band's max by >15% FAILS
-# LOUDLY — the payload carries a regression_gate verdict, the parsed
-# summary line carries it, and a banner goes to stderr — so a real plan
-# regression can't hide behind "host was slow" prose. The process exit
-# stays 0: the driver must always capture the artifact; the gate lives
-# in the data, not the exit status. Update the band each round with the
-# closing stamp (keep the most recent 3).
-#
-# Definition provenance (advisor r9): the PHASE_SENSITIVE clamp landed
-# in r9, so the r7/r8 stamps below were computed under the UNCLAMPED
-# definition while r9's is clamped. The clamp can only LOWER the
-# metric, so a band mixing definitions is systematically looser than
-# intended. Transition plan: the payload now carries BOTH
-# core21_normalized (clamped, the gated headline) and
-# core21_normalized_unclamped; from r10 on, band entries are clamped
-# stamps only (r7/r8 age out after r10), making the gate
-# apples-to-apples again within two rounds.
-#
-# Source-of-truth rule (VERDICT r10 task #5 — r10 produced two numbers,
-# builder stamp 14.315 vs driver payload 14.809, and the band briefly
-# kept the friendlier one): each round's band entry is the DRIVER'S
-# BENCH_r{N}.json core21_normalized — the arms-length measurement the
-# judge grades, taken at the committed round HEAD — never the builder's
-# own closing stamp. The builder's stamp is recorded in BASELINE.md
-# prose for continuity; at round open, fold the just-committed driver
-# artifact's number into this band (r10: 14.809; r12: 15.318).
-# r13 entry: the driver's 32-core BENCH_r13 run FAILED its own gate at
-# 20.969 and was judged host-contaminated by VERDICT r13 (its mid-run
-# markers hit 2.45-4.15 on queries that sit at 0.11-0.21 in every clean
-# run); the judge's endorsed clean driver measurement for the r13 code is
-# BENCH_r13_c8's marker-normalized 14.18 (8 cores, clean phase, "at the
-# all-time floor"). Folding the contaminated 20.969 would loosen the gate
-# by 33% — the r13 band entry is therefore the clean c8 number.
-TRAILING_CORE21_NORMALIZED = {"r11": 15.801, "r12": 15.318, "r13": 14.18}
-GATE_FACTOR = 1.15
-
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
+# The job-group counters the gate keeps. Shuffle bytes are left out: they
+# moved by a few bytes between executions of unchanged plans. Output
+# bytes are always 0 under the noop sink.
+COUNTERS = ("jobs", "stages", "tasks", "shuffle_records", "input_bytes")
 
 
 def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def scan_floors(spark) -> dict[str, float]:
-    """Per-table full-column decode floor (min-of-3 noop materialize).
-
-    The testdata writes each table as ONE parquet row group, so its
-    decode is single-threaded regardless of core count — a layout
-    property of the fixture, not of any plan (root-caused in r4 when q6
-    benched 3x its floor under co-tenant load). Recording the floor per
-    run lets a reader split a query's wall into 'ambient scan cost this
-    run' vs plan work. Full-column decode upper-bounds any query's scan
-    share (queries prune columns), so wall-minus-floor is a LOWER bound
-    on plan time.
-    """
-    floors: dict[str, float] = {}
-    for t in TABLES:
-        df = spark.read.parquet(f"{SF_DIR}/{t}.parquet")
-        materialize(df)  # warm footer/codegen
-        times = []
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            materialize(df)
-            times.append(time.perf_counter() - t0)
-        floors[t] = round(min(times), 3)
-    return floors
-
-
-def tables_scanned(df) -> set[str]:
-    """Table names whose parquet files the query's plan reads."""
-    out = set()
-    for f in df.inputFiles():
-        base = f.rstrip("/").split("/")[-1]
-        # files live at .../<table>.parquet or .../<table>.parquet/part-*
-        for t in TABLES:
-            if f"{t}.parquet" in f or base == f"{t}.parquet":
-                out.add(t)
-    return out
-
-
-def host_speed_marker() -> float:
-    """Seconds for a fixed single-thread pure-Python loop (min-of-3).
-
-    Cross-round bench numbers are only comparable if the host kept its
-    speed: r5 measured core21 at 14.7 s and 17.7 s on the SAME code
-    hours apart (steal negligible, inflation uniform across untouched
-    queries — host throughput drift). This marker lets a reader
-    normalize: wall ratios that track the marker ratio are host drift,
-    not plan regressions.
-    """
-    times = []
-    for _ in range(3):
+def run_query(spark, name: str, i: int) -> tuple[float, dict]:
+    """Build and execute ``name`` once, from an empty cache, under its own
+    job group; return the wall and the counters of every job it
+    submitted, eager jobs inside the query function included."""
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = f"bench:{name}:{i}"
+    sc.setJobGroup(group, name)
+    try:
         t0 = time.perf_counter()
-        s = 0
-        for i in range(5_000_000):
-            s += i
-        times.append(time.perf_counter() - t0)
-    return round(min(times), 3)
+        materialize(plans.REGISTRY[name].fn(spark, SF_DIR))
+        wall = time.perf_counter() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    counters = job_group_counters(spark, group)
+    return wall, {k: counters[k] for k in COUNTERS}
+
+
+def counter_span(value) -> tuple[int, int]:
+    """(lowest, highest) of a profile value: an int, or [lo, hi] for a
+    counter that differed between a query's executions."""
+    return tuple(value) if isinstance(value, list) else (value, value)
+
+
+def profile_value(lo: int, hi: int):
+    return lo if lo == hi else [lo, hi]
+
+
+def compare_counters(committed: dict | None, current: dict) -> tuple[dict, dict]:
+    """The gate. ``current`` holds each query's counters from this run as
+    profile values. A counter went up when every execution this run did
+    more than any committed execution (lo > committed hi): FAIL. It went
+    down when every execution did less (hi < committed lo): reported.
+    Either way the entry takes this run's value; otherwise the entry
+    widens to every value the plan has produced. Queries missing from
+    the entry, or a missing entry, are recorded and pass. Returns the
+    verdict and the rewritten entry."""
+    up, down, entry = [], [], {}
+    for name, counters in current.items():
+        before = (committed or {}).get(name, {})
+        line = {}
+        for key, value in counters.items():
+            lo, hi = counter_span(value)
+            if key in before:
+                old_lo, old_hi = counter_span(before[key])
+                moved = f"{name}.{key} {before[key]}->{value}"
+                if lo > old_hi:
+                    up.append(moved)
+                elif hi < old_lo:
+                    down.append(moved)
+                else:
+                    lo, hi = min(lo, old_lo), max(hi, old_hi)
+            line[key] = profile_value(lo, hi)
+        entry[name] = line
+    gate = {
+        "verdict": "FAIL" if up else "PASS",
+        "recorded": committed is None,
+        "up": up,
+        "down": down,
+    }
+    return gate, entry
+
+
+def read_profile(path: str) -> dict:
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return {}
+
+
+def dump_profile(profile: dict) -> str:
+    """JSON with one line per query, so a plan change diffs as the lines
+    of the queries it moved."""
+    entries = []
+    for key in sorted(profile):
+        rows = ",\n".join(
+            f"  {json.dumps(name)}: {json.dumps(counters)}"
+            for name, counters in profile[key].items()
+        )
+        entries.append(f" {json.dumps(key)}: {{\n{rows}\n }}")
+    return "{\n" + ",\n".join(entries) + "\n}\n"
+
+
+# files a bench run itself rewrites; a diff in them alone is not stale code
+_ARTIFACTS = re.compile(
+    r"(BENCH_LOCAL\.json|BENCH_PROFILE\.json|(BENCH|CORRECTNESS)_r\d+\.json)$"
+)
+
+
+def _git(*args: str) -> str:
+    return subprocess.run(
+        ["git", "-C", REPO, *args], capture_output=True, text=True, timeout=10,
+    ).stdout.strip()
 
 
 def _git_sha() -> str:
-    """HEAD sha (+'-dirty' if the tree differs), '' if git is absent."""
-    import subprocess
-
+    """HEAD sha (+'-dirty' if source differs), '' if git is absent."""
     try:
-        repo = os.path.dirname(os.path.abspath(__file__))
-        sha = subprocess.run(
-            ["git", "-C", repo, "rev-parse", "HEAD"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip()
-        dirty = subprocess.run(
-            ["git", "-C", repo, "status", "--porcelain"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip()
-        # BENCH_LOCAL.json itself is rewritten by every bench run — a
-        # diff in it alone is the measurement being recorded, not a
-        # stale-code signal. Driver-written round artifacts
-        # (BENCH_rNN.json / CORRECTNESS_rNN.json, delivered untracked
-        # mid-round) likewise say nothing about plan code staleness.
-        import re as _re
-
-        _artifact = _re.compile(
-            r"(BENCH_LOCAL\.json|(BENCH|CORRECTNESS)_r\d+\.json)$"
-        )
-        dirty_files = [
-            ln for ln in dirty.splitlines() if not _artifact.search(ln)
-        ]
-        return sha + ("-dirty" if dirty_files else "")
-    except Exception:
+        sha, status = _git("rev-parse", "HEAD"), _git("status", "--porcelain")
+    except (OSError, subprocess.SubprocessError):
         return ""
+    dirty = [ln for ln in status.splitlines() if not _ARTIFACTS.search(ln)]
+    return sha + ("-dirty" if dirty else "")
 
 
 def main() -> None:
     spark = get_spark("bench", cpus=CPUS, shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
-    registry = plans.REGISTRY
 
-    # warm-up: JVM, codegen, parquet footer caches
-    materialize(registry["q1_pricing_summary"].fn(spark, SF_DIR))
-    floors = scan_floors(spark)
-
-    # parallel host marker: fixed CPU-bound 32-partition Spark job
-    # (no IO) — single-thread Python can look fast while hypervisor
-    # oversubscription throttles PARALLEL stages (observed: marker 0.175 s
-    # while core21 inflated 30%; ambient loadavg ~4 with no local
-    # processes). Both markers together separate host drift from plan
-    # regressions.
-    def parallel_marker_probe(reps: int = 3) -> float:
-        pm = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            spark.range(200_000_000, numPartitions=CPUS).selectExpr(
-                "sum(id * 3 + 1)"
-            ).collect()
-            pm.append(time.perf_counter() - t0)
-        return round(min(pm), 3)
-
-    parallel_marker = parallel_marker_probe()
-
-    per_query: dict[str, float] = {}
-    per_query_adj: dict[str, float] = {}
-    marker_at_query: dict[str, float] = {}
-    per_query_norm: dict[str, float] = {}
+    walls: dict[str, float] = {}
+    counters: dict[str, dict] = {}
     for name in HEADLINE:
-        q = registry[name]
-        # per-query warm-up: whole-stage-codegen compilation of a query's
-        # generated code happens on its first execution and would skew
-        # the first timed run
-        df = q.fn(spark, SF_DIR)
-        materialize(df)
-        times = []
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            materialize(q.fn(spark, SF_DIR))
-            times.append(time.perf_counter() - t0)
-        per_query[name] = round(min(times), 3)
-        floor = sum(floors[t] for t in tables_scanned(df))
-        per_query_adj[name] = round(max(0.0, per_query[name] - floor), 3)
-        # r14 (VERDICT r13 item 2): EVERY CORE21 member is bracketed with
-        # its own 2-rep marker probe, not just the PHASE_SENSITIVE set —
-        # the suite-start marker under-corrects MID-RUN phase swings,
-        # which is exactly how BENCH_r13@32c FAILED its gate at 20.969
-        # while the same code measured 14.18 in a clean phase. The probe
-        # runs AFTER the timed runs, so the per-query timing methodology
-        # is untouched; only the normalization gains resolution.
-        if name in PHASE_SENSITIVE or name in CORE21:
-            m = parallel_marker_probe(reps=2)
-            marker_at_query[name] = m
-            if name in PHASE_SENSITIVE:
-                # CLAMP the multiplier at 1 for this set: these queries
-                # are latency-bound (~15 sub-100ms stages — the r9
-                # BASELINE.md analysis of the r8 movers), so a
-                # FASTER-than-anchor throughput marker says nothing
-                # about their walls, and scaling them UP by
-                # anchor/marker manufactures phantom regressions (r9
-                # close: brackets at 0.076-0.10 inflated six sub-second
-                # walls by 1.4-1.9x and tripped the gate while raw
-                # core21 sat at its usual level). Slow-phase correction
-                # (multiplier < 1) still applies in full.
-                mult = min(REF_PARALLEL_MARKER / m, 1.0)
-            else:
-                # throughput-bound CORE21 members keep the UNCLAMPED
-                # ratio — identical semantics to the pre-r14 suite-start
-                # normalization, just measured AT the query (in a stable
-                # phase the two are equal, so the trailing band stays
-                # comparable; in a swinging phase this one is right)
-                mult = REF_PARALLEL_MARKER / m
-            per_query_norm[name] = round(per_query[name] * mult, 3)
-        # A few plans persist multi-consumer intermediates internally
-        # (prefix-filter shingles/candidates, minhash signatures); each
-        # timed run re-persists fresh DF objects, so prior runs' blocks
-        # are garbage. Drop them between queries — AFTER timing, so the
-        # measurement is untouched — or 4 runs × 52 queries of dead
-        # cached blocks accumulate across the suite.
-        spark.catalog.clearCache()
+        runs = [run_query(spark, name, i) for i in range(1 + RUNS)]
+        walls[name] = round(min(wall for wall, _ in runs[1:]), 3)
+        # A few plans over persisted or checkpointed relations do not
+        # repeat their counters from one execution to the next (measured
+        # in one session: leakage_safe_split 25 or 26 jobs,
+        # siegel_revenue_trend 7,214 or 2,898,024 shuffle records); such
+        # a counter is kept as its [lowest, highest] over the executions.
+        counters[name] = {}
+        for k in COUNTERS:
+            values = [c[k] for _, c in runs]
+            counters[name][k] = profile_value(min(values), max(values))
+    spark.stop()
 
-    # tolerant sf extraction: a dir name without an sf<number> suffix must
-    # not crash AFTER the whole suite has run (losing every measurement)
+    key = f"{os.path.basename(SF_DIR.rstrip('/'))}/c{CPUS}"
+    profile = read_profile(PROFILE)
+    gate, profile[key] = compare_counters(profile.get(key), counters)
     m = re.search(r"sf([0-9.]+)/?$", SF_DIR)
-    sf = m.group(1) if m else "0"
     payload = {
         "metric": "headline_suite_wall_sec",
-        "value": round(sum(per_query.values()), 3),
+        "value": round(sum(walls.values()), 3),
         "unit": "sec",
-        "queries": per_query,
-        "sf": float(sf),
-        "core21_wall_sec": round(sum(per_query[n] for n in CORE21), 3),
-        # THE single cross-round headline (VERDICT r7 task #4): core21
-        # with each query's wall normalized to the r5 fast-host anchor
-        # via the nearest parallel marker (its own bracket for the
-        # phase-sensitive set, the suite-start marker otherwise).
-        # Raw walls stay in the payload for decomposition, but round
-        # sections in BASELINE.md quote ONLY this number — it is the
-        # one that is comparable when the host oscillates.
-        # r14 definition (VERDICT r13 item 2): every CORE21 member uses
-        # its OWN bracket marker — clamped at 1 for the PHASE_SENSITIVE
-        # (latency-bound) members, unclamped for the throughput-bound
-        # rest. In a stable phase this equals the pre-r14 number exactly
-        # (all markers ≈ the suite-start marker), so the trailing band
-        # stays comparable; in a swinging phase it is robust where the
-        # old definition failed (BENCH_r13@32c).
-        "core21_normalized": round(
-            sum(
-                per_query[n]
-                * (
-                    min(REF_PARALLEL_MARKER / marker_at_query[n], 1.0)
-                    if n in PHASE_SENSITIVE
-                    else REF_PARALLEL_MARKER / marker_at_query[n]
-                )
-                for n in CORE21
-            ),
-            3,
-        ),
-        # the pre-r14 definition (suite-start marker for non-bracketed
-        # members, clamped brackets for PHASE_SENSITIVE) — emitted so
-        # the transition rounds stay comparable under BOTH definitions
-        # while the pre-r14 stamps age out of the trailing window (the
-        # same transition discipline the r9 clamp used)
-        "core21_normalized_suitemarker": round(
-            sum(
-                per_query[n]
-                * (
-                    min(
-                        REF_PARALLEL_MARKER / marker_at_query[n], 1.0
-                    )
-                    if n in PHASE_SENSITIVE
-                    else REF_PARALLEL_MARKER / parallel_marker
-                )
-                for n in CORE21
-            ),
-            3,
-        ),
-        # the UNCLAMPED twin (advisor r9): per-query markers with no
-        # min(...,1) cap anywhere
-        "core21_normalized_unclamped": round(
-            sum(
-                per_query[n] * (REF_PARALLEL_MARKER / marker_at_query[n])
-                for n in CORE21
-            ),
-            3,
-        ),
-        # decomposition (see scan_floors docstring): ambient
-        # single-row-group decode cost this run, and each query's
-        # wall minus the floors of the tables it scans — a lower
-        # bound on plan-side time, immune to layout/co-load noise
-        "scan_floors": floors,
-        "queries_minus_scan_floor": per_query_adj,
-        # single-thread host-speed marker (see host_speed_marker):
-        # divide cross-round walls by the marker ratio before
-        # calling a delta a regression
-        "host_marker_sec": host_speed_marker(),
-        "parallel_marker_sec": parallel_marker,
-        # per-query parallel marker bracketing for the designated
-        # phase-sensitive set (see PHASE_SENSITIVE comment), plus each
-        # bracketed query's wall normalized to the r5 fast-host anchor
-        # (REF_PARALLEL_MARKER) — compare THESE across rounds before
-        # calling a swing a regression
-        "marker_at_query": marker_at_query,
-        "queries_marker_normalized": per_query_norm,
-        # provenance: the exact commit this measurement was taken at —
-        # a BENCH_LOCAL whose sha != the round's final HEAD is stale
-        # (VERDICT r6 task #5)
+        "queries": walls,
+        "sf": float(m.group(1)) if m else 0.0,
+        "core21_wall_sec": round(sum(walls[n] for n in CORE21), 3),
+        "counters": counters,
+        "counter_gate": {"profile_key": key, **gate},
         "git_sha": _git_sha(),
     }
-    gate_limit = round(
-        max(TRAILING_CORE21_NORMALIZED.values()) * GATE_FACTOR, 3
-    )
-    gate_ok = payload["core21_normalized"] <= gate_limit
-    payload["regression_gate"] = {
-        "verdict": "PASS" if gate_ok else "FAIL",
-        "core21_normalized": payload["core21_normalized"],
-        "limit": gate_limit,
-        "trailing_band": TRAILING_CORE21_NORMALIZED,
-        "factor": GATE_FACTOR,
-    }
-    # Truncation-proofing (the r5 driver capture kept a finite TAIL of
-    # stdout and clipped the start of the one big JSON line, losing the
-    # raw per-query dict): persist the full payload to a committed file
-    # FIRST, then print the full line, then a short summary line that a
-    # tail capture can never clip. Any one of the three carries enough
-    # to reconstruct the round.
     line = json.dumps(payload)
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
     try:
-        with open(os.path.join(repo_dir, "BENCH_LOCAL.json"), "w") as fh:
-            fh.write(line + "\n")
-        # r14 (VERDICT r13 item 2 / what's-wrong #3): BENCH_LOCAL.json is
-        # clobbered by every run, and the driver's capture stores only a
-        # pointer + a stdout tail — the r12-vs-r13 per-query geomean was
-        # unrecoverable from driver artifacts alone. Persist each payload
-        # ALSO to a sha/core-count-keyed sibling that no later run
-        # overwrites (same sha+cpus re-runs do overwrite each other —
-        # the latest measurement of one code state is the one to keep).
-        sha = (payload["git_sha"] or "nogit")[:12]
-        with open(
-            os.path.join(repo_dir, f"BENCH_LOCAL.{sha}.c{CPUS}.json"), "w"
-        ) as fh:
+        with open(PROFILE, "w") as fh:
+            fh.write(dump_profile(profile))
+        with open(os.path.join(REPO, "BENCH_LOCAL.json"), "w") as fh:
             fh.write(line + "\n")
     except OSError:
-        pass  # read-only checkout must not lose the stdout measurement
+        pass  # a read-only checkout must not lose the stdout measurement
     print(line)
-    print(
-        json.dumps(
-            {
-                "metric": payload["metric"],
-                "value": payload["value"],
-                "unit": "sec",
-                "sf": payload["sf"],
-                "core21_wall_sec": payload["core21_wall_sec"],
-                "core21_normalized": payload["core21_normalized"],
-                "host_marker_sec": payload["host_marker_sec"],
-                "parallel_marker_sec": payload["parallel_marker_sec"],
-                "regression_gate": (
-                    "PASS"
-                    if gate_ok
-                    else (
-                        f"FAIL: core21_normalized "
-                        f"{payload['core21_normalized']} > {gate_limit}"
-                    )
-                ),
-                "full_payload": "BENCH_LOCAL.json",
-            }
-        )
-    )
-    if not gate_ok:
-        print(
-            "=" * 72
-            + f"\nBENCH REGRESSION GATE FAIL: core21_normalized "
-            f"{payload['core21_normalized']} exceeds the trailing band "
-            f"max {max(TRAILING_CORE21_NORMALIZED.values())} by >"
-            f"{int((GATE_FACTOR - 1) * 100)}% (limit {gate_limit}). "
-            "A marker-tracked host phase cannot explain this — diff the "
-            "per-query normalized walls before shipping.\n" + "=" * 72,
-            file=sys.stderr,
-        )
-    spark.stop()
+    print(json.dumps({
+        "metric": payload["metric"],
+        "value": payload["value"],
+        "unit": "sec",
+        "sf": payload["sf"],
+        "core21_wall_sec": payload["core21_wall_sec"],
+        "counter_gate": gate["verdict"],
+        "full_payload": "BENCH_LOCAL.json",
+    }))
+    for word, moved in (("FAIL: up", gate["up"]), ("lower", gate["down"])):
+        for item in moved:
+            print(f"bench counter gate {key} {word}: {item}", file=sys.stderr)
 
 
 if __name__ == "__main__":

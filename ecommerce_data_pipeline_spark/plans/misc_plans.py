@@ -825,11 +825,12 @@ def streaming_flagship_certificate(spark: SparkSession, sf_dir: str) -> DataFram
         # one continuous query, 3 micro-batch triggers (200 offsets each);
         # stop in a finally — an abandoned active query would race the
         # store reads below and the rmtree, poisoning the shared session.
-        # Each query start forks THREE driver-side Python source runners
-        # (the 3-way txqueue union), each racing Spark's hard-coded 10 s
-        # connect-back window — under full load that handshake flakes
-        # (VERIFY_r13), so start+drain runs under the bounded retry
-        # (value-safe: checkpointed offsets + idempotent _batch_id sinks).
+        # Each query start forks a driver-side Python source runner (the
+        # one txqueue source the 3-way union reads), which races Spark's
+        # hard-coded 10 s connect-back window — under full load that
+        # handshake flakes (VERIFY_r13), so start+drain runs under the
+        # bounded retry (value-safe: checkpointed offsets + idempotent
+        # _batch_id sinks).
         def _drain() -> None:
             q = run_streaming_flagship(
                 spark, wh, ckpt, dim_products, dim_customers,

@@ -36,9 +36,15 @@ from pyspark.sql import DataFrame, SparkSession
 SCALE_MODE_CONF = "spark.graft.scaleMode"
 
 
+def _conf(spark: SparkSession, key: str, default: str) -> str:
+    """A ``spark.graft.*`` conf value, compared case- and
+    whitespace-insensitively (``" False "`` reads as ``"false"``)."""
+    return str(spark.conf.get(key, default)).strip().lower()
+
+
 def cluster_scale(spark: SparkSession) -> bool:
     """True when the session opts into cluster-scale plan shapes."""
-    return spark.conf.get(SCALE_MODE_CONF, "local") == "cluster"
+    return _conf(spark, SCALE_MODE_CONF, "local") == "cluster"
 
 
 def pin_if_cluster(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -71,7 +77,7 @@ def broadcast_node_relation(spark: SparkSession, df: DataFrame) -> DataFrame:
     auto-broadcasts them anyway."""
     from pyspark.sql import functions as F
 
-    if spark.conf.get(NODE_BROADCAST_CONF, "true") == "false":
+    if _conf(spark, NODE_BROADCAST_CONF, "true") == "false":
         return df
     return F.broadcast(df)
 

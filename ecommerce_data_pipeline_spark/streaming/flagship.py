@@ -208,21 +208,19 @@ def queue_stream(
     is set, a client-retry overlay (``resend_overlay``): every Nth
     message resubmitted with a FRESH transaction id and the same
     business payload. Redeliveries are for the watermark dedup to kill;
-    resends are for the near-dedup audit to flag."""
+    resends are for the near-dedup audit to flag. All three branches
+    read ONE source (one Python source runner per query start)."""
     register_queue_source(spark)
-
-    def feed() -> DataFrame:
-        return (
-            spark.readStream.format("txqueue")
-            .option("seed", seed)
-            .option("rowsPerBatch", rows_per_batch)
-            .option("maxOffset", max_offset)
-            .load()
-        )
-
-    stream = feed().unionByName(feed())
+    feed = (
+        spark.readStream.format("txqueue")
+        .option("seed", seed)
+        .option("rowsPerBatch", rows_per_batch)
+        .option("maxOffset", max_offset)
+        .load()
+    )
+    stream = feed.unionByName(feed)
     if resend_every is not None:
-        stream = stream.unionByName(resend_overlay(feed(), resend_every))
+        stream = stream.unionByName(resend_overlay(feed, resend_every))
     return stream
 
 

@@ -453,3 +453,34 @@ def test_scale_mode_pins_eager_lattice_base(spark, qname):
     finally:
         spark.catalog.clearCache()
         spark.conf.set(SCALE_MODE_CONF, "local")
+
+
+def test_graft_confs_parse_case_insensitively(spark):
+    """``spark.graft.*`` values are read case- and whitespace-insensitively:
+    every spelling of ``false`` drops the node-relation broadcast hint,
+    and every spelling of ``cluster`` selects the cluster shape. Checked
+    on the analyzed logical plan; nothing executes."""
+    from ecommerce_data_pipeline_spark.plans.scale import (
+        NODE_BROADCAST_CONF,
+        SCALE_MODE_CONF,
+        broadcast_node_relation,
+        cluster_scale,
+    )
+
+    def hinted() -> bool:
+        df = broadcast_node_relation(spark, spark.range(3))
+        return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
+
+    try:
+        assert hinted()  # unset: the hint stays
+        for value in ("false", "False", " FALSE "):
+            spark.conf.set(NODE_BROADCAST_CONF, value)
+            assert not hinted(), value
+        spark.conf.set(NODE_BROADCAST_CONF, " True")
+        assert hinted()
+        for value in ("cluster", "Cluster", " CLUSTER "):
+            spark.conf.set(SCALE_MODE_CONF, value)
+            assert cluster_scale(spark), value
+    finally:
+        spark.conf.unset(NODE_BROADCAST_CONF)
+        spark.conf.unset(SCALE_MODE_CONF)

@@ -344,20 +344,3 @@ def test_hll_sketch_rollup_tracks_exact(spark):
     assert est.keys() == exact.keys()
     for flag, n in exact.items():
         assert abs(est[flag] - n) / n < 0.05, (flag, est[flag], n)
-
-
-def test_no_graded_query_plans_cartesian_product(spark):
-    """No registered query may plan a CartesianProduct (non-broadcast
-    cross join): every intentional cross join in the engine is a
-    broadcast against a one-row/tiny relation (BroadcastNestedLoopJoin),
-    which is scale-safe; a true cartesian at 100 TB is a job-killer.
-    Companion invariant to the no-global-window test above ('eager'
-    certificate plans skipped for the same reason documented there)."""
-    offenders = []
-    for name, q in REGISTRY.items():
-        if "eager" in q.tags:
-            continue
-        plan = _executed_plan(q.fn(spark, SF_SMOKE))
-        if "CartesianProduct" in plan:
-            offenders.append(name)
-    assert offenders == []
