@@ -14,28 +14,22 @@ Reference parity:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def enrich_facts(
-    facts: DataFrame,
-    dims: dict[str, DataFrame],
-    how: str = "inner",
-    broadcast_dims: bool = True,
-) -> DataFrame:
+def enrich_facts(facts: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
     """J1: join the fact table with each dimension on its FK column.
 
-    ``dims`` maps join-key column name → dimension DataFrame. With
-    ``broadcast_dims`` the plan is N chained BroadcastHashJoins — zero
-    shuffles of the fact side, the only plan that survives a 100 TB fact
-    stream. FK integrity holds by construction in the reference
+    ``dims`` maps join-key column name → dimension DataFrame (inner
+    joins). The plan is N chained BroadcastHashJoins — zero shuffles of
+    the fact side, the only plan that survives a 100 TB fact stream. FK
+    integrity holds by construction in the reference
     (``transactions_mock_data.py:64-71``), so inner == left in row count.
     """
     out = facts
     for key, dim in dims.items():
-        rhs = F.broadcast(dim) if broadcast_dims else dim
-        out = out.join(rhs, on=key, how=how)
+        out = out.join(F.broadcast(dim), on=key)
     return out
 
 
@@ -104,109 +98,3 @@ def range_join(
     cond = (F.col(point) >= right[lo]) & (F.col(point) < right[hi])
     return left.join(F.broadcast(right), cond, "inner")
 
-
-def as_of_join_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-) -> DataFrame:
-    """``as_of_join``'s Arrow twin via ``cogroup().applyInPandas`` —
-    the grouped-map physical strategy for as-of alignment.
-
-    Both sides shuffle ONCE on the key (exactly like the union-sort
-    form), then each key's two frames meet in a single Arrow batch where
-    ``pandas.merge_asof`` (backward, tie-inclusive — the same semantics
-    the union-sort form implements with the _side sort trick) does the
-    alignment. Same output contract as ``as_of_join``: left columns +
-    ``right_<col>`` for every non-key right column; the equivalence is
-    asserted row-for-row in tests/test_operators.py.
-
-    When to prefer which: the union-sort form stays entirely JVM-side
-    (no Python workers — the repo default); this form is the template
-    for per-key logic that ISN'T expressible as window carry-forward
-    (interval intersection, per-key curve fitting, custom matchers) and
-    costs one Arrow hop. A key whose rows exceed one Arrow batch is the
-    scale limit — same per-group bound as every grouped-map operator.
-    """
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        ByteType,
-        DoubleType,
-        FloatType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StructField,
-        StructType,
-    )
-
-    r_keep = [c for c in right.columns if c != on]
-    out_schema = StructType(
-        list(left.schema.fields)
-        + [
-            StructField(f"right_{f.name}", f.dataType, True)
-            for f in right.schema.fields
-            if f.name != on
-        ]
-    )
-    out_names = [f.name for f in out_schema.fields]
-    # pandas nullable dtype per right column: unmatched lefts get NaN
-    # from merge_asof, which must round-trip to Spark NULL for EVERY
-    # type — a bare float64 NaN would crash Arrow conversion for
-    # narrower ints and silently arrive as NaN (not NULL) for doubles
-    _NULLABLE = {
-        ByteType: "Int8",
-        ShortType: "Int16",
-        IntegerType: "Int32",
-        LongType: "Int64",
-        FloatType: "Float32",
-        DoubleType: "Float64",
-    }
-    nullable_casts = {
-        f"right_{f.name}": _NULLABLE[type(f.dataType)]
-        for f in right.schema.fields
-        if f.name != on and type(f.dataType) in _NULLABLE
-    }
-
-    # Rename the right columns SPARK-side before the cogroup: when both
-    # sides share lineage (e.g. two filters of one scan) identically-named
-    # attributes carry the same exprId and the FlatMapCoGroupsInPandas
-    # dedup can prune the right side's copy — some groups then arrive in
-    # Python missing that column (observed: right frame without `ts` on
-    # the events self-cogroup). Distinct names sidestep the ambiguity.
-    right_renamed = right.select(
-        F.col(on), *[F.col(c).alias(f"right_{c}") for c in r_keep]
-    )
-
-    def merge(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if l.empty:
-            return pd.DataFrame(columns=out_names)
-        l = l.sort_values(left_ts, kind="mergesort")
-        r = r.drop(columns=[on])
-        if r.empty:
-            m = l.copy()
-            for c in r_keep:
-                m[f"right_{c}"] = None
-        else:
-            r = r.sort_values(f"right_{right_ts}", kind="mergesort")
-            m = pd.merge_asof(
-                l,
-                r,
-                left_on=left_ts,
-                right_on=f"right_{right_ts}",
-                direction="backward",
-                allow_exact_matches=True,
-            )
-        # unmatched lefts: NaN -> pandas nullable dtype -> Spark NULL
-        for c, dt in nullable_casts.items():
-            m[c] = m[c].astype(dt)
-        return m[out_names]
-
-    return (
-        left.groupBy(on)
-        .cogroup(right_renamed.groupBy(on))
-        .applyInPandas(merge, out_schema)
-    )

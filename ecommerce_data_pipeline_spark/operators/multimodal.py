@@ -7,10 +7,10 @@ run as Arrow-batched ``mapInPandas`` stages so bytes never round-trip
 through per-row Python.
 
 The actual codec step is STUBBED — this container has no image/audio
-libraries — behind ``_decode_stub``, which raises ``NotImplementedError``
-for real decoding and provides a deterministic fake (byte-level stats) so
-the Spark-side plumbing (schema, batching, partition behavior) is real and
-testable. Swapping the stub for PIL/ffmpeg is a one-function change.
+libraries — behind ``decode_stub``, which provides a deterministic fake
+(byte-level stats) so the Spark-side plumbing (schema, batching,
+partition behavior) is real and testable. Swapping the stub for
+PIL/ffmpeg is a one-function change.
 
 Scale notes: binary payloads dominate partition size — ``mapInPandas``
 keeps Arrow batches bounded via ``spark.sql.execution.arrow.
@@ -73,7 +73,7 @@ def attach_binary_payload(
     )
 
 
-def extract_features(media: DataFrame, real_decode: bool = False) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.
 
     ``mapInPandas``: each Arrow batch arrives as a pandas DataFrame; the
@@ -86,20 +86,12 @@ def extract_features(media: DataFrame, real_decode: bool = False) -> DataFrame:
     never need this package on their PYTHONPATH. Every Python-worker
     function in this engine follows the same rule; all other operators
     are pure JVM Column expressions.
-
-    ``real_decode=True`` marks the stubbed codec integration point
-    (PIL/ffmpeg are not in this container) and raises on the executor.
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def decode_stub(payload) -> dict:
             # STUB for PIL.Image.open / av.open: deterministic byte-level
             # pseudo-features; swap this inner function for a real codec.
-            if real_decode:
-                raise NotImplementedError(
-                    "real media decoding requires PIL/ffmpeg (not in this "
-                    "container); swap decode_stub for the codec call"
-                )
             if payload is None or len(payload) == 0:
                 return {"byte_mean": 0.0, "hist": [0] * 16, "width": 0, "height": 0}
             hist = [0] * 16
@@ -147,60 +139,3 @@ def frame_sample(
     )
     return media.select("media_id", "media_type", frames.alias("frames"))
 
-
-def extract_features_arrow(media: DataFrame, real_decode: bool = False) -> DataFrame:
-    """``mapInArrow`` twin of ``extract_features``: batches arrive as
-    ``pyarrow.RecordBatch`` and never materialize a pandas frame — one
-    fewer copy per batch, and binary payloads stay in Arrow buffers until
-    the decode loop touches them. Same stubbed codec, same output schema,
-    bit-identical results (asserted in tests). Prefer this form when the
-    per-batch work is bytes-in → fixed-width-out and pandas adds nothing;
-    keep mapInPandas where downstream batch logic genuinely wants pandas
-    semantics. Self-contained closure (worker-pickling rule)."""
-
-    def batches(it):
-        import pyarrow as pa
-
-        def decode_stub(payload):
-            if real_decode:
-                raise NotImplementedError(
-                    "real media decoding requires PIL/ffmpeg (not in this "
-                    "container); swap decode_stub for the codec call"
-                )
-            if payload is None or len(payload) == 0:
-                return {"byte_mean": 0.0, "hist": [0] * 16, "width": 0, "height": 0}
-            hist = [0] * 16
-            total = 0
-            for b in payload:
-                hist[b >> 4] += 1
-                total += b
-            return {
-                "byte_mean": total / len(payload),
-                "hist": hist,
-                "width": 16 + (payload[0] % 64),
-                "height": 16 + (payload[-1] % 64),
-            }
-
-        for batch in it:
-            payloads = batch.column("payload").to_pylist()
-            feats = [decode_stub(p) for p in payloads]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("media_id"),
-                    batch.column("n_bytes"),
-                    pa.array([f["byte_mean"] for f in feats], pa.float64()),
-                    pa.array([f["hist"] for f in feats], pa.list_(pa.int64())),
-                    pa.array([f["width"] for f in feats], pa.int32()),
-                    pa.array([f["height"] for f in feats], pa.int32()),
-                ],
-                names=[
-                    "media_id",
-                    "n_bytes",
-                    "byte_mean",
-                    "byte_histogram",
-                    "width",
-                    "height",
-                ],
-            )
-
-    return media.mapInArrow(batches, schema=FEATURE_SCHEMA)

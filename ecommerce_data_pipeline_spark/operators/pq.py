@@ -17,8 +17,8 @@ TPAMI 2011):
    codegen'd subspace-distance folds), fully distributed, no Python.
 3. **ADC scan**: for each query, precompute the m × k table of
    squared-L2 distances from the query's subvectors to every centroid
-   (driver-side — queries are the small side by the same contract as
-   ``cosine_topk_pandas``). A candidate's approximate distance is then m
+   (driver-side — queries are the small side, as in ``cosine_topk``'s
+   broadcast). A candidate's approximate distance is then m
    table lookups + a sum; the scan never touches the original vectors.
 4. **Re-rank**: the top ``rerank`` ADC candidates are re-scored with the
    EXACT cosine fold, and the final top-k ranks on that — the standard
@@ -159,9 +159,9 @@ def pq_encode(
 
         books = [[list(map(float, c)) for c in book] for book in codebooks]
 
-        # no type hints on purpose (the lsh_bucket_pandas rule):
-        # `from __future__ import annotations` makes them strings this
-        # module can't resolve for pyspark's hint inference
+        # no type hints on purpose: `from __future__ import annotations`
+        # makes them strings this module can't resolve for pyspark's
+        # hint inference
         def _codes(v):
             import numpy as np
             import pandas as pd

@@ -637,9 +637,9 @@ def rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """THE ANN-family output contract in one place: rank a
     (query_id, cand_id, cosine) relation per query by rounded score desc
     with the cand_id tie-break, keep the top k. Shared by cosine_topk,
-    lsh_bucketed_topk, cosine_topk_pandas, ivf_topk, and pq_topk —
-    previously five inline copies of the same six lines, where a
-    tie-break or policy change had to be applied five times. NULL scores
+    lsh_bucketed_topk, ivf_topk, and pq_topk — previously inline copies
+    of the same six lines, where a tie-break or policy change had to be
+    applied to each. NULL scores
     (zero-norm vectors, cosine_with_norms contract) sort last under
     desc, so they rank beyond k whenever k real candidates exist."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
@@ -719,44 +719,6 @@ def lsh_bucket(vec_col: str | Column, hyperplanes: list[list[float]]) -> Column:
     return bucket
 
 
-def lsh_bucket_pandas(
-    vec_col: str | Column, hyperplanes: list[list[float]]
-) -> Column:
-    """Vectorized twin of ``lsh_bucket``: one Arrow-batched NumPy matmul
-    computes every plane's projection sign at once, instead of p
-    interpreted JVM folds per row. Wins once corpus × planes grows; the
-    fold form stays the zero-Python-worker default for small inputs.
-
-    Closure is self-contained (plane matrix captured by value) — the
-    worker-pickling rule used by every Python-worker function here.
-
-    Caveat: BLAS may reorder the dot-product accumulation vs the
-    sequential JVM fold, so a projection EXACTLY at 0.0 could round to a
-    different sign. Bucket ids are approximation plumbing (never
-    oracle-compared), and both forms are individually deterministic.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    planes = [list(map(float, h)) for h in hyperplanes]
-
-    # no type hints on purpose: `from __future__ import annotations` makes
-    # them strings this module can't resolve for pyspark's hint inference
-    def _bucket(v):
-        import numpy as np
-        import pandas as pd
-
-        hm = np.asarray(planes, dtype=np.float64)
-        if len(v) == 0:
-            return pd.Series([], dtype="int64")
-        m = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
-        signs = (m @ hm.T) > 0  # rows × planes
-        weights = np.int64(1) << np.arange(hm.shape[0], dtype=np.int64)
-        return pd.Series((signs @ weights).astype(np.int64))
-
-    bucket = pandas_udf(_bucket, returnType="long")
-    return bucket(F.col(vec_col) if isinstance(vec_col, str) else vec_col)
-
-
 def lsh_bucketed_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -767,7 +729,6 @@ def lsh_bucketed_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    vectorized_bucketing: bool = False,
 ) -> DataFrame:
     """Approximate top-k via multi-probe LSH: score only candidates whose
     bucket is within Hamming distance ``probe_hamming`` of the query's.
@@ -779,10 +740,6 @@ def lsh_bucketed_topk(
     allowing more planes; this default is tuned for near-uniform vectors.
     """
     hp = random_hyperplanes(dim, planes, seed)
-    # vectorized_bucketing: Arrow-batched matmul bucketing for large
-    # corpora (benchmarked vs the fold form in tests/bench); the JVM fold
-    # avoids Python workers entirely and wins at small scale.
-    bucket_fn = lsh_bucket_pandas if vectorized_bucketing else lsh_bucket
     # each query probes its own bucket plus every bucket within
     # probe_hamming bit-flips (mask count = Σ C(planes, h) — the old
     # form silently capped at H≤1, delivering less recall than the knob
@@ -809,7 +766,7 @@ def lsh_bucketed_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
         l2_norm(vec_col).alias("qn"),
-        bucket_fn(vec_col, hp).alias("_home"),
+        lsh_bucket(vec_col, hp).alias("_home"),
     )
     q = q_home.select(
         "query_id",
@@ -831,7 +788,7 @@ def lsh_bucketed_topk(
             )
         )
         .withColumn("cn", l2_norm("cv"))
-        .withColumn("bucket", bucket_fn("cv", hp))
+        .withColumn("bucket", lsh_bucket("cv", hp))
     )
     scored = (
         c.join(F.broadcast(q), "bucket")
@@ -841,84 +798,6 @@ def lsh_bucketed_topk(
             "cand_id",
             F.round(cosine_with_norms("qv", "cv", "qn", "cn"), 6).alias("cosine"),
         )
-    )
-    return rank_topk(scored, k)
-
-
-def cosine_topk_pandas(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Vectorized twin of `cosine_topk`: per-Arrow-batch NumPy matmul.
-
-    The JVM fold in `cosine_topk` evaluates one multiply-add at a time per
-    element; here each corpus batch scores against ALL queries in a single
-    BLAS `candidates @ queries.T` — the winning path once queries × dim is
-    large (hundreds of queries, high-dim embeddings). The query matrix is
-    collected driver-side (it is the small side by contract) and captured
-    by value in the closure, so executors need neither this package nor a
-    broadcast variable.
-
-    Output and determinism contract match `cosine_topk` exactly
-    (6dp-rounded score, id tiebreak) — asserted in tests.
-    """
-    q_rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
-    q_ids = [r[0] for r in q_rows]
-    q_mat = [list(map(float, r[1])) for r in q_rows]
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    # id type derived from the input schema (pq_topk precedent) — a
-    # hardcoded LONG broke string/int32 ids despite the parity contract
-    id_type = queries.schema[id_col].dataType
-    out_schema = StructType(
-        [
-            StructField("query_id", id_type),
-            StructField("cand_id", id_type),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        qm = np.asarray(q_mat, dtype=np.float64)
-        qn = np.linalg.norm(qm, axis=1)
-        qid = np.asarray(q_ids, dtype=object)  # id-type-agnostic
-        for pdf in batches:
-            # the corpus select below aliases to fixed names — index those,
-            # not the caller's id_col/vec_col (which may differ)
-            cm = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            cn = np.linalg.norm(cm, axis=1)
-            # zero-norm vectors: numerator and denominator are both 0, so
-            # 0/0 = NaN (never ±inf), and Spark's Arrow ingestion masks
-            # NaN floats to NULL — reproducing cosine_with_norms' NULL
-            # contract exactly (pinned by test_cosine_pandas_zero_norm
-            # _matches_jvm_null_contract). errstate silences the expected
-            # invalid-divide warning.
-            with np.errstate(invalid="ignore"):
-                sims = (cm @ qm.T) / np.outer(cn, qn)  # candidates × queries
-            cids = pdf["vec_id"].to_numpy()
-            n_c, n_q = sims.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qid, n_c),
-                    "cand_id": np.tile(cids, n_q),
-                    "cosine": np.round(sims.T.ravel(), round_digits),
-                }
-            )
-
-    scored = (
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-        .mapInPandas(score, schema=out_schema)
-        .filter(F.col("cand_id") != F.col("query_id"))
     )
     return rank_topk(scored, k)
 
@@ -1096,8 +975,8 @@ def mmr_rerank(
         .select("query_id", "cand_id", F.col("cosine").alias("rel"), "cv")
     )
 
-    # id type derived from the input schema (cosine_topk_pandas/pq_topk
-    # precedent) — a hardcoded LONG would break string/int32 ids
+    # id type derived from the input schema (pq_topk precedent) — a
+    # hardcoded LONG would break string/int32 ids
     id_type = corpus.schema[id_col].dataType
     out_schema = StructType(
         [

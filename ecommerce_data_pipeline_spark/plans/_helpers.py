@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEC = "decimal(18,2)"
@@ -94,3 +94,10 @@ def half_up_ratio_units(p: Column, q: Column, unit: int) -> Column:
     )
     den = F.lit(2).cast("decimal(38,0)") * q.cast("decimal(38,0)")
     return exact_floor_div(num, den).cast("long")
+
+
+def rows_equal(a: DataFrame, b: DataFrame) -> bool:
+    """Multiset equality of two relations: ``exceptAll`` both ways, the
+    distributed set-diff with no driver collect. The second diff runs
+    only when the first is empty."""
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.plans._helpers import dec, dsum, sql_dsum
 from ecommerce_data_pipeline_spark.plans.registry import register
-from ecommerce_data_pipeline_spark.plans.scale import pin_if_cluster
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 
 

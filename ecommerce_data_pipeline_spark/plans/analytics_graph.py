@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.plans._helpers import dec, dsum, sql_dsum
 from ecommerce_data_pipeline_spark.plans.registry import register
-from ecommerce_data_pipeline_spark.plans.scale import broadcast_node_relation
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 
 # ---------------------------------------------------------------------------
@@ -172,9 +171,9 @@ def attribution_shapley_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r14 (guide §2.4 / §5): the windowed relation previously had THREE
     # consumers (ch, jm, conv) — unpinned, the user-keyed window subtree
-    # executed three times per run (pin_if_cluster only pins in cluster
-    # mode). Two structural fixes: (a) the channel list never needed the
-    # window (it reads only event_type) — derive it from the RAW events;
+    # executed three times per run. Two structural fixes: (a) the
+    # channel list never needed the window (it reads only event_type) —
+    # derive it from the RAW events;
     # (b) the touch-mask aggregate and the conversion pick fuse into ONE
     # (user_id, journey) aggregate (each journey's closing purchase
     # carries the SAME journey index as its touches — journey counts
@@ -510,11 +509,8 @@ def kcore_peel_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # survivor sets are node-bounded (the HITS score-relation
         # argument) — BROADCAST them into both semi-joins so a peel
         # round shuffles only the degree groupBy, not the edge relation
-        # twice (r13: 3 exchanges/round -> 1). r14: the hint is gated
-        # behind spark.graft.broadcastNodeRelations (advisor r13) — set
-        # it false at extreme node counts and the semi-joins fall back
-        # to shuffled form on the same keys, values unchanged.
-        bact = broadcast_node_relation(spark, active)
+        # twice (r13: 3 exchanges/round -> 1).
+        bact = F.broadcast(active)
         e_act = edges.join(
             bact, edges["u"] == active["node"], "left_semi"
         ).join(bact, F.col("v") == active["node"], "left_semi")
@@ -646,30 +642,25 @@ def _lpa_vote(edges: DataFrame, labels: DataFrame) -> DataFrame:
     r13 optimization (guide §2.4/§3.1), results bit-identical:
     - the label relation is node-bounded (the HITS score-relation
       argument), so it BROADCASTS into the two edge joins — the edge
-      relation is no longer shuffled twice per round. r14: the hints
-      are gated by spark.graft.broadcastNodeRelations (advisor r13) —
-      set it false at extreme node counts and the joins fall back to
-      shuffled-hash on the same keys, values unchanged;
+      relation is no longer shuffled twice per round;
     - the argmax is min(struct(-cnt, label)) — one hash aggregate —
       instead of a per-node row_number window, which paid a second
       full shuffle (groupBy keyed (node, label), window keyed (node))
       plus a sort. Lexicographic struct-min picks the same winner as
       (cnt DESC, label ASC): largest count, smallest label on ties.
     """
-    spark = labels.sparkSession
     votes = (
         edges.join(
-            broadcast_node_relation(
-                spark, labels.select(F.col("node").alias("v"), F.col("label"))
+            F.broadcast(
+                labels.select(F.col("node").alias("v"), F.col("label"))
             ),
             "v",
         )
         .select(F.col("u").alias("node"), "label")
         .unionAll(
             edges.join(
-                broadcast_node_relation(
-                    spark,
-                    labels.select(F.col("node").alias("u"), F.col("label")),
+                F.broadcast(
+                    labels.select(F.col("node").alias("u"), F.col("label"))
                 ),
                 "u",
             ).select(F.col("v").alias("node"), "label")
@@ -1275,16 +1266,11 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # score relations are node-dim-bounded (suppliers/customers, not
     # facts) — BROADCAST them into the edge join so each half-round
     # shuffles only the groupBy, not the join (measured 6.15 vs 7.19 s
-    # at sf0.1 within one session). r14: hint gated by
-    # spark.graft.broadcastNodeRelations (advisor r13) — set it false at
-    # extreme node counts and the join falls back to shuffled-hash on
-    # the same keys, values unchanged.
+    # at sf0.1 within one session).
     for _ in range(_HITS_ROUNDS):
         a_raw = (
             edges.join(
-                broadcast_node_relation(
-                    spark, h.select(F.col("node").alias("s"), "sc")
-                ),
+                F.broadcast(h.select(F.col("node").alias("s"), "sc")),
                 "s",
             )
             .select(F.col("c").alias("node"), "sc")
@@ -1294,9 +1280,7 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
         a = normalize(a_raw)
         h_raw = (
             edges.join(
-                broadcast_node_relation(
-                    spark, a.select(F.col("node").alias("c"), "sc")
-                ),
+                F.broadcast(a.select(F.col("node").alias("c"), "sc")),
                 "c",
             )
             .select(F.col("s").alias("node"), "sc")
@@ -1661,9 +1645,8 @@ def graph_core_decomposition_full(spark: SparkSession, sf_dir: str) -> DataFrame
                 counts.append(counts[-1])
                 continue
             # broadcast the node-bounded survivor set (the kcore_peel
-            # comment): 3 exchanges/round -> 1; hint gated by
-            # spark.graft.broadcastNodeRelations (advisor r13)
-            bact = broadcast_node_relation(spark, active)
+            # comment): 3 exchanges/round -> 1
+            bact = F.broadcast(active)
             e_act = edges.join(
                 bact, edges["u"] == active["node"], "left_semi"
             ).join(

@@ -17,13 +17,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ecommerce_data_pipeline_spark.plans._helpers import dec, dsum, sql_dsum
+from ecommerce_data_pipeline_spark.plans._helpers import (
+    dec,
+    dsum,
+    rows_equal,
+    sql_dsum,
+)
 from ecommerce_data_pipeline_spark.plans.analytics import (
     _SQL_EPISODES,
     _repeat_episodes,
 )
 from ecommerce_data_pipeline_spark.plans.registry import register
-from ecommerce_data_pipeline_spark.plans.scale import pin_if_cluster
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 
 @register(
@@ -1877,10 +1881,7 @@ def page_hinkley_stream_certificate(
             "ph_decrease_dollars",
             F.col("decrease_day").cast("date").alias("decrease_day"),
         )
-        final_equals_batch = (
-            final.exceptAll(batch_rel).count() == 0
-            and batch_rel.exceptAll(final).count() == 0
-        )
+        final_equals_batch = rows_equal(final, batch_rel)
         drain()  # post-saturation restart: must append nothing
         replay_stable = spark.read.parquet(out).count() == n_rows_first
         from pyspark.sql import Row

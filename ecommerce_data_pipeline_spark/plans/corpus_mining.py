@@ -12,7 +12,10 @@ from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.operators.similarity import shingle_rows
 from ecommerce_data_pipeline_spark.operators.text import token_count, tokens
-from ecommerce_data_pipeline_spark.plans._helpers import exact_floor_div
+from ecommerce_data_pipeline_spark.plans._helpers import (
+    exact_floor_div,
+    rows_equal,
+)
 from ecommerce_data_pipeline_spark.plans.registry import register
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 
@@ -1285,9 +1288,6 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token stream via a broadcast join, instead of per exploded row.
     # Same bucket per term, so docb is row-identical (probed at sf0.1:
     # 109,959 rows equal; docb materialization 1.47 s -> 0.86 s).
-    # r14: the hint is gated by spark.graft.broadcastNodeRelations
-    # (advisor r13) — set it false at extreme vocabularies and the map
-    # join falls back to a term-keyed shuffle, values unchanged.
     vmap = (
         tok.select("term")
         .distinct()
@@ -1298,11 +1298,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("b"),
         )
     )
-    from ecommerce_data_pipeline_spark.plans.scale import (
-        broadcast_node_relation,
-    )
-
-    fb = tok.join(broadcast_node_relation(spark, vmap), "term")
+    fb = tok.join(F.broadcast(vmap), "term")
     # Aggregation pyramid: per-(doc,bucket) counts feed BOTH the bucket
     # model and the final scoring join — one pass over the exploded
     # tokens, persisted at its smallest shape.
@@ -1957,10 +1953,7 @@ def mixture_monitor_stream_certificate(
         streamed = spark.read.parquet(out)
         n_rows_first = streamed.count()
         batch_rel = mixture_convergence_monitor(spark, sf_dir)
-        stream_equals_batch = (
-            streamed.exceptAll(batch_rel).count() == 0
-            and batch_rel.exceptAll(streamed).count() == 0
-        )
+        stream_equals_batch = rows_equal(streamed, batch_rel)
         drain()  # post-saturation restart: must append nothing
         replay_stable = spark.read.parquet(out).count() == n_rows_first
         from pyspark.sql import Row
@@ -2245,16 +2238,10 @@ def decontam_monitor_stream_certificate(
             .groupBy("doc_id")
             .agg(F.min("shard_id").alias("first_shard"))
         )
-        stream_equals_batch = (
-            streamed.exceptAll(batch_hits).count() == 0
-            and batch_hits.exceptAll(streamed).count() == 0
-        )
+        stream_equals_batch = rows_equal(streamed, batch_hits)
         curve_stream = _decon_curve(spark, sf_dir, streamed)
         curve_batch = decontamination_growth_monitor(spark, sf_dir)
-        curve_equals_monitor = (
-            curve_stream.exceptAll(curve_batch).count() == 0
-            and curve_batch.exceptAll(curve_stream).count() == 0
-        )
+        curve_equals_monitor = rows_equal(curve_stream, curve_batch)
         if pairs:
             drain()  # post-saturation restart: must append nothing
             replay_stable = (

@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.plans.registry import register
-from ecommerce_data_pipeline_spark.plans.scale import pin_if_cluster
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 
 
@@ -252,9 +251,7 @@ def group_k_anonymity_generalize(
     # scan+broadcast-join lineages for free, and the r8 A/B with qi
     # persisted measured ~20% SLOWER walls (0.80 vs 0.98 s at sf0.1,
     # when the plan had FIVE consumers) — the materialization barrier
-    # costs more than the redundant narrow scans save. At cluster scale
-    # the second fact pass costs real resources: scale_mode pins qi
-    # (plans/scale.py).
+    # costs more than the redundant narrow scans save.
     qi = orders.join(dims, orders["o_custkey"] == dims["c_custkey"]).select(
         "o_orderkey",
         "region",
@@ -262,7 +259,6 @@ def group_k_anonymity_generalize(
         "segment",
         F.year("o_orderdate").cast("int").alias("order_year"),
     )
-    qi = pin_if_cluster(spark, qi)
     k = _KANON_K
     # class relation: region rides along (functionally determined by
     # nation), so every residual level can re-aggregate class counts
@@ -671,9 +667,8 @@ def dp_contribution_bounding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one (o_custkey)-partitioned row_number window (the
     standard per-entity cap — partitioned, never global), shared by the
-    segment rollup and the per-user contribution aggregate via
-    pin_if_cluster on the ranked relation (cluster mode: ONE fact scan;
-    local mode: the two branches overlap). The dim join is broadcast-
+    segment rollup and the per-user contribution aggregate (unpinned:
+    the two branches re-scan and overlap). The dim join is broadcast-
     sized (customer segment column only)."""
     from ecommerce_data_pipeline_spark.plans._helpers import dec
 
@@ -681,20 +676,17 @@ def dp_contribution_bounding(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer")
     cents = (dec("o_totalprice") * 100).cast("long")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    ranked = pin_if_cluster(
-        spark,
-        orders.join(
-            F.broadcast(customer.select("c_custkey", "c_mktsegment")),
-            orders["o_custkey"] == F.col("c_custkey"),
-        ).select(
-            "o_custkey",
-            F.col("c_mktsegment").alias("segment"),
-            cents.alias("cents"),
-            F.least(cents, F.lit(_DP_CLIP_CENTS).cast("long")).alias(
-                "clip_cents"
-            ),
-            F.row_number().over(w).alias("rn"),
+    ranked = orders.join(
+        F.broadcast(customer.select("c_custkey", "c_mktsegment")),
+        orders["o_custkey"] == F.col("c_custkey"),
+    ).select(
+        "o_custkey",
+        F.col("c_mktsegment").alias("segment"),
+        cents.alias("cents"),
+        F.least(cents, F.lit(_DP_CLIP_CENTS).cast("long")).alias(
+            "clip_cents"
         ),
+        F.row_number().over(w).alias("rn"),
     )
     kept = F.col("rn") <= _DP_CAP_ORDERS
     per_seg = ranked.groupBy("segment").agg(

@@ -17,7 +17,6 @@ from ecommerce_data_pipeline_spark.plans._helpers import (
     sql_dsum,
     sql_ordered_fold,
 )
-from ecommerce_data_pipeline_spark.plans.scale import pin_if_cluster
 from ecommerce_data_pipeline_spark.plans.sketches import _hash60, _sql_hash60
 from ecommerce_data_pipeline_spark.plans.registry import register
 from ecommerce_data_pipeline_spark.sources.readers import load_table
@@ -655,8 +654,8 @@ def watermark_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (over the GRID, never fact rows — the cusum exemption contract);
     the watermark table broadcast-joins back and one hash aggregate
     produces the audit. All counts exact integers; the dropped-value
-    sum is exact DECIMAL. The shared projection is scale_mode-pinned
-    (plans/scale.py) for the two fact passes."""
+    sum is exact DECIMAL. The shared projection is unpinned: its two
+    fact passes re-scan and overlap."""
     events = load_table(spark, sf_dir, "events")
     arr_ms = F.unix_millis("ts") + (
         _hash60(F.col("event_id"), "wm#") % _WM_JITTER_S
@@ -673,7 +672,6 @@ def watermark_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"arr_ms div {_WM_SLOT_MS}").alias("trig"),
         F.expr(f"ev_ms div {_WM_SLOT_MS}").alias("w"),
     )
-    b2 = pin_if_cluster(spark, b2)
     trig_grid = b2.groupBy("trig").agg(F.max("ev_ms").alias("m"))
     w_prior = (
         Window.orderBy("trig")

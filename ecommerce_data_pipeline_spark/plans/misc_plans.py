@@ -8,8 +8,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.operators.text import tokens
+from ecommerce_data_pipeline_spark.plans._helpers import rows_equal
 from ecommerce_data_pipeline_spark.plans.registry import register
-from ecommerce_data_pipeline_spark.plans.scale import pin_if_cluster
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 
 
@@ -717,14 +717,8 @@ def queue_source_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("n_ts_ok"),
     ).first()
     n = stats["n"]
-    redrain_same = (
-        drain(8).exceptAll(q8).count() == 0
-        and q8.exceptAll(drain(8)).count() == 0
-    )
-    layout_same = (
-        drain(4).exceptAll(q8).count() == 0
-        and q8.exceptAll(drain(4)).count() == 0
-    )
+    redrain_same = rows_equal(drain(8), q8)
+    layout_same = rows_equal(drain(4), q8)
     from pyspark.sql import Row
 
     return spark.createDataFrame(
@@ -890,10 +884,7 @@ def streaming_flagship_certificate(spark: SparkSession, sf_dir: str) -> DataFram
             all_msgs, dim_products, dim_customers
         ).localCheckpoint()  # two exceptAll consumers
         got = fact.drop("_batch_id").localCheckpoint()
-        streamed_equals_batch = (
-            got.exceptAll(twin.select(*got.columns)).count() == 0
-            and twin.select(*got.columns).exceptAll(got).count() == 0
-        )
+        streamed_equals_batch = rows_equal(got, twin.select(*got.columns))
 
         pairs = spark.read.parquet(f"{wh}/neardup_pairs").drop("_batch_id")
         pairs = pairs.localCheckpoint()
@@ -901,9 +892,8 @@ def streaming_flagship_certificate(spark: SparkSession, sf_dir: str) -> DataFram
             payload_text(all_msgs), threshold=0.8
         ).localCheckpoint()
         resends_flagged = pairs.count()
-        neardup_equals_batch = (
-            pairs.exceptAll(pair_twin.select(*pairs.columns)).count() == 0
-            and pair_twin.select(*pairs.columns).exceptAll(pairs).count() == 0
+        neardup_equals_batch = rows_equal(
+            pairs, pair_twin.select(*pairs.columns)
         )
     finally:
         spark.conf.set(shuffle_conf, prior_shuffle)
@@ -1066,8 +1056,8 @@ def cdc_compaction_io_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       table-format tuner actually reads off this ledger.
 
     Scale shape: two fact passes (per-key-batch last-op ranking — one
-    shuffle on user_id; per-bucket-batch op counts), scale_mode-pinned
-    (plans/scale.py); everything downstream lives on the bucket x day
+    shuffle on user_id; per-bucket-batch op counts), unpinned so they
+    overlap; everything downstream lives on the bucket x day
     grid (~{_CDC_BUCKETS} x calendar rows). The per-key windows are
     key-partitioned; the only unpartitioned window is the reader
     cumulative over the BATCH GRID (calendar-bounded — the cusum
@@ -1084,7 +1074,6 @@ def cdc_compaction_io_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
     )
-    log = pin_if_cluster(spark, log)
     w_last = Window.partitionBy("user_id", "batch_day").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )

@@ -138,8 +138,7 @@ def stupid_backoff_trigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist SERIALIZES a pass Spark otherwise runs as four concurrent
     subtree stages on idle cores, and the n=2/unigram passes are
     cheaper than the shared n=3 window. On a saturated cluster the
-    shared pass wins on scan bytes — that is scale_mode territory, not
-    a local-bench change.
+    shared pass would read fewer scan bytes (not measured).
     """
     from ecommerce_data_pipeline_spark.operators.similarity import shingle_rows
 

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.plans.registry import register
-from ecommerce_data_pipeline_spark.plans.scale import pin_if_cluster
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 
 

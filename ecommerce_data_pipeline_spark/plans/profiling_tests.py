@@ -19,13 +19,13 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ecommerce_data_pipeline_spark.plans._helpers import rows_equal
 from ecommerce_data_pipeline_spark.plans.profiling import (
     _SQL_TWO_SEG_HIST,
     _two_segment_hist,
     parquet_layout_audit,
 )
 from ecommerce_data_pipeline_spark.plans.registry import register
-from ecommerce_data_pipeline_spark.plans.scale import pin_if_cluster
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 
 @register(
@@ -868,10 +868,7 @@ def layout_values_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         per_file = one if per_file is None else per_file.unionByName(one)
-    values_match = (
-        audit.exceptAll(per_file).count() == 0
-        and per_file.exceptAll(audit).count() == 0
-    )
+    values_match = rows_equal(audit, per_file)
     n_audit_files = audit.count()
     orders = load_table(spark, sf_dir, "orders")
     table = orders.agg(
@@ -1904,13 +1901,12 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tvd <= t) and the distances themselves (6dp, rounded BEFORE the
     t comparison on both engines).
 
-    Scale shape: the QI relation is built once and pinned under
-    cluster scale_mode (four aggregate consumers: classes, class x
-    sensitive cells, sensitive domain, total); everything downstream is
+    Scale shape: the QI relation is built once, unpinned (four
+    aggregate consumers: classes, class x sensitive cells, sensitive
+    domain, total); everything downstream is
     classes x |domain| grid algebra (~875 x 5 at any SF — calendar x
     dims bounded), broadcast-joined. No windows."""
-    qi = pin_if_cluster(
-        spark,
+    qi = (
         load_table(spark, sf_dir, "orders")
         .join(
             F.broadcast(
@@ -1933,7 +1929,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment").alias("segment"),
             F.year("o_orderdate").cast("int").alias("order_year"),
             F.col("o_orderpriority").alias("sensitive"),
-        ),
+        )
     )
     cls = qi.groupBy("nation", "segment", "order_year").agg(
         F.count(F.lit(1)).cast("long").alias("n_c")

@@ -70,19 +70,14 @@ def embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets, probing the home bucket + all Hamming-1 neighbors): only
     ~(1+p)/2^p of the corpus is scored — the 100 TB path.
 
-    Bucketing runs as the JVM fold (zero Python workers). The Arrow-matmul
-    variant (`vectorized_bucketing=True`) is marginally faster on a quiet
-    host (0.75 s vs 1.08 s here) but round-2 driver benching showed the
-    Python-worker fork/IPC path degrades ~12× under host co-load (9.1 s)
-    while the fold degrades linearly like every JVM stage — on shared
-    infrastructure predictable wins. The vectorized form remains the right
-    call when corpus × planes is large enough that matmul dominates worker
-    startup (it is re-benchmarked per corpus in tests/test_similarity.py)."""
+    Bucketing runs as the JVM fold (zero Python workers): an Arrow-matmul
+    bucketing measured marginally faster on a quiet host (0.75 s vs
+    1.08 s) but its Python-worker fork/IPC path degraded ~12× under host
+    co-load (9.1 s), while the fold degrades linearly like every JVM
+    stage."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    return lsh_bucketed_topk(
-        queries, emb, dim=64, k=10, planes=4, vectorized_bucketing=False
-    )
+    return lsh_bucketed_topk(queries, emb, dim=64, k=10, planes=4)
 
 
 def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,8 +87,7 @@ def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     return lsh_bucketed_topk(
-        queries, emb, dim=64, k=10, planes=4, probe_hamming=4,
-        vectorized_bucketing=False,
+        queries, emb, dim=64, k=10, planes=4, probe_hamming=4
     )
 
 

@@ -18,7 +18,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.plans.registry import register
-from ecommerce_data_pipeline_spark.plans.scale import pin_if_cluster
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 
 _HEX = "0123456789abcdef"
@@ -451,17 +450,11 @@ def hyperloglog_union_over_time(
         .otherwise(q.bitwiseAND(-q))
         .alias("lsb"),
     )
-    # Plan shape is scale_mode-selected (plans/scale.py). Local default:
     # UNPINNED — the grid / sketch / exact branches re-scan events (4
     # column-pruned passes) which local[32] overlaps for free; the r8
     # A/B with the daily sketch persisted measured 2x SLOWER walls
     # (0.53 vs 1.06 s at sf0.1) because the materialization barrier
-    # serializes the branches. Cluster mode: `slots` persists and every
-    # branch (grid included) reads the ONE materialized fact pass —
-    # redundant 100 TB scans cost real resources there. Values are
-    # identical in both modes; plan + parity pinned in
-    # tests/test_scale_paths.py.
-    slots = pin_if_cluster(spark, slots)
+    # serializes the branches. Plan pinned in tests/test_scale_paths.py.
     daily = slots.groupBy("day", "bucket").agg(F.max("lsb").alias("lsb_max"))
     g = slots.select("day").distinct().withColumnRenamed("day", "gday")
     merged = (
@@ -621,13 +614,9 @@ def histogram_quantile_window_merge(
         F.round(F.col("value") * 100).cast("long").alias("vc"),
         "value",
     )
-    # scale_mode-selected (plans/scale.py) — same tradeoff as the HLL
-    # union's daily sketch: local default stays UNPINNED (local[32]
+    # Same tradeoff as the HLL union's daily sketch: UNPINNED (local[32]
     # overlaps the redundant column-pruned event scans for free, while
-    # a persist barrier serializes the branches — measured 2x wall);
-    # cluster mode persists `vals` so hist / grid / exact all read the
-    # ONE materialized fact pass.
-    vals = pin_if_cluster(spark, vals)
+    # a persist barrier serializes the branches — measured 2x wall).
     hist = vals.groupBy(
         "day",
         F.least(F.lit(_HQ_BINS - 1), F.floor(F.col("vc") / _HQ_WIDTH))

@@ -1,13 +1,12 @@
 """Fresh-interpreter import-integrity gate (VERDICT r8 task #2).
 
 Named ``test_aaa_*`` so pytest's alphabetical collection runs it FIRST:
-a dropped module import (the r7/r8 module-surgery incident class) fails
-the suite inside a minute, with the broken query named, instead of
-surfacing at the 5-minute full oracle pass — or worse, only at the
-round driver. The gate must run in a FRESH interpreter: the pytest
-session's own module cache can mask a broken import order (the module
-that defines the missing name may already be imported by conftest
-before the broken module loads).
+a dropped module-level import (the r7/r8 module-surgery incident class)
+or an oracle string DuckDB cannot bind fails the suite within seconds,
+instead of surfacing at the full oracle pass. The gate must run in a
+FRESH interpreter: the pytest session's own module cache can mask a
+broken import order (the module that defines the missing name may
+already be imported by conftest before the broken module loads).
 
 The gate itself lives in tools/import_gate.py so it is also runnable
 standalone before committing plan-module surgery.

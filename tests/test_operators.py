@@ -264,30 +264,6 @@ def test_stratified_sample_proportions_and_determinism(spark):
     )
 
 
-def test_map_in_arrow_features_match_pandas(spark):
-    """The mapInArrow extractor must be bit-identical to the mapInPandas
-    one — same stub, same schema, one fewer copy."""
-    from ecommerce_data_pipeline_spark.operators.multimodal import (
-        attach_binary_payload,
-        extract_features,
-        extract_features_arrow,
-    )
-    from ecommerce_data_pipeline_spark.sources.readers import load_table
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    media = attach_binary_payload(docs)
-
-    def canon(rows):
-        return {
-            tuple(tuple(v) if isinstance(v, list) else v for v in r)
-            for r in rows
-        }
-
-    a = canon(extract_features(media).collect())
-    b = canon(extract_features_arrow(media).collect())
-    assert a == b and len(a) > 0
-
-
 def test_write_with_metrics_observes_on_write_pass(spark, tmp_path):
     """Observation metrics collected during the write must equal an
     explicit aggregation over the same input."""
@@ -310,34 +286,6 @@ def test_write_with_metrics_observes_on_write_pass(spark, tmp_path):
     assert got["n_rows"] == expect["n_rows"]
     assert got["total_price"] == expect["total_price"]
     assert spark.read.parquet(path).count() == expect["n_rows"]
-
-
-def test_asof_cogroup_matches_union_sort_form(spark):
-    """The cogroup/merge_asof as-of twin must reproduce the JVM
-    union-sort as-of row-for-row (same backward tie-inclusive
-    semantics, same output contract) — two independent physical
-    strategies, one result."""
-    from ecommerce_data_pipeline_spark.operators.joins import (
-        as_of_join,
-        as_of_join_cogroup,
-    )
-    from ecommerce_data_pipeline_spark.sources.readers import load_table
-
-    events = load_table(spark, "/root/testdata/sf0.01", "events")
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    signups = events.filter(F.col("event_type") == "signup").select(
-        "user_id", "ts", F.col("event_id").alias("event_id2")
-    )
-    a = as_of_join(purchases, signups, on="user_id", left_ts="ts", right_ts="ts")
-    b = as_of_join_cogroup(
-        purchases, signups, on="user_id", left_ts="ts", right_ts="ts"
-    )
-    assert sorted(a.columns) == sorted(b.columns)
-    ka = sorted(map(tuple, a.select(*sorted(a.columns)).collect()))
-    kb = sorted(map(tuple, b.select(*sorted(a.columns)).collect()))
-    assert ka == kb
 
 
 def test_isotonic_fit_matches_reference_pav(spark):
@@ -420,15 +368,10 @@ def test_parquet_layout_audit_matches_duckdb_filename_scan(spark):
 
 
 def test_asof_cogroup_nullable_types_on_unmatched_lefts(spark):
-    """Right columns of EVERY numeric width must round-trip unmatched
-    lefts as true NULLs (not NaN, not a crash): int32 + double right
-    payloads, with one left row earlier than all right rows."""
+    """Unmatched lefts carry true NULLs (None, never NaN) in int32 and
+    double right payloads, and those columns keep their types; one left
+    row is earlier than all right rows, one key has no right rows."""
     import datetime as dt
-
-    from ecommerce_data_pipeline_spark.operators.joins import (
-        as_of_join,
-        as_of_join_cogroup,
-    )
 
     t = dt.datetime(2024, 1, 1)
     left = spark.createDataFrame(
@@ -441,16 +384,10 @@ def test_asof_cogroup_nullable_types_on_unmatched_lefts(spark):
         "user_id long, ts timestamp, small int, score double",
     )
     a = as_of_join(left, right, on="user_id", left_ts="ts", right_ts="ts")
-    b = as_of_join_cogroup(left, right, on="user_id", left_ts="ts", right_ts="ts")
-    assert dict(a.dtypes) == dict(b.dtypes)
-    key = lambda row: tuple(repr(v) for v in row)  # noqa: E731 — None-safe sort
-    ka = sorted(map(tuple, a.select(*sorted(a.columns)).collect()), key=key)
-    kb = sorted(map(tuple, b.select(*sorted(a.columns)).collect()), key=key)
-    assert ka == kb
-    # the early/only rows carry NULL (None), never NaN
-    for r in b.collect():
-        if r["tag"] in ("early", "only"):
-            assert r["right_small"] is None and r["right_score"] is None
+    dtypes = dict(a.dtypes)
+    assert (dtypes["right_small"], dtypes["right_score"]) == ("int", "double")
+    got = {r["tag"]: (r["right_small"], r["right_score"]) for r in a.collect()}
+    assert got == {"early": (None, None), "late": (7, 1.5), "only": (None, None)}
 
 
 def test_variant_parse_malformed_json_yields_null(spark):

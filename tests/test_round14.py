@@ -129,31 +129,6 @@ def test_slate_is_tool_emitted():
     assert tuple(emitted) == GRADE_PRIORITY
 
 
-# ---------------------------------------------------------------------------
-# Node-relation broadcast gate (advisor r13): the graph tier's broadcast
-# hints on node/vocab-bounded relations must degrade to shuffled joins
-# via session conf, with identical values — a switch, not a code edit.
-
-
-def test_node_broadcast_gate_degrades_to_shuffled_join(spark):
-    from ecommerce_data_pipeline_spark.plans import REGISTRY
-    from ecommerce_data_pipeline_spark.plans.scale import (
-        NODE_BROADCAST_CONF,
-    )
-
-    fn = REGISTRY["kcore_peel_certificate"].fn
-    try:
-        spark.conf.set(NODE_BROADCAST_CONF, "true")
-        with_hint = sorted(map(tuple, fn(spark, SF_SMOKE).collect()))
-        spark.catalog.clearCache()
-        spark.conf.set(NODE_BROADCAST_CONF, "false")
-        without = sorted(map(tuple, fn(spark, SF_SMOKE).collect()))
-        assert with_hint == without
-    finally:
-        spark.conf.unset(NODE_BROADCAST_CONF)
-        spark.catalog.clearCache()
-
-
 @pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_MID])
 def test_generalized_esd_driver_fold_matches_unrolled(spark, sf_dir):
     from ecommerce_data_pipeline_spark.plans import REGISTRY

@@ -307,29 +307,24 @@ def test_survival_global_window_runs_on_buckets(spark):
 
 
 # ---------------------------------------------------------------------------
-# scale_mode (plans/scale.py, VERDICT r8 task #1): the cluster-scale
-# plan shape is a selectable CODE PATH, not a comment.
+# Multi-consumer plans over one fact relation stay UNPINNED: the
+# redundant column-pruned fact scans overlap across idle cores, while a
+# persist barrier serializes the branches (r8 A/B: 2x slower walls for
+# the HLL daily sketch, ~20% for the k-anon QI projection).
 
-_SCALE_MODE_QUERIES = {
-    # query -> (fact table, n pipelined fact passes in the local form)
+_MULTI_CONSUMER_QUERIES = {
+    # query -> (fact table, n pipelined fact passes)
     "hyperloglog_union_over_time": ("events", 4),
     "histogram_quantile_window_merge": ("events", 4),
     # 6 = the broadcast join-back + 5 re-derivations of the c0 class
     # count (one per residual ladder level) — all narrow column-pruned
-    # passes the local form happily overlaps; cluster mode collapses
-    # them onto the one pinned qi materialization
+    # passes the plan overlaps
     "group_k_anonymity_generalize": ("orders", 6),
-    # r9 additions: trigger-grid + flagged-join passes (watermark) and
-    # last-op-ranking + op-count passes (cdc)
+    # trigger-grid + flagged-join passes (watermark) and last-op-ranking
+    # + op-count passes (cdc)
     "watermark_late_data_audit": ("events", 2),
     "cdc_compaction_io_audit": ("events", 2),
 }
-
-# attribution_shapley_values carried pin_if_cluster on its
-# journey-windowed relation through r13; the r14 fused (user, journey)
-# aggregate leaves the window subtree with exactly ONE consumer, so the
-# pin (and its storage-delta test entry below) was retired — a single-
-# consumer pin only adds memory pressure at cluster scale.
 
 
 def _fact_scan_lines(plan: str, table: str) -> list[str]:
@@ -341,146 +336,9 @@ def _fact_scan_lines(plan: str, table: str) -> list[str]:
 
 
 def test_scale_mode_cluster_pins_one_fact_scan(spark):
-    """Under spark.graft.scaleMode=cluster each multi-consumer plan must
-    read its fact table through exactly ONE materialized relation:
-    every printed fact FileScan is the cached relation's definition
-    (paired 1:1 with an InMemoryRelation line), every consumer is an
-    InMemoryTableScan, and the session holds exactly one cached RDD
-    after materialization — the ground truth that the fact was scanned
-    once. The local default keeps the measured-faster pipelined form:
-    no InMemory* nodes, N redundant column-pruned passes."""
-    from ecommerce_data_pipeline_spark.plans.scale import SCALE_MODE_CONF
-
-    for name, (table, n_local_passes) in _SCALE_MODE_QUERIES.items():
-        fn = REGISTRY[name].fn
-        try:
-            spark.conf.set(SCALE_MODE_CONF, "local")
-            plan_local = _executed_plan(fn(spark, SF_SMOKE))
-            assert "InMemoryTableScan" not in plan_local, name
-            assert len(_fact_scan_lines(plan_local, table)) == (
-                n_local_passes
-            ), name
-
-            spark.conf.set(SCALE_MODE_CONF, "cluster")
-            # delta-based storage check: earlier tests may leave
-            # localCheckpoint blocks that clearCache cannot remove
-            before = {
-                i.id()
-                for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            }
-            df = fn(spark, SF_SMOKE)
-            plan = _executed_plan(df)
-            scans = _fact_scan_lines(plan, table)
-            n_defs = plan.count("InMemoryRelation")
-            n_reads = plan.count("InMemoryTableScan")
-            # every printed fact scan is a cache DEFINITION, and there
-            # is at least one cached consumer per pipelined pass
-            assert len(scans) == n_defs, (name, len(scans), n_defs)
-            assert n_reads >= n_defs >= 2, (name, n_reads, n_defs)
-            # ground truth: exactly ONE NEW cached relation
-            df.write.format("noop").mode("overwrite").save()
-            new = [
-                i
-                for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-                if i.id() not in before
-            ]
-            assert len(new) == 1, (name, [i.name() for i in new])
-        finally:
-            spark.catalog.clearCache()
-            spark.conf.set(SCALE_MODE_CONF, "local")
-
-
-def test_scale_mode_values_identical_across_modes(spark):
-    """The switch changes the physical strategy only: collected results
-    must be identical row-for-row in both modes (same arithmetic, same
-    rows — the driver hash would see no difference)."""
-    from ecommerce_data_pipeline_spark.plans.scale import SCALE_MODE_CONF
-
-    for name in _SCALE_MODE_QUERIES:
-        fn = REGISTRY[name].fn
-        try:
-            spark.conf.set(SCALE_MODE_CONF, "local")
-            local_rows = sorted(map(tuple, fn(spark, SF_SMOKE).collect()))
-            spark.conf.set(SCALE_MODE_CONF, "cluster")
-            cluster_rows = sorted(map(tuple, fn(spark, SF_SMOKE).collect()))
-        finally:
-            spark.catalog.clearCache()
-            spark.conf.set(SCALE_MODE_CONF, "local")
-        assert local_rows == cluster_rows, name
-
-
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize(
-    "qname",
-    [
-        # QI projection -> classes + cells + domain + total
-        # (attribution_shapley_values left this list in r14: its fused
-        # single-consumer window needs no pin — see the comment above)
-        "t_closeness_audit",
-    ],
-)
-def test_scale_mode_pins_eager_lattice_base(spark, qname):
-    """Cluster scale_mode for the eager-localCheckpoint queries: their
-    returned plans show no fact scan (the lattice is materialized
-    during construction), so the pin is asserted as a storage delta —
-    exactly one MORE new storage entry than the local run leaves (both
-    modes localCheckpoint the same downstream relations) — plus
-    cross-mode value parity."""
-    from ecommerce_data_pipeline_spark.plans.scale import SCALE_MODE_CONF
-
-    fn = REGISTRY[qname].fn
-
-    def storage_ids():
-        return {
-            i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        }
-
-    def run():
-        before = storage_ids()
-        rows = sorted(map(tuple, fn(spark, SF_SMOKE).collect()))
-        return rows, len(storage_ids() - before)
-
-    try:
-        spark.conf.set(SCALE_MODE_CONF, "local")
-        local_rows, n_local = run()
-        spark.catalog.clearCache()
-        spark.conf.set(SCALE_MODE_CONF, "cluster")
-        cluster_rows, n_cluster = run()
-        assert cluster_rows == local_rows
-        assert n_cluster == n_local + 1, (n_local, n_cluster)
-    finally:
-        spark.catalog.clearCache()
-        spark.conf.set(SCALE_MODE_CONF, "local")
-
-
-def test_graft_confs_parse_case_insensitively(spark):
-    """``spark.graft.*`` values are read case- and whitespace-insensitively:
-    every spelling of ``false`` drops the node-relation broadcast hint,
-    and every spelling of ``cluster`` selects the cluster shape. Checked
-    on the analyzed logical plan; nothing executes."""
-    from ecommerce_data_pipeline_spark.plans.scale import (
-        NODE_BROADCAST_CONF,
-        SCALE_MODE_CONF,
-        broadcast_node_relation,
-        cluster_scale,
-    )
-
-    def hinted() -> bool:
-        df = broadcast_node_relation(spark, spark.range(3))
-        return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
-
-    try:
-        assert hinted()  # unset: the hint stays
-        for value in ("false", "False", " FALSE "):
-            spark.conf.set(NODE_BROADCAST_CONF, value)
-            assert not hinted(), value
-        spark.conf.set(NODE_BROADCAST_CONF, " True")
-        assert hinted()
-        for value in ("cluster", "Cluster", " CLUSTER "):
-            spark.conf.set(SCALE_MODE_CONF, value)
-            assert cluster_scale(spark), value
-    finally:
-        spark.conf.unset(NODE_BROADCAST_CONF)
-        spark.conf.unset(SCALE_MODE_CONF)
+    """Each multi-consumer plan keeps the measured-faster pipelined form:
+    no InMemory* nodes, exactly N redundant column-pruned fact passes."""
+    for name, (table, n_passes) in _MULTI_CONSUMER_QUERIES.items():
+        plan = _executed_plan(REGISTRY[name].fn(spark, SF_SMOKE))
+        assert "InMemoryTableScan" not in plan, name
+        assert len(_fact_scan_lines(plan, table)) == n_passes, name

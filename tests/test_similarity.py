@@ -86,45 +86,6 @@ def test_frame_sample_shapes(spark):
         assert all(f is not None and len(f) <= 8 for f in r["frames"])
 
 
-def test_pandas_cosine_matches_jvm_fold(spark):
-    """The NumPy/BLAS batch scorer returns exactly the JVM fold's top-k
-    (same 6dp rounding + tiebreak contract)."""
-    from ecommerce_data_pipeline_spark.operators.similarity import cosine_topk_pandas
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    jvm = {(r["query_id"], r["cand_id"], r["cosine"], r["rnk"])
-           for r in cosine_topk(queries, emb, k=10).collect()}
-    pnd = {(r["query_id"], r["cand_id"], r["cosine"], r["rnk"])
-           for r in cosine_topk_pandas(queries, emb, k=10).collect()}
-    assert jvm == pnd
-
-
-def test_pandas_cosine_nondefault_column_names(spark):
-    """Regression (ADVICE r4): the batch fn indexed the caller's
-    id_col/vec_col, but the corpus select aliases to fixed names — any
-    non-default names raised KeyError in the Python worker."""
-    from ecommerce_data_pipeline_spark.operators.similarity import cosine_topk_pandas
-
-    emb = load_table(spark, SF_SMOKE, "embeddings").select(
-        F.col("vec_id").alias("doc_key"), F.col("embedding").alias("vec")
-    )
-    queries = emb.filter(F.col("doc_key") < 4)
-    renamed = {(r["query_id"], r["cand_id"], r["cosine"], r["rnk"])
-               for r in cosine_topk_pandas(
-                   queries, emb, k=5, id_col="doc_key", vec_col="vec"
-               ).collect()}
-    default = {(r["query_id"], r["cand_id"], r["cosine"], r["rnk"])
-               for r in cosine_topk(
-                   queries.select(F.col("doc_key").alias("vec_id"),
-                                  F.col("vec").alias("embedding")),
-                   emb.select(F.col("doc_key").alias("vec_id"),
-                              F.col("vec").alias("embedding")),
-                   k=5,
-               ).collect()}
-    assert renamed == default
-
-
 def test_ivf_recall_vs_bruteforce(spark):
     from ecommerce_data_pipeline_spark.operators.ivf import ivf_topk
 
@@ -142,32 +103,6 @@ def test_ivf_recall_vs_bruteforce(spark):
     again = {(r["query_id"], r["cand_id"])
              for r in ivf_topk(queries, emb, n_centroids=16, nprobe=4, k=10).collect()}
     assert approx == again
-
-
-def test_lsh_bucket_pandas_matches_fold(spark):
-    """The vectorized (Arrow matmul) bucketing must agree with the JVM
-    fold on the fixture — same sign bits, same buckets. (A projection at
-    exactly 0.0 could differ under BLAS reordering; none exists in the
-    fixture, and bucket ids are approximation plumbing either way.)"""
-    from ecommerce_data_pipeline_spark.operators.similarity import (
-        lsh_bucket,
-        lsh_bucket_pandas,
-        random_hyperplanes,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    hp = random_hyperplanes(64, 8, seed=42)
-    fold = {
-        r["vec_id"]: r["b"]
-        for r in emb.select("vec_id", lsh_bucket("embedding", hp).alias("b")).collect()
-    }
-    pand = {
-        r["vec_id"]: r["b"]
-        for r in emb.select(
-            "vec_id", lsh_bucket_pandas("embedding", hp).alias("b")
-        ).collect()
-    }
-    assert fold == pand
 
 
 def test_connected_components_transitive_chain(spark):
@@ -549,9 +484,9 @@ def test_recall_certificates_hold_on_smoke(spark):
 
 def test_mmr_rerank_invariants_and_nondefault_columns(spark):
     """MMR picks come from the relevance pool, rank 1 is the most
-    relevant candidate, picks are distinct, and — the regression class
-    the cosine_topk_pandas aliasing bug belonged to — non-default
-    id/vec column names work end-to-end."""
+    relevant candidate, picks are distinct, and non-default id/vec
+    column names work end-to-end (a batch function that indexes the
+    caller's names after aliasing them away raises in the worker)."""
     from ecommerce_data_pipeline_spark.operators.similarity import (
         mmr_rerank,
     )
@@ -677,16 +612,8 @@ def test_sign_grid_bits_clamp_and_null_safe_bucket(spark):
 
 
 def test_cosine_pandas_zero_norm_matches_jvm_null_contract(spark):
-    """Zero-norm vectors: the JVM path yields NULL cosine
-    (cosine_with_norms), the pandas path yields 0/0 = NaN which Spark's
-    Arrow ingestion masks to NULL — both twins must produce identical
-    rows, with the zero-norm candidate ranked beyond k whenever k real
-    candidates exist."""
-    from ecommerce_data_pipeline_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_pandas,
-    )
-
+    """Zero-norm vectors get a NULL cosine (cosine_with_norms) and rank
+    beyond every real candidate: NULL scores sort last under desc."""
     rows = [
         (1, [1.0, 0.0]),
         (2, [0.9, 0.1]),
@@ -694,13 +621,16 @@ def test_cosine_pandas_zero_norm_matches_jvm_null_contract(spark):
         (4, [0.5, 0.5]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    jvm = sorted(map(tuple, cosine_topk(df, df, k=2).collect()))
-    pds = sorted(map(tuple, cosine_topk_pandas(df, df, k=2).collect()))
-    assert jvm == pds
-    # zero-norm candidate never outranks real candidates
-    for q, cand, cos, rnk in jvm:
-        if q != 3:
-            assert cand != 3
+    top2 = cosine_topk(df, df, k=2).collect()
+    assert all(r["cand_id"] != 3 for r in top2 if r["query_id"] != 3)
+    assert all(r["cosine"] is None for r in top2 if r["query_id"] == 3)
+    # with k = every other vector, the zero-norm candidate is ranked
+    # last, with a NULL score
+    for r in cosine_topk(df, df, k=3).collect():
+        if r["cand_id"] == 3:
+            assert (r["cosine"], r["rnk"]) == (None, 3), r
+        else:
+            assert (r["cosine"] is None) == (r["query_id"] == 3), r
 
 
 def test_incremental_neardup_tolerates_overlapping_delta(spark):

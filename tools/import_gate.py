@@ -5,33 +5,25 @@ Two consecutive rounds hit the same incident class: module-header
 surgery dropped an import that a DIFFERENT query consumed hundreds of
 lines below (r7 fa12e18: a windows import; r8: the sampling-module
 rewrite broke ``sampling_certificate`` 300 lines down), and targeted
-verifies of the edited query stayed green — the breakage only surfaced
-at the 5-minute full oracle pass. This gate catches the class at commit
-time, in seconds-not-minutes, by doing the three cheap things that
-incident needs and nothing else. In ONE fresh interpreter it
+verifies of the edited query stayed green. In ONE fresh interpreter,
+with no Spark session, this gate
 
 1. imports the driver contract (``__spark_entry__``) cold — any
    module-level NameError/ImportError in the plan packages fails here;
-2. PLAN-BUILDS every ``queries()`` entry at sf0.001 (calls the plan fn
-   and forces analysis via ``df.schema`` — no job is submitted): a
-   dropped helper import fails with the offending QUERY named, which is
-   exactly the signal the incident class lacked;
-3. binder-validates every ``oracle_sql()`` string with DuckDB
-   ``EXPLAIN`` against views of the same tables — SQL typos and
+2. binder-validates every ``oracle_sql()`` string with DuckDB
+   ``EXPLAIN`` against views of the sf0.001 tables — SQL typos and
    missing-column references fail without executing anything.
 
-``eager``-tagged certificate plans run full audits (streaming drains,
-exceptAll set-diffs) INSIDE the plan fn, so step 2 skips them — minutes
-per sweep otherwise; their modules are still imported by step 1 and the
-oracle value gate (tests/test_oracle.py) still executes each. The skip
-list is derived from tags, never hand-maintained.
+A helper import dropped inside a query function only fails when that
+function runs: ``tests/test_oracle.py`` builds and executes every
+registry query at sf0.001 in the same Tier-1 run and names the query
+that fails.
 
 Run standalone before committing any plan-module surgery:
 
-    python tools/import_gate.py          # full gate (~1 min: one JVM)
-    python tools/import_gate.py --sql-only   # DuckDB binder pass only (~s)
+    python tools/import_gate.py          # a few seconds, no JVM
 
-pytest runs the full gate first via tests/test_aaa_import_gate.py.
+pytest runs it first via tests/test_aaa_import_gate.py.
 """
 
 from __future__ import annotations
@@ -41,7 +33,6 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF_DIR = os.environ.get("SPARK_GRAFT_GATE_SF", "/root/testdata/sf0.001")
 TABLES = (
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -53,13 +44,15 @@ def check_oracles() -> int:
     import duckdb
 
     sys.path.insert(0, REPO)
-    import __spark_entry__ as entrymod
+    import __spark_entry__ as entrymod  # first: the cold import under test
+
+    from tests.conftest import SF_SMOKE
 
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
+            f"read_parquet('{SF_SMOKE}/{t}.parquet')"
         )
     failures = 0
     for name, sql in entrymod.oracle_sql().items():
@@ -71,42 +64,9 @@ def check_oracles() -> int:
     return failures
 
 
-def check_plans() -> int:
-    """Plan-build every non-eager queries() entry; return #failures."""
-    from pyspark.sql import DataFrame, SparkSession
-
-    sys.path.insert(0, REPO)
-    import __spark_entry__ as entrymod
-    from ecommerce_data_pipeline_spark.plans import REGISTRY
-
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("import-gate")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    failures = 0
-    for name, fn in entrymod.queries().items():
-        if "eager" in REGISTRY[name].tags:
-            continue  # plan fn EXECUTES the audit — full verify covers it
-        try:
-            df = fn(spark, SF_DIR)
-            assert isinstance(df, DataFrame), f"returned {type(df)}"
-            df.schema  # force analysis — resolves every expression
-        except Exception as exc:  # noqa: BLE001 — report, keep sweeping
-            failures += 1
-            print(f"GATE FAIL plan [{name}]: {exc}", flush=True)
-    spark.stop()
-    return failures
-
-
 def main() -> int:
     t0 = time.perf_counter()
     failures = check_oracles()
-    if "--sql-only" not in sys.argv:
-        failures += check_plans()
     wall = time.perf_counter() - t0
     status = "GREEN" if failures == 0 else f"{failures} FAILURES"
     print(f"import gate: {status} ({wall:.1f}s)", flush=True)
