@@ -1787,15 +1787,14 @@ def page_hinkley_stream_certificate(
     the CALENDAR (one row per day); the streaming operator itself
     never collects."""
     import os
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        foreach_batch_append,
+        fold_landing,
+        land_chunks,
         page_hinkley_stream,
-        read_file_stream,
-        write_landing_chunk,
     )
+    from pyspark.sql import Row
     from pyspark.sql.types import (
         DateType,
         LongType,
@@ -1823,53 +1822,18 @@ def page_hinkley_stream_certificate(
     )  # bounded: one row per calendar day
     n = len(daily)
     cuts = [daily[: n // 3], daily[n // 3 : 2 * n // 3], daily[2 * n // 3 :]]
-
-    root = tempfile.mkdtemp(prefix="ph_stream_cert_")
-    landing = os.path.join(root, "landing")
-    ckpt, out = os.path.join(root, "ckpt"), os.path.join(root, "out")
-    os.makedirs(landing)
+    chunks = [c for c in cuts if c]
     schema = StructType(
         [StructField("day", DateType()), StructField("x", LongType())]
     )
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    prior_shuffle = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, "8")
-    try:
-        base_mtime = 1_700_000_000
-        # driver-side chunk staging (r13 — see write_landing_chunk):
-        # the rows are already collected and calendar-bounded; a Spark
-        # write job per chunk cost ~20 s of this certificate's wall
-        for i, cut in enumerate(c for c in cuts if c):
-            write_landing_chunk(
-                cut,
-                schema,
-                os.path.join(landing, f"chunk-{i:02d}.parquet"),
-                base_mtime + i,
-            )
-        n_triggers = sum(1 for c in cuts if c)
-
-        def drain() -> None:
-            stream = read_file_stream(
-                spark, landing, schema, max_files_per_trigger=1
-            )
-            q = foreach_batch_append(
-                page_hinkley_stream(stream),
-                out,
-                ckpt,
-                output_mode="update",
-            )
-            # fail LOUDLY on a hung drain (the mixture-certificate rule)
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError(
-                        "page-hinkley drain still running after 300 s"
-                        " — refusing to grade a partial landing read"
-                    )
-            finally:
-                q.stop()
-
-        drain()
-        streamed = spark.read.parquet(out)
+    with tempfile.TemporaryDirectory(prefix="ph_stream_cert_") as root:
+        landing, out, ckpt = (
+            os.path.join(root, d) for d in ("landing", "out", "ckpt")
+        )
+        land_chunks(chunks, schema, landing)
+        streamed = fold_landing(
+            spark, page_hinkley_stream, landing, schema, out, ckpt
+        )
         n_rows_first = streamed.count()
         final = streamed.orderBy(F.col("n_days").desc()).limit(1).drop(
             "series"
@@ -1882,22 +1846,22 @@ def page_hinkley_stream_certificate(
             F.col("decrease_day").cast("date").alias("decrease_day"),
         )
         final_equals_batch = rows_equal(final, batch_rel)
-        drain()  # post-saturation restart: must append nothing
-        replay_stable = spark.read.parquet(out).count() == n_rows_first
-        from pyspark.sql import Row
-
-        return spark.createDataFrame(
-            [
-                Row(
-                    n_days=n,
-                    n_triggers=n_triggers,
-                    final_equals_batch=bool(final_equals_batch),
-                    replay_stable=bool(replay_stable),
-                )
-            ],
-            "n_days bigint, n_triggers bigint, "
-            "final_equals_batch boolean, replay_stable boolean",
+        # post-saturation restart: must append nothing
+        replay_stable = (
+            fold_landing(
+                spark, page_hinkley_stream, landing, schema, out, ckpt
+            ).count()
+            == n_rows_first
         )
-    finally:
-        spark.conf.set(shuffle_conf, prior_shuffle)
-        shutil.rmtree(root, ignore_errors=True)
+    return spark.createDataFrame(
+        [
+            Row(
+                n_days=n,
+                n_triggers=len(chunks),
+                final_equals_batch=bool(final_equals_batch),
+                replay_stable=bool(replay_stable),
+            )
+        ],
+        "n_days bigint, n_triggers bigint, "
+        "final_equals_batch boolean, replay_stable boolean",
+    )

@@ -1848,15 +1848,14 @@ def mixture_monitor_stream_certificate(
     exact rational rule and handed to the fold as the plan target —
     the deployment contract."""
     import os
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        foreach_batch_append,
+        fold_landing,
+        land_chunks,
         mixture_monitor_stream,
-        read_file_stream,
-        write_landing_chunk,
     )
+    from pyspark.sql import Row
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -1894,11 +1893,6 @@ def mixture_monitor_stream_certificate(
         set(batches[n // 3 : 2 * n // 3]),
         set(batches[2 * n // 3 :]),
     ]
-
-    root = tempfile.mkdtemp(prefix="mix_monitor_cert_")
-    landing = os.path.join(root, "landing")
-    ckpt, out = os.path.join(root, "ckpt"), os.path.join(root, "out")
-    os.makedirs(landing)
     schema = StructType(
         [
             StructField("batch_id", LongType()),
@@ -1906,73 +1900,48 @@ def mixture_monitor_stream_certificate(
             StructField("cnt", LongType()),
         ]
     )
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    prior_shuffle = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, "8")
-    try:
-        base_mtime = 1_700_000_000
-        # driver-side chunk staging (r13 — write_landing_chunk: one
-        # Spark write job per chunk replaced by a pyarrow write of the
-        # already-collected, batch-bounded rows; identical file content)
-        for i, cut in enumerate(c for c in cuts if c):
-            write_landing_chunk(
+
+    def monitor(stream: DataFrame) -> DataFrame:
+        return mixture_monitor_stream(stream, target)
+
+    with tempfile.TemporaryDirectory(prefix="mix_monitor_cert_") as root:
+        landing, out, ckpt = (
+            os.path.join(root, d) for d in ("landing", "out", "ckpt")
+        )
+        land_chunks(
+            [
                 [
                     (int(r["batch_id"]), r["source"], int(r["cnt"]))
                     for r in cells
                     if int(r["batch_id"]) in cut
-                ],
-                schema,
-                os.path.join(landing, f"chunk-{i:02d}.parquet"),
-                base_mtime + i,
-            )
-
-        def drain() -> None:
-            stream = read_file_stream(
-                spark, landing, schema, max_files_per_trigger=1
-            )
-            q = foreach_batch_append(
-                mixture_monitor_stream(stream, target),
-                out,
-                ckpt,
-                output_mode="update",
-            )
-            # fail LOUDLY on a hung drain: a silent partial output would
-            # grade as a confusing stream_equals_batch=false instead of
-            # the real condition (same rule as the streaming flagship
-            # certificate, misc_plans.py)
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError(
-                        "mixture monitor drain still running after 300 s"
-                        " — refusing to grade a partial landing read"
-                    )
-            finally:
-                q.stop()
-
-        drain()
-        streamed = spark.read.parquet(out)
+                ]
+                for cut in cuts
+                if cut
+            ],
+            schema,
+            landing,
+        )
+        streamed = fold_landing(spark, monitor, landing, schema, out, ckpt)
         n_rows_first = streamed.count()
         batch_rel = mixture_convergence_monitor(spark, sf_dir)
         stream_equals_batch = rows_equal(streamed, batch_rel)
-        drain()  # post-saturation restart: must append nothing
-        replay_stable = spark.read.parquet(out).count() == n_rows_first
-        from pyspark.sql import Row
-
-        return spark.createDataFrame(
-            [
-                Row(
-                    n_batches=n,
-                    n_docs=total,
-                    stream_equals_batch=bool(stream_equals_batch),
-                    replay_stable=bool(replay_stable),
-                )
-            ],
-            "n_batches bigint, n_docs bigint, stream_equals_batch boolean, "
-            "replay_stable boolean",
+        # post-saturation restart: must append nothing
+        replay_stable = (
+            fold_landing(spark, monitor, landing, schema, out, ckpt).count()
+            == n_rows_first
         )
-    finally:
-        spark.conf.set(shuffle_conf, prior_shuffle)
-        shutil.rmtree(root, ignore_errors=True)
+    return spark.createDataFrame(
+        [
+            Row(
+                n_batches=n,
+                n_docs=total,
+                stream_equals_batch=bool(stream_equals_batch),
+                replay_stable=bool(replay_stable),
+            )
+        ],
+        "n_batches bigint, n_docs bigint, stream_equals_batch boolean, "
+        "replay_stable boolean",
+    )
 
 
 # --- streaming decontamination monitor (r13) --------------------------------
@@ -2153,15 +2122,14 @@ def decontam_monitor_stream_certificate(
     and bounded by contaminated-doc count x shards — the streaming
     operator itself never collects."""
     import os
-    import shutil
     import tempfile
 
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
         decontam_monitor_stream,
-        foreach_batch_append,
-        read_file_stream,
-        write_landing_chunk,
+        fold_landing,
+        land_chunks,
     )
+    from pyspark.sql import Row
     from pyspark.sql.types import LongType, StructField, StructType
 
     pairs = [
@@ -2175,63 +2143,27 @@ def decontam_monitor_stream_certificate(
         set(shards[n_shards_hit // 3 : 2 * n_shards_hit // 3]),
         set(shards[2 * n_shards_hit // 3 :]),
     ]
-
-    root = tempfile.mkdtemp(prefix="decon_monitor_cert_")
-    landing = os.path.join(root, "landing")
-    ckpt, out = os.path.join(root, "ckpt"), os.path.join(root, "out")
-    os.makedirs(landing)
     schema = StructType(
         [
             StructField("shard_id", LongType()),
             StructField("doc_id", LongType()),
         ]
     )
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    prior_shuffle = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, "8")
-    try:
-        base_mtime = 1_700_000_000
-        # driver-side chunk staging (r13 — write_landing_chunk, see the
-        # mixture certificate note above)
-        for i, cut in enumerate(c for c in cuts if c):
-            write_landing_chunk(
-                [(s, d) for s, d in pairs if s in cut],
-                schema,
-                os.path.join(landing, f"chunk-{i:02d}.parquet"),
-                base_mtime + i,
-            )
-
-        def drain() -> None:
-            stream = read_file_stream(
-                spark, landing, schema, max_files_per_trigger=1
-            )
-            q = foreach_batch_append(
-                decontam_monitor_stream(stream),
-                out,
-                ckpt,
-                output_mode="update",
-            )
-            # fail LOUDLY on a hung drain (the mixture-certificate rule)
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError(
-                        "decontam monitor drain still running after 300 s"
-                        " — refusing to grade a partial landing read"
-                    )
-            finally:
-                q.stop()
-
-        if pairs:
-            drain()
-            streamed = spark.read.parquet(out)
-        else:
-            # zero candidate pairs is a VALID graded state (the oracle
-            # answers n_contaminated_docs=0, booleans TRUE): with no
-            # chunk files the availableNow drain never creates `out`,
-            # so reading it would raise instead of grading (r13
-            # review finding). An empty ledger is the correct stream
-            # output for an empty hit stream.
-            streamed = spark.createDataFrame([], "doc_id long, first_shard long")
+    with tempfile.TemporaryDirectory(prefix="decon_monitor_cert_") as root:
+        landing, out, ckpt = (
+            os.path.join(root, d) for d in ("landing", "out", "ckpt")
+        )
+        # zero candidate pairs is a VALID graded state (the oracle
+        # answers n_contaminated_docs=0, booleans TRUE): the empty
+        # landing folds to an empty ledger
+        land_chunks(
+            [[(s, d) for s, d in pairs if s in cut] for cut in cuts if cut],
+            schema,
+            landing,
+        )
+        streamed = fold_landing(
+            spark, decontam_monitor_stream, landing, schema, out, ckpt
+        )
         n_rows_first = streamed.count()
         batch_hits = (
             _decon_candidate_pairs(spark, sf_dir)
@@ -2242,48 +2174,43 @@ def decontam_monitor_stream_certificate(
         curve_stream = _decon_curve(spark, sf_dir, streamed)
         curve_batch = decontamination_growth_monitor(spark, sf_dir)
         curve_equals_monitor = rows_equal(curve_stream, curve_batch)
-        if pairs:
-            drain()  # post-saturation restart: must append nothing
-            replay_stable = (
-                spark.read.parquet(out).count() == n_rows_first
+        # post-saturation restart: must append nothing
+        replay_stable = (
+            fold_landing(
+                spark, decontam_monitor_stream, landing, schema, out, ckpt
+            ).count()
+            == n_rows_first
+        )
+    # data-derived like the oracle (dense doc_ids make these equal
+    # to the constants, but deriving them keeps the parity honest)
+    bench_docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") < _DECON_BENCH_DOCS
+    )
+    n_bench = bench_docs.count()
+    n_shards = (
+        bench_docs.select(
+            exact_floor_div(
+                F.col("doc_id"), F.lit(_DECON_SHARD_DOCS)
+            ).alias("sh")
+        )
+        .distinct()
+        .count()
+    )
+    return spark.createDataFrame(
+        [
+            Row(
+                n_shards=int(n_shards),
+                n_bench_docs=int(n_bench),
+                n_contaminated_docs=int(batch_hits.count()),
+                stream_equals_batch=bool(stream_equals_batch),
+                curve_equals_monitor=bool(curve_equals_monitor),
+                replay_stable=bool(replay_stable),
             )
-        else:
-            replay_stable = True  # nothing to replay, nothing appended
-        from pyspark.sql import Row
-
-        # data-derived like the oracle (dense doc_ids make these equal
-        # to the constants, but deriving them keeps the parity honest)
-        bench_docs = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") < _DECON_BENCH_DOCS
-        )
-        n_bench = bench_docs.count()
-        n_shards = (
-            bench_docs.select(
-                exact_floor_div(
-                    F.col("doc_id"), F.lit(_DECON_SHARD_DOCS)
-                ).alias("sh")
-            )
-            .distinct()
-            .count()
-        )
-        return spark.createDataFrame(
-            [
-                Row(
-                    n_shards=int(n_shards),
-                    n_bench_docs=int(n_bench),
-                    n_contaminated_docs=int(batch_hits.count()),
-                    stream_equals_batch=bool(stream_equals_batch),
-                    curve_equals_monitor=bool(curve_equals_monitor),
-                    replay_stable=bool(replay_stable),
-                )
-            ],
-            "n_shards bigint, n_bench_docs bigint, "
-            "n_contaminated_docs bigint, stream_equals_batch boolean, "
-            "curve_equals_monitor boolean, replay_stable boolean",
-        )
-    finally:
-        spark.conf.set(shuffle_conf, prior_shuffle)
-        shutil.rmtree(root, ignore_errors=True)
+        ],
+        "n_shards bigint, n_bench_docs bigint, "
+        "n_contaminated_docs bigint, stream_equals_batch boolean, "
+        "curve_equals_monitor boolean, replay_stable boolean",
+    )
 
 
 def merge_spans(spans: DataFrame) -> DataFrame:

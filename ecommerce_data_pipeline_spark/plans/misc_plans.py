@@ -813,6 +813,7 @@ def streaming_flagship_certificate(spark: SparkSession, sf_dir: str) -> DataFram
     spark.conf.set(shuffle_conf, "8")
     try:
         from ecommerce_data_pipeline_spark.streaming.pipeline import (
+            drain,
             run_stream_with_handshake_retry,
         )
 
@@ -843,21 +844,14 @@ def streaming_flagship_certificate(spark: SparkSession, sf_dir: str) -> DataFram
 
         # restart after saturation: one availableNow pass must add nothing
         def _restart_pass() -> None:
-            q2 = run_streaming_flagship(
-                spark, wh, ckpt, dim_products, dim_customers,
-                available_now=True, seed=seed,
-                rows_per_batch=rows_per_batch,
-                max_offset=max_offset, resend_every=resend_every,
+            drain(
+                run_streaming_flagship(
+                    spark, wh, ckpt, dim_products, dim_customers,
+                    available_now=True, seed=seed,
+                    rows_per_batch=rows_per_batch,
+                    max_offset=max_offset, resend_every=resend_every,
+                )
             )
-            try:
-                if not q2.awaitTermination(300):
-                    raise TimeoutError(
-                        "streaming flagship restart pass still running "
-                        "after 300 s — refusing to grade a racing "
-                        "warehouse read"
-                    )
-            finally:
-                q2.stop()
 
         run_stream_with_handshake_retry(_restart_pass)
         fact = spark.read.parquet(f"{wh}/fact_enriched")

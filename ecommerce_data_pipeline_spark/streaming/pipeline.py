@@ -29,54 +29,84 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 
-def write_landing_chunk(
-    rows: list[tuple],
-    schema: StructType,
-    path: str,
-    mtime: int,
-) -> None:
-    """Write ONE landing-chunk parquet file driver-side (pyarrow) with a
-    pinned mtime — the certificate-harness twin of the reference's
-    per-run S3 drops.
+def land_chunks(
+    chunks: list[list[tuple]], schema: StructType, landing_dir: str
+) -> list[str]:
+    """Land each row list as ONE parquet file in ``landing_dir``,
+    written driver-side with pyarrow — the test and certificate twin of
+    the reference's per-run S3 drops. Chunk k is ``chunk-{k:02d}.parquet``
+    with mtime ``1_700_000_000 + k``, so a ``maxFilesPerTrigger=1`` file
+    stream replays the chunks in list order; k continues after the files
+    already in the directory, so a restart can land its second half into
+    the same landing. Returns the landed paths.
 
-    r13 optimization: the stream certificates previously staged each
-    chunk with ``spark.createDataFrame(...).coalesce(1).write`` — a
-    full Spark job (plan, schedule, commit protocol) per chunk for rows
-    that are ALREADY on the driver and calendar/batch-bounded by
-    construction. Measured at sf0.01 on the Page-Hinkley certificate:
-    the three chunk writes cost 20.5 s of its 43 s wall; the pyarrow
-    form is milliseconds. The file contents are identical (same rows,
-    same schema: date32/int64/string are exactly what Spark's parquet
-    writer emits for Date/Long/StringType), so the streamed micro-
-    batches — and every declared certificate value — are unchanged.
-    (The physical file is not byte-identical to a Spark writer's output
-    — pyarrow's writer metadata and row-group layout differ — but the
-    streamed ROWS and their logical types are the same, which is the
-    only surface anything downstream reads.)
+    The rows are already on the driver, so a pyarrow write costs
+    milliseconds where a Spark write job per chunk cost seconds. The
+    streamed ROWS and their logical types equal a Spark writer's output
+    (TimestampType lands UTC-adjusted, the session zone; naive datetimes
+    are local time, as in ``createDataFrame``); the file bytes do not.
     """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import DateType, LongType, StringType
-
-    _PA = {DateType: pa.date32(), LongType: pa.int64(), StringType: pa.string()}
-    fields = []
-    for f in schema.fields:
-        try:
-            fields.append(pa.field(f.name, _PA[type(f.dataType)]))
-        except KeyError:
-            raise TypeError(
-                f"write_landing_chunk: unmapped Spark type {f.dataType} "
-                f"for field {f.name!r} — extend the _PA table"
-            ) from None
-    cols = list(zip(*rows)) if rows else [[] for _ in fields]
-    table = pa.table(
-        {f.name: pa.array(c, type=f.type) for f, c in zip(fields, cols)},
-        schema=pa.schema(fields),
-    )
-    pq.write_table(table, path)
+    import datetime
     import os
 
-    os.utime(path, (mtime, mtime))
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import (
+        DateType,
+        DecimalType,
+        DoubleType,
+        IntegerType,
+        LongType,
+        StringType,
+        TimestampType,
+    )
+
+    arrow_of = {
+        DateType: pa.date32(),
+        DoubleType: pa.float64(),
+        IntegerType: pa.int32(),
+        LongType: pa.int64(),
+        StringType: pa.string(),
+        TimestampType: pa.timestamp("us", tz="UTC"),
+    }
+    fields = []
+    for f in schema.fields:
+        if isinstance(f.dataType, DecimalType):
+            t = pa.decimal128(f.dataType.precision, f.dataType.scale)
+        elif type(f.dataType) in arrow_of:
+            t = arrow_of[type(f.dataType)]
+        else:
+            raise TypeError(
+                f"land_chunks: unmapped Spark type {f.dataType} "
+                f"for field {f.name!r}"
+            )
+        fields.append(pa.field(f.name, t))
+
+    def column(f: pa.Field, values: tuple) -> pa.Array:
+        if pa.types.is_timestamp(f.type):
+            values = tuple(
+                v.astimezone(datetime.timezone.utc) if v is not None else None
+                for v in values
+            )
+        return pa.array(values, type=f.type)
+
+    os.makedirs(landing_dir, exist_ok=True)
+    first = len(os.listdir(landing_dir))
+    paths = []
+    for k, rows in enumerate(chunks, start=first):
+        cols = list(zip(*rows)) if rows else [() for _ in fields]
+        path = os.path.join(landing_dir, f"chunk-{k:02d}.parquet")
+        pq.write_table(
+            pa.table(
+                [column(f, c) for f, c in zip(fields, cols)],
+                schema=pa.schema(fields),
+            ),
+            path,
+        )
+        mtime = 1_700_000_000 + k
+        os.utime(path, (mtime, mtime))
+        paths.append(path)
+    return paths
 
 
 # Substrings identifying the ONE retry-safe startup failure: Spark
@@ -328,6 +358,61 @@ def run_available_now(
         .start()
     )
     return q, name
+
+
+# Bound on ONE availableNow drain. A drain still running at this bound
+# fails its caller instead of running on into whatever starts next.
+DRAIN_TIMEOUT_S = 300
+
+
+def drain(q: StreamingQuery) -> None:
+    """Wait for an ``availableNow`` query to finish, then stop it — on
+    every exit. Raises ``TimeoutError`` when the query is still running
+    after ``DRAIN_TIMEOUT_S`` (a partial drain is never read); a failed
+    query surfaces as its ``StreamingQueryException``."""
+    try:
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            raise TimeoutError(
+                f"stream {q.name or q.id} still running after "
+                f"{DRAIN_TIMEOUT_S} s — refusing to read a partial drain"
+            )
+    finally:
+        q.stop()
+
+
+def fold_landing(
+    spark: SparkSession,
+    op: Callable[[DataFrame], DataFrame],
+    landing_dir: str,
+    schema: StructType,
+    out: str,
+    ckpt: str,
+) -> DataFrame:
+    """Fold the landing through the stateful operator ``op`` one file per
+    trigger, appending its update-mode emissions to ``out`` under the
+    checkpoint ``ckpt``, and return everything ``out`` holds. Calling it
+    again on the same directories is the checkpoint restart.
+
+    The fold runs at 8 shuffle partitions (restored after): a stateful
+    micro-batch pays fixed per-partition work (state-store open/commit,
+    one task per partition) and the state layout is pinned at query
+    start, while partitioning never changes results. An empty landing
+    folds to an empty relation with ``op``'s output schema."""
+    import os
+
+    conf = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, "8")
+    try:
+        folded = op(
+            read_file_stream(spark, landing_dir, schema, max_files_per_trigger=1)
+        )
+        drain(foreach_batch_append(folded, out, ckpt, output_mode="update"))
+    finally:
+        spark.conf.set(conf, prior)
+    if not os.path.exists(out):  # no trigger ran: nothing was ever landed
+        return spark.createDataFrame([], folded.schema)
+    return spark.read.parquet(out)
 
 
 def stream_stream_join(

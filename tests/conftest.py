@@ -18,7 +18,12 @@ def spark():
         extra_conf={"spark.sql.warehouse.dir": "/tmp/engine-tests-warehouse"},
     )
     yield s
-    s.stop()
+    try:
+        # a leaked streaming query is a teardown error, not a silent pass
+        leaked = [q.name or str(q.id) for q in s.streams.active]
+        assert s.streams.active == [], f"streaming queries leaked: {leaked}"
+    finally:
+        s.stop()
 
 
 @pytest.fixture(scope="session")

@@ -13,6 +13,13 @@ import hashlib
 import math
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DecimalType,
+    LongType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
 from ecommerce_data_pipeline_spark.sources.readers import load_table
@@ -236,23 +243,35 @@ def test_consistent_hashing_conservation_and_bound(spark):
 # dp_contribution_cap same-timestamp frontier (advisor r9)
 
 
-def _land_order_chunks(spark, chunks, tmp_path):
-    """Write hand-built order chunks as mtime-ordered parquet files the
-    file stream replays chronologically (write/move/utime mechanics
-    shared with test_round9._dp_landing via tests/landing.py)."""
-    from tests.landing import land_chunks
+_DP_ORDER_SCHEMA = StructType(
+    [
+        StructField("o_custkey", LongType()),
+        StructField("o_orderdate", TimestampType()),
+        StructField("o_orderkey", LongType()),
+        StructField("o_totalprice", DecimalType(18, 2)),
+    ]
+)
+
+
+def _dp_cap_fold(spark, chunks, tmp_path):
+    """Land hand-built order chunks one file each, mtime-ordered, and
+    fold them through dp_contribution_cap(cap=3, clip_cents=5000)."""
+    from ecommerce_data_pipeline_spark.streaming.pipeline import (
+        dp_contribution_cap,
+        fold_landing,
+        land_chunks,
+    )
 
     d = str(tmp_path / "landing")
-    schema = (
-        "o_custkey long, o_orderdate timestamp, o_orderkey long,"
-        " o_totalprice decimal(18,2)"
-    )
-    land_chunks(
-        [spark.createDataFrame(rows, schema) for rows in chunks],
+    land_chunks(chunks, _DP_ORDER_SCHEMA, d)
+    return fold_landing(
+        spark,
+        lambda s: dp_contribution_cap(s, cap=3, clip_cents=5_000),
         d,
-        str(tmp_path / "scratch"),
+        _DP_ORDER_SCHEMA,
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
     )
-    return d, spark.createDataFrame([], schema).schema
 
 
 def test_dp_cap_admits_same_day_orders_split_across_triggers(
@@ -265,14 +284,6 @@ def test_dp_cap_admits_same_day_orders_split_across_triggers(
     instead of killing the query."""
     import datetime
     import decimal
-    import shutil
-    import tempfile
-
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        dp_contribution_cap,
-        read_file_stream,
-        run_available_now,
-    )
 
     day = datetime.datetime(1995, 3, 1)
     price = decimal.Decimal("100.00")
@@ -280,28 +291,15 @@ def test_dp_cap_admits_same_day_orders_split_across_triggers(
         [(7, day, 10, price), (7, day, 12, price)],
         [(7, day, 15, price), (7, day, 20, price)],  # same day, later keys
     ]
-    d, schema = _land_order_chunks(spark, chunks, tmp_path)
-    try:
-        stream = read_file_stream(spark, d, schema, max_files_per_trigger=1)
-        ckpt = tempfile.mkdtemp(prefix="dpcap10_ckpt_")
-        q, name = run_available_now(
-            dp_contribution_cap(stream, cap=3, clip_cents=5_000),
-            ckpt,
-            output_mode="update",
-        )
-        q.awaitTermination(120)
-        rows = spark.table(name).collect()
-        final = max(rows, key=lambda r: r["n_seen"])
-        # first 3 of the 4 same-day orders admitted (orderkey order),
-        # each clipped at 5000 cents
-        assert (
-            final["n_seen"],
-            final["n_admitted"],
-            final["bounded_cents"],
-        ) == (4, 3, 15_000)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    rows = _dp_cap_fold(spark, chunks, tmp_path).collect()
+    final = max(rows, key=lambda r: r["n_seen"])
+    # first 3 of the 4 same-day orders admitted (orderkey order),
+    # each clipped at 5000 cents
+    assert (
+        final["n_seen"],
+        final["n_admitted"],
+        final["bounded_cents"],
+    ) == (4, 3, 15_000)
 
 
 def test_dp_cap_still_raises_on_true_reorder(spark, tmp_path):
@@ -311,16 +309,9 @@ def test_dp_cap_still_raises_on_true_reorder(spark, tmp_path):
     membership and must still fail the query."""
     import datetime
     import decimal
-    import shutil
-    import tempfile
 
     import pytest
-
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        dp_contribution_cap,
-        read_file_stream,
-        run_available_now,
-    )
+    from pyspark.sql.streaming import StreamingQueryException
 
     day = datetime.datetime(1995, 3, 1)
     price = decimal.Decimal("100.00")
@@ -328,21 +319,8 @@ def test_dp_cap_still_raises_on_true_reorder(spark, tmp_path):
         [(7, day, 10, price), (7, day, 12, price)],
         [(7, day, 11, price)],  # same day, key INSIDE the released prefix
     ]
-    d, schema = _land_order_chunks(spark, chunks, tmp_path)
-    try:
-        stream = read_file_stream(spark, d, schema, max_files_per_trigger=1)
-        ckpt = tempfile.mkdtemp(prefix="dpcap10r_ckpt_")
-        q, _name = run_available_now(
-            dp_contribution_cap(stream, cap=3, clip_cents=5_000),
-            ckpt,
-            output_mode="update",
-        )
-        with pytest.raises(Exception, match="sort frontier"):
-            q.awaitTermination(120)
-            raise AssertionError("query should have failed")
-        shutil.rmtree(ckpt, ignore_errors=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    with pytest.raises(StreamingQueryException, match="sort frontier"):
+        _dp_cap_fold(spark, chunks, tmp_path)
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,7 @@ parity vs DuckDB is covered by the registry-wide diff in test_oracle.py.
 
 from __future__ import annotations
 
-import os
+from pyspark.sql.types import DateType, LongType, StructField, StructType
 
 from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
 from ecommerce_data_pipeline_spark.sources.readers import load_table
@@ -662,10 +662,14 @@ def test_ktruss_matches_python_peel(spark):
 # page_hinkley_stream (streaming twin of page_hinkley_drift_daily)
 
 
-def _ph_daily_landing(spark, tmp_path):
-    """Write the smoke daily-revenue series as 3 day-ordered parquet
-    chunks (a landing zone of closed daily rows)."""
-    import datetime
+_PH_SCHEMA = StructType(
+    [StructField("day", DateType()), StructField("x", LongType())]
+)
+
+
+def _ph_daily_chunks(spark):
+    """The smoke daily-revenue series as 3 day-ordered row lists (a
+    landing zone of closed daily rows)."""
     from collections import defaultdict
 
     rows_in = (
@@ -681,22 +685,13 @@ def _ph_daily_landing(spark, tmp_path):
             else r.o_orderdate
         )
         days[d] += int(round(r.o_totalprice * 100))
-    from tests.landing import land_chunks
-
     ordered = sorted(days)
-    d = str(tmp_path / "ph_landing")
-    scratch = str(tmp_path / "ph_scratch")
-    os.makedirs(scratch)
     n = len(ordered)
-    chunks = [
-        spark.createDataFrame(
-            [(day, days[day]) for day in sl], "day date, x long"
-        )
+    return [
+        [(day, days[day]) for day in sl]
         for sl in (ordered[: n // 3], ordered[n // 3 : 2 * n // 3],
                    ordered[2 * n // 3 :])
     ]
-    paths = land_chunks(chunks, d, scratch)
-    return d, paths
 
 
 def _ph_final_row(rows):
@@ -723,99 +718,24 @@ def _ph_batch_expected(spark):
     )
 
 
-def test_page_hinkley_stream_matches_batch(spark, tmp_path):
-    """Drain the daily series file-per-trigger through the stateful
-    fold: the final emitted row must equal the batch query's published
-    values bit-for-bit (same ops in the same order)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql.types import (
-        DateType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        page_hinkley_stream,
-        read_file_stream,
-        run_available_now,
-    )
-
-    d, _paths = _ph_daily_landing(spark, tmp_path)
-    schema = StructType(
-        [StructField("day", DateType()), StructField("x", LongType())]
-    )
-    # NOTE: one file per trigger, and the chunks are day-ordered, so the
-    # frontier contract holds across triggers
-    stream = read_file_stream(spark, d, schema, max_files_per_trigger=1)
-    ph = page_hinkley_stream(stream)
-    ckpt = tempfile.mkdtemp(prefix="ph_ckpt_")
-    try:
-        q, name = run_available_now(ph, ckpt, output_mode="update")
-        q.awaitTermination(180)
-        rows = spark.table(name).collect()
-        got = _ph_final_row(
-            [
-                {
-                    "n_days": r["n_days"],
-                    "ph_increase_dollars": r["ph_increase_dollars"],
-                    "increase_day": r["increase_day"],
-                    "ph_decrease_dollars": r["ph_decrease_dollars"],
-                    "decrease_day": r["decrease_day"],
-                }
-                for r in rows
-            ]
-        )
-        assert got == _ph_batch_expected(spark)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_page_hinkley_stream_checkpoint_restart(spark, tmp_path):
     """Kill-and-restart across a half-drained landing zone: the resumed
     fold must continue from checkpointed state and land on the same
     final row as the batch computation."""
-    import shutil
-
-    from pyspark.sql.types import (
-        DateType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        foreach_batch_append,
+        fold_landing,
+        land_chunks,
         page_hinkley_stream,
-        read_file_stream,
     )
 
-    d, paths = _ph_daily_landing(spark, tmp_path)
-    staged = str(tmp_path / "staged")
-    os.makedirs(staged)
-    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
-    schema = StructType(
-        [StructField("day", DateType()), StructField("x", LongType())]
-    )
-
-    def run_once():
-        stream = read_file_stream(
-            spark, staged, schema, max_files_per_trigger=1
-        )
-        q = foreach_batch_append(
-            page_hinkley_stream(stream), out, ckpt, output_mode="update"
-        )
-        q.awaitTermination(180)
-
-    for p in paths[:2]:
-        shutil.copy2(p, os.path.join(staged, os.path.basename(p)))
-    run_once()
-    for p in paths[2:]:
-        shutil.copy2(p, os.path.join(staged, os.path.basename(p)))
-    run_once()
-    rows = [r.asDict() for r in spark.read.parquet(out).collect()]
+    chunks = _ph_daily_chunks(spark)
+    d, out, ckpt = (str(tmp_path / n) for n in ("landing", "out", "ckpt"))
+    land_chunks(chunks[:2], _PH_SCHEMA, d)
+    fold_landing(spark, page_hinkley_stream, d, _PH_SCHEMA, out, ckpt)
+    land_chunks(chunks[2:], _PH_SCHEMA, d)
+    rows = fold_landing(
+        spark, page_hinkley_stream, d, _PH_SCHEMA, out, ckpt
+    ).collect()
     assert _ph_final_row(rows) == _ph_batch_expected(spark)
 
 
@@ -823,58 +743,32 @@ def test_page_hinkley_stream_rejects_reordered_days(spark, tmp_path):
     """A day at or before the folded frontier must RAISE (the running
     mean makes every statistic a prefix fold — a silent re-fold would
     corrupt the whole suffix), not be silently absorbed."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql.types import (
-        DateType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        page_hinkley_stream,
-        read_file_stream,
-        run_available_now,
-    )
-
     import datetime
 
-    from tests.landing import land_chunks
+    import pytest
+    from pyspark.sql.streaming import StreamingQueryException
+
+    from ecommerce_data_pipeline_spark.streaming.pipeline import (
+        fold_landing,
+        land_chunks,
+        page_hinkley_stream,
+    )
 
     d = str(tmp_path / "bad_landing")
-    scratch = str(tmp_path / "bad_scratch")
-    os.makedirs(scratch)
     day0 = datetime.date(1995, 1, 2)
     land_chunks(
         [
-            spark.createDataFrame(
-                [(day0, 100), (day0 + datetime.timedelta(days=1), 200)],
-                "day date, x long",
-            ),
-            spark.createDataFrame([(day0, 300)], "day date, x long"),
+            [(day0, 100), (day0 + datetime.timedelta(days=1), 200)],
+            [(day0, 300)],
         ],
+        _PH_SCHEMA,
         d,
-        scratch,
     )
-    schema = StructType(
-        [StructField("day", DateType()), StructField("x", LongType())]
-    )
-    stream = read_file_stream(spark, d, schema, max_files_per_trigger=1)
-    ph = page_hinkley_stream(stream)
-    ckpt = tempfile.mkdtemp(prefix="ph_bad_ckpt_")
-    try:
-        q, _name = run_available_now(ph, ckpt, output_mode="update")
-        import pytest as _pytest
-
-        with _pytest.raises(Exception, match="folded frontier|StreamingQuery"):
-            q.awaitTermination(180)
-            if q.exception() is not None:
-                raise q.exception()
-            raise AssertionError("reordered day did not raise")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with pytest.raises(StreamingQueryException, match="folded frontier"):
+        fold_landing(
+            spark, page_hinkley_stream, d, _PH_SCHEMA,
+            str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        )
 
 
 # ---------------------------------------------------------------------------

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import math
 
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
 from ecommerce_data_pipeline_spark.plans.profiling import _chi_square_grid
 
 
@@ -237,8 +239,6 @@ def test_moods_median_hand_pinned_example():
 # ---------------------------------------------------------------------------
 # mixture_convergence_monitor + mixture_monitor_stream
 
-import os
-
 
 def _mix_cells(spark):
     """The (batch_id, source, cnt) arrival-batch cells at SF_SMOKE, as
@@ -273,25 +273,43 @@ def _mix_target(cells):
     }
 
 
-def _mix_landing(spark, tmp_path, cells):
-    """Land the cells as 3 batch-ordered parquet chunks, whole batches
-    per chunk (a batch must close within one trigger)."""
-    from tests.landing import land_chunks
+_MIX_SCHEMA = StructType(
+    [
+        StructField("batch_id", LongType()),
+        StructField("source", StringType()),
+        StructField("cnt", LongType()),
+    ]
+)
 
+
+def _mix_chunks(cells):
+    """The cells as 3 batch-ordered row lists, whole batches per chunk
+    (a batch must close within one trigger)."""
     batches = sorted({b for b, _, _ in cells})
     n = len(batches)
     cuts = [batches[: n // 3], batches[n // 3 : 2 * n // 3], batches[2 * n // 3 :]]
+    return [[(b, s, c) for b, s, c in cells if b in set(cut)] for cut in cuts]
+
+
+def _mix_fold(spark, tmp_path, chunks, target):
+    """Land ``chunks`` one file each and fold them through
+    mixture_monitor_stream against ``target``."""
+    from ecommerce_data_pipeline_spark.streaming.pipeline import (
+        fold_landing,
+        land_chunks,
+        mixture_monitor_stream,
+    )
+
     d = str(tmp_path / "mix_landing")
-    scratch = str(tmp_path / "mix_scratch")
-    os.makedirs(scratch, exist_ok=True)
-    chunks = [
-        spark.createDataFrame(
-            [(b, s, c) for b, s, c in cells if b in set(cut)],
-            "batch_id long, source string, cnt long",
-        )
-        for cut in cuts
-    ]
-    return d, land_chunks(chunks, d, scratch)
+    land_chunks(chunks, _MIX_SCHEMA, d)
+    return fold_landing(
+        spark,
+        lambda s: mixture_monitor_stream(s, target),
+        d,
+        _MIX_SCHEMA,
+        str(tmp_path / "mix_out"),
+        str(tmp_path / "mix_ckpt"),
+    )
 
 
 def _mix_batch_expected(spark):
@@ -300,16 +318,7 @@ def _mix_batch_expected(spark):
     )
     from tests.conftest import SF_SMOKE
 
-    return sorted(
-        (
-            r["batch_id"],
-            r["n_docs_cum"],
-            r["l1_dev_micros"],
-            r["max_dev_source"],
-            r["max_abs_dev_micros"],
-        )
-        for r in mixture_convergence_monitor(spark, SF_SMOKE).collect()
-    )
+    return _mix_rows(mixture_convergence_monitor(spark, SF_SMOKE).collect())
 
 
 def _mix_rows(rows):
@@ -325,98 +334,14 @@ def _mix_rows(rows):
     )
 
 
-def test_mixture_stream_matches_batch(spark, tmp_path):
-    """Drain the arrival-batch cells file-per-trigger through the
-    stateful fold: the union of emitted rows must equal the batch
-    query's relation exactly (pure integer arithmetic on both paths)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        mixture_monitor_stream,
-        read_file_stream,
-        run_available_now,
-    )
-
-    cells = _mix_cells(spark)
-    d, _paths = _mix_landing(spark, tmp_path, cells)
-    schema = StructType(
-        [
-            StructField("batch_id", LongType()),
-            StructField("source", StringType()),
-            StructField("cnt", LongType()),
-        ]
-    )
-    stream = read_file_stream(spark, d, schema, max_files_per_trigger=1)
-    mon = mixture_monitor_stream(stream, _mix_target(cells))
-    ckpt = tempfile.mkdtemp(prefix="mix_ckpt_")
-    try:
-        q, name = run_available_now(mon, ckpt, output_mode="update")
-        q.awaitTermination(180)
-        got = _mix_rows(spark.table(name).collect())
-        assert got == _mix_batch_expected(spark)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_mixture_stream_checkpoint_restart(spark, tmp_path):
     """Kill-and-restart across a half-drained landing zone: the resumed
     fold must continue from checkpointed per-source counts and land on
     the same relation as the batch computation."""
-    import shutil
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        foreach_batch_append,
-        mixture_monitor_stream,
-        read_file_stream,
-    )
-
     cells = _mix_cells(spark)
-    d, paths = _mix_landing(spark, tmp_path, cells)
-    staged = str(tmp_path / "mix_staged")
-    os.makedirs(staged)
-    ckpt, out = str(tmp_path / "mix_ckpt"), str(tmp_path / "mix_out")
-    schema = StructType(
-        [
-            StructField("batch_id", LongType()),
-            StructField("source", StringType()),
-            StructField("cnt", LongType()),
-        ]
-    )
-
-    def run_once():
-        stream = read_file_stream(
-            spark, staged, schema, max_files_per_trigger=1
-        )
-        q = foreach_batch_append(
-            mixture_monitor_stream(stream, _mix_target(cells)),
-            out,
-            ckpt,
-            output_mode="update",
-        )
-        q.awaitTermination(180)
-
-    for p in paths[:2]:
-        shutil.copy2(p, os.path.join(staged, os.path.basename(p)))
-    run_once()
-    for p in paths[2:]:
-        shutil.copy2(p, os.path.join(staged, os.path.basename(p)))
-    run_once()
-    got = _mix_rows(spark.read.parquet(out).collect())
+    chunks, target = _mix_chunks(cells), _mix_target(cells)
+    _mix_fold(spark, tmp_path, chunks[:2], target)
+    got = _mix_rows(_mix_fold(spark, tmp_path, chunks[2:], target).collect())
     assert got == _mix_batch_expected(spark)
 
 
@@ -424,121 +349,25 @@ def test_mixture_stream_rejects_reordered_batches(spark, tmp_path):
     """A batch at or before the folded frontier must RAISE (cumulative
     counts make every report a prefix fold), not be silently
     re-absorbed."""
-    import shutil
-    import tempfile
-
     import pytest as _pytest
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.streaming import StreamingQueryException
 
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        mixture_monitor_stream,
-        read_file_stream,
-        run_available_now,
-    )
-    from tests.landing import land_chunks
-
-    d = str(tmp_path / "mix_bad_landing")
-    scratch = str(tmp_path / "mix_bad_scratch")
-    os.makedirs(scratch)
-    land_chunks(
-        [
-            spark.createDataFrame(
-                [(0, "a", 3), (1, "b", 2)],
-                "batch_id long, source string, cnt long",
-            ),
-            spark.createDataFrame(
-                [(1, "a", 1)], "batch_id long, source string, cnt long"
-            ),
-        ],
-        d,
-        scratch,
-    )
-    schema = StructType(
-        [
-            StructField("batch_id", LongType()),
-            StructField("source", StringType()),
-            StructField("cnt", LongType()),
-        ]
-    )
-    stream = read_file_stream(spark, d, schema, max_files_per_trigger=1)
-    mon = mixture_monitor_stream(stream, {"a": 600000, "b": 400000})
-    ckpt = tempfile.mkdtemp(prefix="mix_bad_ckpt_")
-    try:
-        q, _name = run_available_now(mon, ckpt, output_mode="update")
-        with _pytest.raises(Exception) as excinfo:
-            q.awaitTermination(180)
-            if q.exception() is not None:
-                raise q.exception()
-            raise AssertionError("reordered batch did not raise")
-        # the stream must fail on THE frontier contract specifically —
-        # a bare StreamingQueryException match would let any unrelated
-        # failure (schema error, landing-path issue) pass (r12 advice)
-        msg = str(excinfo.value) + str(q.exception() or "")
-        assert "folded frontier" in msg, msg
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    chunks = [[(0, "a", 3), (1, "b", 2)], [(1, "a", 1)]]
+    # the stream must fail on THE frontier contract specifically — a
+    # bare StreamingQueryException would let any unrelated failure
+    # (schema error, landing-path issue) pass (r12 advice)
+    with _pytest.raises(StreamingQueryException, match="folded frontier"):
+        _mix_fold(spark, tmp_path, chunks, {"a": 600000, "b": 400000})
 
 
 def test_mixture_stream_rejects_unplanned_source(spark, tmp_path):
     """A source outside the planned target mixture must RAISE — counting
     it would silently shift every other source's share."""
-    import shutil
-    import tempfile
-
     import pytest as _pytest
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.streaming import StreamingQueryException
 
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        mixture_monitor_stream,
-        read_file_stream,
-        run_available_now,
-    )
-    from tests.landing import land_chunks
-
-    d = str(tmp_path / "mix_src_landing")
-    scratch = str(tmp_path / "mix_src_scratch")
-    os.makedirs(scratch)
-    land_chunks(
-        [
-            spark.createDataFrame(
-                [(0, "rogue", 1)], "batch_id long, source string, cnt long"
-            )
-        ],
-        d,
-        scratch,
-    )
-    schema = StructType(
-        [
-            StructField("batch_id", LongType()),
-            StructField("source", StringType()),
-            StructField("cnt", LongType()),
-        ]
-    )
-    stream = read_file_stream(spark, d, schema, max_files_per_trigger=1)
-    mon = mixture_monitor_stream(stream, {"a": 1000000})
-    ckpt = tempfile.mkdtemp(prefix="mix_src_ckpt_")
-    try:
-        q, _name = run_available_now(mon, ckpt, output_mode="update")
-        with _pytest.raises(Exception) as excinfo:
-            q.awaitTermination(180)
-            if q.exception() is not None:
-                raise q.exception()
-            raise AssertionError("unplanned source did not raise")
-        # must fail on THE mixture contract, not any stream error
-        msg = str(excinfo.value) + str(q.exception() or "")
-        assert "target mixture" in msg, msg
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with _pytest.raises(StreamingQueryException, match="target mixture"):
+        _mix_fold(spark, tmp_path, [[(0, "rogue", 1)]], {"a": 1000000})
 
 
 # ---------------------------------------------------------------------------
@@ -791,70 +620,31 @@ def test_mixture_stream_state_survives_colon_source(spark, tmp_path):
     """A source name containing ':' must round-trip through the state
     CSV (the count is the LAST field, parsed with rsplit) — and a
     target with ',' in a name is rejected at construction."""
-    import shutil
-    import tempfile
-
     import pytest as _pytest
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
         mixture_monitor_stream,
-        read_file_stream,
-        run_available_now,
     )
-    from tests.landing import land_chunks
 
     with _pytest.raises(ValueError, match="record separator"):
         mixture_monitor_stream(None, {"bad,name": 1_000_000})
 
-    d = str(tmp_path / "mix_colon_landing")
-    scratch = str(tmp_path / "mix_colon_scratch")
-    os.makedirs(scratch)
     # two chunks => two triggers => the colon-bearing counts must be
     # parsed back OUT of checkpointed state on the second trigger
-    land_chunks(
-        [
-            spark.createDataFrame(
-                [(0, "lang:en", 3), (0, "lang:fr", 1)],
-                "batch_id long, source string, cnt long",
-            ),
-            spark.createDataFrame(
-                [(1, "lang:en", 1), (1, "lang:fr", 3)],
-                "batch_id long, source string, cnt long",
-            ),
-        ],
-        d,
-        scratch,
+    chunks = [
+        [(0, "lang:en", 3), (0, "lang:fr", 1)],
+        [(1, "lang:en", 1), (1, "lang:fr", 3)],
+    ]
+    got = _mix_fold(
+        spark, tmp_path, chunks, {"lang:en": 500_000, "lang:fr": 500_000}
     )
-    schema = StructType(
-        [
-            StructField("batch_id", LongType()),
-            StructField("source", StringType()),
-            StructField("cnt", LongType()),
-        ]
-    )
-    stream = read_file_stream(spark, d, schema, max_files_per_trigger=1)
-    mon = mixture_monitor_stream(
-        stream, {"lang:en": 500_000, "lang:fr": 500_000}
-    )
-    ckpt = tempfile.mkdtemp(prefix="mix_colon_ckpt_")
-    try:
-        q, name = run_available_now(mon, ckpt, output_mode="update")
-        q.awaitTermination(180)
-        rows = {r["batch_id"]: r for r in spark.table(name).collect()}
-        # batch 0: en 3/4 = 750000 (dev +250000), fr 1/4 (dev -250000)
-        assert rows[0]["l1_dev_micros"] == 500_000
-        assert rows[0]["max_dev_source"] == "lang:en"
-        # batch 1 cumulative: en 4/8, fr 4/8 — exactly on target
-        assert rows[1]["l1_dev_micros"] == 0
-        assert rows[1]["n_docs_cum"] == 8
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    rows = {r["batch_id"]: r for r in got.collect()}
+    # batch 0: en 3/4 = 750000 (dev +250000), fr 1/4 (dev -250000)
+    assert rows[0]["l1_dev_micros"] == 500_000
+    assert rows[0]["max_dev_source"] == "lang:en"
+    # batch 1 cumulative: en 4/8, fr 4/8 — exactly on target
+    assert rows[1]["l1_dev_micros"] == 0
+    assert rows[1]["n_docs_cum"] == 8
 
 
 # ---------------------------------------------------------------------------

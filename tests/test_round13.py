@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import os
 import re
-import shutil
 
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -24,37 +23,24 @@ _PAIR_SCHEMA = StructType(
 )
 
 
-def _drain_pairs(spark, tmp_path, chunks, tag):
-    """Land each chunk of (shard_id, doc_id) pairs as one file and drain
-    them file-per-trigger through decontam_monitor_stream; returns the
-    emitted rows as a sorted list of tuples."""
-    import tempfile
-
+def _fold_pairs(spark, tmp_path, chunks):
+    """Land each chunk of (shard_id, doc_id) pairs as one file (numbering
+    continues on a second call) and fold the landing file-per-trigger
+    through decontam_monitor_stream; returns the emitted rows as a
+    sorted list of (doc_id, first_shard)."""
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
         decontam_monitor_stream,
-        read_file_stream,
-        run_available_now,
+        fold_landing,
+        land_chunks,
     )
-    from tests.landing import land_chunks
 
-    d = str(tmp_path / f"{tag}_landing")
-    scratch = str(tmp_path / f"{tag}_scratch")
-    os.makedirs(scratch, exist_ok=True)
-    land_chunks(
-        [spark.createDataFrame(c, _PAIR_SCHEMA) for c in chunks], d, scratch
+    d = str(tmp_path / "landing")
+    land_chunks(chunks, _PAIR_SCHEMA, d)
+    out = fold_landing(
+        spark, decontam_monitor_stream, d, _PAIR_SCHEMA,
+        str(tmp_path / "out"), str(tmp_path / "ckpt"),
     )
-    stream = read_file_stream(spark, d, _PAIR_SCHEMA, max_files_per_trigger=1)
-    mon = decontam_monitor_stream(stream)
-    ckpt = tempfile.mkdtemp(prefix=f"{tag}_ckpt_")
-    try:
-        q, name = run_available_now(mon, ckpt, output_mode="update")
-        assert q.awaitTermination(180), "drain still running after 180 s"
-        return sorted(
-            (r["doc_id"], r["first_shard"])
-            for r in spark.table(name).collect()
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return sorted((r["doc_id"], r["first_shard"]) for r in out.collect())
 
 
 def test_decontam_stream_matches_batch_ledger(spark, tmp_path):
@@ -67,7 +53,7 @@ def test_decontam_stream_matches_batch_ledger(spark, tmp_path):
         [(2, 102), (2, 100)],            # doc 100 re-hit later: no-op
         [(4, 103)],
     ]
-    got = _drain_pairs(spark, tmp_path, chunks, "decon_match")
+    got = _fold_pairs(spark, tmp_path, chunks)
     assert got == [(100, 0), (101, 0), (102, 2), (103, 4)]
 
 
@@ -80,7 +66,7 @@ def test_decontam_stream_tolerates_harmless_disorder(spark, tmp_path):
         [(1, 201)],          # smaller shard later, but a NEW doc: fine
         [(4, 200), (4, 201)],  # re-hits above both frontiers: no-ops
     ]
-    got = _drain_pairs(spark, tmp_path, chunks, "decon_disorder")
+    got = _fold_pairs(spark, tmp_path, chunks)
     assert got == [(200, 3), (201, 1)]
 
 
@@ -88,45 +74,9 @@ def test_decontam_stream_checkpoint_restart(spark, tmp_path):
     """Kill-and-restart across a half-drained landing zone: the resumed
     fold must restore per-doc flagged state — doc 300, flagged in the
     first run, must NOT re-emit when re-hit after the restart."""
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        decontam_monitor_stream,
-        foreach_batch_append,
-        read_file_stream,
-    )
-    from tests.landing import land_chunks
-
-    d = str(tmp_path / "decon_restart_landing")
-    scratch = str(tmp_path / "decon_restart_scratch")
-    staged = str(tmp_path / "decon_restart_staged")
-    os.makedirs(scratch)
-    os.makedirs(staged)
-    ckpt = str(tmp_path / "decon_restart_ckpt")
-    out = str(tmp_path / "decon_restart_out")
-    chunks = [
-        [(0, 300), (1, 301)],
-        [(2, 300), (2, 302)],  # 300 re-hit post-restart: restored state
-    ]
-    paths = land_chunks(
-        [spark.createDataFrame(c, _PAIR_SCHEMA) for c in chunks], d, scratch
-    )
-
-    def run_once():
-        stream = read_file_stream(
-            spark, staged, _PAIR_SCHEMA, max_files_per_trigger=1
-        )
-        q = foreach_batch_append(
-            decontam_monitor_stream(stream), out, ckpt, output_mode="update"
-        )
-        assert q.awaitTermination(180), "drain still running after 180 s"
-
-    shutil.copy2(paths[0], os.path.join(staged, os.path.basename(paths[0])))
-    run_once()
-    shutil.copy2(paths[1], os.path.join(staged, os.path.basename(paths[1])))
-    run_once()
-    got = sorted(
-        (r["doc_id"], r["first_shard"])
-        for r in spark.read.parquet(out).collect()
-    )
+    _fold_pairs(spark, tmp_path, [[(0, 300), (1, 301)]])
+    # 300 re-hit post-restart: restored state
+    got = _fold_pairs(spark, tmp_path, [[(2, 300), (2, 302)]])
     assert got == [(300, 0), (301, 1), (302, 2)]
 
 
@@ -134,41 +84,15 @@ def test_decontam_stream_rejects_shard_regression(spark, tmp_path):
     """A benchmark shard arriving BELOW a doc's flagged shard would make
     the already-emitted first_shard wrong — append-only landings cannot
     retract, so the fold must fail loudly on THE specific contract."""
-    import tempfile
-
     import pytest as _pytest
+    from pyspark.sql.streaming import StreamingQueryException
 
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        decontam_monitor_stream,
-        read_file_stream,
-        run_available_now,
-    )
-    from tests.landing import land_chunks
-
-    d = str(tmp_path / "decon_reject_landing")
-    scratch = str(tmp_path / "decon_reject_scratch")
-    os.makedirs(scratch)
     chunks = [
         [(3, 400)],  # doc 400 graded contaminated at shard 3
         [(1, 400)],  # shard 1 arrives late: first_shard=3 was WRONG
     ]
-    land_chunks(
-        [spark.createDataFrame(c, _PAIR_SCHEMA) for c in chunks], d, scratch
-    )
-    stream = read_file_stream(spark, d, _PAIR_SCHEMA, max_files_per_trigger=1)
-    mon = decontam_monitor_stream(stream)
-    ckpt = tempfile.mkdtemp(prefix="decon_reject_ckpt_")
-    try:
-        q, _name = run_available_now(mon, ckpt, output_mode="update")
-        with _pytest.raises(Exception) as excinfo:
-            q.awaitTermination(180)
-            if q.exception() is not None:
-                raise q.exception()
-            raise AssertionError("shard regression did not raise")
-        msg = str(excinfo.value) + str(q.exception() or "")
-        assert "graded contaminated" in msg, msg
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    with _pytest.raises(StreamingQueryException, match="graded contaminated"):
+        _fold_pairs(spark, tmp_path, chunks)
 
 
 def _python_growth_curve(sf_dir):

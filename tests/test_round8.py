@@ -12,9 +12,6 @@ distribution bounds, recursion equivalence, restart idempotence.
 from __future__ import annotations
 
 import math
-import os
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -274,90 +271,62 @@ def _dense_simulation(events_rows, cap):
     return expected
 
 
-@pytest.mark.parametrize("cap", [1, 3])
-def test_backpressure_replay_matches_dense_simulation(spark, cap):
-    events = load_table(spark, SF_SMOKE, "events")
-    got = {
+def _bp_ledger(rows) -> dict:
+    return {
         (r["event_type"], r["slot"]): (
             r["arrivals"],
             r["carry_in"],
             r["admitted"],
             r["backlog"],
         )
-        for r in backpressure_replay(events, cap=cap).collect()
+        for r in rows
     }
+
+
+@pytest.mark.parametrize("cap", [1, 3])
+def test_backpressure_replay_matches_dense_simulation(spark, cap):
+    events = load_table(spark, SF_SMOKE, "events")
+    got = _bp_ledger(backpressure_replay(events, cap=cap).collect())
     expected = _dense_simulation(events.select("event_type", "ts").collect(), cap)
     assert got == expected
 
 
-def _bp_landing(spark, n_chunks=6):
-    """Write events as n_chunks single-FILE day-range parquets with
-    strictly increasing mtimes so the file stream replays them in
-    event-time order (one micro-batch per chunk)."""
-    d = tempfile.mkdtemp(prefix="bp_landing_")
-    scratch = tempfile.mkdtemp(prefix="bp_scratch_")
+def _bp_chunks(spark, n_chunks=6):
+    """The events as n_chunks day-range row lists in event-time order
+    (landed one file each: one micro-batch per chunk)."""
     events = load_table(spark, SF_SMOKE, "events")
-    paths = []
-    base = 1_700_000_000
-    for i in range(n_chunks):
-        lo, hi = 1 + i * 5, 1 + (i + 1) * 5
-        chunk = events.filter(
-            (F.dayofmonth("ts") >= lo) & (F.dayofmonth("ts") < hi)
-        )
-        tmp = os.path.join(scratch, f"chunk-{i:02d}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp) if f.endswith(".parquet")
-        )
-        p = os.path.join(d, f"chunk-{i:02d}.parquet")
-        shutil.move(os.path.join(tmp, part), p)
-        os.utime(p, (base + i, base + i))
-        paths.append(p)
-    shutil.rmtree(scratch, ignore_errors=True)
-    return d, paths
+    return events.schema, [
+        events.filter(
+            (F.dayofmonth("ts") >= 1 + i * 5)
+            & (F.dayofmonth("ts") < 1 + (i + 1) * 5)
+        ).collect()
+        for i in range(n_chunks)
+    ]
 
 
-def test_stream_rate_limit_matches_batch_replay(spark):
+def _rate_limit_cap1(stream):
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
         rate_limit_backpressure,
-        read_file_stream,
-        run_available_now,
     )
 
-    d, _paths = _bp_landing(spark)
-    try:
-        schema = load_table(spark, SF_SMOKE, "events").schema
-        stream = read_file_stream(
-            spark, d, schema, max_files_per_trigger=1
-        )
-        limited = rate_limit_backpressure(stream, cap=1)
-        ckpt = tempfile.mkdtemp(prefix="bp_ckpt_")
-        q, name = run_available_now(limited, ckpt, output_mode="update")
-        q.awaitTermination(180)
-        got = {
-            (r["event_type"], r["slot"]): (
-                r["arrivals"],
-                r["carry_in"],
-                r["admitted"],
-                r["backlog"],
-            )
-            for r in spark.table(name).collect()
-        }
-        shutil.rmtree(ckpt, ignore_errors=True)
-        expected = {
-            (r["event_type"], r["slot"]): (
-                r["arrivals"],
-                r["carry_in"],
-                r["admitted"],
-                r["backlog"],
-            )
-            for r in backpressure_replay(
-                load_table(spark, SF_SMOKE, "events"), cap=1
-            ).collect()
-        }
-        assert got == expected
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    return rate_limit_backpressure(stream, cap=1)
+
+
+def test_stream_rate_limit_matches_batch_replay(spark, tmp_path):
+    from ecommerce_data_pipeline_spark.streaming.pipeline import (
+        fold_landing,
+        land_chunks,
+    )
+
+    schema, chunks = _bp_chunks(spark)
+    d = str(tmp_path / "landing")
+    land_chunks(chunks, schema, d)
+    got = fold_landing(
+        spark, _rate_limit_cap1, d, schema,
+        str(tmp_path / "out"), str(tmp_path / "ckpt"),
+    )
+    expected = backpressure_replay(load_table(spark, SF_SMOKE, "events"), cap=1)
+    assert _bp_ledger(got.collect()) == _bp_ledger(expected.collect())
 
 
 def test_stream_rate_limit_checkpoint_restart_no_duplicates(spark, tmp_path):
@@ -366,59 +335,20 @@ def test_stream_rate_limit_checkpoint_restart_no_duplicates(spark, tmp_path):
     produce exactly the batch replay — no re-emitted slots, no broken
     carry-over at the restart boundary."""
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        foreach_batch_append,
-        rate_limit_backpressure,
-        read_file_stream,
+        fold_landing,
+        land_chunks,
     )
 
-    d, paths = _bp_landing(spark)
-    staged = str(tmp_path / "staged")
-    os.makedirs(staged)
-    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
-    schema = load_table(spark, SF_SMOKE, "events").schema
-
-    def run_once():
-        stream = read_file_stream(
-            spark, staged, schema, max_files_per_trigger=1
-        )
-        q = foreach_batch_append(
-            rate_limit_backpressure(stream, cap=1), out, ckpt,
-            output_mode="update",
-        )
-        q.awaitTermination(180)
-
-    try:
-        for p in paths[:3]:
-            shutil.copy2(p, os.path.join(staged, os.path.basename(p)))
-        run_once()
-        for p in paths[3:]:
-            shutil.copy2(p, os.path.join(staged, os.path.basename(p)))
-        run_once()
-        got = {
-            (r["event_type"], r["slot"]): (
-                r["arrivals"],
-                r["carry_in"],
-                r["admitted"],
-                r["backlog"],
-            )
-            for r in spark.read.parquet(out).collect()
-        }
-        n_rows = spark.read.parquet(out).count()
-        assert n_rows == len(got)  # restart re-emitted nothing
-        expected = {
-            (r["event_type"], r["slot"]): (
-                r["arrivals"],
-                r["carry_in"],
-                r["admitted"],
-                r["backlog"],
-            )
-            for r in backpressure_replay(
-                load_table(spark, SF_SMOKE, "events"), cap=1
-            ).collect()
-        }
-        assert got == expected
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    schema, chunks = _bp_chunks(spark)
+    d, out, ckpt = (str(tmp_path / n) for n in ("landing", "out", "ckpt"))
+    land_chunks(chunks[:3], schema, d)
+    fold_landing(spark, _rate_limit_cap1, d, schema, out, ckpt)
+    land_chunks(chunks[3:], schema, d)
+    rows = fold_landing(spark, _rate_limit_cap1, d, schema, out, ckpt).collect()
+    got = _bp_ledger(rows)
+    assert len(rows) == len(got)  # restart re-emitted nothing
+    expected = backpressure_replay(load_table(spark, SF_SMOKE, "events"), cap=1)
+    assert got == _bp_ledger(expected.collect())
 
 
 # --------------------------------------------------------------------------
@@ -591,7 +521,7 @@ def test_bitemporal_worlds_separate_version_generations(spark):
     )
 
 
-def test_stream_rate_limit_rejects_straddled_slot(spark):
+def test_stream_rate_limit_rejects_straddled_slot(spark, tmp_path):
     """Advisor r8: if the SAME hour slot straddles two micro-batches,
     the handler used to see gap = 0 and admit up to cap AGAIN —
     silently emitting a duplicate (key, slot) row that diverges from
@@ -601,60 +531,34 @@ def test_stream_rate_limit_rejects_straddled_slot(spark):
     from pyspark.sql.streaming import StreamingQueryException
 
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        rate_limit_backpressure,
-        read_file_stream,
-        run_available_now,
+        fold_landing,
+        land_chunks,
     )
 
-    d = tempfile.mkdtemp(prefix="bp_straddle_")
-    try:
-        events = load_table(spark, SF_SMOKE, "events")
-        schema = events.schema
-        # densest (hour, KEY) group — state is per event_type, so the
-        # straddle must put the SAME key's slot in both files
-        day, hour, etype, n = (
-            events.groupBy(
-                F.to_date("ts").alias("d"),
-                F.hour("ts").alias("h"),
-                "event_type",
-            )
-            .count()
-            .orderBy(F.desc("count"), "d", "h", "event_type")
-            .first()
+    events = load_table(spark, SF_SMOKE, "events")
+    # densest (hour, KEY) group — state is per event_type, so the
+    # straddle must put the SAME key's slot in both files
+    day, hour, etype, n = (
+        events.groupBy(
+            F.to_date("ts").alias("d"),
+            F.hour("ts").alias("h"),
+            "event_type",
         )
-        assert n >= 2, "no (hour, key) group with 2+ events in fixture"
-        one_hour = events.filter(
-            (F.to_date("ts") == F.lit(day))
-            & (F.hour("ts") == hour)
-            & (F.col("event_type") == etype)
-        ).orderBy("event_id")
-        first_id = one_hour.first()["event_id"]
-        halves = [
-            one_hour.filter(F.col("event_id") == first_id),
-            one_hour.filter(F.col("event_id") != first_id),
-        ]
-        base = 1_700_000_000
-        # two single-file batches carrying the SAME slot
-        for i, frac in enumerate(halves):
-            tmp = tempfile.mkdtemp(prefix="bp_straddle_chunk_")
-            frac.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            )
-            p = os.path.join(d, f"chunk-{i:02d}.parquet")
-            shutil.move(os.path.join(tmp, part), p)
-            os.utime(p, (base + i, base + i))
-            shutil.rmtree(tmp, ignore_errors=True)
-        stream = read_file_stream(spark, d, schema, max_files_per_trigger=1)
-        ckpt = tempfile.mkdtemp(prefix="bp_straddle_ckpt_")
-        q, _name = run_available_now(
-            rate_limit_backpressure(stream, cap=1), ckpt, output_mode="update"
+        .count()
+        .orderBy(F.desc("count"), "d", "h", "event_type")
+        .first()
+    )
+    assert n >= 2, "no (hour, key) group with 2+ events in fixture"
+    one_hour = events.filter(
+        (F.to_date("ts") == F.lit(day))
+        & (F.hour("ts") == hour)
+        & (F.col("event_type") == etype)
+    ).orderBy("event_id").collect()
+    d = str(tmp_path / "landing")
+    # two single-file batches carrying the SAME slot
+    land_chunks([one_hour[:1], one_hour[1:]], events.schema, d)
+    with pytest.raises(StreamingQueryException, match="strictly"):
+        fold_landing(
+            spark, _rate_limit_cap1, d, events.schema,
+            str(tmp_path / "out"), str(tmp_path / "ckpt"),
         )
-        with pytest.raises(StreamingQueryException) as exc:
-            q.awaitTermination(180)
-        assert "strictly" in str(exc.value) or "strictly" in (
-            q.exception().desc if q.exception() else ""
-        )
-        shutil.rmtree(ckpt, ignore_errors=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

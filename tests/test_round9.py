@@ -9,9 +9,6 @@ parity is covered by the registry-wide oracle diff in test_oracle.py.
 from __future__ import annotations
 
 import math
-import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -124,50 +121,7 @@ def test_holt_fold_matches_python_recursion(spark):
 # watermark_late_data_audit: batch replay vs REAL Structured Streaming
 
 
-def _wm_landing(spark, n_triggers=24):
-    """Land events as one parquet file per ARRIVAL hour (the audit's
-    trigger definition), mtime-ordered, restricted to the first
-    n_triggers arrival hours; also land the same row subset as a
-    tmp sf-dir for the batch replay."""
-    from ecommerce_data_pipeline_spark.plans.events_plans import (
-        _WM_JITTER_S,
-        _WM_SLOT_MS,
-    )
-    from ecommerce_data_pipeline_spark.plans.sketches import _hash60
-
-    events = load_table(spark, SF_SMOKE, "events")
-    arr_ms = F.unix_millis("ts") + (
-        _hash60(F.col("event_id"), "wm#") % _WM_JITTER_S
-    ) * 1000
-    tagged = events.withColumn("arr_ms", arr_ms).withColumn(
-        "trig", F.expr(f"arr_ms div {_WM_SLOT_MS}")
-    ).drop("arr_ms")
-    trigs = [
-        r["trig"]
-        for r in tagged.select("trig").distinct().orderBy("trig").collect()
-    ][:n_triggers]
-    subset = tagged.filter(F.col("trig").isin(trigs))
-
-    land = tempfile.mkdtemp(prefix="wm_landing_")
-    sfdir = tempfile.mkdtemp(prefix="wm_sf_")
-    subset.drop("trig").write.mode("overwrite").parquet(
-        f"{sfdir}/events.parquet"
-    )
-    base = 1_700_000_000
-    for i, t in enumerate(trigs):
-        scratch = tempfile.mkdtemp(prefix="wm_chunk_")
-        subset.filter(F.col("trig") == t).drop("trig").coalesce(
-            1
-        ).write.mode("overwrite").parquet(scratch)
-        part = next(f for f in os.listdir(scratch) if f.endswith(".parquet"))
-        p = os.path.join(land, f"trig-{i:04d}.parquet")
-        shutil.move(os.path.join(scratch, part), p)
-        os.utime(p, (base + i, base + i))
-        shutil.rmtree(scratch, ignore_errors=True)
-    return land, sfdir
-
-
-def test_watermark_audit_matches_real_streaming(spark):
+def test_watermark_audit_matches_real_streaming(spark, tmp_path):
     """THE semantics pin: the batch replay's accepted counts must equal
     a real ``withWatermark('ts','5 minutes')`` windowed count drained
     with one arrival-hour file per trigger, in APPEND mode — the mode
@@ -179,73 +133,97 @@ def test_watermark_audit_matches_real_streaming(spark):
     each window once, when the watermark passes its end — so the
     comparison set is the replay's windows with w_end <= final
     watermark; tail windows never finalize by stream end."""
+    from collections import defaultdict
+
     from ecommerce_data_pipeline_spark.plans.events_plans import (
         _WM_DELAY_MS,
+        _WM_JITTER_S,
         _WM_SLOT_MS,
     )
+    from ecommerce_data_pipeline_spark.plans.sketches import _hash60
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
+        drain,
+        land_chunks,
         read_file_stream,
         run_available_now,
     )
 
-    land, sfdir = _wm_landing(spark)
-    try:
-        replay = {
-            (r["window_start"], r["event_type"]): (
-                r["n_total"],
-                r["n_accepted"],
-            )
-            for r in REGISTRY["watermark_late_data_audit"]
-            .fn(spark, sfdir)
-            .collect()
-        }
-        assert sum(t for t, _ in replay.values()) > 0
-        assert any(a < t for t, a in replay.values()), (
-            "fixture produced no late drops — jitter/trigger mismatch?"
-        )
-        # final watermark after the availableNow tail batch: global max
-        # event time minus delay (epoch ms, session-tz consistent with
-        # the replay's unix_millis)
-        ev = spark.read.parquet(f"{sfdir}/events.parquet")
-        final_wm = (
-            ev.agg(F.max(F.unix_millis("ts"))).first()[0] - _WM_DELAY_MS
-        )
+    # land events as one file per ARRIVAL hour (the audit's trigger
+    # definition), restricted to the first 24 arrival hours; the same
+    # row subset is also a tmp sf-dir for the batch replay
+    events = load_table(spark, SF_SMOKE, "events")
+    arr_ms = F.unix_millis("ts") + (
+        _hash60(F.col("event_id"), "wm#") % _WM_JITTER_S
+    ) * 1000
+    tagged = events.withColumn("arr_ms", arr_ms).withColumn(
+        "trig", F.expr(f"arr_ms div {_WM_SLOT_MS}")
+    ).drop("arr_ms")
+    trigs = [
+        r["trig"]
+        for r in tagged.select("trig").distinct().orderBy("trig").collect()
+    ][:24]
+    subset = tagged.filter(F.col("trig").isin(trigs))
+    land, sfdir = str(tmp_path / "wm_landing"), str(tmp_path / "wm_sf")
+    subset.drop("trig").write.mode("overwrite").parquet(
+        f"{sfdir}/events.parquet"
+    )
+    by_trig = defaultdict(list)
+    for r in subset.collect():
+        by_trig[r["trig"]].append(r[:-1])  # trig is the last column
+    land_chunks([by_trig[t] for t in trigs], events.schema, land)
 
-        schema = load_table(spark, SF_SMOKE, "events").schema
-        stream = read_file_stream(
-            spark, land, schema, max_files_per_trigger=1
+    replay = {
+        (r["window_start"], r["event_type"]): (
+            r["n_total"],
+            r["n_accepted"],
         )
-        agg = (
-            stream.withWatermark("ts", "5 minutes")
-            .groupBy(F.window("ts", "1 hour"), "event_type")
-            .count()
-        )
-        ckpt = tempfile.mkdtemp(prefix="wm_ckpt_")
-        q, name = run_available_now(agg, ckpt, output_mode="append")
-        q.awaitTermination(300)
-        rows = spark.table(name).collect()
-        got = {
-            (r["window"]["start"], r["event_type"]): r["count"]
-            for r in rows
-        }
-        assert len(got) == len(rows), "append emitted a window twice"
-        shutil.rmtree(ckpt, ignore_errors=True)
+        for r in REGISTRY["watermark_late_data_audit"]
+        .fn(spark, sfdir)
+        .collect()
+    }
+    assert sum(t for t, _ in replay.values()) > 0
+    assert any(a < t for t, a in replay.values()), (
+        "fixture produced no late drops — jitter/trigger mismatch?"
+    )
+    # final watermark after the availableNow tail batch: global max
+    # event time minus delay (epoch ms, session-tz consistent with
+    # the replay's unix_millis)
+    ev = spark.read.parquet(f"{sfdir}/events.parquet")
+    final_wm = (
+        ev.agg(F.max(F.unix_millis("ts"))).first()[0] - _WM_DELAY_MS
+    )
 
-        starts = sorted({k[0] for k in replay})
-        ms_of = dict(
-            spark.createDataFrame([(s,) for s in starts], "ws timestamp")
-            .select("ws", F.unix_millis("ws").alias("ms"))
-            .collect()
-        )
-        expected = {
-            k: acc
-            for k, (_tot, acc) in replay.items()
-            if acc > 0 and ms_of[k[0]] + _WM_SLOT_MS <= final_wm
-        }
-        assert got == expected
-    finally:
-        shutil.rmtree(land, ignore_errors=True)
-        shutil.rmtree(sfdir, ignore_errors=True)
+    stream = read_file_stream(
+        spark, land, events.schema, max_files_per_trigger=1
+    )
+    agg = (
+        stream.withWatermark("ts", "5 minutes")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .count()
+    )
+    q, name = run_available_now(
+        agg, str(tmp_path / "wm_ckpt"), output_mode="append"
+    )
+    drain(q)
+    rows = spark.table(name).collect()
+    got = {
+        (r["window"]["start"], r["event_type"]): r["count"]
+        for r in rows
+    }
+    assert len(got) == len(rows), "append emitted a window twice"
+
+    starts = sorted({k[0] for k in replay})
+    ms_of = dict(
+        spark.createDataFrame([(s,) for s in starts], "ws timestamp")
+        .select("ws", F.unix_millis("ws").alias("ms"))
+        .collect()
+    )
+    expected = {
+        k: acc
+        for k, (_tot, acc) in replay.items()
+        if acc > 0 and ms_of[k[0]] + _WM_SLOT_MS <= final_wm
+    }
+    assert got == expected
 
 
 def test_watermark_audit_invariants(spark):
@@ -987,25 +965,17 @@ def test_mom_matches_python_replay(spark):
 # dp_contribution_cap (streaming twin of dp_contribution_bounding)
 
 
-def _dp_landing(spark, n_chunks=4):
-    """Land SF_SMOKE orders as date-range-aligned chunks (year slices),
-    mtime-ordered so the file stream replays them chronologically
-    (write/move/utime mechanics shared via tests/landing.py)."""
-    from tests.landing import land_chunks
-
+def _dp_chunks(spark, n_chunks=4):
+    """SF_SMOKE orders as date-range-aligned row lists (year slices) in
+    chronological order, for landing one file each."""
     orders = load_table(spark, SF_SMOKE, "orders")
-    d = tempfile.mkdtemp(prefix="dpcap_land_")
-    scratch = tempfile.mkdtemp(prefix="dpcap_scratch_")
     years = [(1995, 1997), (1997, 1999), (1999, 2001), (2001, 2003)]
-    chunks = [
+    return orders.schema, [
         orders.filter(
             (F.year("o_orderdate") >= lo) & (F.year("o_orderdate") < hi)
-        )
+        ).collect()
         for lo, hi in years[:n_chunks]
     ]
-    paths = land_chunks(chunks, d, scratch)
-    shutil.rmtree(scratch, ignore_errors=True)
-    return d, paths
 
 
 def _dp_expected_ledgers(spark):
@@ -1059,71 +1029,47 @@ def _dp_final_rows(rows):
     return final
 
 
-def test_dp_cap_stream_matches_batch_ledger(spark):
+def test_dp_cap_stream_matches_batch_ledger(spark, tmp_path):
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
         dp_contribution_cap,
-        read_file_stream,
-        run_available_now,
+        fold_landing,
+        land_chunks,
     )
 
-    d, _paths = _dp_landing(spark)
-    try:
-        schema = load_table(spark, SF_SMOKE, "orders").schema
-        stream = read_file_stream(spark, d, schema, max_files_per_trigger=1)
-        capped = dp_contribution_cap(stream)
-        ckpt = tempfile.mkdtemp(prefix="dpcap_ckpt_")
-        q, name = run_available_now(capped, ckpt, output_mode="update")
-        q.awaitTermination(180)
-        got = _dp_final_rows(spark.table(name).collect())
-        shutil.rmtree(ckpt, ignore_errors=True)
-        assert got == _dp_expected_ledgers(spark)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    schema, chunks = _dp_chunks(spark)
+    d = str(tmp_path / "landing")
+    land_chunks(chunks, schema, d)
+    got = fold_landing(
+        spark, dp_contribution_cap, d, schema,
+        str(tmp_path / "out"), str(tmp_path / "ckpt"),
+    )
+    assert _dp_final_rows(got.collect()) == _dp_expected_ledgers(spark)
 
 
 def test_dp_cap_checkpoint_restart_resumes_ledger(spark, tmp_path):
     """Kill-and-restart across a half-drained landing zone: the resumed
     run must continue each customer's cap from checkpointed state —
     final ledgers equal the batch computation, nothing double-admitted."""
+    from ecommerce_data_pipeline_spark.plans.entity_resolution import (
+        _DP_CAP_ORDERS,
+    )
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
         dp_contribution_cap,
-        foreach_batch_append,
-        read_file_stream,
+        fold_landing,
+        land_chunks,
     )
 
-    d, paths = _dp_landing(spark)
-    staged = str(tmp_path / "staged")
-    os.makedirs(staged)
-    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
-    schema = load_table(spark, SF_SMOKE, "orders").schema
-
-    def run_once():
-        stream = read_file_stream(
-            spark, staged, schema, max_files_per_trigger=1
-        )
-        q = foreach_batch_append(
-            dp_contribution_cap(stream), out, ckpt, output_mode="update"
-        )
-        q.awaitTermination(180)
-
-    try:
-        for p in paths[:2]:
-            shutil.copy2(p, os.path.join(staged, os.path.basename(p)))
-        run_once()
-        for p in paths[2:]:
-            shutil.copy2(p, os.path.join(staged, os.path.basename(p)))
-        run_once()
-        got = _dp_final_rows(spark.read.parquet(out).collect())
-        expected = _dp_expected_ledgers(spark)
-        assert got == expected
-        # every admitted count respects the cap
-        from ecommerce_data_pipeline_spark.plans.entity_resolution import (
-            _DP_CAP_ORDERS,
-        )
-
-        assert all(v[1] <= _DP_CAP_ORDERS for v in got.values())
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    schema, chunks = _dp_chunks(spark)
+    d, out, ckpt = (str(tmp_path / n) for n in ("landing", "out", "ckpt"))
+    land_chunks(chunks[:2], schema, d)
+    fold_landing(spark, dp_contribution_cap, d, schema, out, ckpt)
+    land_chunks(chunks[2:], schema, d)
+    got = _dp_final_rows(
+        fold_landing(spark, dp_contribution_cap, d, schema, out, ckpt).collect()
+    )
+    assert got == _dp_expected_ledgers(spark)
+    # every admitted count respects the cap
+    assert all(v[1] <= _DP_CAP_ORDERS for v in got.values())
 
 
 # ---------------------------------------------------------------------------

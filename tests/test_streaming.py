@@ -14,7 +14,10 @@ from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 from ecommerce_data_pipeline_spark.streaming.pipeline import (
+    drain,
+    fold_landing,
     foreach_batch_append,
+    land_chunks,
     read_file_stream,
     run_available_now,
     session_aggregate,
@@ -48,7 +51,7 @@ def events_schema(spark):
 def _drain(df, output_mode="append"):
     ckpt = tempfile.mkdtemp(prefix="ckpt_")
     q, name = run_available_now(df, ckpt, output_mode)
-    q.awaitTermination(120)
+    drain(q)
     shutil.rmtree(ckpt, ignore_errors=True)
     return name
 
@@ -109,8 +112,7 @@ def test_foreach_batch_append_lands_parquet(spark, landing_dir, events_schema):
     def enrich(batch):
         return batch.withColumn("ingested", F.lit(True))
 
-    q = foreach_batch_append(stream, f"{out}/events", ckpt, transform=enrich)
-    q.awaitTermination(120)
+    drain(foreach_batch_append(stream, f"{out}/events", ckpt, transform=enrich))
     landed = spark.read.parquet(f"{out}/events")
     # all delivered rows land (dedup is a separate operator); schema extended
     assert landed.count() == spark.read.parquet(landing_dir).count()
@@ -249,8 +251,7 @@ def test_foreach_batch_idempotent_replay_no_duplicates(spark, landing_dir, event
     for _ in range(2):  # second run = full replay with a new checkpoint
         ckpt = _tf.mkdtemp(prefix="ckpt_idem_")
         stream = read_file_stream(spark, landing_dir, events_schema)
-        q = foreach_batch_append_idempotent(stream, out, ckpt)
-        q.awaitTermination(120)
+        drain(foreach_batch_append_idempotent(stream, out, ckpt))
         _sh.rmtree(ckpt, ignore_errors=True)
     landed = spark.read.parquet(out)
     # the sink must hold exactly the landing rows, not 2x after replay
@@ -290,18 +291,14 @@ def test_foreach_batch_cdc_snapshot_matches_batch_compaction(spark, tmp_path):
         [("k1", 3, "U", 2.0), ("k2", 4, "D", 0.0)],
         [("k3", 5, "U", 7.0)],
     ]
-    for i, rows in enumerate(chunks):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
+    land_chunks(chunks, schema, landing)
 
     snap_path = str(tmp_path / "snapshot")
     ckpt = str(tmp_path / "ckpt")
     stream = read_file_stream(
         spark, landing, schema, max_files_per_trigger=1
     )
-    q = foreach_batch_cdc_snapshot(stream, snap_path, ckpt, "k", ["seq"])
-    q.awaitTermination(120)
+    drain(foreach_batch_cdc_snapshot(stream, snap_path, ckpt, "k", ["seq"]))
 
     import os
 
@@ -448,23 +445,25 @@ def test_streaming_incremental_neardup_matches_batch_run(spark):
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     root = tempfile.mkdtemp(prefix="incdedup_")
     src = os.path.join(root, "src")
-    for i in range(3):  # one file per micro-batch (maxFilesPerTrigger=1)
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
+    land_chunks(  # one file per micro-batch (maxFilesPerTrigger=1)
+        [docs.filter(F.col("doc_id") % 3 == i).collect() for i in range(3)],
+        docs.schema,
+        src,
+    )
     try:
         stream = read_file_stream(
             spark, src, docs.schema, max_files_per_trigger=1
         )
-        q = foreach_batch_incremental_neardup(
-            stream,
-            docs_path=os.path.join(root, "docs"),
-            sigs_path=os.path.join(root, "sigs"),
-            pairs_path=os.path.join(root, "pairs"),
-            checkpoint=os.path.join(root, "ckpt"),
-            threshold=0.8,
+        drain(
+            foreach_batch_incremental_neardup(
+                stream,
+                docs_path=os.path.join(root, "docs"),
+                sigs_path=os.path.join(root, "sigs"),
+                pairs_path=os.path.join(root, "pairs"),
+                checkpoint=os.path.join(root, "ckpt"),
+                threshold=0.8,
+            )
         )
-        q.awaitTermination(180)
         got = {
             (r["id1"], r["id2"])
             for r in spark.read.parquet(os.path.join(root, "pairs")).collect()
@@ -498,7 +497,7 @@ def test_streaming_incremental_neardup_replay_is_idempotent(spark):
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     root = tempfile.mkdtemp(prefix="increplay_")
     src = os.path.join(root, "src")
-    docs.coalesce(1).write.parquet(src)
+    land_chunks([docs.collect()], docs.schema, src)
     paths = dict(
         docs_path=os.path.join(root, "docs"),
         sigs_path=os.path.join(root, "sigs"),
@@ -509,10 +508,11 @@ def test_streaming_incremental_neardup_replay_is_idempotent(spark):
             stream = read_file_stream(
                 spark, src, docs.schema, max_files_per_trigger=1
             )
-            q = foreach_batch_incremental_neardup(
-                stream, checkpoint=os.path.join(root, ckpt), **paths
+            drain(
+                foreach_batch_incremental_neardup(
+                    stream, checkpoint=os.path.join(root, ckpt), **paths
+                )
             )
-            q.awaitTermination(180)
             return {
                 (r["id1"], r["id2"])
                 for r in spark.read.parquet(paths["pairs_path"]).collect()
@@ -544,7 +544,7 @@ def test_txqueue_stream_restart_emits_no_duplicates(spark, tmp_path):
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
 
     def run_once():
-        q = (
+        drain(
             spark.readStream.format("txqueue")
             .option("rowsPerBatch", 50)
             .option("maxOffset", 150)
@@ -556,7 +556,6 @@ def test_txqueue_stream_restart_emits_no_duplicates(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
 
     for _ in range(5):  # drains at run 3; runs 4-5 are post-saturation
         run_once()
@@ -607,3 +606,153 @@ def test_neardup_store_ahead_of_checkpoint_fails_loud(spark):
         ), "cached plans leaked past neardup_store_increment"
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+# --------------------------------------------------------------------------
+# The file-stream kit: land_chunks / drain / fold_landing
+
+
+def test_drain_times_out_and_stops_never_ending_query(spark, monkeypatch):
+    """A query that never finishes (rate source, default trigger) must
+    fail the drain loudly at the bound AND be stopped — it may not run
+    on into the next test."""
+    from ecommerce_data_pipeline_spark.streaming import pipeline
+
+    monkeypatch.setattr(pipeline, "DRAIN_TIMEOUT_S", 2)
+    q = (
+        spark.readStream.format("rate")
+        .load()
+        .writeStream.format("memory")
+        .queryName("drain_timeout_probe")
+        .start()
+    )
+    with pytest.raises(TimeoutError, match="still running after 2 s"):
+        pipeline.drain(q)
+    assert not q.isActive
+    assert spark.streams.active == []
+
+
+@pytest.fixture
+def non_utc_process_zone(monkeypatch):
+    """PySpark reads naive datetimes as PROCESS-local time (collect,
+    createDataFrame); a non-UTC zone makes a landing that ignored it
+    shift every timestamp."""
+    import time
+
+    monkeypatch.setenv("TZ", "Asia/Kolkata")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_land_chunks_round_trips_mapped_types_in_chunk_order(
+    spark, tmp_path, non_utc_process_zone
+):
+    """One row of every mapped type streams back unchanged under the
+    declared schema, one micro-batch per chunk in landing order — also
+    across a second call that continues the numbering. An unmapped
+    type is refused."""
+    import datetime
+    import decimal
+    import os
+
+    from pyspark.sql.types import (
+        BooleanType,
+        DateType,
+        DecimalType,
+        DoubleType,
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    schema = StructType(
+        [
+            StructField("d", DateType()),
+            StructField("f", DoubleType()),
+            StructField("i", IntegerType()),
+            StructField("l", LongType()),
+            StructField("s", StringType()),
+            StructField("t", TimestampType()),
+            StructField("m", DecimalType(18, 2)),
+        ]
+    )
+    rows = [
+        (
+            datetime.date(1995, 3, k + 1),
+            k + 0.25,
+            k,
+            2**40 + k,
+            f"row-{k}",
+            datetime.datetime(1995, 3, 1, 12, k, 30, 250),
+            decimal.Decimal(f"{k}00.05"),
+        )
+        for k in range(3)
+    ]
+    landing = str(tmp_path / "landing")
+    first = land_chunks([[rows[0]]], schema, landing)
+    rest = land_chunks([[rows[1]], [rows[2]]], schema, landing)
+    assert [os.path.basename(p) for p in first + rest] == [
+        "chunk-00.parquet",
+        "chunk-01.parquet",
+        "chunk-02.parquet",
+    ]
+    assert [os.stat(p).st_mtime for p in first + rest] == [
+        1_700_000_000,
+        1_700_000_001,
+        1_700_000_002,
+    ]
+
+    seen = []
+    drain(
+        read_file_stream(spark, landing, schema, max_files_per_trigger=1)
+        .writeStream.foreachBatch(
+            lambda batch, batch_id: seen.append(
+                (batch_id, [tuple(r) for r in batch.collect()])
+            )
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert seen == [(k, [rows[k]]) for k in range(3)]
+
+    with pytest.raises(TypeError, match="unmapped Spark type"):
+        land_chunks(
+            [[(True,)]],
+            StructType([StructField("b", BooleanType())]),
+            str(tmp_path / "bad"),
+        )
+
+
+def test_fold_landing_empty_landing_is_empty_relation(spark, tmp_path):
+    """No landed chunk means no trigger ever writes the output: the fold
+    still returns a relation — empty, with the operator's schema."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from ecommerce_data_pipeline_spark.streaming.pipeline import (
+        decontam_monitor_stream,
+    )
+
+    schema = StructType(
+        [StructField("shard_id", LongType()), StructField("doc_id", LongType())]
+    )
+    landing = str(tmp_path / "landing")
+    assert land_chunks([], schema, landing) == []
+    got = fold_landing(
+        spark,
+        decontam_monitor_stream,
+        landing,
+        schema,
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+    )
+    want = decontam_monitor_stream(read_file_stream(spark, landing, schema))
+    assert got.count() == 0
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]

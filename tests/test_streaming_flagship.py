@@ -26,6 +26,7 @@ from ecommerce_data_pipeline_spark.streaming.flagship import (
     queue_dimensions,
     run_streaming_flagship,
 )
+from ecommerce_data_pipeline_spark.streaming.pipeline import drain
 
 RAW_COLS = [
     "offset",
@@ -101,15 +102,13 @@ def test_streaming_flagship_drains_three_triggers_and_replays(spark):
         assert _rows(spark.read.parquet(f"{wh}/neardup_pairs")) == pairs_before
 
         # restart after saturation: an availableNow pass appends nothing
-        q2 = run_streaming_flagship(
-            spark, wh, ckpt, dim_products, dim_customers,
-            available_now=True, seed=seed, rows_per_batch=rows_per_batch,
-            max_offset=max_offset, resend_every=resend_every,
+        drain(
+            run_streaming_flagship(
+                spark, wh, ckpt, dim_products, dim_customers,
+                available_now=True, seed=seed, rows_per_batch=rows_per_batch,
+                max_offset=max_offset, resend_every=resend_every,
+            )
         )
-        try:
-            assert q2.awaitTermination(300)  # completed, not still racing
-        finally:
-            q2.stop()
         assert _rows(spark.read.parquet(f"{wh}/fact_enriched")) == fact_before
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -132,14 +131,12 @@ def test_streaming_flagship_mid_drain_restart_resumes(spark):
     )
     try:
         # first trigger only (availableNow snapshots one poll), then stop
-        q1 = run_streaming_flagship(
-            spark, wh, ckpt, dim_products, dim_customers,
-            available_now=True, **kwargs,
+        drain(
+            run_streaming_flagship(
+                spark, wh, ckpt, dim_products, dim_customers,
+                available_now=True, **kwargs,
+            )
         )
-        try:
-            assert q1.awaitTermination(300)
-        finally:
-            q1.stop()
         partial = spark.read.parquet(f"{wh}/fact_enriched").count()
         assert 0 < partial < max_offset  # genuinely mid-drain
 
