@@ -18,17 +18,42 @@ Spark-first design: iterative min-label propagation, all joins/aggs.
   SoCC'14] converges in O(log n) rounds with the same join/agg
   primitives — this implementation keeps the simpler propagation loop
   because duplicate clusters have tiny diameters by construction.)
-- Each round ends in ``localCheckpoint`` — iterative self-joins
-  otherwise double the logical plan per round and choke the optimizer
-  long before the data is the bottleneck.
-- The driver loop only inspects an aggregated change COUNT per round
-  (one scalar), never row data.
+- The rounds run through :func:`iterate_to_fixpoint` (localCheckpoint
+  per round); the driver only inspects an aggregated change COUNT per
+  round (one scalar), never row data, and stops at the first 0.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def iterate_to_fixpoint(state, step, measure, rounds, done, stats=None):
+    """The graph tier's one iteration policy: run ``rounds`` rounds of
+    ``state = step(state)`` followed by ``stats.append(measure(state))``
+    and return ``(state, stats)``.
+
+    ``step`` ends in ``localCheckpoint`` — iterative self-joins
+    otherwise double the logical plan per round and choke the optimizer
+    long before the data is the bottleneck. ``measure`` is the round's
+    one bounded driver action (a count or a 1-row aggregate over the
+    checkpointed rows), which buys the FIXPOINT SHORT-CIRCUIT: once
+    ``done(stats)`` holds, the next round would reproduce the same state,
+    so every remaining round appends ``stats[-1]`` and submits no Spark
+    job. At 100 TB a loop then costs only as many distributed rounds as
+    the data needs, while ``stats`` still has one entry per round — the
+    value-for-value twin of an oracle that unrolls every round
+    unconditionally. ``stats`` may be seeded (e.g. with the round-0
+    count); ``done`` is only asked about a non-empty list."""
+    stats = list(stats or ())
+    for _ in range(rounds):
+        if stats and done(stats):
+            stats.append(stats[-1])
+            continue
+        state = step(state)
+        stats.append(measure(state))
+    return state, stats
 
 
 def _bidirectional_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -63,8 +88,7 @@ def connected_components(
     node id reachable from it. Deterministic for any edge direction or
     partitioning."""
     if max_iter < 1:
-        # the for/else non-convergence guard below reads `changed` from the
-        # final round — with zero rounds it would be unbound (NameError)
+        # zero rounds leave no change count to certify convergence with
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     bidir = _bidirectional_edges(edges, src, dst)
     # initialization already performs round 1: label = min(self, neighbors)
@@ -80,7 +104,9 @@ def connected_components(
         )
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+
+    def propagate(labels: DataFrame) -> DataFrame:
+        labels = labels.drop("_changed")
         nbr_min = (
             bidir.join(labels, bidir["v"] == labels["node"])
             .groupBy("u")
@@ -90,7 +116,7 @@ def connected_components(
         # (labels only ever decrease, so changed ⇔ nbr_min < label):
         # the change count is then a shuffle-free scan of the cached
         # partitions instead of a second old⋈new join job per round
-        new_labels = (
+        return (
             labels.join(nbr_min, labels["node"] == nbr_min["u"], "left")
             .select(
                 "node",
@@ -103,22 +129,25 @@ def connected_components(
             )
             .localCheckpoint()
         )
-        changed = new_labels.filter(F.col("_changed")).count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-    else:
+
+    labels, changes = iterate_to_fixpoint(
+        labels,
+        propagate,
+        lambda labels: labels.filter(F.col("_changed")).count(),
+        max_iter,
+        done=lambda changes: changes[-1] == 0,
+    )
+    bidir.unpersist()
+    if changes[-1] != 0:
         # silent truncation here would SPLIT true components (a path
         # graph longer than max_iter hops) and a downstream dedup would
         # keep duplicates — fail loudly instead
-        bidir.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing) — raise max_iter (graph "
+            f"({changes[-1]} labels still changing) — raise max_iter (graph "
             "diameter exceeds the propagation budget)"
         )
-    bidir.unpersist()
-    return labels
+    return labels.drop("_changed")
 
 
 def dedup_cluster_assignment(

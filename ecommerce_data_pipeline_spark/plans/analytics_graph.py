@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ecommerce_data_pipeline_spark.plans._helpers import dec, dsum, sql_dsum
+from ecommerce_data_pipeline_spark.operators.graph import iterate_to_fixpoint
+from ecommerce_data_pipeline_spark.plans._helpers import dec
 from ecommerce_data_pipeline_spark.plans.registry import register
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 
@@ -394,6 +395,92 @@ def _copurchase_edges_sql() -> list[str]:
     ]
 
 
+def _copurchase_nodes(edges: DataFrame) -> DataFrame:
+    """The distinct endpoints of the co-purchase edges — every node of
+    the graph (callers localCheckpoint it as their round-0 state)."""
+    return (
+        edges.select(F.col("u").alias("node"))
+        .union(edges.select(F.col("v").alias("node")))
+        .distinct()
+    )
+
+
+def _settled(counts: list) -> bool:
+    """The peels' ``done`` rule: the last two survivor counts agree.
+    Each round's survivor set is a subset of the previous one, so equal
+    COUNTS imply equal SETS — every later round is provably identical."""
+    return len(counts) >= 2 and counts[-1] == counts[-2]
+
+
+def _peel(
+    edges: DataFrame, active: DataFrame, k: int, rounds: int, n_active: int
+) -> tuple[DataFrame, list]:
+    """``rounds`` k-core peel rounds from the survivor set ``active``
+    (``n_active`` nodes): restrict the edges to surviving endpoints,
+    recount degrees, keep nodes with degree >= k. Returns the final
+    survivor set and the survivor counts of rounds 0..rounds."""
+
+    def peel_round(active: DataFrame) -> DataFrame:
+        # survivor sets are node-bounded (the HITS score-relation
+        # argument) — BROADCAST them into both semi-joins so a peel
+        # round shuffles only the degree groupBy, not the edge relation
+        # twice (r13: 3 exchanges/round -> 1).
+        bact = F.broadcast(active)
+        e_act = edges.join(
+            bact, edges["u"] == active["node"], "left_semi"
+        ).join(bact, F.col("v") == active["node"], "left_semi")
+        deg = (
+            e_act.select(F.col("u").alias("node"))
+            .unionAll(e_act.select(F.col("v").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("deg"))
+        )
+        return deg.filter(F.col("deg") >= k).select("node").localCheckpoint()
+
+    return iterate_to_fixpoint(
+        active, peel_round, lambda a: a.count(), rounds, _settled, [n_active]
+    )
+
+
+def _peel_ctes(prefix: str, r: int, k: int) -> list[str]:
+    """The DuckDB twin of one :func:`_peel` round: degrees ``{prefix}d{r}``
+    inside the survivor set ``{prefix}v{r-1}``, survivors ``{prefix}v{r}``."""
+    p = r - 1
+    return [
+        f"""{prefix}d{r} AS MATERIALIZED (
+      SELECT node, COUNT(*) AS deg FROM (
+        SELECT e.u AS node FROM edges e
+        JOIN {prefix}v{p} x ON e.u = x.node JOIN {prefix}v{p} y ON e.v = y.node
+        UNION ALL
+        SELECT e.v AS node FROM edges e
+        JOIN {prefix}v{p} x ON e.u = x.node JOIN {prefix}v{p} y ON e.v = y.node
+      ) GROUP BY node
+    )""",
+        f"{prefix}v{r} AS MATERIALIZED "
+        f"(SELECT node FROM {prefix}d{r} WHERE deg >= {k})",
+    ]
+
+
+def _count_certificate_ctes(rel: str, rounds: int, size_col: str) -> list[str]:
+    """The peel certificates' tail: ``per_round`` (the size of
+    ``{rel}0..{rel}{rounds}`` as round_i, n_active) and ``conv`` (last
+    two sizes equal, and the final size as ``size_col``)."""
+    selects = [
+        f"SELECT CAST({r} AS INT) AS round_i,"
+        f" (SELECT CAST(COUNT(*) AS BIGINT) FROM {rel}{r}) AS n_active"
+        for r in range(rounds + 1)
+    ]
+    last, prev = rounds, rounds - 1
+    return [
+        "per_round AS (" + "\n      UNION ALL\n      ".join(selects) + ")",
+        f"""conv AS (
+      SELECT (SELECT COUNT(*) FROM {rel}{last}) = (SELECT COUNT(*) FROM {rel}{prev})
+        AS converged,
+      (SELECT CAST(COUNT(*) AS BIGINT) FROM {rel}{last}) AS {size_col}
+    )""",
+    ]
+
+
 def _kcore_sql() -> str:
     ctes = [
         *_copurchase_edges_sql(),
@@ -406,35 +493,8 @@ def _kcore_sql() -> str:
     )""",
     ]
     for r in range(1, _KCORE_ROUNDS + 1):
-        p = r - 1
-        ctes.append(
-            f"""d{r} AS MATERIALIZED (
-      SELECT node, COUNT(*) AS deg FROM (
-        SELECT e.u AS node FROM edges e
-        JOIN v{p} x ON e.u = x.node JOIN v{p} y ON e.v = y.node
-        UNION ALL
-        SELECT e.v AS node FROM edges e
-        JOIN v{p} x ON e.u = x.node JOIN v{p} y ON e.v = y.node
-      ) GROUP BY node
-    )"""
-        )
-        ctes.append(
-            f"v{r} AS MATERIALIZED (SELECT node FROM d{r} WHERE deg >= {_KCORE_K})"
-        )
-    selects = [
-        f"SELECT CAST({r} AS INT) AS round_i,"
-        f" (SELECT CAST(COUNT(*) AS BIGINT) FROM v{r}) AS n_active"
-        for r in range(_KCORE_ROUNDS + 1)
-    ]
-    ctes.append("per_round AS (" + "\n      UNION ALL\n      ".join(selects) + ")")
-    last, prev = _KCORE_ROUNDS, _KCORE_ROUNDS - 1
-    ctes.append(
-        f"""conv AS (
-      SELECT (SELECT COUNT(*) FROM v{last}) = (SELECT COUNT(*) FROM v{prev})
-        AS converged,
-      (SELECT CAST(COUNT(*) AS BIGINT) FROM v{last}) AS n_in_core
-    )"""
-    )
+        ctes += _peel_ctes("", r, _KCORE_K)
+    ctes += _count_certificate_ctes("v", _KCORE_ROUNDS, "n_in_core")
     return (
         "WITH " + ",\n    ".join(ctes) + f"""
     SELECT per_round.round_i, per_round.n_active,
@@ -469,63 +529,22 @@ def kcore_peel_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the edge list (basket-bounded self-join, the
     copurchase_graph_stats contract: per-order pairs = basket choose 2,
     never corpus squared) is persisted ONCE and every round consumes
-    the one materialization via two left_semi joins; survivor sets are
-    localCheckpointed per round (the iterative-algorithm discipline of
-    dedup_clusters' CC loop) so round r+1's lineage starts from
-    materialized rows, not a 2^r join tree. Each round is two
-    node-keyed shuffles. Per-round survivor counts are 1-row collected
-    scalars (the bounded-collect contract), which buys the FIXPOINT
-    SHORT-CIRCUIT: once V_r == V_{r-1}, every later round is provably
-    identical, so the loop stops executing and fills the remaining
-    certificate rows with the converged count — at 100 TB the peel
-    costs only as many distributed rounds as the graph actually needs
-    (the oracle unrolls all rounds unconditionally; values identical
-    because the filled counts ARE the fixpoint values)."""
+    the one materialization via two left_semi joins. The rounds are
+    :func:`_peel` on ``iterate_to_fixpoint`` (localCheckpointed
+    survivor sets, one survivor count per round), done once
+    V_r == V_{r-1} (two equal counts)."""
     # persisted by the helper: consumed by every peel round + the edge count
     edges = _copurchase_edges(spark, sf_dir)
-    active = (
-        edges.select(F.col("u").alias("node"))
-        .union(edges.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    nodes = _copurchase_nodes(edges).localCheckpoint()
     base = (
-        active.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
+        nodes.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
         .crossJoin(
             F.broadcast(
                 edges.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
             )
         )
     )
-    counts = [active.count()]  # bounded collect: one scalar per round
-    for _ in range(_KCORE_ROUNDS):
-        if len(counts) >= 2 and counts[-1] == counts[-2]:
-            # fixpoint reached: V_r == V_{r-1} (subset + equal count),
-            # so every remaining round returns the same set — fill
-            # without executing (matches the oracle's unconditional
-            # unroll value-for-value)
-            counts.append(counts[-1])
-            continue
-        # survivor sets are node-bounded (the HITS score-relation
-        # argument) — BROADCAST them into both semi-joins so a peel
-        # round shuffles only the degree groupBy, not the edge relation
-        # twice (r13: 3 exchanges/round -> 1).
-        bact = F.broadcast(active)
-        e_act = edges.join(
-            bact, edges["u"] == active["node"], "left_semi"
-        ).join(bact, F.col("v") == active["node"], "left_semi")
-        deg = (
-            e_act.select(F.col("u").alias("node"))
-            .unionAll(e_act.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        active = (
-            deg.filter(F.col("deg") >= _KCORE_K)
-            .select("node")
-            .localCheckpoint()
-        )
-        counts.append(active.count())
+    _, counts = _peel(edges, nodes, _KCORE_K, _KCORE_ROUNDS, nodes.count())
     rounds_df = spark.createDataFrame(
         [(i, int(c)) for i, c in enumerate(counts)],
         "round_i int, n_active long",
@@ -537,7 +556,7 @@ def kcore_peel_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_edges",
         F.lit(_KCORE_K).cast("int").alias("core_k"),
         F.lit(int(counts[-1])).cast("long").alias("n_in_core"),
-        F.lit(bool(counts[-1] == counts[-2])).alias("converged"),
+        F.lit(_settled(counts)).alias("converged"),
     )
 
 
@@ -637,7 +656,9 @@ def _lpa_vote(edges: DataFrame, labels: DataFrame) -> DataFrame:
     Returns the new labeling WITH the previous label carried —
     (node, label, old_label) — localCheckpointed (the iterative-kit
     discipline), so callers read the per-round change count off the
-    materialized relation instead of paying a separate join job.
+    materialized relation instead of paying a separate join job. Only
+    node and label of ``labels`` are read, so the previous round's
+    output feeds the next round as it is.
 
     r13 optimization (guide §2.4/§3.1), results bit-identical:
     - the label relation is node-bounded (the HITS score-relation
@@ -711,29 +732,20 @@ def label_propagation_communities(
     Scale shape: the support-thresholded edge list is persisted once
     (basket-bounded — the copurchase contract); each round is two
     node-keyed shuffles (vote scatter + argmax window partitioned BY
-    NODE, never global) over the localCheckpointed labeling; per-round
-    stats are bounded 1-row collects, which buy the kcore fixpoint
-    short-circuit — converged rounds stop executing and fill the
-    certificate with the provably-constant stats."""
+    NODE, never global) over the localCheckpointed labeling. The rounds
+    run on ``iterate_to_fixpoint`` with one 1-row stats aggregate per
+    round, done once a round changes no label."""
     # persisted by the helper: consumed by every vote round + the edge count
     edges = _copurchase_edges(spark, sf_dir)
     labels = (
-        edges.select(F.col("u").alias("node"))
-        .union(edges.select(F.col("v").alias("node")))
-        .distinct()
+        _copurchase_nodes(edges)
         .select("node", F.col("node").alias("label"))
         .localCheckpoint()
     )
     n_nodes = labels.count()
     n_edges = edges.count()
-    stats = []  # (round, changed, n_comm, biggest)
-    for r in range(1, _LPA_ROUNDS + 1):
-        if stats and stats[-1][1] == 0:
-            # fixpoint: identical labels produce identical votes — fill
-            # without executing (matches the oracle's full unroll)
-            stats.append((r,) + stats[-1][1:])
-            continue
-        new_labels = _lpa_vote(edges, labels)
+
+    def vote_stats(new_labels: DataFrame) -> tuple[int, int, int]:
         # ONE driver action per executed round (r13): the vote carries
         # old_label on the checkpointed relation, so change count and
         # community stats fold into a single two-level aggregate over
@@ -755,15 +767,19 @@ def label_propagation_communities(
             )
             .first()
         )
-        changed = int(row["changed"])
-        labels = new_labels.select("node", "label")
-        stats.append((r, changed, row["nc"], row["big"]))
-    converged = stats[-1][1] == 0
+        return int(row["changed"]), int(row["nc"]), int(row["big"])
+
+    # (changed, n_comm, biggest) per round; done once a round changed nothing
+    _, stats = iterate_to_fixpoint(
+        labels,
+        lambda labels: _lpa_vote(edges, labels),
+        vote_stats,
+        _LPA_ROUNDS,
+        done=lambda stats: stats[-1][0] == 0,
+    )
+    converged = stats[-1][0] == 0
     rounds_df = spark.createDataFrame(
-        [
-            (r, int(ch), int(nc), int(big))
-            for r, ch, nc, big in stats
-        ],
+        [(r, *round_stats) for r, round_stats in enumerate(stats, start=1)],
         "round_i int, n_changed long, n_communities long,"
         " biggest_community long",
     )
@@ -1545,22 +1561,7 @@ def _core_decomposition_sql() -> str:
     for k in range(1, _CORE_KMAX + 2):
         ctes.append(f"k{k}v0 AS MATERIALIZED (SELECT node FROM {prev})")
         for r in range(1, _CORE_ROUNDS + 1):
-            p = r - 1
-            ctes.append(
-                f"""k{k}d{r} AS MATERIALIZED (
-      SELECT node, COUNT(*) AS deg FROM (
-        SELECT e.u AS node FROM edges e
-        JOIN k{k}v{p} x ON e.u = x.node JOIN k{k}v{p} y ON e.v = y.node
-        UNION ALL
-        SELECT e.v AS node FROM edges e
-        JOIN k{k}v{p} x ON e.u = x.node JOIN k{k}v{p} y ON e.v = y.node
-      ) GROUP BY node
-    )"""
-            )
-            ctes.append(
-                f"k{k}v{r} AS MATERIALIZED "
-                f"(SELECT node FROM k{k}d{r} WHERE deg >= {k})"
-            )
+            ctes += _peel_ctes(f"k{k}", r, k)
         prev = f"k{k}v{_CORE_ROUNDS}"
         conv.append(
             f"(SELECT COUNT(*) FROM k{k}v{_CORE_ROUNDS}) ="
@@ -1613,14 +1614,11 @@ def graph_core_decomposition_full(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape (the kcore_peel_certificate kit, extended to a ladder):
     the basket-bounded co-purchase edge list is persisted ONCE and
     every rung's every round consumes that one materialization via two
-    left_semi joins; survivor sets are localCheckpointed per round so
-    lineage never compounds across the up-to-KMAX*ROUNDS iterations.
-    The NESTED start (rung k seeds from core_{k-1}, valid because
-    cores are monotone-nested) means the expensive early rungs shrink
-    the frontier for the later ones, and the per-rung FIXPOINT
-    SHORT-CIRCUIT (per-round 1-row count collects, stop when two agree
-    — empty cores converge immediately) keeps executed distributed
-    rounds at the graph's real demand, not the unroll budget: at
+    left_semi joins; each rung is :func:`_peel` on
+    ``iterate_to_fixpoint``, done once two survivor counts agree (empty
+    cores converge immediately). The NESTED start (rung k seeds from
+    core_{k-1}, valid because cores are monotone-nested) means the
+    expensive early rungs shrink the frontier for the later ones: at
     sf0.01 rungs 4..6 peel one round each on an already-empty-or-tiny
     set while the oracle grinds all 6x14 unconditionally. Coreness
     assignment is ONE node-keyed shuffle (union the <= KMAX survivor
@@ -1628,43 +1626,15 @@ def graph_core_decomposition_full(spark: SparkSession, sf_dir: str) -> DataFrame
     100 TB every round is two node-keyed semi-join shuffles over an
     edge relation bounded by sum-of-C(basket,2), never corpus^2."""
     edges = _copurchase_edges(spark, sf_dir)
-    all_nodes = (
-        edges.select(F.col("u").alias("node"))
-        .union(edges.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    all_nodes = _copurchase_nodes(edges).localCheckpoint()
     cores: dict[int, DataFrame] = {}
-    core_counts: dict[int, int] = {}
     converged_all = True
-    active = all_nodes
+    active, n_active = all_nodes, all_nodes.count()
     for k in range(1, _CORE_KMAX + 2):
-        counts = [active.count() if k == 1 else core_counts[k - 1]]
-        for _ in range(_CORE_ROUNDS):
-            if len(counts) >= 2 and counts[-1] == counts[-2]:
-                counts.append(counts[-1])
-                continue
-            # broadcast the node-bounded survivor set (the kcore_peel
-            # comment): 3 exchanges/round -> 1
-            bact = F.broadcast(active)
-            e_act = edges.join(
-                bact, edges["u"] == active["node"], "left_semi"
-            ).join(
-                bact, F.col("v") == active["node"], "left_semi"
-            )
-            deg = (
-                e_act.select(F.col("u").alias("node"))
-                .unionAll(e_act.select(F.col("v").alias("node")))
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).alias("deg"))
-            )
-            active = (
-                deg.filter(F.col("deg") >= k).select("node").localCheckpoint()
-            )
-            counts.append(active.count())
-        converged_all = converged_all and counts[-1] == counts[-2]
-        cores[k] = active
-        core_counts[k] = counts[-1]
+        # rung k starts from core_{k-1} (cores are nested)
+        active, counts = _peel(edges, active, k, _CORE_ROUNDS, n_active)
+        converged_all = converged_all and _settled(counts)
+        cores[k], n_active = active, counts[-1]
     tagged = None
     for k in range(1, _CORE_KMAX + 1):
         part = cores[k].select("node", F.lit(k).alias("k"))
@@ -1675,7 +1645,8 @@ def graph_core_decomposition_full(spark: SparkSession, sf_dir: str) -> DataFrame
         .select(
             "node",
             F.coalesce(F.col("_cor"), F.lit(0)).cast("int").alias("coreness"),
-            F.lit(bool(core_counts[_CORE_KMAX + 1] > 0)).alias("truncated"),
+            # n_active is now the size of the (KMAX+1)-core
+            F.lit(bool(n_active > 0)).alias("truncated"),
             F.lit(bool(converged_all)).alias("converged"),
         )
     )
@@ -1746,32 +1717,28 @@ def modularity_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     HITS wide-type bound); Q is ONE pinned double division.
 
     Scale shape: the vote loop is the LPA kit (persisted basket-bounded
-    edges, two node-keyed shuffles per round, per-round localCheckpoint,
-    changed==0 fixpoint short-circuit — the oracle's full l8 unroll
-    equals the short-circuited labels BY the fixpoint argument); the
+    edges, two node-keyed shuffles per round) on ``iterate_to_fixpoint``
+    with one change count per round, done at 0 changes; the
     scoring pass is two node-keyed joins (edge endpoints → labels), a
     label-keyed aggregate each for e_c and d_c, and a k-row reduction.
     No windows over fact rows, no collects beyond the per-round
-    1-scalar counts the short-circuit already pays for."""
+    change counts."""
     edges = _copurchase_edges(spark, sf_dir)
     labels = (
-        edges.select(F.col("u").alias("node"))
-        .union(edges.select(F.col("v").alias("node")))
-        .distinct()
+        _copurchase_nodes(edges)
         .select("node", F.col("node").alias("label"))
         .localCheckpoint()
     )
-    changed = None
-    for _ in range(_LPA_ROUNDS):
-        if changed == 0:
-            break
-        new_labels = _lpa_vote(edges, labels)
-        # change count reads the carried old_label off the checkpointed
-        # vote (r13) — no separate join job per round
-        changed = new_labels.filter(
-            F.col("label") != F.col("old_label")
-        ).count()
-        labels = new_labels.select("node", "label")
+    # the change count reads the carried old_label off the checkpointed
+    # vote (r13) — no separate join job per round; done at 0 changes
+    labels, _ = iterate_to_fixpoint(
+        labels,
+        lambda labels: _lpa_vote(edges, labels),
+        lambda new: new.filter(F.col("label") != F.col("old_label")).count(),
+        _LPA_ROUNDS,
+        done=lambda changes: changes[-1] == 0,
+    )
+    labels = labels.select("node", "label")
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -2065,7 +2032,7 @@ def _linkpred_sql() -> str:
 def link_prediction_common_neighbors(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Top-{k} NON-adjacent product pairs by common-neighbor count in
+    """Top-20 NON-adjacent product pairs by common-neighbor count in
     the recurrent co-purchase graph, fully deterministic (score DESC,
     then (u, v) ASC — the top-k tie-break discipline).
 
@@ -2080,7 +2047,7 @@ def link_prediction_common_neighbors(
     THRESHOLDED degrees (the >= 2 recurrence filter is what keeps hub
     products from going quadratic — the copurchase contract), existing
     edges leave via a broadcast-able left_anti on the canonical u < v
-    pair, and the final ranking is a TakeOrdered top-{k}, never a
+    pair, and the final ranking is a TakeOrdered top-20, never a
     global sort. (r14 measured-and-REJECTED: the sorted-neighbor-array
     row-local enumeration that wins for the RA variant below — here it
     removes one adjacency exchange + the join but adds an
@@ -2157,22 +2124,7 @@ def _ktruss_sql() -> str:
       HAVING COUNT(*) >= {_TRUSS_K - 2}
     )"""
         )
-    selects = [
-        f"SELECT CAST({r} AS INT) AS round_i,"
-        f" (SELECT CAST(COUNT(*) AS BIGINT) FROM e{r}) AS n_active"
-        for r in range(_TRUSS_ROUNDS + 1)
-    ]
-    ctes.append(
-        "per_round AS (" + "\n      UNION ALL\n      ".join(selects) + ")"
-    )
-    last, prev = _TRUSS_ROUNDS, _TRUSS_ROUNDS - 1
-    ctes.append(
-        f"""conv AS (
-      SELECT (SELECT COUNT(*) FROM e{last}) = (SELECT COUNT(*) FROM e{prev})
-        AS converged,
-      (SELECT CAST(COUNT(*) AS BIGINT) FROM e{last}) AS n_in_truss
-    )"""
-    )
+    ctes += _count_certificate_ctes("e", _TRUSS_ROUNDS, "n_in_truss")
     return (
         "WITH " + ",\n    ".join(ctes) + f"""
     SELECT per_round.round_i, per_round.n_active, base.n_edges_initial,
@@ -2189,10 +2141,10 @@ def _ktruss_sql() -> str:
     tags=("extension", "graph", "iterative"),
 )
 def ktruss_peel_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """{k}-truss of the recurrent co-purchase graph by unrolled edge
+    """4-truss of the recurrent co-purchase graph by unrolled edge
     peeling: each round recounts every surviving edge's triangle
     support WITHIN the surviving subgraph and drops edges below
-    {k}-2, emitting the per-round surviving-edge counts plus the
+    4-2, emitting the per-round surviving-edge counts plus the
     convergence certificate (last two counts equal; the peel only
     removes edges, so equal COUNTS imply equal SETS — the kcore subset
     argument applied to edges).
@@ -2204,26 +2156,22 @@ def ktruss_peel_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting is two node-keyed hash joins (edge × adjacency on each
     endpoint, matched on the shared neighbor) whose output is one row
     per (edge, common-neighbor) — 3 rows per surviving triangle, never
-    degree-squared blowup past the triangle population itself; the
-    surviving edge set is localCheckpointed per round and the per-round
-    counts are 1-row collects, buying the kcore FIXPOINT SHORT-CIRCUIT
-    (the oracle unrolls all {rounds} rounds unconditionally; the filled
-    counts ARE the fixpoint values). The edge relation is the persisted
-    basket-bounded co-purchase helper shared across the graph tier."""
+    degree-squared blowup past the triangle population itself. The 8
+    rounds run on ``iterate_to_fixpoint`` (localCheckpointed surviving
+    edge set, one edge count per round), done once two counts agree.
+    The edge relation is the persisted basket-bounded co-purchase
+    helper shared across the graph tier."""
     edges = _copurchase_edges(spark, sf_dir)
     e = edges.select("u", "v").localCheckpoint()
     n_initial = e.count()
-    counts = [n_initial]
-    for _ in range(_TRUSS_ROUNDS):
-        if len(counts) >= 2 and counts[-1] == counts[-2]:
-            counts.append(counts[-1])
-            continue
+
+    def truss_round(e: DataFrame) -> DataFrame:
         adj = e.select(
             F.col("u").alias("node"), F.col("v").alias("nb")
         ).unionAll(e.select(F.col("v").alias("node"), F.col("u").alias("nb")))
         a1 = adj.select(F.col("node").alias("u"), F.col("nb").alias("w1"))
         a2 = adj.select(F.col("node").alias("v"), F.col("nb").alias("w2"))
-        e = (
+        return (
             e.join(a1, "u")
             .join(a2, "v")
             .filter(F.col("w1") == F.col("w2"))
@@ -2233,7 +2181,10 @@ def ktruss_peel_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("u", "v")
             .localCheckpoint()
         )
-        counts.append(e.count())
+
+    _, counts = iterate_to_fixpoint(
+        e, truss_round, lambda e: e.count(), _TRUSS_ROUNDS, _settled, [n_initial]
+    )
     rounds_df = spark.createDataFrame(
         [(i, int(c)) for i, c in enumerate(counts)],
         "round_i int, n_active long",
@@ -2244,13 +2195,8 @@ def ktruss_peel_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(int(n_initial)).cast("long").alias("n_edges_initial"),
         F.lit(_TRUSS_K).cast("int").alias("truss_k"),
         F.lit(int(counts[-1])).cast("long").alias("n_in_truss"),
-        F.lit(bool(counts[-1] == counts[-2])).alias("converged"),
+        F.lit(_settled(counts)).alias("converged"),
     )
-
-
-ktruss_peel_certificate.__doc__ = ktruss_peel_certificate.__doc__.format(
-    k=_TRUSS_K, rounds=_TRUSS_ROUNDS
-)
 
 
 # ---------------------------------------------------------------------------
@@ -2311,7 +2257,7 @@ ktruss_peel_certificate.__doc__ = ktruss_peel_certificate.__doc__.format(
 def link_prediction_resource_allocation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Top-{k} NON-adjacent product pairs by resource-allocation index
+    """Top-20 NON-adjacent product pairs by resource-allocation index
     (sum of 1/deg over shared neighbors, integer nanos) in the
     recurrent co-purchase graph, with the common-neighbor count
     published alongside so a reader can see where the weighting
@@ -2329,7 +2275,7 @@ def link_prediction_resource_allocation(
     center's degree IS size(nbs), so ra_nanos is a row-local expression
     on the array relation (guide §1.2 step 1 — the work was free once
     the representation changed). Existing edges leave via left_anti,
-    and the final ranking is a TakeOrdered top-{k}, never a global
+    and the final ranking is a TakeOrdered top-20, never a global
     sort."""
     edges = _copurchase_edges(spark, sf_dir)
     from ecommerce_data_pipeline_spark.plans._helpers import (

@@ -11,8 +11,8 @@ bucket rows by a monotone function of the sort key, compute per-bucket
 counts/sums (tiny aggregate), derive each bucket's starting offset by a
 self-join on the bucket table, broadcast the offsets back, and finish
 with a PARTITIONED window inside each bucket. A 100 TB ranking therefore
-never funnels through one reducer, and the plan-shape test
-(tests/test_tpch2.py::test_no_graded_query_uses_global_window) holds.
+never funnels through one reducer, and the global-window invariant
+(tests/plan_invariants.py, run by the oracle sweep) holds.
 
 Oracle parity: ranks are tie-broken by the entity key, measures accumulate
 in DECIMAL(18,2) (exact cross-engine), and every derived float is either a

@@ -52,6 +52,34 @@ _SQL_SHINGLES_CAPPED = f"""
                  HAVING count(*) <= {MAX_SHINGLE_DF}) ok USING (s)),
     sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)"""
 
+# Exact-Jaccard near-dup pairs (id1 < id2, J >= 0.8) over the capped
+# shingles — the oracle twin of jaccard_pairs(threshold=0.8,
+# max_df=MAX_SHINGLE_DF), shared by the cluster-assignment oracles.
+_SQL_EXACT_PAIRS = """
+    cand AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS common
+             FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+             GROUP BY 1, 2),
+    pairs AS (SELECT id1, id2
+              FROM cand
+              JOIN sizes sa ON cand.id1 = sa.doc_id
+              JOIN sizes sb ON cand.id2 = sb.doc_id
+              WHERE common * 1.0 / (sa.n + sb.n - common) >= 0.8)"""
+
+# Connected components of ``pairs`` as a recursive-CTE transitive
+# closure: label(n) = min reachable node id — the SQL twin of
+# operators/graph.py::connected_components (same fixpoint). Needs
+# WITH RECURSIVE.
+_SQL_CC_LABELS = """
+    edges AS (SELECT id1 AS u, id2 AS v FROM pairs
+              UNION SELECT id2, id1 FROM pairs),
+    reach(u, v) AS (
+      SELECT u, v FROM edges
+      UNION
+      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
+    ),
+    labels AS (SELECT u AS node, least(u, min(v)) AS label
+               FROM reach GROUP BY u)"""
+
 # UNCAPPED shingle CTE — only for minhash_recall_vs_exact, whose contract
 # is equality with the full exact-Jaccard relation (the LSH verify step
 # runs on full shingle sets).
@@ -145,24 +173,7 @@ def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster assignment is fully oracle-checked despite the Spark side
     # being an iterative (non-single-SQL) algorithm.
     oracle=f"""
-    WITH RECURSIVE {_SQL_SHINGLES_CAPPED},
-    cand AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS common
-             FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-    pairs AS (SELECT id1, id2
-              FROM cand
-              JOIN sizes sa ON cand.id1 = sa.doc_id
-              JOIN sizes sb ON cand.id2 = sb.doc_id
-              WHERE common * 1.0 / (sa.n + sb.n - common) >= 0.8),
-    edges AS (SELECT id1 AS u, id2 AS v FROM pairs
-              UNION SELECT id2, id1 FROM pairs),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    labels AS (SELECT u AS node, least(u, min(v)) AS label
-               FROM reach GROUP BY u)
+    WITH RECURSIVE {_SQL_SHINGLES_CAPPED},{_SQL_EXACT_PAIRS},{_SQL_CC_LABELS}
     SELECT d.doc_id,
            CAST(coalesce(l.label, d.doc_id) AS BIGINT) AS cluster_id,
            CAST(count(*) OVER (PARTITION BY coalesce(l.label, d.doc_id)) AS BIGINT)
@@ -494,24 +505,7 @@ embedding_pq_topk = register(
     # recursive CTE replays the connected-components fixpoint, then the
     # same filter → keep-min-per-cluster → per-source rollup.
     oracle=f"""
-    WITH RECURSIVE {_SQL_SHINGLES_CAPPED},
-    cand AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS common
-             FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-    pairs AS (SELECT id1, id2
-              FROM cand
-              JOIN sizes sa ON cand.id1 = sa.doc_id
-              JOIN sizes sb ON cand.id2 = sb.doc_id
-              WHERE common * 1.0 / (sa.n + sb.n - common) >= 0.8),
-    edges AS (SELECT id1 AS u, id2 AS v FROM pairs
-              UNION SELECT id2, id1 FROM pairs),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    labels AS (SELECT u AS node, least(u, min(v)) AS label
-               FROM reach GROUP BY u),
+    WITH RECURSIVE {_SQL_SHINGLES_CAPPED},{_SQL_EXACT_PAIRS},{_SQL_CC_LABELS},
     filtered AS (
       SELECT d.doc_id, d.source,
              coalesce(l.label, d.doc_id) AS cluster_id,
@@ -1191,24 +1185,7 @@ _SQL_H_POLY = " + ".join(
     # CLUSTER id (md5-poly, engine-portable) — every member of a near-dup
     # cluster lands in the same split by construction.
     oracle=f"""
-    WITH RECURSIVE {_SQL_SHINGLES_CAPPED},
-    cand AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS common
-             FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-             GROUP BY 1, 2),
-    pairs AS (SELECT id1, id2
-              FROM cand
-              JOIN sizes sa ON cand.id1 = sa.doc_id
-              JOIN sizes sb ON cand.id2 = sb.doc_id
-              WHERE common * 1.0 / (sa.n + sb.n - common) >= 0.8),
-    edges AS (SELECT id1 AS u, id2 AS v FROM pairs
-              UNION SELECT id2, id1 FROM pairs),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    labels AS (SELECT u AS node, least(u, min(v)) AS label
-               FROM reach GROUP BY u),
+    WITH RECURSIVE {_SQL_SHINGLES_CAPPED},{_SQL_EXACT_PAIRS},{_SQL_CC_LABELS},
     assigned AS (
       SELECT d.doc_id,
              CAST(coalesce(l.label, d.doc_id) AS BIGINT) AS cluster_id
@@ -1328,16 +1305,7 @@ ivf_probe_recall_curve = register(
       WHERE round(list_dot_product(a.e, b.e)
                   / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))),
                   6) >= 0.35
-    ),
-    edges AS (SELECT id1 AS u, id2 AS v FROM pairs
-              UNION SELECT id2, id1 FROM pairs),
-    reach(u, v) AS (
-      SELECT u, v FROM edges
-      UNION
-      SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    labels AS (SELECT u AS node, least(u, min(v)) AS label
-               FROM reach GROUP BY u)
+    ),{_SQL_CC_LABELS}
     SELECT emb.vec_id,
            CAST(coalesce(l.label, emb.vec_id) AS BIGINT) AS cluster_id,
            CAST(count(*) OVER (PARTITION BY coalesce(l.label, emb.vec_id)) AS BIGINT)

@@ -11,6 +11,7 @@ import pytest
 from ecommerce_data_pipeline_spark.plans import REGISTRY
 from tests.conftest import SF_SMOKE
 from tests.oracle_harness import compare, duckdb_connection
+from tests.plan_invariants import SCAN_RE, executed_plan, plan_violations
 
 
 @pytest.fixture(scope="module")
@@ -33,10 +34,21 @@ ORACLE_QUERIES = sorted(name for name, q in REGISTRY.items() if q.oracle)
 ROWS_ONLY_QUERIES = sorted(name for name, q in REGISTRY.items() if not q.oracle)
 
 
+def _assert_plan_invariants(name, q, df):
+    """tests/plan_invariants.py on the plan of the DataFrame about to run.
+    'eager'-tagged certificate plans are skipped: their plan fn RUNS the
+    full audit (streaming drains, exceptAll set-diffs) before returning
+    a constants row, and that 1-row relation has no plan shape worth
+    checking."""
+    if "eager" not in q.tags:
+        assert plan_violations(name, executed_plan(df)) == []
+
+
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_query_matches_oracle(spark, oracle_con, name):
     q = REGISTRY[name]
     df = q.fn(spark, SF_SMOKE)
+    _assert_plan_invariants(name, q, df)
     compare(df, oracle_con, q.oracle)
 
 
@@ -44,7 +56,21 @@ def test_query_matches_oracle(spark, oracle_con, name):
 def test_rows_only_query_runs(spark, name):
     q = REGISTRY[name]
     df = q.fn(spark, SF_SMOKE)
+    _assert_plan_invariants(name, q, df)
     assert df.count() >= 0  # materializes without error; driver checks same
+
+
+def test_scan_regex_matches_every_testdata_scan(spark):
+    """The full-width-scan invariant must not pass VACUOUSLY: Spark
+    truncates the Location metadata at spark.sql.maxMetadataStringLength
+    (default 100), so a deep enough testdata path would cut
+    'testdata/sf…/' out of every FileScan line and SCAN_RE would match
+    nothing. Every query reads the same fixture path, so a truncation
+    shows in q9's five table scans as well as anywhere."""
+    plan = executed_plan(REGISTRY["q9_product_type_profit"].fn(spark, SF_SMOKE))
+    scans = [line for line in plan.splitlines() if "FileScan parquet" in line]
+    assert scans
+    assert [line for line in scans if not SCAN_RE.search(line)] == []
 
 
 # Rows-only contract enforcement: a query registered with oracle=None

@@ -1,10 +1,9 @@
-"""Property tests for the round-10 queries: HITS hubs/authorities
-(independent Python replay of the quantized power iteration, plus the
-round-3/4 stationarity probe the docstring claims) and the
-consistent-hashing rebalance audit (Python replay of the ring walk,
-the exactly-one-owning-arc partition property, and the conservation
-identities). Value-level oracle parity is covered by the registry-wide
-oracle diff in test_oracle.py.
+"""Property tests for the round-10 queries: the consistent-hashing
+rebalance audit (Python replay of the ring walk, the
+exactly-one-owning-arc partition property, and the conservation
+identities). The HITS and triangle tests live in test_graph.py.
+Value-level oracle parity is covered by the registry-wide oracle diff
+in test_oracle.py.
 """
 
 from __future__ import annotations
@@ -12,7 +11,6 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DecimalType,
     LongType,
@@ -24,123 +22,6 @@ from pyspark.sql.types import (
 from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
-
-
-# ---------------------------------------------------------------------------
-# hits_hub_authority
-
-
-def _round_half_up(x: float) -> int:
-    """Engine-parity rounding for replays: Spark F.round (BigDecimal of
-    the double's SHORTEST repr, HALF_UP) and DuckDB round (half away
-    from zero; values here are positive) — Python round() is banker's
-    and is a THIRD semantic that diverges on exact .5 grid values
-    (review r10)."""
-    import decimal
-
-    return int(
-        decimal.Decimal(repr(x)).quantize(
-            decimal.Decimal(1), rounding=decimal.ROUND_HALF_UP
-        )
-    )
-
-
-def _hits_python(edges, rounds, grid):
-    """Reference replay: quantized HITS exactly as documented — exact
-    integer sums, one sqrt + one division per half-round, re-quantized
-    to the integer grid."""
-    hubs = sorted({s for s, _ in edges})
-    h = {u: grid for u in hubs}
-    a = {}
-    for _ in range(rounds):
-        raw_a = {}
-        for s, c in edges:
-            raw_a[c] = raw_a.get(c, 0) + h[s]
-        nrm = math.sqrt(float(sum(v * v for v in raw_a.values())))
-        a = {c: _round_half_up(float(v) * float(grid) / nrm) for c, v in raw_a.items()}
-        raw_h = {}
-        for s, c in edges:
-            raw_h[s] = raw_h.get(s, 0) + a[c]
-        nrm = math.sqrt(float(sum(v * v for v in raw_h.values())))
-        h = {u: _round_half_up(float(v) * float(grid) / nrm) for u, v in raw_h.items()}
-    return h, a
-
-
-def _trade_edges(spark):
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    orders = load_table(spark, SF_SMOKE, "orders")
-    return sorted(
-        {
-            (r["s"], r["c"])
-            for r in li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-            .select(F.col("l_suppkey").alias("s"), F.col("o_custkey").alias("c"))
-            .distinct()
-            .collect()
-        }
-    )
-
-
-def test_hits_matches_python_replay(spark):
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import (
-        _HITS_GRID,
-        _HITS_ROUNDS,
-    )
-
-    edges = _trade_edges(spark)
-    h, a = _hits_python(edges, _HITS_ROUNDS, _HITS_GRID)
-    out_deg = {}
-    in_deg = {}
-    for s, c in edges:
-        out_deg[s] = out_deg.get(s, 0) + 1
-        in_deg[c] = in_deg.get(c, 0) + 1
-    expected = {("hub", u): (h[u], out_deg[u]) for u in h}
-    expected.update(
-        {("authority", c): (a[c], in_deg[c]) for c in a}
-    )
-    rows = REGISTRY["hits_hub_authority"].fn(spark, SF_SMOKE).collect()
-    got = {
-        (r["role"], r["node"]): (r["score_q"], r["degree"]) for r in rows
-    }
-    assert got == expected
-
-
-def test_hits_stationary_by_final_round(spark):
-    """The docstring's convergence claim, pinned — CORRECTED at r11:
-    the quantized lattice dithers by one micro-unit rather than exactly
-    settling (probed at sf0.01/sf0.1: max |Δ| = 1 on 3-5% of nodes,
-    forever), so the budget claim is 'round _HITS_ROUNDS is within one
-    quantum of round _HITS_ROUNDS+1 — a fourth round buys nothing but
-    the last-quantum re-roll'. On the smoke graph the agreement happens
-    to be exact; assert the one-quantum bound (the portable claim) and
-    the exactness separately so a smoke-data refresh fails softly."""
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import (
-        _HITS_GRID,
-        _HITS_ROUNDS,
-    )
-
-    edges = _trade_edges(spark)
-    h_last, a_last = _hits_python(edges, _HITS_ROUNDS, _HITS_GRID)
-    h_next, a_next = _hits_python(edges, _HITS_ROUNDS + 1, _HITS_GRID)
-    for last, nxt in ((h_last, h_next), (a_last, a_next)):
-        assert set(last) == set(nxt)
-        assert max(abs(last[n] - nxt[n]) for n in last) <= 1
-    # exact on THIS graph (sf0.001) — informative, not the portable claim
-    assert h_last == h_next and a_last == a_next
-
-
-def test_hits_score_bounds_and_l2(spark):
-    """Quantized scores stay on the documented grid: every score is in
-    (0, grid], and each side's L2 norm is within one quantization step
-    of the grid (sum of squares ~= grid^2)."""
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import _HITS_GRID
-
-    rows = REGISTRY["hits_hub_authority"].fn(spark, SF_SMOKE).collect()
-    assert rows, "empty HITS output"
-    for role in ("hub", "authority"):
-        scores = [r["score_q"] for r in rows if r["role"] == role]
-        assert scores and all(0 < s <= _HITS_GRID for s in scores)
-        l2 = math.sqrt(sum(s * s for s in scores))
-        assert abs(l2 - _HITS_GRID) <= len(scores)  # rounding slack
 
 
 # ---------------------------------------------------------------------------
@@ -354,106 +235,6 @@ def test_consistent_hashing_plans_case_lookup_no_joins(spark):
     # version-stable ">= 1 reuse exists" — revisit the exact count on a
     # Spark upgrade if reuse starts rendering as cache-stage variants.)
     assert plan.count("ReusedExchange") >= 1
-
-
-def test_hits_iterative_kit_disciplines(spark):
-    """HITS' iterative-kit discipline, pinned structurally: the final
-    plan consumes the PERSISTED edge relation via InMemoryTableScan
-    (never re-planning the lineitem⋈orders build) and the final-round
-    scores via localCheckpointed RDD scans — the same pins the
-    kcore/LPA family carries. (Shape presence only: textual scan
-    counts under a cached relation print per consumer, and the cache
-    registry also holds the checkpoint RDDs, so neither is a reliable
-    count — review r10.)"""
-    df = REGISTRY["hits_hub_authority"].fn(spark, SF_SMOKE)
-    plan = _executed_plan(df)
-    assert "InMemoryTableScan" in plan  # edges cache
-    assert "Scan ExistingRDD" in plan  # checkpointed score relations
-    assert "SortMergeJoin" not in plan  # node-keyed joins broadcast/hash
-
-
-# ---------------------------------------------------------------------------
-# triangle_clustering_coefficient
-
-
-def _copurchase_edges_py(spark):
-    from collections import Counter
-    from itertools import combinations
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    baskets = {}
-    for r in li.select("l_orderkey", "l_partkey").distinct().collect():
-        baskets.setdefault(r["l_orderkey"], set()).add(r["l_partkey"])
-    sup = Counter()
-    for pks in baskets.values():
-        for u, v in combinations(sorted(pks), 2):
-            sup[(u, v)] += 1
-    return {e for e, c in sup.items() if c >= 2}
-
-
-def test_triangle_census_matches_python_replay(spark):
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import _TRI_GRID
-
-    edges = _copurchase_edges_py(spark)
-    adj = {}
-    deg = {}
-    for u, v in edges:
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-        deg[u] = deg.get(u, 0) + 1
-        deg[v] = deg.get(v, 0) + 1
-    tri_per_node = {n: 0 for n in deg}
-    n_tri = 0
-    for u, v in edges:
-        common = adj[u] & adj[v]
-        for w in common:
-            if w > v:  # u < v < w counts each triangle once (edges u<v)
-                if (u, v) in edges and (v, w) in edges and (u, w) in edges:
-                    n_tri += 1
-                    for node in (u, v, w):
-                        tri_per_node[node] += 1
-    n_wedges = sum(d * (d - 1) // 2 for d in deg.values())
-    micro = sum(
-        _round_half_up(
-            2.0 * tri_per_node[n] * _TRI_GRID / (deg[n] * (deg[n] - 1))
-        )
-        if deg[n] >= 2
-        else 0
-        for n in deg
-    )
-    row = (
-        REGISTRY["triangle_clustering_coefficient"]
-        .fn(spark, SF_SMOKE)
-        .collect()[0]
-    )
-    assert row["n_nodes"] == len(deg)
-    assert row["n_edges"] == len(edges)
-    assert row["n_wedges"] == n_wedges
-    assert row["n_triangles"] == n_tri
-    assert row["local_micro_sum"] == micro
-    if n_wedges:
-        assert row["transitivity"] == round(3.0 * n_tri / n_wedges, 6)
-    assert row["avg_local_clustering"] == round(
-        micro / len(deg) / _TRI_GRID, 6
-    )
-
-
-def test_triangle_orientation_counts_each_once(spark):
-    """The degree-ordered orientation must count the same triangles as
-    the naive u<v<w enumeration — i.e. orientation is a counting
-    strategy, not a semantics change. Verified by the replay above;
-    here pin the structural identities instead: 3*triangles <= wedges
-    (every triangle closes 3 wedges) and each local coefficient <= 1
-    (micro sum <= grid * nodes)."""
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import _TRI_GRID
-
-    row = (
-        REGISTRY["triangle_clustering_coefficient"]
-        .fn(spark, SF_SMOKE)
-        .collect()[0]
-    )
-    assert 3 * row["n_triangles"] <= row["n_wedges"]
-    assert 0 <= row["local_micro_sum"] <= _TRI_GRID * row["n_nodes"]
 
 
 # ---------------------------------------------------------------------------

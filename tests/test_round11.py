@@ -1,9 +1,7 @@
-"""Property tests for the round-11 additions: full core decomposition
-(independent Matula-Beck Python replay with TRUE peel-to-fixpoint, so
-the unroll-budget convergence certificate is itself checked), and the
-mechanical slate-emission pin (r10 verdict task #8: GRADE_PRIORITY must
-be byte-identical to tools/grade_staleness.py --slate output). Value
-parity vs DuckDB is covered by the registry-wide diff in test_oracle.py.
+"""Property tests for the round-11 additions; the graph-tier ones (core
+decomposition, modularity, butterfly census, link prediction, k-truss)
+live in test_graph.py. Value parity vs DuckDB is covered by the
+registry-wide diff in test_oracle.py.
 """
 
 from __future__ import annotations
@@ -13,79 +11,6 @@ from pyspark.sql.types import DateType, LongType, StructField, StructType
 from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
-
-
-# ---------------------------------------------------------------------------
-# graph_core_decomposition_full
-
-
-def test_core_decomposition_matches_python_matula_beck(spark):
-    """Independent replay: build the support-thresholded co-purchase
-    edges in Python, compute TRUE per-node coreness by peeling each
-    k-core to an honest fixpoint (no unroll budget — this independently
-    validates the plan's converged certificate, not just its values),
-    and compare every node's coreness plus both certificate flags."""
-    from collections import Counter, defaultdict
-
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import (
-        _CORE_KMAX,
-        _KCORE_MIN_SUPPORT,
-    )
-
-    li = (
-        load_table(spark, SF_SMOKE, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .collect()
-    )
-    baskets = defaultdict(set)
-    for r in li:
-        baskets[r.l_orderkey].add(r.l_partkey)
-    support = Counter()
-    for parts in baskets.values():
-        ps = sorted(parts)
-        for i in range(len(ps)):
-            for j in range(i + 1, len(ps)):
-                support[(ps[i], ps[j])] += 1
-    edges = [e for e, c in support.items() if c >= _KCORE_MIN_SUPPORT]
-    all_nodes = {n for e in edges for n in e}
-
-    def k_core(k: int, start: set) -> set:
-        active = set(start)
-        while True:
-            deg = Counter()
-            for u, v in edges:
-                if u in active and v in active:
-                    deg[u] += 1
-                    deg[v] += 1
-            nxt = {n for n in active if deg[n] >= k}
-            if nxt == active:
-                return active
-            active = nxt
-
-    coreness = dict.fromkeys(all_nodes, 0)
-    core = all_nodes
-    for k in range(1, _CORE_KMAX + 1):
-        core = k_core(k, core)
-        for n in core:
-            coreness[n] = k
-    probe = k_core(_CORE_KMAX + 1, core)
-
-    rows = (
-        REGISTRY["graph_core_decomposition_full"].fn(spark, SF_SMOKE).collect()
-    )
-    assert len(rows) == len(all_nodes)
-    for r in rows:
-        assert r.coreness == coreness[r.node], r.node
-        assert r.truncated == (len(probe) > 0)
-        # the replay peels to a true fixpoint, so if values agree the
-        # plan's budget-bounded peel must have converged as it claims
-        assert r.converged
-    # nesting sanity: core sizes are monotone non-increasing in k
-    sizes = [
-        sum(1 for c in coreness.values() if c >= k)
-        for k in range(1, _CORE_KMAX + 1)
-    ]
-    assert all(a >= b for a, b in zip(sizes, sizes[1:]))
 
 
 # ---------------------------------------------------------------------------
@@ -336,201 +261,6 @@ def test_runs_test_matches_python_replay(spark):
 
 
 # ---------------------------------------------------------------------------
-# modularity_lpa_communities
-
-
-def test_modularity_matches_python_replay(spark):
-    """Independent replay: self-inclusive synchronous LPA (min-label
-    ties) run to the 8-round budget in Python, then exact-rational
-    modularity via the 4m^2-scaled integer numerator — every published
-    column must match, and Q must equal the fractions.Fraction value."""
-    from collections import Counter, defaultdict
-    from fractions import Fraction
-
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import (
-        _KCORE_MIN_SUPPORT,
-        _LPA_ROUNDS,
-    )
-
-    li = (
-        load_table(spark, SF_SMOKE, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .collect()
-    )
-    baskets = defaultdict(set)
-    for r in li:
-        baskets[r.l_orderkey].add(r.l_partkey)
-    support = Counter()
-    for parts in baskets.values():
-        ps = sorted(parts)
-        for i in range(len(ps)):
-            for j in range(i + 1, len(ps)):
-                support[(ps[i], ps[j])] += 1
-    edges = [e for e, c in support.items() if c >= _KCORE_MIN_SUPPORT]
-    nodes = sorted({n for e in edges for n in e})
-    adj = defaultdict(list)
-    for u, v in edges:
-        adj[u].append(v)
-        adj[v].append(u)
-    labels = {n: n for n in nodes}
-    for _ in range(_LPA_ROUNDS):
-        votes = {}
-        for n in nodes:
-            cnt = Counter([labels[n]] + [labels[x] for x in adj[n]])
-            best = max(cnt.items(), key=lambda kv: (kv[1], -kv[0]))
-            votes[n] = best[0]
-        if votes == labels:
-            break
-        labels = votes
-    m = len(edges)
-    e_c = Counter()
-    for u, v in edges:
-        if labels[u] == labels[v]:
-            e_c[labels[u]] += 1
-    d_c = Counter()
-    for n in nodes:
-        d_c[labels[n]] += len(adj[n])
-    comms = set(labels.values())
-    q_num = sum(4 * m * e_c[c] - d_c[c] * d_c[c] for c in comms)
-    q = Fraction(q_num, 4 * m * m)
-    rows = (
-        REGISTRY["modularity_lpa_communities"].fn(spark, SF_SMOKE).collect()
-    )
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r.n_nodes, r.n_edges, r.n_communities, r.n_intra_edges) == (
-        len(nodes),
-        m,
-        len(comms),
-        sum(e_c.values()),
-    )
-    import decimal
-
-    assert r.modularity == float(
-        decimal.Decimal(repr(q_num / (4.0 * m * m))).quantize(
-            decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP
-        )
-    )
-    # sanity: Q in [-1/2, 1) and equals the exact rational to 6dp
-    assert -0.5 <= float(q) < 1.0
-
-
-# ---------------------------------------------------------------------------
-# butterfly_count_bipartite
-
-
-def test_butterfly_census_side_symmetry_and_replay(spark):
-    """Brute-force replay on the smoke trade graph: codegree pairs
-    enumerated on BOTH sides must give the same butterfly count (the
-    side-symmetry the plan's dynamic pivot relies on), and all
-    published columns must match."""
-    from collections import Counter, defaultdict
-
-    li = load_table(spark, SF_SMOKE, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    orders = load_table(spark, SF_SMOKE, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    pairs = {
-        (r.l_suppkey, r.o_custkey)
-        for r in li.join(
-            orders, li["l_orderkey"] == orders["o_orderkey"]
-        ).collect()
-    }
-    by_s = defaultdict(set)
-    by_c = defaultdict(set)
-    for s, c in pairs:
-        by_s[s].add(c)
-        by_c[c].add(s)
-    wedges_s = sum(len(v) * (len(v) - 1) // 2 for v in by_s.values())
-    wedges_c = sum(len(v) * (len(v) - 1) // 2 for v in by_c.values())
-    sup_pairs = Counter()
-    for c, ss in by_c.items():
-        ss = sorted(ss)
-        for i in range(len(ss)):
-            for j in range(i + 1, len(ss)):
-                sup_pairs[(ss[i], ss[j])] += 1
-    cus_pairs = Counter()
-    for s, cs in by_s.items():
-        cs = sorted(cs)
-        for i in range(len(cs)):
-            for j in range(i + 1, len(cs)):
-                cus_pairs[(cs[i], cs[j])] += 1
-    bf_via_sup = sum(w * (w - 1) // 2 for w in sup_pairs.values())
-    bf_via_cus = sum(w * (w - 1) // 2 for w in cus_pairs.values())
-    assert bf_via_sup == bf_via_cus  # side symmetry
-
-    rows = (
-        REGISTRY["butterfly_count_bipartite"].fn(spark, SF_SMOKE).collect()
-    )
-    assert len(rows) == 1
-    r = rows[0]
-    assert r.n_edges == len(pairs)
-    assert (r.n_suppliers, r.n_customers) == (len(by_s), len(by_c))
-    assert (r.wedges_supplier_centered, r.wedges_customer_centered) == (
-        wedges_s,
-        wedges_c,
-    )
-    assert r.n_butterflies == bf_via_sup
-
-
-# ---------------------------------------------------------------------------
-# link_prediction_common_neighbors
-
-
-def test_link_prediction_matches_python_replay(spark):
-    """Brute-force replay: common-neighbor counts for every non-edge
-    pair at distance 2, ranked (cn DESC, u ASC, v ASC) — the top-k list
-    must match row-for-row, and no returned pair may be an edge."""
-    from collections import Counter, defaultdict
-
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import (
-        _KCORE_MIN_SUPPORT,
-        _LINKPRED_K,
-    )
-
-    li = (
-        load_table(spark, SF_SMOKE, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .collect()
-    )
-    baskets = defaultdict(set)
-    for r in li:
-        baskets[r.l_orderkey].add(r.l_partkey)
-    support = Counter()
-    for parts in baskets.values():
-        ps = sorted(parts)
-        for i in range(len(ps)):
-            for j in range(i + 1, len(ps)):
-                support[(ps[i], ps[j])] += 1
-    edges = {e for e, c in support.items() if c >= _KCORE_MIN_SUPPORT}
-    adj = defaultdict(set)
-    for u, v in edges:
-        adj[u].add(v)
-        adj[v].add(u)
-    cn = Counter()
-    for center, nbs in adj.items():
-        ns = sorted(nbs)
-        for i in range(len(ns)):
-            for j in range(i + 1, len(ns)):
-                cn[(ns[i], ns[j])] += 1
-    cand = [
-        (u, v, c) for (u, v), c in cn.items() if (u, v) not in edges
-    ]
-    cand.sort(key=lambda r: (-r[2], r[0], r[1]))
-    expected = cand[:_LINKPRED_K]
-    rows = (
-        REGISTRY["link_prediction_common_neighbors"]
-        .fn(spark, SF_SMOKE)
-        .collect()
-    )
-    got = [(r.u, r.v, r.common_neighbors) for r in rows]
-    assert got == expected
-    assert all((u, v) not in edges for u, v, _ in got)
-
-
-# ---------------------------------------------------------------------------
 # page_hinkley_drift_daily
 
 
@@ -588,74 +318,6 @@ def test_page_hinkley_matches_python_replay(spark):
     dec_ = r.decrease_day.date() if hasattr(r.decrease_day, "date") else r.decrease_day
     assert inc == gi_day
     assert dec_ == gd_day
-
-
-# ---------------------------------------------------------------------------
-# ktruss_peel_certificate
-
-
-def test_ktruss_matches_python_peel(spark):
-    """Python replay of the edge peel: per-round surviving-edge counts,
-    the truss size and the convergence certificate must match; the
-    count series must be monotone non-increasing; and the final truss
-    must be a true fixpoint (one more Python round removes nothing) —
-    independently validating the budget-bounded converged claim."""
-    from collections import Counter, defaultdict
-
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import (
-        _KCORE_MIN_SUPPORT,
-        _TRUSS_K,
-        _TRUSS_ROUNDS,
-    )
-
-    li = (
-        load_table(spark, SF_SMOKE, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .collect()
-    )
-    baskets = defaultdict(set)
-    for r in li:
-        baskets[r.l_orderkey].add(r.l_partkey)
-    support = Counter()
-    for parts in baskets.values():
-        ps = sorted(parts)
-        for i in range(len(ps)):
-            for j in range(i + 1, len(ps)):
-                support[(ps[i], ps[j])] += 1
-    E = {e for e, c in support.items() if c >= _KCORE_MIN_SUPPORT}
-    n_initial = len(E)
-
-    def one_round(E):
-        adj = defaultdict(set)
-        for u, v in E:
-            adj[u].add(v)
-            adj[v].add(u)
-        return {
-            (u, v)
-            for (u, v) in E
-            if len(adj[u] & adj[v]) >= _TRUSS_K - 2
-        }
-
-    counts = [len(E)]
-    for _ in range(_TRUSS_ROUNDS):
-        if len(counts) >= 2 and counts[-1] == counts[-2]:
-            counts.append(counts[-1])
-            continue
-        E = one_round(E)
-        counts.append(len(E))
-    assert len(one_round(E)) == len(E)  # true fixpoint reached
-    rows = (
-        REGISTRY["ktruss_peel_certificate"].fn(spark, SF_SMOKE).collect()
-    )
-    assert len(rows) == _TRUSS_ROUNDS + 1
-    got = {r.round_i: r for r in rows}
-    for i, expected in enumerate(counts):
-        r = got[i]
-        assert r.n_active == expected, i
-        assert (r.n_edges_initial, r.truss_k) == (n_initial, _TRUSS_K)
-        assert r.n_in_truss == counts[-1]
-        assert r.converged == (counts[-1] == counts[-2])
-    assert all(a >= b for a, b in zip(counts, counts[1:]))
 
 
 # ---------------------------------------------------------------------------

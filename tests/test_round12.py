@@ -513,78 +513,6 @@ def test_cochran_armitage_hand_pinned_example():
 
 
 # ---------------------------------------------------------------------------
-# link_prediction_resource_allocation
-
-
-def test_resource_allocation_matches_bruteforce_replay(spark):
-    """Independent replay: build the support-thresholded co-purchase
-    graph in Python, score every non-adjacent pair by direct
-    common-neighbor enumeration with exact-integer nano weights, and
-    compare the full top-20 (score, cn, tie-order)."""
-    from collections import Counter, defaultdict
-
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import (
-        _KCORE_MIN_SUPPORT,
-        _LINKPRED_K,
-        link_prediction_resource_allocation,
-    )
-    from ecommerce_data_pipeline_spark.sources.readers import load_table
-    from tests.conftest import SF_SMOKE
-
-    li = (
-        load_table(spark, SF_SMOKE, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .collect()
-    )
-    baskets = defaultdict(set)
-    for r in li:
-        baskets[r.l_orderkey].add(r.l_partkey)
-    support = Counter()
-    for parts in baskets.values():
-        ps = sorted(parts)
-        for i in range(len(ps)):
-            for j in range(i + 1, len(ps)):
-                support[(ps[i], ps[j])] += 1
-    edges = {e for e, c in support.items() if c >= _KCORE_MIN_SUPPORT}
-    nbrs = defaultdict(set)
-    for u, v in edges:
-        nbrs[u].add(v)
-        nbrs[v].add(u)
-    ra = {z: (2 * 10**9 + len(nbrs[z])) // (2 * len(nbrs[z])) for z in nbrs}
-    scores = {}
-    nodes = sorted(nbrs)
-    for z in nodes:
-        ns = sorted(nbrs[z])
-        for i in range(len(ns)):
-            for j in range(i + 1, len(ns)):
-                pair = (ns[i], ns[j])
-                if pair in edges:
-                    continue
-                cn, s = scores.get(pair, (0, 0))
-                scores[pair] = (cn + 1, s + ra[z])
-    want = sorted(
-        ((u, v, cn, s) for (u, v), (cn, s) in scores.items()),
-        key=lambda t: (-t[3], t[0], t[1]),
-    )[:_LINKPRED_K]
-
-    got = [
-        (r["u"], r["v"], r["common_neighbors"], r["ra_nanos"])
-        for r in link_prediction_resource_allocation(spark, SF_SMOKE).collect()
-    ]
-    assert got == want
-
-
-def test_resource_allocation_nano_weights_hand_pinned():
-    """Hand-pinned reciprocal quantization: deg 2 -> 500000000 nanos,
-    deg 3 -> 333333333 (1e9/3 rounds DOWN at .33), deg 7 -> 142857143
-    (1e9/7 = 142857142.86 rounds UP) — the (2e9 + d) // (2d) rule."""
-    q = lambda d: (2 * 10**9 + d) // (2 * d)  # noqa: E731
-    assert q(2) == 500_000_000
-    assert q(3) == 333_333_333
-    assert q(7) == 142_857_143
-
-
-# ---------------------------------------------------------------------------
 # exact rational rounding (r12 review finding: F.floor of a Spark
 # decimal division rounds the quotient to scale 6 HALF_UP first and
 # lands one unit high near .9999995 boundaries)

@@ -642,67 +642,6 @@ def test_dp_bounding_matches_python_replay(spark):
 
 
 # ---------------------------------------------------------------------------
-# kcore_peel_certificate
-
-
-def test_kcore_matches_python_peel(spark):
-    """Python replay of the support-thresholded edge build and the
-    12-round degree peel: per-round survivor counts, the core size and
-    the convergence certificate must match; the survivor series must be
-    monotone non-increasing (peeling only removes)."""
-    from collections import Counter, defaultdict
-
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import (
-        _KCORE_K,
-        _KCORE_MIN_SUPPORT,
-        _KCORE_ROUNDS,
-    )
-
-    li = (
-        load_table(spark, SF_SMOKE, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .collect()
-    )
-    baskets = defaultdict(set)
-    for r in li:
-        baskets[r.l_orderkey].add(r.l_partkey)
-    support = Counter()
-    for parts in baskets.values():
-        ps = sorted(parts)
-        for i in range(len(ps)):
-            for j in range(i + 1, len(ps)):
-                support[(ps[i], ps[j])] += 1
-    edges = [e for e, c in support.items() if c >= _KCORE_MIN_SUPPORT]
-    active = {n for e in edges for n in e}
-    n_nodes, n_edges = len(active), len(edges)
-    counts = [len(active)]
-    for _ in range(_KCORE_ROUNDS):
-        deg = Counter()
-        for u, v in edges:
-            if u in active and v in active:
-                deg[u] += 1
-                deg[v] += 1
-        active = {n for n in active if deg[n] >= _KCORE_K}
-        counts.append(len(active))
-    rows = (
-        REGISTRY["kcore_peel_certificate"].fn(spark, SF_SMOKE).collect()
-    )
-    assert len(rows) == _KCORE_ROUNDS + 1
-    got = {r.round_i: r for r in rows}
-    for i, expected in enumerate(counts):
-        r = got[i]
-        assert r.n_active == expected, i
-        assert (r.n_nodes, r.n_edges, r.core_k) == (
-            n_nodes,
-            n_edges,
-            _KCORE_K,
-        )
-        assert r.n_in_core == counts[-1]
-        assert r.converged == (counts[-1] == counts[-2])
-    assert all(a >= b for a, b in zip(counts, counts[1:]))
-
-
-# ---------------------------------------------------------------------------
 # benjamini_hochberg_fdr
 
 
@@ -1309,74 +1248,6 @@ def test_qte_matches_python_replay(spark):
 
 
 # ---------------------------------------------------------------------------
-# label_propagation_communities
-
-
-def test_lpa_matches_python_replay(spark):
-    """Python replay of the self-inclusive deterministic LPA: per-round
-    change counts, community counts, largest-community sizes and the
-    fixpoint certificate must match; community counts must be
-    non-increasing once converged."""
-    from collections import Counter, defaultdict
-
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import (
-        _KCORE_MIN_SUPPORT,
-        _LPA_ROUNDS,
-    )
-
-    li = (
-        load_table(spark, SF_SMOKE, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .collect()
-    )
-    baskets = defaultdict(set)
-    for r in li:
-        baskets[r.l_orderkey].add(r.l_partkey)
-    support = Counter()
-    for parts in baskets.values():
-        ps = sorted(parts)
-        for i in range(len(ps)):
-            for j in range(i + 1, len(ps)):
-                support[(ps[i], ps[j])] += 1
-    edges = [e for e, c in support.items() if c >= _KCORE_MIN_SUPPORT]
-    adj = defaultdict(list)
-    for u, v in edges:
-        adj[u].append(v)
-        adj[v].append(u)
-    label = {n: n for n in adj}
-    expected = []
-    for r in range(1, _LPA_ROUNDS + 1):
-        new = {}
-        changed = 0
-        for n, nbrs in adj.items():
-            c = Counter(label[m] for m in nbrs)
-            c[label[n]] += 1
-            best = min(c.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            new[n] = best
-            changed += best != label[n]
-        label = new
-        comms = Counter(label.values())
-        expected.append((r, changed, len(comms), max(comms.values())))
-    rows = (
-        REGISTRY["label_propagation_communities"]
-        .fn(spark, SF_SMOKE)
-        .collect()
-    )
-    got = {r.round_i: r for r in rows}
-    assert set(got) == set(range(1, _LPA_ROUNDS + 1))
-    for r, changed, nc, big in expected:
-        g = got[r]
-        assert (g.n_changed, g.n_communities, g.biggest_community) == (
-            changed,
-            nc,
-            big,
-        ), r
-        assert g.n_nodes == len(adj)
-        assert g.n_edges == len(edges)
-        assert g.converged == (expected[-1][1] == 0)
-
-
-# ---------------------------------------------------------------------------
 # t_closeness_audit
 
 
@@ -1526,55 +1397,3 @@ def test_wilson_funnel_matches_python_replay(spark):
             assert abs(r.wilson_lo - lo) < 1e-6
             assert abs(r.wilson_hi - hi) < 1e-6
             assert 0.0 <= r.wilson_lo <= r.rate <= r.wilson_hi <= 1.0
-
-
-# ---------------------------------------------------------------------------
-# degree_assortativity
-
-
-def test_assortativity_matches_python_replay(spark):
-    """Python replay of the endpoint-degree Pearson r over the recurrent
-    co-purchase edges; r must lie in [-1, 1]."""
-    from collections import Counter, defaultdict
-
-    from ecommerce_data_pipeline_spark.plans.analytics_graph import (
-        _KCORE_MIN_SUPPORT,
-    )
-
-    li = (
-        load_table(spark, SF_SMOKE, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .collect()
-    )
-    baskets = defaultdict(set)
-    for r in li:
-        baskets[r.l_orderkey].add(r.l_partkey)
-    support = Counter()
-    for parts in baskets.values():
-        ps = sorted(parts)
-        for i in range(len(ps)):
-            for j in range(i + 1, len(ps)):
-                support[(ps[i], ps[j])] += 1
-    edges = [e for e, c in support.items() if c >= _KCORE_MIN_SUPPORT]
-    deg = Counter()
-    for u, v in edges:
-        deg[u] += 1
-        deg[v] += 1
-    xs = []
-    for u, v in edges:
-        xs.append((deg[u], deg[v]))
-        xs.append((deg[v], deg[u]))
-    m = len(xs)
-    sx = sum(x for x, _ in xs)
-    sxx = sum(x * x for x, _ in xs)
-    sxy = sum(x * y for x, y in xs)
-    [r] = REGISTRY["degree_assortativity"].fn(spark, SF_SMOKE).collect()
-    assert r.n_nodes == len(deg)
-    assert r.n_edges == len(edges)
-    assert r.max_degree == max(deg.values())
-    assert abs(r.mean_edge_degree - sx / m) < 1e-4
-    den = m * sxx - sx * sx
-    if den > 0:
-        expected_r = (m * sxy - sx * sx) / den
-        assert abs(r.assortativity_r - expected_r) < 1e-6
-        assert -1.0 <= r.assortativity_r <= 1.0
