@@ -775,9 +775,11 @@ def streaming_flagship_certificate(spark: SparkSession, sf_dir: str) -> DataFram
     set-diffs happen here; the returned relation is the one-row
     certificate."""
     import os
-    import shutil
     import tempfile
 
+    from ecommerce_data_pipeline_spark.functions.datetime import (
+        parse_reference_ts,
+    )
     from ecommerce_data_pipeline_spark.operators.similarity import (
         minhash_lsh_neardup,
     )
@@ -788,38 +790,25 @@ def streaming_flagship_certificate(spark: SparkSession, sf_dir: str) -> DataFram
         enrich_transactions,
         payload_text,
         queue_dimensions,
+        resend_overlay,
         run_streaming_flagship,
     )
-
-    from ecommerce_data_pipeline_spark.streaming.flagship import (
-        resend_overlay,
+    from ecommerce_data_pipeline_spark.streaming.pipeline import (
+        drain,
+        run_stream_with_handshake_retry,
+        stateful_shuffle_partitions,
     )
 
     seed, max_offset, rows_per_batch, resend_every = 7, 600, 200, 20
     dim_products, dim_customers = queue_dimensions(spark)
-    root = tempfile.mkdtemp(prefix="stream_flagship_cert_")
-    wh, ckpt = os.path.join(root, "wh"), os.path.join(root, "ckpt")
-    # Scope the shuffle/state partition count to the bounded drain: the
-    # per-trigger cost of a stateful micro-batch is dominated by fixed
-    # per-partition work (state-store open/commit per dedup partition,
-    # one task per shuffle partition in every foreachBatch job), and the
-    # state-store layout is pinned at query start — AQE never coalesces
-    # it. 630 rows spread over the session default (32) is pure
-    # overhead; 8 keeps the same semantics (partitioning never changes
-    # results — that IS the engine's determinism contract) at a fraction
-    # of the per-trigger fixed cost. Restored in the finally.
-    shuffle_conf = "spark.sql.shuffle.partitions"
-    prior_shuffle = spark.conf.get(shuffle_conf)
-    spark.conf.set(shuffle_conf, "8")
-    try:
-        from ecommerce_data_pipeline_spark.streaming.pipeline import (
-            drain,
-            run_stream_with_handshake_retry,
-        )
+    with tempfile.TemporaryDirectory(
+        prefix="stream_flagship_cert_"
+    ) as root, stateful_shuffle_partitions(spark):
+        wh, ckpt = os.path.join(root, "wh"), os.path.join(root, "ckpt")
 
         # one continuous query, 3 micro-batch triggers (200 offsets each);
         # stop in a finally — an abandoned active query would race the
-        # store reads below and the rmtree, poisoning the shared session.
+        # store reads below and the cleanup, poisoning the shared session.
         # Each query start forks a driver-side Python source runner (the
         # one txqueue source the 3-way union reads), which races Spark's
         # hard-coded 10 s connect-back window — under full load that
@@ -867,10 +856,6 @@ def streaming_flagship_certificate(spark: SparkSession, sf_dir: str) -> DataFram
             .option("nMessages", max_offset)
             .load()
         )
-        from ecommerce_data_pipeline_spark.functions.datetime import (
-            parse_reference_ts,
-        )
-
         all_msgs = base.unionByName(resend_overlay(base, resend_every)).withColumn(
             "ts", parse_reference_ts(F.col("transaction_date"))
         )
@@ -889,9 +874,6 @@ def streaming_flagship_certificate(spark: SparkSession, sf_dir: str) -> DataFram
         neardup_equals_batch = rows_equal(
             pairs, pair_twin.select(*pairs.columns)
         )
-    finally:
-        spark.conf.set(shuffle_conf, prior_shuffle)
-        shutil.rmtree(root, ignore_errors=True)
 
     from pyspark.sql import Row
 

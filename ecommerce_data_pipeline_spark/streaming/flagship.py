@@ -10,10 +10,11 @@ Streaming query composed entirely from the engine's individually-tested
 streaming pieces:
 
     txqueue source (S8)                sources/queue_source.py
-      → watermarked key-dedup (ST4)    streaming/pipeline.py:65
+      → watermarked key-dedup (ST4)    streaming/pipeline.py::
+                                         stream_dedup_within_watermark
       → foreachBatch, per micro-batch:
           · broadcast dim enrichment   (EP2's Glue join, J1)
-          · idempotent warehouse append (_batch_id dynamic overwrite, ST5)
+          · idempotent warehouse append (land_batch's _batch_id overwrite, ST5)
           · incremental near-dedup store advance (X2 streaming form)
 
 Why TWO dedup layers: watermarked ``dropDuplicatesWithinWatermark`` kills
@@ -56,6 +57,7 @@ from ecommerce_data_pipeline_spark.sources.queue_source import (
     register_queue_source,
 )
 from ecommerce_data_pipeline_spark.streaming.pipeline import (
+    land_batch,
     neardup_store_increment,
     stream_dedup_within_watermark,
 )
@@ -167,18 +169,12 @@ def flagship_batch_handler(
         # deterministic queue read, so eviction can only recompute.
         batch = batch.persist()
         try:
-            enriched = enrich_transactions(
-                batch, dim_products, dim_customers
+            land_batch(
+                enrich_transactions(batch, dim_products, dim_customers),
+                f"{warehouse_root}/fact_enriched",
+                batch_id,
             )
-            (
-                enriched.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(f"{warehouse_root}/fact_enriched")
-            )
-            # pre_pinned: payload_text is a projection of the pinned
-            # batch — a second pin per trigger is pure overhead
+            # payload_text is a projection of the pinned batch
             neardup_store_increment(
                 payload_text(batch),
                 batch_id,
@@ -186,7 +182,6 @@ def flagship_batch_handler(
                 sigs_path=f"{warehouse_root}/neardup_sigs",
                 pairs_path=f"{warehouse_root}/neardup_pairs",
                 threshold=neardup_threshold,
-                pre_pinned=True,
             )
         finally:
             batch.unpersist()

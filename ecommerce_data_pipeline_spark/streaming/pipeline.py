@@ -21,11 +21,13 @@ give tests (and backfills) deterministic run-to-completion semantics.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import contextlib
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
 
@@ -118,7 +120,6 @@ def land_chunks(
 # raises the timeout in 4.1.2, so the mitigation is a bounded restart.
 _HANDSHAKE_SIGNATURES = (
     "Timed out while waiting for the Python worker to connect back",
-    "CANNOT_OPEN_SOCKET",
 )
 
 
@@ -306,6 +307,22 @@ def foreach_batch_append(
     )
 
 
+def land_batch(df: DataFrame, path: str, batch_id: int) -> None:
+    """Land ``df`` as micro-batch ``batch_id`` of the parquet table at
+    ``path``: its rows go to the ``_batch_id=N`` partition by
+    dynamic-partition OVERWRITE, so a batch re-run after a crash between
+    its write and its checkpoint commit replaces its own output instead
+    of appending a second copy. The one exactly-once landing of every
+    idempotent ``foreachBatch`` sink here and in ``streaming/flagship.py``."""
+    (
+        df.withColumn("_batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_batch_id")
+        .parquet(path)
+    )
+
+
 def foreach_batch_append_idempotent(
     stream: DataFrame,
     out_path: str,
@@ -313,22 +330,15 @@ def foreach_batch_append_idempotent(
     transform: Callable[[DataFrame], DataFrame] | None = None,
 ) -> StreamingQuery:
     """Exactly-once variant of ``foreach_batch_append``: each micro-batch
-    lands in its own ``_batch_id=N`` partition with dynamic-partition
-    OVERWRITE, so a batch re-run after a crash-between-write-and-commit
-    replaces its own output instead of appending a duplicate copy. The
-    plain append form is only at-least-once across that crash window;
-    this one is idempotent per batch — the standard pattern when the sink
-    has no transactional commit."""
+    lands through ``land_batch``, so a batch re-run after a
+    crash-between-write-and-commit replaces its own output instead of
+    appending a duplicate copy. The plain append form is only
+    at-least-once across that crash window; this one is idempotent per
+    batch — the standard pattern when the sink has no transactional
+    commit."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        out = transform(batch) if transform else batch
-        (
-            out.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_path)
-        )
+        land_batch(transform(batch) if transform else batch, out_path, batch_id)
 
     return (
         stream.writeStream.foreachBatch(handle)
@@ -380,6 +390,24 @@ def drain(q: StreamingQuery) -> None:
         q.stop()
 
 
+@contextlib.contextmanager
+def stateful_shuffle_partitions(spark: SparkSession) -> Iterator[None]:
+    """Run a bounded stateful drain at 8 shuffle partitions and restore
+    the session's value on exit. A stateful micro-batch pays fixed
+    per-partition work (state-store open/commit per partition, one task
+    per shuffle partition in every foreachBatch job) and the state-store
+    layout is pinned at query start — AQE never coalesces it — while
+    partitioning never changes results. A few hundred rows spread over
+    the session default are pure overhead."""
+    conf = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, "8")
+    try:
+        yield
+    finally:
+        spark.conf.set(conf, prior)
+
+
 def fold_landing(
     spark: SparkSession,
     op: Callable[[DataFrame], DataFrame],
@@ -393,23 +421,15 @@ def fold_landing(
     checkpoint ``ckpt``, and return everything ``out`` holds. Calling it
     again on the same directories is the checkpoint restart.
 
-    The fold runs at 8 shuffle partitions (restored after): a stateful
-    micro-batch pays fixed per-partition work (state-store open/commit,
-    one task per partition) and the state layout is pinned at query
-    start, while partitioning never changes results. An empty landing
-    folds to an empty relation with ``op``'s output schema."""
+    The fold runs under ``stateful_shuffle_partitions``. An empty
+    landing folds to an empty relation with ``op``'s output schema."""
     import os
 
-    conf = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf)
-    spark.conf.set(conf, "8")
-    try:
+    with stateful_shuffle_partitions(spark):
         folded = op(
             read_file_stream(spark, landing_dir, schema, max_files_per_trigger=1)
         )
         drain(foreach_batch_append(folded, out, ckpt, output_mode="update"))
-    finally:
-        spark.conf.set(conf, prior)
     if not os.path.exists(out):  # no trigger ran: nothing was ever landed
         return spark.createDataFrame([], folded.schema)
     return spark.read.parquet(out)
@@ -444,6 +464,27 @@ def stream_stream_join(
     return l.join(r, cond, "inner")
 
 
+def _fold_by_key(
+    keyed: DataFrame,
+    key: str,
+    update: Callable,
+    out_schema: StructType,
+    state_schema: StructType,
+) -> DataFrame:
+    """The shell of every ``applyInPandasWithState`` fold below:
+    ``update(key, pdfs, state)`` folds each ``key`` group's micro-batch
+    rows into its ``state_schema`` state and yields ``out_schema`` rows,
+    emitted in update mode with no state timeout (a fold's state lives
+    as long as its key)."""
+    return keyed.groupBy(key).applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 def stateful_user_counts(
     events: DataFrame,
     ts_col: str = "ts",
@@ -457,7 +498,6 @@ def stateful_user_counts(
     The state handler below is fully self-contained (stdlib + pandas
     only) per the engine's worker-pickling rule.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -496,16 +536,7 @@ def stateful_user_counts(
 
     if watermark is not None:
         events = events.withWatermark(ts_col, watermark)
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _fold_by_key(events, "user_id", update, out_schema, state_schema)
 
 
 def stream_static_enrich(
@@ -674,14 +705,25 @@ def foreach_batch_incremental_neardup(
     where its LATER member arrives (union over batches == the batch-mode
     pair relation — pinned in tests/test_streaming.py).
 
-    Exactly-once: all three sinks write into ``_batch_id=N`` partitions
-    with dynamic-partition overwrite (the ``foreach_batch_append_idempotent``
-    pattern), so a crash-replayed batch replaces its own output.
+    Exactly-once: all three sinks land through ``land_batch``, so a
+    crash-replayed batch replaces its own output.
     """
     def handle(batch: DataFrame, batch_id: int) -> None:
-        neardup_store_increment(
-            batch, batch_id, docs_path, sigs_path, pairs_path, threshold
-        )
+        # banding, verify and the docs sink all read the batch — pin it.
+        # A persist (not localCheckpoint) so the finally below can RECLAIM
+        # the blocks per trigger: localCheckpoint blocks bypass the
+        # CacheManager and linger until ContextCleaner GC, which
+        # accumulates in a long-running stream (r6 ADVICE). The lineage is
+        # a deterministic micro-batch read, so an evicted block recomputing
+        # is merely slow, never wrong. The pin releases on EVERY exit,
+        # including the store-ahead-of-checkpoint RuntimeError.
+        batch = batch.persist()
+        try:
+            neardup_store_increment(
+                batch, batch_id, docs_path, sigs_path, pairs_path, threshold
+            )
+        finally:
+            batch.unpersist()
 
     return (
         stream.writeStream.foreachBatch(handle)
@@ -698,13 +740,14 @@ def neardup_store_increment(
     sigs_path: str,
     pairs_path: str,
     threshold: float = 0.8,
-    pre_pinned: bool = False,
 ) -> None:
     """One micro-batch advance of the continuous near-dedup stores —
     the ``foreach_batch_incremental_neardup`` body, module-level so other
     foreachBatch compositions (``streaming/flagship.py``) and crash-replay
-    tests can invoke a single batch directly. Semantics, replay guards,
-    and the ``_batch_id`` idempotent landing scheme are documented on the
+    tests can invoke a single batch directly. The caller pins ``batch``
+    (it is read by the banding, the verify and the docs sink), as both
+    foreachBatch handlers do. Semantics, replay guards, and the
+    ``_batch_id`` idempotent landing scheme are documented on the
     wrapper above."""
     from pyspark.errors import AnalysisException
 
@@ -714,53 +757,6 @@ def neardup_store_increment(
     )
 
     spark = batch.sparkSession
-    # multiple consumers (banding, verify, sink) — pin the batch. A
-    # persist (not localCheckpoint) so the finally below can RECLAIM the
-    # blocks per trigger: localCheckpoint blocks bypass the CacheManager
-    # and linger until ContextCleaner GC, which accumulates in a
-    # long-running stream (r6 ADVICE). The lineage is a deterministic
-    # micro-batch read, so an evicted block recomputing is merely slow,
-    # never wrong. Callers that already pinned pass pre_pinned=True —
-    # a second pin per batch is pure overhead.
-    own_pin = not pre_pinned
-    if own_pin:
-        batch = batch.persist()
-    try:
-        _store_increment_pinned(
-            spark,
-            batch,
-            batch_id,
-            docs_path,
-            sigs_path,
-            pairs_path,
-            threshold,
-            incremental_neardup,
-            signature_store,
-            AnalysisException,
-        )
-    finally:
-        # the pin must release on EVERY exit — including the
-        # store-ahead-of-checkpoint RuntimeError, which raises before
-        # the landing block's own cleanup runs
-        if own_pin:
-            batch.unpersist()
-
-
-def _store_increment_pinned(
-    spark,
-    batch: DataFrame,
-    batch_id: int,
-    docs_path: str,
-    sigs_path: str,
-    pairs_path: str,
-    threshold: float,
-    incremental_neardup,
-    signature_store,
-    AnalysisException,
-) -> None:
-    """Body of ``neardup_store_increment`` after the batch pin — split
-    out so the pin's try/finally wraps every exit path without nesting
-    the whole store/guard/land flow another level."""
     try:
         base_docs = spark.read.parquet(docs_path)
         base_sigs = spark.read.parquet(sigs_path)
@@ -808,22 +804,13 @@ def _store_increment_pinned(
         base_sigs, base_docs, batch, threshold=threshold, out=state
     )
 
-    def _land(df: DataFrame, path: str) -> None:
-        (
-            df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(path)
-        )
-
     try:
-        _land(pairs, pairs_path)
-        _land(batch, docs_path)
+        land_batch(pairs, pairs_path, batch_id)
+        land_batch(batch, docs_path, batch_id)
         # the delta's signature rows are already computed (and cached)
         # inside incremental_neardup — land those instead of re-running
         # the shingle+minhash pass
-        _land(state["delta_sigs"], sigs_path)
+        land_batch(state["delta_sigs"], sigs_path, batch_id)
     finally:
         # per-trigger persists must not accumulate in the session
         # CacheManager across a long-running stream
@@ -858,7 +845,6 @@ def rate_limit_backpressure(
     from the batch replay). Within a trigger the handler sorts, so
     intra-batch order is free.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     out_schema = StructType(
@@ -920,13 +906,7 @@ def rate_limit_backpressure(
         .cast("long")
         .alias("slot"),
     )
-    return slotted.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _fold_by_key(slotted, "event_type", update, out_schema, state_schema)
 
 
 def dp_contribution_cap(
@@ -973,7 +953,6 @@ def dp_contribution_cap(
     raises. Within a trigger the handler sorts by (ts, orderkey), so
     intra-batch order is free.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import LongType, StructField, StructType
 
     from ecommerce_data_pipeline_spark.plans.entity_resolution import (
@@ -1069,13 +1048,7 @@ def dp_contribution_cap(
         .cast("long")
         .alias("cents"),
     )
-    return prepared.groupBy("o_custkey").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _fold_by_key(prepared, "o_custkey", update, out_schema, state_schema)
 
 
 def page_hinkley_stream(
@@ -1108,7 +1081,6 @@ def page_hinkley_stream(
     left-to-right accumulation), so the final doubles are
     bit-identical to the batch twin's.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (
         DateType,
         DoubleType,
@@ -1230,13 +1202,7 @@ def page_hinkley_stream(
         F.col(day_col).alias(day_col),
         F.col(x_col).alias(x_col),
     )
-    return keyed.groupBy("series").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _fold_by_key(keyed, "series", update, out_schema, state_schema)
 
 
 def mixture_monitor_stream(
@@ -1275,7 +1241,6 @@ def mixture_monitor_stream(
     from ``target_micros`` raises — it would silently shift every other
     share. Within a trigger the handler folds batches in sorted order.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     # v1 = 3 fields (frontier, cum_total, counts CSV). Bump with any
@@ -1391,13 +1356,7 @@ def mixture_monitor_stream(
         F.col(source_col).cast("string").alias(source_col),
         F.col(cnt_col).cast("long").alias(cnt_col),
     )
-    return keyed.groupBy("series").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _fold_by_key(keyed, "series", update, out_schema, state_schema)
 
 
 def decontam_monitor_stream(
@@ -1439,7 +1398,6 @@ def decontam_monitor_stream(
     checkpoint restart); the eager registry certificate
     ``decontam_monitor_stream_certificate`` grades the full lifecycle
     as driver signal."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import LongType, StructField, StructType
 
     # v1 = 1 field (first_shard). Bump with any state_schema change
@@ -1487,10 +1445,4 @@ def decontam_monitor_stream(
         F.col(doc_col).cast("long").alias(doc_col),
         F.col(shard_col).cast("long").alias(shard_col),
     )
-    return keyed.groupBy(doc_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _fold_by_key(keyed, doc_col, update, out_schema, state_schema)

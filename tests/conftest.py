@@ -26,6 +26,23 @@ def spark():
         s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _clear_cache_after_each_test(request):
+    """Plans persist multi-consumer intermediates; drop them once the
+    test that built them is done, so they do not outlive it for the rest
+    of the session (the same cleanup bench.py does between queries).
+    Only a test that requested ``spark`` is cleaned up after — a
+    Spark-free test does not start a session for it."""
+    spark = (
+        request.getfixturevalue("spark")
+        if "spark" in request.fixturenames
+        else None
+    )
+    yield
+    if spark is not None:
+        spark.catalog.clearCache()
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE

@@ -21,15 +21,6 @@ def oracle_con():
     con.close()
 
 
-@pytest.fixture(autouse=True)
-def _clear_cache_after_each_query(spark):
-    """Plans persist multi-consumer intermediates; drop them once the
-    query's test is done so they do not outlive it for the rest of the
-    session (the same cleanup bench.py does between queries)."""
-    yield
-    spark.catalog.clearCache()
-
-
 ORACLE_QUERIES = sorted(name for name, q in REGISTRY.items() if q.oracle)
 ROWS_ONLY_QUERIES = sorted(name for name, q in REGISTRY.items() if not q.oracle)
 

@@ -1,78 +1,15 @@
 """Round 14 (optimization round 2) — focused pins for the round's
-operator-internal changes.
-
-Covers the streaming worker-handshake retry (VERDICT r13 item 1): the
-classifier must recognize the Spark 4.1.2 connect-back timeout through a
-py4j-style cause chain, the retry wrapper must re-run ONLY on that
-signature, re-raise everything else untouched, and stay bounded.
+operator-internal changes: the generalized-ESD driver fold's parity
+with its unrolled relational form, and the grading-slate emission. The
+streaming worker-handshake retry tests live in test_streaming.py.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from ecommerce_data_pipeline_spark.streaming.pipeline import (
-    is_worker_handshake_timeout,
-    run_stream_with_handshake_retry,
-)
-
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_MID = "/root/testdata/sf0.01"
-
-_SIG = (
-    "Query terminated with exception: Job aborted due to ... Caused by: "
-    "java.net.SocketTimeoutException: Timed out while waiting for the "
-    "Python worker to connect back"
-)
-
-
-def test_handshake_classifier_matches_message_and_cause_chain():
-    assert is_worker_handshake_timeout(RuntimeError(_SIG))
-    assert is_worker_handshake_timeout(
-        RuntimeError("[CANNOT_OPEN_SOCKET] ... timed out")
-    )
-    # signature buried one level down the cause chain (py4j wrapping)
-    inner = RuntimeError(_SIG)
-    outer = RuntimeError("stream died")
-    outer.__cause__ = inner
-    assert is_worker_handshake_timeout(outer)
-    assert not is_worker_handshake_timeout(ValueError("schema mismatch"))
-
-
-def test_retry_retries_only_on_handshake_and_is_bounded():
-    calls = {"n": 0}
-
-    def flaky_then_ok() -> None:
-        calls["n"] += 1
-        if calls["n"] < 2:
-            raise RuntimeError(_SIG)
-
-    run_stream_with_handshake_retry(flaky_then_ok, backoff_sec=0.0)
-    assert calls["n"] == 2
-
-    # non-handshake errors propagate immediately, no retry
-    calls["n"] = 0
-
-    def broken() -> None:
-        calls["n"] += 1
-        raise ValueError("real bug")
-
-    with pytest.raises(ValueError):
-        run_stream_with_handshake_retry(broken, backoff_sec=0.0)
-    assert calls["n"] == 1
-
-    # a persistent handshake failure exhausts attempts and re-raises
-    calls["n"] = 0
-
-    def always_flaky() -> None:
-        calls["n"] += 1
-        raise RuntimeError(_SIG)
-
-    with pytest.raises(RuntimeError):
-        run_stream_with_handshake_retry(
-            always_flaky, attempts=3, backoff_sec=0.0
-        )
-    assert calls["n"] == 3
 
 
 # ---------------------------------------------------------------------------

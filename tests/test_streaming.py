@@ -17,9 +17,11 @@ from ecommerce_data_pipeline_spark.streaming.pipeline import (
     drain,
     fold_landing,
     foreach_batch_append,
+    is_worker_handshake_timeout,
     land_chunks,
     read_file_stream,
     run_available_now,
+    run_stream_with_handshake_retry,
     session_aggregate,
     stream_dedup,
     tumbling_counts,
@@ -571,12 +573,15 @@ def test_neardup_store_ahead_of_checkpoint_fails_loud(spark):
     away newer corpus state and dynamic-overwrite older partitions —
     the guard must raise instead of silently dropping state. Also pins
     the per-trigger pin hygiene: after the call (success OR the guarded
-    failure), no pinned blocks may linger in the session."""
+    failure, direct or through the foreachBatch handler that owns the
+    batch pin), no pinned blocks may linger in the session."""
     import os
 
     import pytest
+    from pyspark.errors import StreamingQueryException
 
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
+        foreach_batch_incremental_neardup,
         neardup_store_increment,
     )
 
@@ -597,10 +602,24 @@ def test_neardup_store_ahead_of_checkpoint_fails_loud(spark):
         # a batch id BEHIND the store = rotated/lost checkpoint
         with pytest.raises(RuntimeError, match="ahead of the checkpoint"):
             neardup_store_increment(docs.limit(10), 3, **paths)
+        # the same guard through the handler: a fresh checkpoint replays
+        # the landing as batch 0 against the batch-5 store
+        src = os.path.join(root, "src")
+        land_chunks([docs.limit(10).collect()], docs.schema, src)
+        with pytest.raises(
+            StreamingQueryException, match="ahead of the checkpoint"
+        ):
+            drain(
+                foreach_batch_incremental_neardup(
+                    read_file_stream(spark, src, docs.schema),
+                    checkpoint=os.path.join(root, "ckpt"),
+                    **paths,
+                )
+            )
         # pin hygiene: neither the successful nor the failed call may
         # leave anything pinned behind (the r7 persist+unpersist
         # contract) — the CacheManager check also catches lazy persists
-        # that never materialized blocks (the failure path's pin)
+        # that never materialized blocks (the failed trigger's batch pin)
         assert (
             spark._jsparkSession.sharedState().cacheManager().isEmpty()
         ), "cached plans leaked past neardup_store_increment"
@@ -756,3 +775,66 @@ def test_fold_landing_empty_landing_is_empty_relation(spark, tmp_path):
     assert [(f.name, f.dataType) for f in got.schema] == [
         (f.name, f.dataType) for f in want.schema
     ]
+
+
+# --------------------------------------------------------------------------
+# The worker-handshake retry: the classifier must recognize the Spark
+# 4.1.2 connect-back timeout through a py4j-style cause chain, and
+# nothing else; the retry wrapper must re-run ONLY on that signature,
+# re-raise everything else untouched, and stay bounded.
+
+_SIG = (
+    "Query terminated with exception: Job aborted due to ... Caused by: "
+    "java.net.SocketTimeoutException: Timed out while waiting for the "
+    "Python worker to connect back"
+)
+
+
+def test_handshake_classifier_matches_message_and_cause_chain():
+    assert is_worker_handshake_timeout(RuntimeError(_SIG))
+    # a bare socket failure is not the connect-back timeout: not retried
+    assert not is_worker_handshake_timeout(
+        RuntimeError("[CANNOT_OPEN_SOCKET] ... timed out")
+    )
+    # signature buried one level down the cause chain (py4j wrapping)
+    inner = RuntimeError(_SIG)
+    outer = RuntimeError("stream died")
+    outer.__cause__ = inner
+    assert is_worker_handshake_timeout(outer)
+    assert not is_worker_handshake_timeout(ValueError("schema mismatch"))
+
+
+def test_retry_retries_only_on_handshake_and_is_bounded():
+    calls = {"n": 0}
+
+    def flaky_then_ok() -> None:
+        calls["n"] += 1
+        if calls["n"] < 2:
+            raise RuntimeError(_SIG)
+
+    run_stream_with_handshake_retry(flaky_then_ok, backoff_sec=0.0)
+    assert calls["n"] == 2
+
+    # non-handshake errors propagate immediately, no retry
+    calls["n"] = 0
+
+    def broken() -> None:
+        calls["n"] += 1
+        raise ValueError("real bug")
+
+    with pytest.raises(ValueError):
+        run_stream_with_handshake_retry(broken, backoff_sec=0.0)
+    assert calls["n"] == 1
+
+    # a persistent handshake failure exhausts attempts and re-raises
+    calls["n"] = 0
+
+    def always_flaky() -> None:
+        calls["n"] += 1
+        raise RuntimeError(_SIG)
+
+    with pytest.raises(RuntimeError):
+        run_stream_with_handshake_retry(
+            always_flaky, attempts=3, backoff_sec=0.0
+        )
+    assert calls["n"] == 3

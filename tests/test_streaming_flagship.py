@@ -1,16 +1,17 @@
 """End-to-end streaming flagship (streaming/flagship.py): the composed
 EP2 lifecycle — queue source → watermarked key-dedup → foreachBatch
 broadcast enrichment + idempotent warehouse append + incremental
-near-dedup audit — drained over ≥3 micro-batch triggers, then
-crash-replayed.
+near-dedup audit — drained over ≥3 micro-batch triggers across a
+restart, then crash-replayed.
 
 The registry twin (``streaming_flagship_certificate``) grades the same
-composition against batch-mode oracles at driver time; this test pins
-the micro-batch mechanics the certificate can't see from its one-row
-output: the trigger count, the exact per-batch partition layout, and
-byte-stable crash-replay of the LAST landed batch (the only batch a
-real crash can leave half-landed — stores land sequentially, and the
-store-ahead guard refuses anything older).
+composition against batch-mode oracles at driver time, over one
+continuous ≥3-trigger drain; this test pins the micro-batch mechanics
+the certificate can't see from its one-row output: resume after a stop
+between triggers, the trigger count, the exact per-batch partition
+layout, and byte-stable crash-replay of the LAST landed batch (the only
+batch a real crash can leave half-landed — stores land sequentially,
+and the store-ahead guard refuses anything older).
 """
 
 from __future__ import annotations
@@ -49,16 +50,38 @@ def _rows(df) -> dict:
     return out
 
 
-def test_streaming_flagship_drains_three_triggers_and_replays(spark):
+def test_streaming_flagship_resumes_drains_and_replays(spark):
+    """One drain, the whole lifecycle. Crash BETWEEN triggers: drain one
+    availableNow trigger, then restart from the same checkpoint and
+    finish continuously. The composition must resume — committed offsets
+    not re-delivered, dedup state restored (redeliveries of later offsets
+    still die), stores advanced batch-by-batch — and the final warehouse
+    must hold exactly the key-distinct facts, none duplicated across the
+    restart boundary. Then crash-replay the last batch and re-run after
+    saturation: neither may change a store."""
     seed, max_offset, rows_per_batch, resend_every = 11, 300, 100, 20
     dim_products, dim_customers = queue_dimensions(spark)
     root = tempfile.mkdtemp(prefix="flagship_stream_")
     wh, ckpt = os.path.join(root, "wh"), os.path.join(root, "ckpt")
+    kwargs = dict(
+        seed=seed, rows_per_batch=rows_per_batch,
+        max_offset=max_offset, resend_every=resend_every,
+    )
     try:
+        # first trigger only (availableNow snapshots one poll), then stop
+        drain(
+            run_streaming_flagship(
+                spark, wh, ckpt, dim_products, dim_customers,
+                available_now=True, **kwargs,
+            )
+        )
+        partial = spark.read.parquet(f"{wh}/fact_enriched").count()
+        assert 0 < partial < max_offset  # genuinely mid-drain
+
+        # resume from the same checkpoint, continuous to completion
         q = run_streaming_flagship(
             spark, wh, ckpt, dim_products, dim_customers,
-            available_now=False, seed=seed, rows_per_batch=rows_per_batch,
-            max_offset=max_offset, resend_every=resend_every,
+            available_now=False, **kwargs,
         )
         try:
             q.processAllAvailable()
@@ -77,6 +100,10 @@ def test_streaming_flagship_drains_three_triggers_and_replays(spark):
         assert (
             fact.select("transaction_id").distinct().count() == fact.count()
         )
+        # the restart boundary produced no cross-boundary re-delivery:
+        # every ORIGINAL offset appears exactly once
+        originals = fact.filter(~F.col("transaction_id").endswith("-R"))
+        assert originals.select("offset").distinct().count() == max_offset
 
         # near-dedup audit flagged exactly the resubmissions (payload
         # identical, fresh id → Jaccard 1): one pair per resent offset
@@ -105,59 +132,9 @@ def test_streaming_flagship_drains_three_triggers_and_replays(spark):
         drain(
             run_streaming_flagship(
                 spark, wh, ckpt, dim_products, dim_customers,
-                available_now=True, seed=seed, rows_per_batch=rows_per_batch,
-                max_offset=max_offset, resend_every=resend_every,
-            )
-        )
-        assert _rows(spark.read.parquet(f"{wh}/fact_enriched")) == fact_before
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_streaming_flagship_mid_drain_restart_resumes(spark):
-    """Crash BETWEEN triggers: drain one availableNow trigger, then
-    restart from the same checkpoint and finish continuously. The
-    composition must resume — committed offsets not re-delivered, dedup
-    state restored (redeliveries of later offsets still die), stores
-    advanced batch-by-batch — and the final warehouse must hold exactly
-    the key-distinct facts, none duplicated across the restart boundary."""
-    seed, max_offset, rows_per_batch, resend_every = 13, 300, 100, 20
-    dim_products, dim_customers = queue_dimensions(spark)
-    root = tempfile.mkdtemp(prefix="flagship_resume_")
-    wh, ckpt = os.path.join(root, "wh"), os.path.join(root, "ckpt")
-    kwargs = dict(
-        seed=seed, rows_per_batch=rows_per_batch,
-        max_offset=max_offset, resend_every=resend_every,
-    )
-    try:
-        # first trigger only (availableNow snapshots one poll), then stop
-        drain(
-            run_streaming_flagship(
-                spark, wh, ckpt, dim_products, dim_customers,
                 available_now=True, **kwargs,
             )
         )
-        partial = spark.read.parquet(f"{wh}/fact_enriched").count()
-        assert 0 < partial < max_offset  # genuinely mid-drain
-
-        # resume from the same checkpoint, continuous to completion
-        q2 = run_streaming_flagship(
-            spark, wh, ckpt, dim_products, dim_customers,
-            available_now=False, **kwargs,
-        )
-        try:
-            q2.processAllAvailable()
-        finally:
-            q2.stop()
-
-        fact = spark.read.parquet(f"{wh}/fact_enriched")
-        assert fact.count() == max_offset + max_offset // resend_every
-        assert (
-            fact.select("transaction_id").distinct().count() == fact.count()
-        )
-        # the restart boundary produced no cross-boundary re-delivery:
-        # every ORIGINAL offset appears exactly once
-        originals = fact.filter(~F.col("transaction_id").endswith("-R"))
-        assert originals.select("offset").distinct().count() == max_offset
+        assert _rows(spark.read.parquet(f"{wh}/fact_enriched")) == fact_before
     finally:
         shutil.rmtree(root, ignore_errors=True)
