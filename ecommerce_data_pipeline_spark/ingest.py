@@ -93,11 +93,11 @@ def ingest_fact_batch(
     ts_col: str,
     dims: dict[str, tuple[str, DataFrame]],
     landing_path: str | None = None,
-    granularity: str = "hour",
     dedup_key: str | None = None,
     metrics_out: dict | None = None,
 ) -> DataFrame:
-    """EP2: land the batch (optional, reference's S3 zone), enrich with
+    """EP2: land the batch (optional, reference's S3 zone, hour
+    partitions), enrich with
     dimensions (broadcast), and APPEND to the warehouse fact table
     (the append happens inside this function; the returned DataFrame is
     the already-written enriched batch for further use).
@@ -123,7 +123,7 @@ def ingest_fact_batch(
             if isinstance(facts.schema[ts_col].dataType, StringType)
             else F.col(ts_col)
         )
-        write_partitioned_parquet(facts, ts_for_partition, landing_path, granularity)
+        write_partitioned_parquet(facts, ts_for_partition, landing_path)
 
     obs_in = Observation("facts_in")
     facts = facts.observe(obs_in, F.count(F.lit(1)).alias("n"))

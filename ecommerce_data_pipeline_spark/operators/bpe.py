@@ -5,12 +5,12 @@ BPE merges are learned from WORD-TYPE counts, not the raw token stream —
 so the cluster's job is the one heavy reduction
 
     corpus → explode(tokens) → groupBy(word) → count
-           → orderBy(count desc, word) → limit(max_word_types)
+           → orderBy(count desc, word) → limit(100,000)
 
 and the merge loop itself runs driver-side over the collected word-count
 table. That split is the 100 TB contract used by every trainer in this
-repo (PQ/IVF codebooks, PCA): the collect is bounded by ``max_word_types``
-— word-type growth is Heaps-sublinear and the cap keeps it flat — while
+repo (PQ/IVF codebooks, PCA): the collect is bounded by 100,000 word
+types — word-type growth is Heaps-sublinear and the cap keeps it flat — while
 the corpus-sized work (token explosion + count) stays distributed and
 map-side combined. HuggingFace's tokenizers train the same way on a
 single node AFTER an external word-count pass; here Spark IS that pass.
@@ -34,19 +34,15 @@ from ecommerce_data_pipeline_spark.operators.text import tokens
 END = "</w>"
 
 
-def word_type_counts(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_word_types: int = 100_000,
-) -> list[tuple[str, int]]:
-    """The distributed half: word-type → occurrence count, capped under a
-    total order (deterministic across partition layouts)."""
+def word_type_counts(docs: DataFrame) -> list[tuple[str, int]]:
+    """The distributed half: word-type → occurrence count of ``text``,
+    capped under a total order (deterministic across partition layouts)."""
     rows = (
-        docs.select(F.explode(tokens(text_col)).alias("w"))
+        docs.select(F.explode(tokens("text")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.col("c").desc(), "w")
-        .limit(max_word_types)
+        .limit(100_000)
         .collect()
     )
     return [(r["w"], r["c"]) for r in rows]
@@ -54,9 +50,7 @@ def word_type_counts(
 
 def learn_bpe_merges(
     docs: DataFrame,
-    text_col: str = "text",
     num_merges: int = 20,
-    max_word_types: int = 100_000,
     word_counts: list[tuple[str, int]] | None = None,
 ) -> list[tuple[str, str, int]]:
     """Learn ``num_merges`` BPE merges; returns [(left, right, pair_count)]
@@ -65,7 +59,7 @@ def learn_bpe_merges(
     ``word_type_counts``) to reuse an already-collected table instead of
     re-running the corpus reduction."""
     if word_counts is None:
-        word_counts = word_type_counts(docs, text_col, max_word_types)
+        word_counts = word_type_counts(docs)
     vocab: dict[tuple[str, ...], int] = {
         tuple(w) + (END,): c for w, c in word_counts
     }

@@ -68,7 +68,7 @@ def dedup_by_key(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
     )
 
 
-def exact_text_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_text_dedup(docs: DataFrame) -> DataFrame:
     """Exact content dedup: one survivor per sha2-256 of the text.
 
     Returns (content_hash, n_dupes, keep_id) — survivor = lowest id, so the
@@ -76,10 +76,10 @@ def exact_text_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     hash-partitioned aggregation; no row ever leaves the JVM.
     """
     return (
-        docs.select(F.sha2(F.col(text_col), 256).alias("content_hash"), F.col(id_col))
+        docs.select(F.sha2(F.col("text"), 256).alias("content_hash"), F.col("doc_id"))
         .groupBy("content_hash")
         .agg(
             F.count(F.lit(1)).alias("n_dupes"),
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
         )
     )

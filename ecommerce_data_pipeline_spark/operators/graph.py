@@ -56,9 +56,9 @@ def iterate_to_fixpoint(state, step, measure, rounds, done, stats=None):
     return state, stats
 
 
-def _bidirectional_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """(u, v) with both orientations of every edge, distinct, PERSISTED
-    (callers unpersist when done). One pass over ``edges`` via explode —
+def _bidirectional_edges(edges: DataFrame) -> DataFrame:
+    """(u, v) with both orientations of every (id1, id2) edge, distinct,
+    PERSISTED (callers unpersist when done). One pass over ``edges`` via explode —
     callers hand in raw pair PLANS, often an expensive near-dup join,
     and a union-of-two-selects form executed that plan twice before the
     persist could help. Shared by connected_components and pagerank so
@@ -67,8 +67,8 @@ def _bidirectional_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
         edges.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+                    F.struct(F.col("id1").alias("u"), F.col("id2").alias("v")),
+                    F.struct(F.col("id2").alias("u"), F.col("id1").alias("v")),
                 )
             ).alias("_e")
         )
@@ -78,19 +78,15 @@ def _bidirectional_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id1",
-    dst: str = "id2",
-    max_iter: int = 15,
-) -> DataFrame:
-    """(node, label) for every node appearing in ``edges``; label = min
+def connected_components(edges: DataFrame, max_iter: int = 15) -> DataFrame:
+    """(node, label) for every node appearing in the (id1, id2)
+    ``edges``; label = min
     node id reachable from it. Deterministic for any edge direction or
     partitioning."""
     if max_iter < 1:
         # zero rounds leave no change count to certify convergence with
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    bidir = _bidirectional_edges(edges, src, dst)
+    bidir = _bidirectional_edges(edges)
     # initialization already performs round 1: label = min(self, neighbors)
     # — one aggregation, saving a full join+checkpoint+count cycle (pair
     # graphs from near-dup emitters are diameter ≤ 2 cliques, so most
@@ -151,17 +147,13 @@ def connected_components(
 
 
 def dedup_cluster_assignment(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "id1",
-    dst: str = "id2",
+    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Every document → its duplicate-cluster id (min doc id in the
     connected component; singletons map to themselves) + cluster size.
     ``SELECT ... WHERE doc_id = cluster_id`` is then the canonical
     keep-one-per-cluster dedup."""
-    labels = connected_components(pairs, src=src, dst=dst)
+    labels = connected_components(pairs)
     assigned = docs.select(F.col(id_col).alias("doc_id")).join(
         labels, F.col("doc_id") == labels["node"], "left"
     ).select(
@@ -178,17 +170,11 @@ def dedup_cluster_assignment(
     ).select("doc_id", "cluster_id", "cluster_size")
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "id1",
-    dst: str = "id2",
-    damping: float = 0.85,
-    iterations: int = 5,
-) -> DataFrame:
-    """PageRank over the UNDIRECTED graph of ``edges`` — fixed iteration
-    count, no convergence test, so the result is a deterministic,
-    engine-replayable function of the edge set (the oracle reruns the
-    same recurrence in a recursive CTE).
+def pagerank(edges: DataFrame) -> DataFrame:
+    """PageRank over the UNDIRECTED graph of the (id1, id2) ``edges`` —
+    damping 0.85, a fixed 5 iterations, no convergence test, so the
+    result is a deterministic, engine-replayable function of the edge
+    set (the oracle reruns the same recurrence in a recursive CTE).
 
     Undirected by construction (each edge contributes both ways): every
     node has degree ≥ 1, so there is no dangling-mass special case.
@@ -200,7 +186,8 @@ def pagerank(
     ``localCheckpoint`` per round keeps the iterated plan flat
     (same rule as connected_components above).
     """
-    bidir = _bidirectional_edges(edges, src, dst)
+    damping = 0.85
+    bidir = _bidirectional_edges(edges)
     deg = bidir.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     nodes = deg.select(F.col("u").alias("node"), "deg").localCheckpoint()
     n_nodes = nodes.count()
@@ -215,7 +202,7 @@ def pagerank(
     ranks = nodes.select(
         "node", "deg", F.lit(1.0 / n_nodes).alias("rank")
     ).localCheckpoint()
-    for _ in range(iterations):
+    for _ in range(5):
         contrib = (
             bidir.join(
                 ranks.select(

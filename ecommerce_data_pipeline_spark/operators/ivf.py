@@ -25,35 +25,28 @@ from pyspark.sql import functions as F
 
 
 def train_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    sample_fraction: float | None = None,
-    iterations: int = 5,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_train_rows: int = 100_000,
+    corpus: DataFrame, n_centroids: int = 16, max_train_rows: int = 100_000
 ) -> list[list[float]]:
-    """K-means (Lloyd) on a seeded corpus sample, driver-side NumPy.
+    """K-means (Lloyd, 5 iterations) on a seeded corpus sample,
+    driver-side NumPy.
 
-    The driver-side collect is ALWAYS bounded: an optional seeded
-    ``sample_fraction`` thins the corpus first, then ``limit(
-    max_train_rows)`` hard-caps the rows pulled to the driver — so a
-    100 TB corpus trains on at most ``max_train_rows`` vectors instead
-    of OOMing the driver. Centroid quality needs only a sketch of the
-    density, not the full corpus."""
+    The driver-side collect is ALWAYS bounded: ``limit(max_train_rows)``
+    hard-caps the rows pulled to the driver — so a 100 TB corpus trains
+    on at most ``max_train_rows`` vectors instead of OOMing the driver.
+    Centroid quality needs only a sketch of the density, not the full
+    corpus."""
     import numpy as np
 
-    sample = corpus.select(vec_col)
-    if sample_fraction is not None and sample_fraction < 1.0:
-        sample = sample.sample(fraction=sample_fraction, seed=seed)
     # deterministic cap: a bare LIMIT is partition-layout-dependent once
     # the corpus exceeds the cap (the pq.py trainer's documented bug,
     # same fix: rank by a content hash before the limit)
-    sample = sample.orderBy(F.xxhash64(F.col(vec_col))).limit(max_train_rows)
+    sample = corpus.select("embedding").orderBy(
+        F.xxhash64(F.col("embedding"))
+    ).limit(max_train_rows)
     x = np.asarray([list(map(float, r[0])) for r in sample.collect()])
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     cent = x[rng.choice(len(x), size=min(n_centroids, len(x)), replace=False)]
-    for _ in range(iterations):
+    for _ in range(5):
         # cosine assignment: normalize, argmax of dot products
         xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
         cn = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
@@ -111,24 +104,14 @@ def _nearest_centroids(
     )
 
 
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: probe the query's nprobe nearest inverted lists.
+def ivf_topk(queries: DataFrame, corpus: DataFrame, nprobe: int = 4) -> DataFrame:
+    """Approximate top-10: probe the query's nprobe nearest of 16
+    inverted lists.
 
     Same output/determinism contract as cosine_topk (6dp rounding, id
-    tiebreak). Scored fraction ≈ nprobe/n_centroids of the corpus.
+    tiebreak). Scored fraction ≈ nprobe/16 of the corpus.
     """
-    centroids = train_centroids(
-        corpus, n_centroids, vec_col=vec_col, seed=seed
-    )
+    centroids = train_centroids(corpus)
     from ecommerce_data_pipeline_spark.functions.vectors import (
         cosine_with_norms,
         l2_norm,
@@ -143,7 +126,7 @@ def ivf_topk(
     c_assigned = (
         spread_for_fanout(
             corpus.select(
-                F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv")
+                F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv")
             )
         )
         .withColumn("cn", l2_norm("cv"))
@@ -153,10 +136,10 @@ def ivf_topk(
         )
     )
     q_probes = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm(vec_col).alias("qn"),
-        F.explode(_nearest_centroids(vec_col, centroids, nprobe)).alias(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        l2_norm("embedding").alias("qn"),
+        F.explode(_nearest_centroids("embedding", centroids, nprobe)).alias(
             "list_id"
         ),
     )
@@ -171,4 +154,4 @@ def ivf_topk(
     )
     from ecommerce_data_pipeline_spark.operators.similarity import rank_topk
 
-    return rank_topk(scored, k)
+    return rank_topk(scored, 10)

@@ -39,10 +39,9 @@ def as_of_join(
     on: str,
     left_ts: str,
     right_ts: str,
-    direction: str = "backward",
 ) -> DataFrame:
-    """As-of join: for each left row, the latest right row with
-    ``right_ts <= left_ts`` (backward) within the same ``on`` key.
+    """Backward as-of join: for each left row, the latest right row with
+    ``right_ts <= left_ts`` within the same ``on`` key.
 
     Implemented with the union-sort trick: tag both sides, sort within the
     key by time, and carry the last-seen right row forward with
@@ -50,8 +49,6 @@ def as_of_join(
     Python, no cross product — versus the naive non-equi join which
     explodes at scale.
     """
-    if direction != "backward":
-        raise ValueError("only 'backward' as-of is implemented")
     l_tag = left.select(
         F.col(on).alias("_k"),
         F.col(left_ts).alias("_ts"),

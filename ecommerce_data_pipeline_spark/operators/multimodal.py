@@ -58,14 +58,12 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def attach_binary_payload(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def attach_binary_payload(docs: DataFrame) -> DataFrame:
     """Build a multimodal table from the documents fixture: the text bytes
     stand in for an encoded media payload (deterministic fake media)."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return docs.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         payload.alias("payload"),
         F.lit("image/fake").alias("media_type"),
         F.octet_length(payload).cast("long").alias("n_bytes"),
@@ -123,14 +121,12 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
 
 
-def frame_sample(
-    media: DataFrame, n_frames: int = 4, frame_bytes: int = 32
-) -> DataFrame:
+def frame_sample(media: DataFrame, frame_bytes: int = 32) -> DataFrame:
     """'Video' frame sampling as pure Column ops: slice the payload into
-    n evenly-spaced fixed-size binary chunks (array<binary>). The real
+    4 evenly-spaced fixed-size binary chunks (array<binary>). The real
     implementation would seek keyframes inside the codec stub."""
-    stride = (F.col("n_bytes") / n_frames).cast("long")
-    idx = F.sequence(F.lit(0), F.lit(n_frames - 1))
+    stride = (F.col("n_bytes") / 4).cast("long")
+    idx = F.sequence(F.lit(0), F.lit(3))
     frames = F.transform(
         idx,
         lambda i: F.substring(

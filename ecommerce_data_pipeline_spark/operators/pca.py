@@ -48,13 +48,9 @@ class PCAModel:
 
 
 def train_pca(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 4,
-    max_train_rows: int | None = 100_000,
+    corpus: DataFrame, k: int = 4, max_train_rows: int | None = 100_000
 ) -> PCAModel:
-    """Fit the top-``k`` principal axes. Cluster work: one posexplode +
+    """Fit the top-``k`` principal axes of ``embedding``. Cluster work: one posexplode +
     one partition-local pair fan-out + one hash agg; driver work: eigh
     on d×d. The collect is d(d+1)/2 + d cells — corpus-size-free.
 
@@ -71,15 +67,15 @@ def train_pca(
 
     if max_train_rows is not None:
         corpus = (
-            corpus.select(id_col, vec_col)
-            .orderBy(F.xxhash64(F.col(vec_col)))
+            corpus.select("vec_id", "embedding")
+            .orderBy(F.xxhash64(F.col("embedding")))
             .limit(max_train_rows)
         )
     # persist: three consumers (both covariance self-join sides + the
     # means aggregate) — unpersisted, the sampled-corpus lineage
     # (including the hash-ordered limit's sort) re-executes three times
     ex = corpus.select(
-        F.col(id_col).alias("_vid"), F.posexplode(vec_col).alias("pos", "val")
+        F.col("vec_id").alias("_vid"), F.posexplode("embedding").alias("pos", "val")
     ).withColumn("val", F.col("val").cast("double")).persist()
     a, b = ex.alias("a"), ex.alias("b")
     cells = (
@@ -126,24 +122,18 @@ def train_pca(
     )
 
 
-def pca_project(
-    corpus: DataFrame,
-    model: PCAModel,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_dp: int = 6,
-) -> DataFrame:
-    """Project every vector onto the model's axes: pc_j = (x − μ)·w_j,
+def pca_project(corpus: DataFrame, model: PCAModel, round_dp: int = 6) -> DataFrame:
+    """Project every ``embedding`` vector onto the model's axes: pc_j = (x − μ)·w_j,
     computed as dot(x, w_j) − (μ·w_j) so the per-row work is one
     codegen'd fold per component against a BROADCAST literal axis —
     no shuffle, no Python, linear scan at any scale."""
-    cols = [F.col(id_col)]
+    cols = [F.col("vec_id")]
     for j, comp in enumerate(model.components, start=1):
         # one array literal per axis, not one F.lit per coordinate
         w = F.lit([float(x) for x in comp])
         offset = sum(m * x for m, x in zip(model.mean, comp))
         cols.append(
-            F.round(dot(F.col(vec_col), w) - F.lit(offset), round_dp).alias(
+            F.round(dot(F.col("embedding"), w) - F.lit(offset), round_dp).alias(
                 f"pc{j}"
             )
         )

@@ -42,14 +42,11 @@ from ecommerce_data_pipeline_spark.functions.vectors import cosine_similarity
 def train_pq_codebooks(
     corpus: DataFrame,
     dim: int,
-    m: int = 8,
     k_codes: int = 16,
-    iterations: int = 8,
-    vec_col: str = "embedding",
-    seed: int = 42,
     max_train_rows: int = 100_000,
 ) -> list[list[list[float]]]:
-    """Per-subspace k-means codebooks on a bounded, seeded corpus sample.
+    """Per-subspace k-means codebooks (m = 8 subspaces, 8 Lloyd
+    iterations) on a bounded, seeded corpus sample.
 
     Returns ``codebooks[sub][code] -> list[float]`` (length dim/m).
     The driver-side collect is hard-capped at ``max_train_rows`` rows
@@ -62,26 +59,27 @@ def train_pq_codebooks(
     cheaper than hashing a string cast); hash ties are either identical
     vectors (interchangeable for training) or 2⁻⁶⁴ collisions.
     """
+    m = 8
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     import numpy as np
 
     sub_dim = dim // m
     rows = (
-        corpus.select(vec_col)
-        .orderBy(F.xxhash64(F.col(vec_col)))
+        corpus.select("embedding")
+        .orderBy(F.xxhash64(F.col("embedding")))
         .limit(max_train_rows)
         .collect()
     )
     x = np.asarray([list(map(float, r[0])) for r in rows])
     x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     books: list[list[list[float]]] = []
     for s in range(m):
         xs = x[:, s * sub_dim : (s + 1) * sub_dim]
         k = min(k_codes, len(xs))
         cent = xs[rng.choice(len(xs), size=k, replace=False)].copy()
-        for _ in range(iterations):
+        for _ in range(8):
             d2 = ((xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
             for c in range(k):
@@ -93,11 +91,7 @@ def train_pq_codebooks(
 
 
 def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    vectorized: bool = True,
+    df: DataFrame, codebooks: list[list[list[float]]], vectorized: bool = True
 ) -> DataFrame:
     """Compress vectors to ``m`` codes: argmin centroid per subspace.
 
@@ -152,7 +146,7 @@ def pq_encode(
     # dists first, and the row would enter the ADC shortlist with a
     # garbage code)
     df = df.filter(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) == F.lit(dim))
+        F.col("embedding").isNotNull() & (F.size("embedding") == F.lit(dim))
     )
     if vectorized:
         from pyspark.sql.functions import pandas_udf
@@ -203,8 +197,8 @@ def pq_encode(
 
         codes_udf = pandas_udf(_codes, returnType="array<int>")
         return df.select(
-            F.col(id_col).alias("cand_id"),
-            codes_udf(F.col(vec_col)).alias("codes"),
+            F.col("vec_id").alias("cand_id"),
+            codes_udf(F.col("embedding")).alias("codes"),
         )
     # 1. unpack the array into scalar columns — getItem is codegen'd, so
     #    everything downstream stays plain (fusable) arithmetic. The
@@ -225,18 +219,15 @@ def pq_encode(
             )
         # deterministic argmin: (dist, code) struct sort breaks dist ties
         sub_exprs.append(f"sort_array(array({','.join(cands)}))[0].code")
-    # backtick the spliced column names (the _nearest_centroids
-    # discipline): a raw splice parses ids like `doc-id` or reserved
-    # words as SQL instead of column references.
     # The norm is projected as its OWN column first: a norm subtree
     # inside the transform lambda body is re-evaluated per vector
     # ELEMENT (no loop-invariant hoisting in HOF eval) — O(dim²)
     # multiply-adds per row instead of O(dim).
     return (
         df.selectExpr(
-            f"`{id_col}` AS cand_id",
-            f"`{vec_col}` AS _v",
-            f"greatest(sqrt(aggregate(transform(`{vec_col}`,"
+            "vec_id AS cand_id",
+            "embedding AS _v",
+            "greatest(sqrt(aggregate(transform(embedding,"
             f" v -> CAST(v AS DOUBLE) * v), 0.0D, (acc, x) -> acc + x)),"
             " 1e-12D) AS _norm",
         )
@@ -248,18 +239,10 @@ def pq_encode(
 
 
 def pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    dim: int,
-    m: int = 8,
-    k_codes: int = 16,
-    k: int = 10,
-    rerank: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
+    queries: DataFrame, corpus: DataFrame, dim: int, rerank: int = 50
 ) -> DataFrame:
-    """Approximate top-k cosine via PQ ADC scan + exact re-rank.
+    """Approximate top-10 cosine via PQ ADC scan (8 subspaces × 16
+    codes) + exact re-rank.
 
     Output/determinism contract matches cosine_topk (6dp-rounded cosine,
     id tiebreak). The ADC prefilter ranks on the compressed codes only;
@@ -269,17 +252,13 @@ def pq_topk(
         spread_for_fanout,
     )
 
-    codebooks = train_pq_codebooks(
-        corpus, dim=dim, m=m, k_codes=k_codes, vec_col=vec_col, seed=seed
-    )
+    codebooks = train_pq_codebooks(corpus, dim=dim)
+    m = len(codebooks)
     sub_dim = dim // m
     # the encode is a pure projection now — spread the scan first so the
     # per-row m×k distance folds parallelize (single-split fixture rule)
     encoded = pq_encode(
-        spread_for_fanout(corpus.select(id_col, vec_col)),
-        codebooks,
-        id_col=id_col,
-        vec_col=vec_col,
+        spread_for_fanout(corpus.select("vec_id", "embedding")), codebooks
     )
 
     # Per-query ADC tables, computed driver-side over the collected query
@@ -287,7 +266,7 @@ def pq_topk(
     # dt[sub][code] = ||q_sub - centroid||².
     import numpy as np
 
-    q_rows = queries.select(id_col, vec_col).collect()
+    q_rows = queries.select("vec_id", "embedding").collect()
     adc_rows = []
     for r in q_rows:
         qv = np.asarray(list(map(float, r[1])))
@@ -308,7 +287,7 @@ def pq_topk(
         adc_rows,
         StructType(
             [
-                StructField("query_id", queries.schema[id_col].dataType),
+                StructField("query_id", queries.schema["vec_id"].dataType),
                 StructField("qv", ArrayType(DoubleType())),
                 StructField("dt", ArrayType(ArrayType(DoubleType()))),
             ]
@@ -332,7 +311,7 @@ def pq_topk(
     # re-rank fetches the original vectors ONLY for the shortlist
     # (queries × rerank rows), never for the full corpus
     cv = corpus.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv")
+        F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv")
     )
     exact = cv.join(
         F.broadcast(shortlist.select("query_id", "qv", "cand_id")), "cand_id"
@@ -343,4 +322,4 @@ def pq_topk(
     )
     from ecommerce_data_pipeline_spark.operators.similarity import rank_topk
 
-    return rank_topk(exact, k)
+    return rank_topk(exact, 10)

@@ -28,13 +28,13 @@ def sample_exact_k(df: DataFrame, k: int, seed: int = 42) -> DataFrame:
     return df.orderBy(F.rand(seed)).limit(k)
 
 
-def sample_fraction(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """Scale path: Bernoulli sample, zero shuffle."""
-    return df.sample(fraction=fraction, seed=seed)
+def sample_fraction(df: DataFrame, fraction: float) -> DataFrame:
+    """Scale path: Bernoulli sample (seed 42), zero shuffle."""
+    return df.sample(fraction=fraction, seed=42)
 
 
-def dense_index(df: DataFrame, key: str, idx_col: str = "_idx") -> DataFrame:
-    """Deterministic dense 0..n-1 index = rank of ``key`` — with NO
+def dense_index(df: DataFrame, key: str) -> DataFrame:
+    """Deterministic dense 0..n-1 index ``_idx`` = rank of ``key`` — with NO
     single-reducer stage.
 
     Range-partition on the key (partition p's keys all sort before
@@ -69,7 +69,7 @@ def dense_index(df: DataFrame, key: str, idx_col: str = "_idx") -> DataFrame:
     )
     w = Window.partitionBy("_pid").orderBy(key)
     return ranged.withColumn(
-        idx_col, (F.row_number().over(w) - 1 + off).cast("int")
+        "_idx", (F.row_number().over(w) - 1 + off).cast("int")
     ).drop("_pid")
 
 
@@ -92,15 +92,10 @@ def random_fk_assignment(
     return drawn.join(F.broadcast(indexed), on="_idx", how="inner").drop("_idx")
 
 
-def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    fractions: dict,
-    seed: int = 42,
-) -> DataFrame:
+def stratified_sample(df: DataFrame, strata_col: str, fractions: dict) -> DataFrame:
     """Per-stratum Bernoulli sampling (``sampleBy``): rebalance a skewed
     mixture — e.g. downsample an over-represented language while keeping
     the rest — without any shuffle (each row draws independently from its
-    stratum's fraction). Seeded → rerun-stable; zero driver involvement
-    beyond the tiny fractions map."""
-    return df.sampleBy(strata_col, fractions=fractions, seed=seed)
+    stratum's fraction). Seeded (42) → rerun-stable; zero driver
+    involvement beyond the tiny fractions map."""
+    return df.sampleBy(strata_col, fractions=fractions, seed=42)

@@ -48,13 +48,7 @@ from ecommerce_data_pipeline_spark.operators.text import tokens
 # --- exact Jaccard (oracle-checkable) --------------------------------------
 
 
-def shingle_rows(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    distinct: bool = True,
-) -> DataFrame:
+def shingle_rows(docs: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
     """(id, shingle) rows via posexplode + lead windows.
 
     Deliberately NOT the array-higher-order form (`transform(sequence)`
@@ -66,8 +60,8 @@ def shingle_rows(
     whole-stage codegen. Measured ~10× faster on the fixture corpus.
     """
     tok = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(tokens(text_col)).alias("pos", "tok"),
+        F.col("doc_id").alias("id"),
+        F.posexplode(tokens("text")).alias("pos", "tok"),
     )
     w = Window.partitionBy("id").orderBy("pos")
     cols = [F.col("tok").alias("t0")] + [
@@ -81,18 +75,7 @@ def shingle_rows(
     return sh.distinct() if distinct else sh
 
 
-def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """(id, shingle) pairs, distinct per document."""
-    return shingle_rows(docs, id_col, text_col, n, distinct=True)
-
-
-def df_capped_shingles(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    max_df: int | None = None,
-) -> DataFrame:
+def df_capped_shingles(docs: DataFrame, max_df: int | None = None) -> DataFrame:
     """(id, shingle) relation with shingles of document-frequency > max_df
     removed.
 
@@ -103,7 +86,7 @@ def df_capped_shingles(
     a boilerplate 3-gram at corpus scale is unbounded d). ``max_df=None``
     keeps the exact relation.
     """
-    sh = shingle_sets(docs, id_col, text_col, n)
+    sh = shingle_rows(docs)
     if max_df is None:
         return sh
     ok = (
@@ -116,17 +99,9 @@ def df_capped_shingles(
 
 
 def jaccard_pairs(
-    docs: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    max_df: int | None = None,
-    out: dict | None = None,
+    docs: DataFrame, threshold: float, max_df: int | None = None
 ) -> DataFrame:
     """All document pairs with shingle-Jaccard ≥ threshold (exact).
-    ``out``, when given, receives ``{"persisted": [...]}`` for loop
-    callers to unpersist (the incremental_neardup cleanup contract).
 
     Returns (id1, id2, common, n1, n2, jaccard) with id1 < id2.
 
@@ -141,9 +116,7 @@ def jaccard_pairs(
     """
     # the shingle relation feeds three consumers (sizes + both join
     # sides); persist it so the explode+window shuffle runs once
-    sh = df_capped_shingles(docs, id_col, text_col, n, max_df).persist()
-    if out is not None:
-        out["persisted"] = [sh]
+    sh = df_capped_shingles(docs, max_df=max_df).persist()
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -161,16 +134,8 @@ def jaccard_pairs(
     return out.select("id1", "id2", "common", "n1", "n2", "jaccard")
 
 
-def prefix_filter_jaccard_pairs(
-    docs: DataFrame,
-    threshold_num: int = 4,
-    threshold_den: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    out: dict | None = None,
-) -> DataFrame:
-    """EXACT Jaccard ≥ num/den pairs via prefix filtering (AllPairs /
+def prefix_filter_jaccard_pairs(docs: DataFrame, threshold_num: int = 4) -> DataFrame:
+    """EXACT Jaccard ≥ num/5 pairs via prefix filtering (AllPairs /
     PPJoin family) — no df cap, no probabilistic miss.
 
     Same output contract as `jaccard_pairs` with ``max_df=None``
@@ -204,9 +169,8 @@ def prefix_filter_jaccard_pairs(
     float ceil(0.8·n) rounds UP spuriously when 0.8·n lands above the
     true product (e.g. n = 5 → 4.0000000000000002 → 5), silently
     shortening the prefix below the theorem bound.
-
-    ``out`` receives ``{"persisted": [...]}`` per the cleanup contract.
     """
+    threshold_den = 5
     if not (0 < threshold_num <= threshold_den):
         raise ValueError(
             f"threshold must be in (0, 1]: got {threshold_num}/{threshold_den}"
@@ -214,9 +178,7 @@ def prefix_filter_jaccard_pairs(
     threshold = threshold_num / threshold_den
     # the shingle relation feeds df counts, the ranked prefix, sizes and
     # both verify sides — persist so the explode+window shuffle runs once
-    sh = shingle_rows(docs, id_col, text_col, n, distinct=True).persist()
-    if out is not None:
-        out["persisted"] = [sh]
+    sh = shingle_rows(docs).persist()
     df_tbl = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     # rank + set size in ONE window partition (same key → no extra
     # shuffle beyond the df join)
@@ -282,8 +244,6 @@ def prefix_filter_jaccard_pairs(
     # the difference between shuffling the candidates' shingles and the
     # whole corpus's).
     cand = cand.persist()
-    if out is not None:
-        out["persisted"].append(cand)
     s1 = (
         sh.join(
             cand.select(F.col("id1").alias("id")).distinct(), "id", "left_semi"
@@ -317,14 +277,13 @@ def prefix_filter_jaccard_pairs(
 
 # --- MinHash + LSH (the scale path) -----------------------------------------
 
+# The dedup family's one MinHash geometry: k = 16 hashes in b = 8 bands
+# of r = 2 (b·r = k, so every band indexes inside ``mh``).
+_NUM_HASHES = 16
+_BANDS, _ROWS = 8, 2
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_hashes: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
+
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(id, mh: array<bigint>) — k min-hashes over the document's shingles.
 
     Shape: shingle rows (codegen'd, distributed — see shingle_rows) →
@@ -338,14 +297,13 @@ def minhash_signatures(
     collapse to the same hash — caught by the sf0.01 recall check); the
     concat form is immune everywhere.
     """
-    sh = shingle_rows(docs, id_col, text_col, n, distinct=True)
     # delegate to THE signature scheme (minhash_signature_agg) — a fourth
     # inline copy of the salt format would silently desynchronize from
     # signature_store/incremental_neardup on a salt change
-    return minhash_signature_agg(sh, num_hashes).select("id", "mh")
+    return minhash_signature_agg(shingle_rows(docs)).select("id", "mh")
 
 
-def minhash_signature_agg(sh: DataFrame, num_hashes: int) -> DataFrame:
+def minhash_signature_agg(sh: DataFrame) -> DataFrame:
     """(id, n, mh) from a distinct (id, s) shingle relation: shingle
     count + MinHash signature in ONE aggregation pass. THE signature
     scheme of the dedup family — signature_store, minhash_lsh_neardup,
@@ -353,7 +311,7 @@ def minhash_signature_agg(sh: DataFrame, num_hashes: int) -> DataFrame:
     copies; a salt-format change now has exactly one home)."""
     mins = [
         F.min(F.xxhash64(F.concat(F.col("s"), F.lit(f"#{j}")))).alias(f"_m{j}")
-        for j in range(num_hashes)
+        for j in range(_NUM_HASHES)
     ]
     return (
         sh.groupBy("id")
@@ -361,12 +319,12 @@ def minhash_signature_agg(sh: DataFrame, num_hashes: int) -> DataFrame:
         .select(
             "id",
             "n",
-            F.array(*[f"_m{j}" for j in range(num_hashes)]).alias("mh"),
+            F.array(*[f"_m{j}" for j in range(_NUM_HASHES)]).alias("mh"),
         )
     )
 
 
-def banded_signatures(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
+def banded_signatures(sigs: DataFrame) -> DataFrame:
     """(id, band, sig) rows: each signature exploded into its b band
     hashes (shared by lsh_candidate_pairs and incremental_neardup)."""
     band_structs = F.array(
@@ -374,10 +332,10 @@ def banded_signatures(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
             F.struct(
                 F.lit(i).alias("band"),
                 F.xxhash64(
-                    *[F.col("mh").getItem(i * rows + j) for j in range(rows)]
+                    *[F.col("mh").getItem(i * _ROWS + j) for j in range(_ROWS)]
                 ).alias("sig"),
             )
-            for i in range(bands)
+            for i in range(_BANDS)
         ]
     )
     return sigs.select("id", F.explode(band_structs).alias("b")).select(
@@ -386,12 +344,11 @@ def banded_signatures(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
 
 
 def verify_exact_jaccard(
-    cand: DataFrame, sh1: DataFrame, sh2: DataFrame, sizes: DataFrame,
-    threshold: float,
+    cand: DataFrame, sh1: DataFrame, sh2: DataFrame, sizes: DataFrame
 ) -> DataFrame:
     """Exact-Jaccard verification of LSH candidates: intersection count
     via the shingle relations (pre-filtered to candidates by the
-    caller), sizes joined back, threshold filter. Shared output contract
+    caller), sizes joined back, Jaccard ≥ 0.8 filter. Shared output contract
     (id1, id2, common, n1, n2, jaccard).
 
     PRECONDITION (advisor r13): sh1/sh2 must be (id, s)-DISTINCT —
@@ -424,34 +381,19 @@ def verify_exact_jaccard(
             "jaccard",
             F.col("common") / (F.col("n1") + F.col("n2") - F.col("common")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.8)
         .select("id1", "id2", "common", "n1", "n2", "jaccard")
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    bands: int = 4,
-    rows: int = 4,
-    num_hashes: int | None = None,
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     """(id1, id2) candidates: documents agreeing on all r hashes of ≥1 band.
 
     One explode (docs×b rows) + one self-join on (band, signature) — the
     join key is a 64-bit hash of the band slice, so skew is bounded by
     true duplicate clusters, not by popular shingles.
-
-    Pass ``num_hashes`` (the signature length) to validate the banding
-    geometry HERE, where the invariant lives: bands×rows beyond the
-    signature indexes ``mh`` past its end, getItem yields NULL, xxhash64
-    of NULLs collapses those bands to one constant, and the self-join
-    silently degenerates toward all-pairs.
     """
-    if num_hashes is not None and bands * rows != num_hashes:
-        raise ValueError(
-            f"bands*rows ({bands}*{rows}) must equal num_hashes ({num_hashes})"
-        )
-    banded = banded_signatures(signatures, bands, rows)
+    banded = banded_signatures(signatures)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -466,18 +408,8 @@ def lsh_candidate_pairs(
     )
 
 
-def minhash_lsh_neardup(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 8,
-    rows: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    out: dict | None = None,
-) -> DataFrame:
-    """LSH candidates verified with exact Jaccard ≥ threshold.
+def minhash_lsh_neardup(docs: DataFrame) -> DataFrame:
+    """LSH candidates verified with exact Jaccard ≥ 0.8.
 
     Output matches `jaccard_pairs` minus any pair LSH missed: with b=8,
     r=2 the miss probability at j=0.9 is (1-j²)⁸ ≈ 1.7e-6 (b=4,r=4
@@ -485,25 +417,14 @@ def minhash_lsh_neardup(
     low-similarity candidates, but candidates are exact-verified, so
     false positives cost verification work only — the right trade for a
     dedup pipeline where recall is the product guarantee.
-
-    ``out``, when given, receives ``{"persisted": [...]}`` so loop/
-    notebook callers can unpersist after materializing (the
-    incremental_neardup cleanup contract); one-shot query callers may
-    ignore it.
     """
-    if bands * rows != num_hashes:
-        raise ValueError(
-            f"bands*rows ({bands}*{rows}) must equal num_hashes ({num_hashes})"
-        )
     # one shingle materialization feeds signatures, sizes, and both
     # verify-join sides (4 consumers — without persist the explode+window
     # shuffle re-runs for each)
-    sh = shingle_rows(docs, id_col, text_col, n, distinct=True).persist()
+    sh = shingle_rows(docs).persist()
     # one aggregation pass produces BOTH the signature and the set size
-    per_doc = minhash_signature_agg(sh, num_hashes).persist()
-    cand = lsh_candidate_pairs(
-        per_doc.select("id", "mh"), bands, rows, num_hashes=num_hashes
-    )
+    per_doc = minhash_signature_agg(sh).persist()
+    cand = lsh_candidate_pairs(per_doc.select("id", "mh"))
     sizes = per_doc.select("id", "n")
     # Verification cost scales with the CANDIDATE set, not the corpus:
     # semi-filter the shingle relation to candidate documents before the
@@ -515,9 +436,7 @@ def minhash_lsh_neardup(
     sh2 = sh.join(
         cand.select(F.col("id2").alias("id")).distinct(), "id", "left_semi"
     ).withColumnsRenamed({"id": "id2"})
-    if out is not None:
-        out["persisted"] = [sh, per_doc]
-    return verify_exact_jaccard(cand, sh1, sh2, sizes, threshold)
+    return verify_exact_jaccard(cand, sh1, sh2, sizes)
 
 
 # --- SimHash -----------------------------------------------------------------
@@ -525,16 +444,11 @@ def minhash_lsh_neardup(
 _SIMHASH_BITS = 64
 
 
-def simhash_table(
-    docs: DataFrame,
-    bits: int = _SIMHASH_BITS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def simhash_table(docs: DataFrame) -> DataFrame:
     """(id, sig): bitwise-majority SimHash over 3-gram shingle hashes.
 
     Distributed form: explode shingles → xxhash64 → ONE hash aggregate
-    with `bits` codegen'd SUM(bit_b) columns → recombine the majority
+    with 64 codegen'd SUM(bit_b) columns → recombine the majority
     bits. Entirely whole-stage-codegen (an earlier array-accumulator
     `aggregate()` formulation ran ~25x slower, interpreted).
 
@@ -542,16 +456,16 @@ def simhash_table(
     features saturate the signature (every doc shares most words).
     Shingle multiplicity is kept — classic frequency-weighted SimHash.
     """
-    ex = shingle_rows(docs, id_col, text_col, 3, distinct=False).select(
+    ex = shingle_rows(docs, distinct=False).select(
         "id", F.xxhash64("s").alias("h")
     )
     bit_sums = [
         F.sum(F.shiftright("h", b).bitwiseAND(F.lit(1))).alias(f"_c{b}")
-        for b in range(bits)
+        for b in range(_SIMHASH_BITS)
     ]
     counted = ex.groupBy("id").agg(F.count(F.lit(1)).alias("_n"), *bit_sums)
     sig = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(_SIMHASH_BITS):
         # bit 63 can't be written as 1<<63 (overflows signed long); its
         # two's-complement value is Long.MIN, and summing it with the
         # positive lower-bit masks composes the intended bit pattern
@@ -566,12 +480,7 @@ def simhash_table(
     return counted.select("id", sig.alias("sig"))
 
 
-def simhash_neardup(
-    docs: DataFrame,
-    max_hamming: int = 7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def simhash_neardup(docs: DataFrame, max_hamming: int = 7) -> DataFrame:
     """(id1, id2, hamming) pairs within Hamming distance ≤ max_hamming.
 
     64-bit signatures, 8 byte-bands: by pigeonhole any pair at distance
@@ -581,7 +490,7 @@ def simhash_neardup(
     with signature width, so the wider signature separates better at the
     same relative threshold.)
     """
-    sigs = simhash_table(docs, id_col=id_col, text_col=text_col)
+    sigs = simhash_table(docs)
     bands = F.array(
         *[
             F.struct(
@@ -616,7 +525,7 @@ def simhash_neardup(
 # --- embedding similarity search ---------------------------------------------
 
 
-def spread_for_fanout(df: DataFrame, n: int | None = None) -> DataFrame:
+def spread_for_fanout(df: DataFrame) -> DataFrame:
     """Round-robin repartition of the STREAM side before a broadcast
     scoring join.
 
@@ -629,8 +538,7 @@ def spread_for_fanout(df: DataFrame, n: int | None = None) -> DataFrame:
     scoring fan-out it parallelizes, at any scale; with a genuinely
     multi-split scan it is a cheap no-op reshuffle.
     """
-    n = n or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -656,12 +564,11 @@ def cosine_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query (brute force baseline).
 
     Broadcast the (small) query set against the corpus; the dot product is
-    a codegen'd fold. Ranking uses the score rounded to `round_digits`
+    a codegen'd fold. Ranking uses the score rounded to 6 digits
     with an id tiebreak, making the k-set deterministic cross-engine.
     """
     from ecommerce_data_pipeline_spark.functions.vectors import (
@@ -687,18 +594,16 @@ def cosine_topk(
         .select(
             "query_id",
             "cand_id",
-            F.round(
-                cosine_with_norms("qv", "cv", "qn", "cn"), round_digits
-            ).alias("cosine"),
+            F.round(cosine_with_norms("qv", "cv", "qn", "cn"), 6).alias("cosine"),
         )
     )
     return rank_topk(scored, k)
 
 
-def random_hyperplanes(dim: int, planes: int, seed: int = 42) -> list[list[float]]:
+def random_hyperplanes(dim: int, planes: int) -> list[list[float]]:
     """Deterministic signed-projection hyperplanes (public LSH scheme:
     Charikar, STOC'02 — random projections for cosine)."""
-    rng = random.Random(seed)
+    rng = random.Random(42)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(planes)]
 
 
@@ -720,26 +625,19 @@ def lsh_bucket(vec_col: str | Column, hyperplanes: list[list[float]]) -> Column:
 
 
 def lsh_bucketed_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    dim: int,
-    k: int = 10,
-    planes: int = 4,
-    probe_hamming: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
+    queries: DataFrame, corpus: DataFrame, dim: int, probe_hamming: int = 1
 ) -> DataFrame:
-    """Approximate top-k via multi-probe LSH: score only candidates whose
+    """Approximate top-10 via multi-probe LSH: score only candidates whose
     bucket is within Hamming distance ``probe_hamming`` of the query's.
 
-    With p planes the corpus splits into 2^p buckets; each query probes
-    1 + p buckets (H≤1), so the scored fraction is ~(1+p)/2^p of the
-    corpus. p and probe_hamming are the recall/cost knobs — clustered
+    With p = 4 planes the corpus splits into 2^p buckets; each query
+    probes 1 + p buckets (H≤1), so the scored fraction is ~(1+p)/2^p of
+    the corpus. probe_hamming is the recall/cost knob — clustered
     real-world embeddings concentrate neighbors in the home bucket,
-    allowing more planes; this default is tuned for near-uniform vectors.
+    allowing more planes; p = 4 is tuned for near-uniform vectors.
     """
-    hp = random_hyperplanes(dim, planes, seed)
+    planes = 4
+    hp = random_hyperplanes(dim, planes)
     # each query probes its own bucket plus every bucket within
     # probe_hamming bit-flips (mask count = Σ C(planes, h) — the old
     # form silently capped at H≤1, delivering less recall than the knob
@@ -763,10 +661,10 @@ def lsh_bucketed_topk(
     )
 
     q_home = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        l2_norm(vec_col).alias("qn"),
-        lsh_bucket(vec_col, hp).alias("_home"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        l2_norm("embedding").alias("qn"),
+        lsh_bucket("embedding", hp).alias("_home"),
     )
     q = q_home.select(
         "query_id",
@@ -784,7 +682,7 @@ def lsh_bucketed_topk(
     c = (
         spread_for_fanout(
             corpus.select(
-                F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv")
+                F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv")
             )
         )
         .withColumn("cn", l2_norm("cv"))
@@ -799,38 +697,25 @@ def lsh_bucketed_topk(
             F.round(cosine_with_norms("qv", "cv", "qn", "cn"), 6).alias("cosine"),
         )
     )
-    return rank_topk(scored, k)
+    return rank_topk(scored, 10)
 
 
-def signature_store(
-    docs: DataFrame,
-    num_hashes: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
+def signature_store(docs: DataFrame) -> DataFrame:
     """(id, n, mh) — the persistable per-document MinHash state: shingle
     count + signature in ONE aggregation pass. This is what an
     incremental dedup pipeline stores between batches (bytes per doc)
     so corpus growth never re-reads old text."""
-    sh = shingle_rows(docs, id_col, text_col, n, distinct=True)
-    return minhash_signature_agg(sh, num_hashes)
+    return minhash_signature_agg(shingle_rows(docs))
 
 
 def incremental_neardup(
     base_sigs: DataFrame,
     base_docs: DataFrame,
     delta_docs: DataFrame,
-    threshold: float = 0.8,
-    num_hashes: int = 16,
-    bands: int = 8,
-    rows: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     out: dict | None = None,
 ) -> DataFrame:
-    """Near-dup pairs INTRODUCED by a delta batch: delta×(base ∪ delta),
+    """Near-dup pairs (Jaccard ≥ 0.8) INTRODUCED by a delta batch:
+    delta×(base ∪ delta),
     never base×base (those pairs were found when base was ingested).
 
     ``out``, when given, receives ``{"delta_sigs": <DataFrame>,
@@ -854,13 +739,6 @@ def incremental_neardup(
     full-corpus run restricted to delta-touching pairs is asserted in
     tests/test_similarity.py.
     """
-    if bands * rows != num_hashes:
-        # a mismatched geometry would index mh past its end: getItem
-        # yields NULL, xxhash64-of-NULLs degenerates every band signature
-        # and candidates silently collapse/vanish instead of erroring
-        raise ValueError(
-            f"bands*rows ({bands}*{rows}) must equal num_hashes ({num_hashes})"
-        )
     # Disjointness is enforced HERE, not assumed: a delta id already in
     # base (re-delivered batch, overlapping backfill) would otherwise put
     # its signature in all_sigs twice and its shingles in sh_all twice —
@@ -869,13 +747,13 @@ def incremental_neardup(
     # distinct precondition (the r13 array_intersect form dedupes where
     # the retired join-count form inflated common to 2c). The delta
     # version wins on overlap.
-    delta_ids = delta_docs.select(F.col(id_col).alias("id")).distinct()
+    delta_ids = delta_docs.select(F.col("doc_id").alias("id")).distinct()
     base_sigs = base_sigs.join(delta_ids, "id", "left_anti")
     base_docs = base_docs.join(
-        delta_ids.withColumnsRenamed({"id": id_col}), id_col, "left_anti"
+        delta_ids.withColumnsRenamed({"id": "doc_id"}), "doc_id", "left_anti"
     )
-    sh_delta = shingle_rows(delta_docs, id_col, text_col, n, distinct=True).persist()
-    delta_sigs = minhash_signature_agg(sh_delta, num_hashes).persist()
+    sh_delta = shingle_rows(delta_docs).persist()
+    delta_sigs = minhash_signature_agg(sh_delta).persist()
     # persist: THREE consumers (the banded probe table + the two
     # size-join sides inside verify_exact_jaccard). When base_sigs is a
     # computed plan (the registered queries recompute it from text), an
@@ -884,8 +762,8 @@ def incremental_neardup(
     # Narrow relation (id, n, mh): bytes per doc, cache-safe at scale.
     all_sigs = base_sigs.unionByName(delta_sigs).persist()
 
-    a = banded_signatures(delta_sigs, bands, rows).alias("a")
-    b = banded_signatures(all_sigs, bands, rows).alias("b")
+    a = banded_signatures(delta_sigs).alias("a")
+    b = banded_signatures(all_sigs).alias("b")
     cand = (
         a.join(
             b,
@@ -908,19 +786,16 @@ def incremental_neardup(
         cand.select(F.col("id2").alias("id"))
     ).distinct()
     base_cand_docs = base_docs.join(
-        cand_ids.withColumnsRenamed({"id": id_col}), id_col, "left_semi"
+        cand_ids.withColumnsRenamed({"id": "doc_id"}), "doc_id", "left_semi"
     )
-    sh_all = sh_delta.unionByName(
-        shingle_rows(base_cand_docs, id_col, text_col, n, distinct=True)
-    ).persist()  # both verify-join sides read it
+    # both verify-join sides read it
+    sh_all = sh_delta.unionByName(shingle_rows(base_cand_docs)).persist()
     sh1 = sh_all.withColumnsRenamed({"id": "id1"})
     sh2 = sh_all.withColumnsRenamed({"id": "id2"})
     if out is not None:
         out["delta_sigs"] = delta_sigs
         out["persisted"] = [sh_delta, delta_sigs, all_sigs, cand, sh_all]
-    return verify_exact_jaccard(
-        cand, sh1, sh2, all_sigs.select("id", "n"), threshold
-    )
+    return verify_exact_jaccard(cand, sh1, sh2, all_sigs.select("id", "n"))
 
 
 def mmr_rerank(

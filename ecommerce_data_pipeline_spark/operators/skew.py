@@ -13,30 +13,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_sum(
-    df: DataFrame,
-    group_cols: list[str],
-    sum_col: str,
-    salt_buckets: int = 16,
-    seed: int = 42,
-    accumulator_type: str = "decimal(28,6)",
-) -> DataFrame:
+def salted_sum(df: DataFrame, group_cols: list[str], sum_col: str) -> DataFrame:
     """Two-phase aggregation for skewed group keys.
 
-    Phase 1 groups on (key, salt) — the hot key's rows spread over
-    ``salt_buckets`` reducers; phase 2 merges the per-salt partials. For
-    algebraic aggregates (sum/count/min/max) the result is exactly the
+    Phase 1 groups on (key, salt) — the hot key's rows spread over 16
+    reducers; phase 2 merges the per-salt partials. For algebraic
+    aggregates (sum/count/min/max) the result is exactly the
     single-phase answer PROVIDED the accumulator's decimal scale covers
     the input (the cast quantizes anything finer — e.g. a 6dp score
-    under a 2dp accumulator sums rounded values). The default covers the
-    repo's 2dp money and 6dp score columns; pass a wider
-    ``accumulator_type`` for finer inputs.
+    under a 2dp accumulator sums rounded values). The decimal(28,6)
+    accumulator covers the repo's 2dp money and 6dp score columns.
     """
-    salt = F.floor(F.rand(seed) * salt_buckets).cast("int")
+    salt = F.floor(F.rand(42) * 16).cast("int")
     partial = (
         df.withColumn("_salt", salt)
         .groupBy(*group_cols, "_salt")
-        .agg(F.sum(F.col(sum_col).cast(accumulator_type)).alias("_psum"),
+        .agg(F.sum(F.col(sum_col).cast("decimal(28,6)")).alias("_psum"),
              F.count(F.lit(1)).alias("_pcnt"))
     )
     return (
@@ -48,26 +40,18 @@ def salted_sum(
     )
 
 
-def salted_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_buckets: int = 8,
-    seed: int = 42,
-) -> DataFrame:
+def salted_join(facts: DataFrame, dim: DataFrame, key: str) -> DataFrame:
     """Skew-proof equi-join: facts draw a random salt, the dim side is
     replicated once per salt value, and the join key becomes (key, salt).
 
-    The hot fact key's rows land on ``salt_buckets`` different reducers
-    instead of one. Replication multiplies the dim shuffle volume by the
-    bucket count — use when the dim is too big to broadcast but small
-    enough to replicate (the awkward middle AQE sometimes misses).
+    The hot fact key's rows land on 8 different reducers instead of one.
+    Replication multiplies the dim shuffle volume by the bucket count —
+    use when the dim is too big to broadcast but small enough to
+    replicate (the awkward middle AQE sometimes misses).
     """
-    salted_facts = facts.withColumn(
-        "_salt", F.floor(F.rand(seed) * salt_buckets).cast("int")
-    )
+    salted_facts = facts.withColumn("_salt", F.floor(F.rand(42) * 8).cast("int"))
     replicated_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(7)))
     )
     return salted_facts.join(replicated_dim, on=[key, "_salt"], how="inner").drop(
         "_salt"

@@ -29,24 +29,6 @@ def token_count(col: str | Column) -> Column:
     return F.size(tokens(col))
 
 
-def word_shingles(tokens_col: str | Column, n: int = 3) -> Column:
-    """n-word shingles (the unit for MinHash / Jaccard near-dedup).
-
-    `transform(sequence(...))` builds all windows in one codegen'd pass;
-    documents shorter than n words produce an empty array.
-    """
-    t = _c(tokens_col)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(t) - (n - 1), F.lit(0)))
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i, n)))
-
-
-def char_ngrams(col: str | Column, n: int = 5) -> Column:
-    """Character n-grams of the raw text (alternative shingle unit)."""
-    c = _c(col)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(c) - (n - 1), F.lit(0)))
-    return F.transform(idx, lambda i: F.substring(c, i, n).cast("string"))
-
-
 def punct_ratio(col: str | Column) -> Column:
     """Fraction of characters that are punctuation."""
     c = _c(col)
@@ -83,33 +65,21 @@ def rolling_fingerprint(col: str | Column) -> Column:
     return F.md5(F.concat_ws(" ", tokens(col)))
 
 
-def chunk_documents(
-    docs,
-    chunk_tokens: int = 64,
-    overlap: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
+def chunk_documents(docs):
     """Split documents into overlapping token-window chunks — the
     pre-tokenization unit step of an LLM training pipeline.
 
-    Chunk i covers tokens [i·stride, i·stride + chunk_tokens) with
-    stride = chunk_tokens − overlap; the final partial window is kept.
+    Chunk i covers tokens [i·stride, i·stride + 64) with stride = 64 − 16
+    (a 16-token overlap); the final partial window is kept.
     Pure Column ops: one sequence over chunk starts + slice/concat per
     chunk, exploded to (doc, chunk) rows. No shuffle at all — chunking is
     embarrassingly row-local.
     """
     from pyspark.sql import functions as F
 
+    chunk_tokens, overlap = 64, 16
     stride = chunk_tokens - overlap
-    if stride <= 0:
-        # stride 0 silently divides by zero downstream (NULL n_chunks →
-        # explode(NULL) drops every document with ANSI off; runtime
-        # DIVIDE_BY_ZERO with Spark 4's ANSI default)
-        raise ValueError(
-            f"overlap ({overlap}) must be < chunk_tokens ({chunk_tokens})"
-        )
-    t = tokens(text_col)
+    t = tokens("text")
     n = F.size(t)
     # chunk start positions (1-based): 1, 1+stride, ... while start <= n
     n_chunks = F.when(n <= 0, 0).otherwise(
@@ -133,7 +103,7 @@ def chunk_documents(
     import pyspark.sql.functions as _F
 
     return docs.select(
-        _F.col(id_col).alias("doc_id"), _F.explode(chunks).alias("c")
+        "doc_id", _F.explode(chunks).alias("c")
     ).select(
         "doc_id",
         _F.col("c.chunk_id").cast("int").alias("chunk_id"),
@@ -142,13 +112,7 @@ def chunk_documents(
     )
 
 
-def pack_documents(
-    docs,
-    budget_tokens: int = 512,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shard_col: str | None = None,
-):
+def pack_documents(docs, budget_tokens: int = 512, shard_col: str | None = None):
     """Sequence packing: assign documents to fixed-budget bins in a
     deterministic order (doc id) via cumulative token counts — the
     'example packing' step that keeps training batches dense.
@@ -165,7 +129,7 @@ def pack_documents(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    cols = [F.col(id_col).alias("doc_id"), token_count(text_col).alias("n_tokens")]
+    cols = [F.col("doc_id"), token_count("text").alias("n_tokens")]
     group_keys = ["bin_id"]
     if shard_col is not None:
         cols.append(F.col(shard_col).alias("shard"))

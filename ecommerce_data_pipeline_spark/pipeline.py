@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from ecommerce_data_pipeline_spark.operators.dedup import dedup_by_key
 from ecommerce_data_pipeline_spark.operators.joins import enrich_facts
 from ecommerce_data_pipeline_spark.sources.readers import load_table
-from ecommerce_data_pipeline_spark.sources.writers import write_partitioned_parquet
 
 
 def flagship_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,18 +193,9 @@ def bucket_fact_tables(
     return li_name, ord_name
 
 
-def run_flagship(
-    spark: SparkSession, sf_dir: str, landing_path: str | None = None
-) -> DataFrame:
-    """entry() body: the flagship query, optionally landing the enriched
-    facts as a time-partitioned Parquet zone (S4 semantics)."""
-    result = flagship_revenue(spark, sf_dir)
-    if landing_path:
-        orders = load_table(spark, sf_dir, "orders")
-        write_partitioned_parquet(
-            orders, "o_orderdate", landing_path, granularity="month"
-        )
-    return result
+def run_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """entry() body: the flagship query."""
+    return flagship_revenue(spark, sf_dir)
 
 
 def run_flagship_observed(spark: SparkSession, sf_dir: str):

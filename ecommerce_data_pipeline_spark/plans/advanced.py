@@ -536,7 +536,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     frames = frame_sample(
-        attach_binary_payload(docs), n_frames=4, frame_bytes=16
+        attach_binary_payload(docs), frame_bytes=16
     )
     return frames.select(
         "media_id",

@@ -83,9 +83,7 @@ def top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("extension", "text", "dedup"),
 )
-def doc_novelty_score(
-    spark: SparkSession, sf_dir: str, out: dict | None = None
-) -> DataFrame:
+def doc_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document novelty: the share of the doc's distinct 3-gram
     shingles that appear in NO other document (1 = all content unique to
     this doc). The corpus-side signal between exact dedup (identical
@@ -93,12 +91,7 @@ def doc_novelty_score(
     document-frequency aggregation, one join back — and it ranks partial
     boilerplate that pairwise thresholds miss. At 100 TB both sides
     shuffle on the shingle hash; no pairwise expansion anywhere.
-    Shingles via the codegen'd posexplode+lead path (shingle_rows).
-
-    ``out``, when given, receives ``{"persisted": [sh]}`` so long-lived
-    callers can unpersist the pinned shingle relation (the jaccard_pairs
-    escape-hatch contract); the registry/bench path relies on the
-    harness-owned cache clear instead."""
+    Shingles via the codegen'd posexplode+lead path (shingle_rows)."""
     docs = load_table(spark, sf_dir, "documents")
     # Pinned: the shingle relation feeds BOTH the document-frequency
     # aggregate and the join-back, and without the pin each consumer
@@ -117,8 +110,6 @@ def doc_novelty_score(
         .withColumnsRenamed({"id": "doc_id"})
         .persist()
     )
-    if out is not None:
-        out["persisted"] = [sh]
     # Shingle document frequency: with (doc_id, s) distinct by
     # construction, row count per shingle IS its distinct-doc count —
     # partial-aggregates map-side, so a hot shingle ships one partial
@@ -324,11 +315,12 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle(iterations: int = 5, damping: float = 0.85) -> str:
+def _pagerank_oracle() -> str:
     """Unrolled-iteration PageRank oracle: fixed rounds → chained CTEs
     (DuckDB disallows aggregates in a recursive CTE's recursive term, so
     the recurrence is unrolled instead — byte-for-byte the same
     computation the Spark loop runs)."""
+    iterations, damping = 5, 0.85
     parts = [
         """
     e0 AS (SELECT DISTINCT l.l_suppkey + 10000000 AS id1, o.o_custkey AS id2
@@ -361,7 +353,7 @@ def _pagerank_oracle(iterations: int = 5, damping: float = 0.85) -> str:
 
 @register(
     "supplier_customer_pagerank",
-    oracle=_pagerank_oracle(iterations=5, damping=0.85),
+    oracle=_pagerank_oracle(),
     tags=("extension", "graph", "iterative"),
 )
 def supplier_customer_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,7 +376,7 @@ def supplier_customer_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ecommerce_data_pipeline_spark.operators.graph import pagerank
 
-    pr = pagerank(edges, damping=0.85, iterations=5)
+    pr = pagerank(edges)
     return pr.select(
         "node",
         F.col("deg").cast("bigint").alias("deg"),

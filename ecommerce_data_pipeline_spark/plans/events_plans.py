@@ -517,19 +517,15 @@ def stream_rate_limit_backpressure(
     slot history — calendar-bounded (here: hours of one month; at
     100 TB, key by tenant×type and the bound is hours × retention, never
     event volume)."""
-    return backpressure_replay(
-        load_table(spark, sf_dir, "events"), cap=_BP_CAP, epoch=_BP_EPOCH
-    )
+    return backpressure_replay(load_table(spark, sf_dir, "events"), cap=_BP_CAP)
 
 
-def backpressure_replay(
-    events: DataFrame, cap: int, epoch: str = _BP_EPOCH
-) -> DataFrame:
+def backpressure_replay(events: DataFrame, cap: int) -> DataFrame:
     """The cap-parameterized replay behind stream_rate_limit_backpressure
     (see its docstring for the closed form); exposed so tests can drive
     the same plan at caps that stress nonzero backlog."""
     slot = (
-        F.datediff(F.to_date("ts"), F.lit(epoch).cast("date")) * 24
+        F.datediff(F.to_date("ts"), F.lit(_BP_EPOCH).cast("date")) * 24
         + F.hour("ts")
     ).cast("long")
     arr = (

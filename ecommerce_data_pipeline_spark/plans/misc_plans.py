@@ -218,7 +218,7 @@ def salted_revenue_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_data_pipeline_spark.operators.skew import salted_sum
 
     li = load_table(spark, sf_dir, "lineitem")
-    return salted_sum(li, ["l_returnflag"], "l_extendedprice", salt_buckets=16)
+    return salted_sum(li, ["l_returnflag"], "l_extendedprice")
 
 
 @register(
@@ -867,9 +867,7 @@ def streaming_flagship_certificate(spark: SparkSession, sf_dir: str) -> DataFram
 
         pairs = spark.read.parquet(f"{wh}/neardup_pairs").drop("_batch_id")
         pairs = pairs.localCheckpoint()
-        pair_twin = minhash_lsh_neardup(
-            payload_text(all_msgs), threshold=0.8
-        ).localCheckpoint()
+        pair_twin = minhash_lsh_neardup(payload_text(all_msgs)).localCheckpoint()
         resends_flagged = pairs.count()
         neardup_equals_batch = rows_equal(
             pairs, pair_twin.select(*pairs.columns)

@@ -1014,9 +1014,7 @@ def _sql_huber_fit(m: str) -> str:
     """,
     tags=("extension", "ml", "robust-statistics"),
 )
-def robust_regression_huber_irls(
-    spark: SparkSession, sf_dir: str, out: dict | None = None
-) -> DataFrame:
+def robust_regression_huber_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand robust linear regression of line-item price (cents) on
     quantity via Huber IRLS — ordinary least squares, then TWO unrolled
     reweighting rounds where each row's weight is the Huber
@@ -1058,8 +1056,6 @@ def robust_regression_huber_irls(
         )
         .persist()
     )
-    if out is not None:
-        out["persisted"] = [base]  # jaccard_pairs escape-hatch contract
 
     def moments(rel: DataFrame, w: F.Column) -> DataFrame:
         return rel.groupBy("p_brand").agg(

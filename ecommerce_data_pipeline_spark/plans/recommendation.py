@@ -497,9 +497,7 @@ _SQL_REL_GAIN = (
     """,
     tags=("extension", "recommendation", "evaluation"),
 )
-def ndcg_ranking_eval(
-    spark: SparkSession, sf_dir: str, out: dict | None = None
-) -> DataFrame:
+def ndcg_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nDCG@10 evaluation of a retrieval ranking against GRADED
     relevance — the ranking-evaluation surface cf_holdout_hitrate's
     binary-hit nDCG does not cover (VERDICT r7 task #2). The "system"
@@ -550,10 +548,7 @@ def ndcg_ranking_eval(
         )
         .cast("int")
         .alias("rel"),
-    ).persist()  # two consumers (ranking + relevance); harness-owned
-    # cleanup by default, escape hatch below for long-lived callers
-    if out is not None:
-        out["persisted"] = [both]
+    ).persist()  # two consumers (ranking + relevance); harness-owned cleanup
     train = both.filter(F.col("train_qty").isNotNull()).select(
         "segment", "l_partkey", "train_qty"
     )

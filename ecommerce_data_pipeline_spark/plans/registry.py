@@ -46,27 +46,10 @@ REGISTRY: dict[str, Query] = {}
 # queries; this list pins which queries surface first, everything else
 # follows in registration order.
 #
-# Round-14 slate (50 slots, oracle-backed only) — MECHANICALLY EMITTED
-# by:
-#   python tools/grade_staleness.py --slate --through 13 \
-#     --pin streaming_flagship_certificate,rendezvous_hashing_audit,\
-# generalized_esd_outlier_test,attribution_shapley_values,\
-# link_prediction_resource_allocation,qini_uplift_curve,\
-# robust_regression_huber_irls,als_implicit_step_certificate,\
-# page_trend_yearly_revenue,kendalls_w_concordance,\
-# quade_weighted_friedman,kcore_peel_certificate,\
-# graph_core_decomposition_full,label_propagation_communities,\
-# modularity_lpa_communities,hits_hub_authority,dsir_importance_weights
-# Composition the tool encodes: NO never-graded oracle-backed arrivals
-# exist at r14 open (the r13 slate drained them), so flagship_revenue
-# (re-graded every round) leads, then the pins — the 17 oracle-backed
-# query paths this optimization round touched (the handshake-hardened
-# streaming flagship, the rewritten rendezvous/ESD/shapley/RA-linkpred/
-# qini/huber/ALS plans, the segment-year grid trio, and the six
-# broadcast-gate sites) — then the staleness rotation oldest-green-first
-# with alphabetical tie-break, draining the r5/r6 tail per
-# STALENESS_r14.md. tests/test_round14.py::test_slate_is_tool_emitted
-# pins this tuple to the tool's output byte-for-byte.
+# The slate (50 slots, oracle-backed only): flagship_revenue leads, then
+# the 17 oracle-backed query paths round 14 touched, then the oldest-green
+# rotation with alphabetical tie-break. tests/test_oracle.py rejects any
+# rows-only name in the first 50.
 GRADE_PRIORITY: tuple[str, ...] = (
     "flagship_revenue",
     "streaming_flagship_certificate",
@@ -119,11 +102,6 @@ GRADE_PRIORITY: tuple[str, ...] = (
     "pca_variance_certificate",
     "quantile_normalize_doclen",
 )
-
-# Rows-only entries allowed in the sampled prefix: NONE since r8 — every
-# slate slot is an oracle-backed hash grade (tests/test_oracle.py
-# rejects any rows-only name in the first 50).
-ROWS_ONLY_SLATE: frozenset[str] = frozenset()
 
 
 def _ordered() -> list[Query]:

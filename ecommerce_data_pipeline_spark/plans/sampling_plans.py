@@ -439,7 +439,7 @@ def sampling_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_li = li.count()
     f = 0.01
-    n_frac = sample_fraction(li, f, seed=42).count()
+    n_frac = sample_fraction(li, f).count()
     import math
 
     frac_ok = abs(n_frac - f * n_li) <= 5 * math.sqrt(f * n_li * (1 - f)) + 3
@@ -512,7 +512,7 @@ def stratified_sample_certificate(spark: SparkSession, sf_dir: str) -> DataFrame
         stratified_sample,
     )
 
-    sample = stratified_sample(docs, "lang", fractions, seed=42)
+    sample = stratified_sample(docs, "lang", fractions)
     kept = sample.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.count_distinct("doc_id").alias("nd_kept"),

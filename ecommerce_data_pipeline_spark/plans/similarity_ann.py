@@ -77,7 +77,7 @@ def embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    return lsh_bucketed_topk(queries, emb, dim=64, k=10, planes=4)
+    return lsh_bucketed_topk(queries, emb, dim=64)
 
 
 def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,9 +86,7 @@ def lsh_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the embedding-family analogue of minhash_recall_vs_exact."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    return lsh_bucketed_topk(
-        queries, emb, dim=64, k=10, planes=4, probe_hamming=4
-    )
+    return lsh_bucketed_topk(queries, emb, dim=64, probe_hamming=4)
 
 
 def ivf_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,7 +96,7 @@ def ivf_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    return ivf_topk(queries, emb, n_centroids=16, nprobe=16, k=10)
+    return ivf_topk(queries, emb, nprobe=16)
 
 
 def pq_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,9 +106,7 @@ def pq_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    return pq_topk(
-        queries, emb, dim=64, m=8, k_codes=16, k=10, rerank=1_000_000
-    )
+    return pq_topk(queries, emb, dim=64, rerank=1_000_000)
 
 
 def embedding_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -156,7 +152,7 @@ def embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    return ivf_topk(queries, emb, n_centroids=16, nprobe=4, k=10)
+    return ivf_topk(queries, emb, nprobe=4)
 
 
 def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,7 +165,7 @@ def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    return pq_topk(queries, emb, dim=64, m=8, k_codes=16, k=10, rerank=50)
+    return pq_topk(queries, emb, dim=64)
 
 
 def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:

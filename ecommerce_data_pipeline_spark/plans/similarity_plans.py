@@ -40,7 +40,7 @@ MAX_SHINGLE_DF = 64
 
 # Shared oracle CTE prefix: tokenized docs → distinct 3-gram shingles →
 # df-capped shingle relation → per-doc capped set sizes. Mirrors
-# df_capped_shingles + shingle_sets exactly.
+# df_capped_shingles exactly.
 _SQL_SHINGLES_CAPPED = f"""
     tok AS (SELECT doc_id, list_filter({_SQL_TOKENS}, t -> t <> '') AS ts FROM documents),
     sh_all AS (SELECT doc_id,
@@ -64,6 +64,21 @@ _SQL_EXACT_PAIRS = """
               JOIN sizes sa ON cand.id1 = sa.doc_id
               JOIN sizes sb ON cand.id2 = sb.doc_id
               WHERE common * 1.0 / (sa.n + sb.n - common) >= 0.8)"""
+
+# The exact-Jaccard pair relation in jaccard_pairs' output contract
+# (id1 < id2, common, n1, n2, jaccard; J >= 0.8) over whichever ``sh`` /
+# ``sizes`` CTEs precede it — the oracle of the four exact-pair queries.
+_SQL_JACCARD_PAIRS = """
+    pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS common
+              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+              GROUP BY 1, 2)
+    SELECT id1, id2, common,
+           CAST(sa.n AS BIGINT) AS n1, CAST(sb.n AS BIGINT) AS n2,
+           common * 1.0 / (sa.n + sb.n - common) AS jaccard
+    FROM pairs p
+    JOIN sizes sa ON p.id1 = sa.doc_id
+    JOIN sizes sb ON p.id2 = sb.doc_id
+    WHERE common * 1.0 / (sa.n + sb.n - common) >= 0.8"""
 
 # Connected components of ``pairs`` as a recursive-CTE transitive
 # closure: label(n) = min reachable node id — the SQL twin of
@@ -95,17 +110,7 @@ _SQL_SHINGLES_EXACT = f"""
 @register(
     "ngram_jaccard_neardup",
     oracle=f"""
-    WITH {_SQL_SHINGLES_CAPPED},
-    pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS common
-              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-    SELECT id1, id2, common,
-           CAST(sa.n AS BIGINT) AS n1, CAST(sb.n AS BIGINT) AS n2,
-           common * 1.0 / (sa.n + sb.n - common) AS jaccard
-    FROM pairs p
-    JOIN sizes sa ON p.id1 = sa.doc_id
-    JOIN sizes sb ON p.id2 = sb.doc_id
-    WHERE common * 1.0 / (sa.n + sb.n - common) >= 0.8
+    WITH {_SQL_SHINGLES_CAPPED},{_SQL_JACCARD_PAIRS}
     """,
     tags=("extension", "dedup"),
 )
@@ -128,17 +133,7 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # theorem), so its output must EQUAL the naive self-join's, unlike
     # the df-capped variant (changed semantics) or LSH (miss probability).
     oracle=f"""
-    WITH {_SQL_SHINGLES_EXACT},
-    pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS common
-              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-    SELECT id1, id2, common,
-           CAST(sa.n AS BIGINT) AS n1, CAST(sb.n AS BIGINT) AS n2,
-           common * 1.0 / (sa.n + sb.n - common) AS jaccard
-    FROM pairs p
-    JOIN sizes sa ON p.id1 = sa.doc_id
-    JOIN sizes sb ON p.id2 = sb.doc_id
-    WHERE common * 1.0 / (sa.n + sb.n - common) >= 0.8
+    WITH {_SQL_SHINGLES_EXACT},{_SQL_JACCARD_PAIRS}
     """,
     tags=("extension", "dedup"),
 )
@@ -162,7 +157,7 @@ def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache DURING execution — so repeated-execution harnesses own the
     # cleanup instead (bench.py clears the session cache between query
     # loops; Spark's LRU eviction bounds a single run).
-    return prefix_filter_jaccard_pairs(docs, threshold_num=4, threshold_den=5)
+    return prefix_filter_jaccard_pairs(docs, threshold_num=4)
 
 
 @register(
@@ -211,7 +206,7 @@ def minhash_lsh_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard ≥ 0.8 — the scale path: shuffle volume O(docs·bands), never
     all-pairs."""
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_neardup(docs, threshold=0.8)
+    return minhash_lsh_neardup(docs)
 
 
 @register(
@@ -222,17 +217,7 @@ def minhash_lsh_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair shows up as a driver hash mismatch, so this row certifies the
     # MinHash+LSH family's recall, not just its row count.
     oracle=f"""
-    WITH {_SQL_SHINGLES_EXACT},
-    pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS common
-              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-    SELECT id1, id2, common,
-           CAST(sa.n AS BIGINT) AS n1, CAST(sb.n AS BIGINT) AS n2,
-           common * 1.0 / (sa.n + sb.n - common) AS jaccard
-    FROM pairs p
-    JOIN sizes sa ON p.id1 = sa.doc_id
-    JOIN sizes sb ON p.id2 = sb.doc_id
-    WHERE common * 1.0 / (sa.n + sb.n - common) >= 0.8
+    WITH {_SQL_SHINGLES_EXACT},{_SQL_JACCARD_PAIRS}
     """,
     tags=("extension", "dedup", "lsh"),
 )
@@ -246,7 +231,7 @@ def minhash_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH path against the exact-pairs oracle turns the local recall
     pytest into a driver-certified hash match."""
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_neardup(docs, threshold=0.8)
+    return minhash_lsh_neardup(docs)
 
 
 @register(
@@ -639,7 +624,7 @@ def incremental_neardup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.filter(F.col("doc_id") % 7 != 0)
     delta = docs.filter(F.col("doc_id") % 7 == 0)
     base_sigs = signature_store(base)
-    return incremental_neardup(base_sigs, base, delta, threshold=0.8)
+    return incremental_neardup(base_sigs, base, delta)
 
 
 @register(
@@ -651,17 +636,7 @@ def incremental_neardup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the incremental contract promises — no pair the delta introduces is
     # missed, and no base×base pair is re-emitted — as a driver hash row.
     oracle=f"""
-    WITH {_SQL_SHINGLES_EXACT},
-    pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS common
-              FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-    SELECT id1, id2, common,
-           CAST(sa.n AS BIGINT) AS n1, CAST(sb.n AS BIGINT) AS n2,
-           common * 1.0 / (sa.n + sb.n - common) AS jaccard
-    FROM pairs p
-    JOIN sizes sa ON p.id1 = sa.doc_id
-    JOIN sizes sb ON p.id2 = sb.doc_id
-    WHERE common * 1.0 / (sa.n + sb.n - common) >= 0.8
+    WITH {_SQL_SHINGLES_EXACT},{_SQL_JACCARD_PAIRS}
       AND (id1 % 7 = 0 OR id2 % 7 = 0)
     """,
     tags=("extension", "dedup", "incremental", "certificate"),
@@ -681,7 +656,7 @@ def incremental_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.filter(F.col("doc_id") % 7 != 0)
     delta = docs.filter(F.col("doc_id") % 7 == 0)
     base_sigs = signature_store(base)
-    return incremental_neardup(base_sigs, base, delta, threshold=0.8)
+    return incremental_neardup(base_sigs, base, delta)
 
 
 @register(
@@ -972,22 +947,22 @@ _SIGN_GRID_BITS = 6
 
 
 def sign_grid_bits(
-    n_vectors: int,
-    target_bucket_rows: int = 1024,
-    min_bits: int = _SIGN_GRID_BITS,
-    max_bits: int = 24,
+    n_vectors: int, target_bucket_rows: int = 1024, max_bits: int = 24
 ) -> int:
     """Choose the orthant-grid width from corpus size: bits ≈
-    log2(N / target_bucket_rows), clamped. Expected within-bucket pair
-    volume is then Σ C(n_b, 2) ≈ N · target/2 — linear in N, not
-    O(N²/2^bits) with a fixed grid. ``max_bits`` must not exceed the
+    log2(N / target_bucket_rows), clamped to [_SIGN_GRID_BITS, max_bits].
+    Expected within-bucket pair volume is then Σ C(n_b, 2) ≈ N · target/2
+    — linear in N, not O(N²/2^bits) with a fixed grid. ``max_bits`` must not exceed the
     embedding dimension (sign bits beyond it don't exist); 24 covers
     any realistic embedding width."""
     import math
 
     if n_vectors <= target_bucket_rows:
-        return min_bits
-    return max(min_bits, min(max_bits, math.ceil(math.log2(n_vectors / target_bucket_rows))))
+        return _SIGN_GRID_BITS
+    return max(
+        _SIGN_GRID_BITS,
+        min(max_bits, math.ceil(math.log2(n_vectors / target_bucket_rows))),
+    )
 
 
 def _sql_sign_bucket(bits: int) -> str:
@@ -1023,7 +998,6 @@ def semantic_neardup_pairs(
     emb: DataFrame,
     threshold: float = 0.35,
     bits: int | None = None,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Sign-orthant-blocked exact-cosine near-dup pairs — the
     parameterized operator behind ``semantic_dedup_pairs``. ``bits=None``
@@ -1056,7 +1030,7 @@ def semantic_neardup_pairs(
     # STREAM side is spread first (broadcast-join parallelism follows the
     # streamed side — see spread_for_fanout) so bucket/norm projection and
     # the per-pair scoring fold run across all cores.
-    v = emb.select(F.col(id_col).alias("vec_id"), "embedding")
+    v = emb.select("vec_id", "embedding")
     a = (
         spread_for_fanout(
             v.select(F.col("vec_id").alias("id1"), F.col("embedding").alias("e1"))

@@ -230,7 +230,7 @@ def chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_data_pipeline_spark.operators.text import chunk_documents
 
     docs = load_table(spark, sf_dir, "documents")
-    return chunk_documents(docs, chunk_tokens=64, overlap=16)
+    return chunk_documents(docs)
 
 
 @register(

@@ -21,6 +21,15 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Local-mode driver heap: half the host's physical memory, at most
+    16g and at least 1g. A fixed 16g ceiling exceeds the whole of a
+    small host, so the JVM grows its heap instead of collecting until
+    the kernel kills it."""
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(16, ram_gib // 2))}g"
+
+
 def get_spark(
     app_name: str = "ecommerce_data_pipeline_spark",
     cpus: int | None = None,
@@ -57,7 +66,10 @@ def get_spark(
         # difference between pruning a range scan and reading the table.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # Local-mode memory headroom; ignored when a real cluster submits.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ecommerce_data_pipeline_spark.schemas import TESTDATA_TABLES, TRANSACTIONS_RAW
+from ecommerce_data_pipeline_spark.schemas import TRANSACTIONS_RAW
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -55,16 +55,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             {c: F.col(c).cast("timestamp") for c in ntz_cols}
         )
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every testdata table and register temp views for spark.sql use."""
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 def read_transactions_csv(

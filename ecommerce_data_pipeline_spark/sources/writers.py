@@ -74,15 +74,12 @@ def append_table(df: DataFrame, path: str) -> None:
     df.write.mode("append").parquet(path)
 
 
-def compact_landing(
-    spark, path: str, partition_cols: list[str] | None = None,
-    target_file_mb: int = 128,
-) -> int:
+def compact_landing(spark, path: str, partition_cols: list[str] | None = None) -> int:
     """Compact a landing zone's small files (the reference's one-file-per-
     Lambda-run layout, transactions_mock_data.py:82-102, produces exactly
     the small-files problem that kills scan throughput at 100 TB).
 
-    Rewrites the dataset with files sized toward ``target_file_mb`` and
+    Rewrites the dataset with files sized toward 128 MB and
     returns the output file-count estimate. Partition columns are
     preserved when given. Uses a scratch copy so the rewrite is not
     reading its own output.
@@ -97,7 +94,7 @@ def compact_landing(
     for root, _dirs, files in os.walk(path):
         total += sum(os.path.getsize(os.path.join(root, f)) for f in files
                      if f.endswith(".parquet"))
-    n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
+    n_files = max(1, math.ceil(total / (128 * 1024 * 1024)))
     tmp = f"{path}__compact_tmp"
     if partition_cols:
         # cluster BY the partition columns: round-robin repartition
@@ -181,7 +178,6 @@ def write_training_shards(
     path: str,
     key_col: str,
     records_per_shard: int,
-    salt: str = "shard#v1",
 ) -> DataFrame:
     """Training-data shard writer: a deterministic global shuffle +
     bounded-size Parquet shards + a per-shard row-count/key-range
@@ -196,8 +192,9 @@ def write_training_shards(
     cut different shards (measured: 9 files vs 8 on identical input).
     Instead:
 
-    - shard id = pmod(xxhash64(salt, key), n_shards) — an explicit,
-      layout-independent permutation reproducible from the salt alone;
+    - shard id = pmod(xxhash64("shard#v1", key), n_shards) — an
+      explicit, layout-independent permutation reproducible from the
+      salt alone;
     - n_shards = ceil(rows / records_per_shard); the one count job is
       the only extra pass;
     - one hash shuffle co-locates each shard, rows sort within a shard
@@ -223,6 +220,7 @@ def write_training_shards(
         raise ValueError(f"key_col {key_col!r} not in {df.columns}")
     n_rows = df.count()
     n_shards = max(1, math.ceil(n_rows / records_per_shard))
+    salt = "shard#v1"
     keyed = df.withColumn(
         "shard",
         F.pmod(F.xxhash64(F.lit(salt), F.col(key_col)), F.lit(n_shards)).cast(

@@ -147,10 +147,7 @@ def enrich_transactions(
 
 
 def flagship_batch_handler(
-    warehouse_root: str,
-    dim_products: DataFrame,
-    dim_customers: DataFrame,
-    neardup_threshold: float = 0.8,
+    warehouse_root: str, dim_products: DataFrame, dim_customers: DataFrame
 ):
     """The per-micro-batch body of the streaming flagship, exposed
     standalone so tests can crash-replay one batch directly (calling it
@@ -181,7 +178,6 @@ def flagship_batch_handler(
                 docs_path=f"{warehouse_root}/neardup_docs",
                 sigs_path=f"{warehouse_root}/neardup_sigs",
                 pairs_path=f"{warehouse_root}/neardup_pairs",
-                threshold=neardup_threshold,
             )
         finally:
             batch.unpersist()
@@ -239,9 +235,6 @@ def run_streaming_flagship(
     dim_products: DataFrame,
     dim_customers: DataFrame,
     *,
-    source: DataFrame | None = None,
-    watermark: str = "4 hours",
-    neardup_threshold: float = 0.8,
     available_now: bool = True,
     **queue_opts,
 ) -> StreamingQuery:
@@ -253,27 +246,18 @@ def run_streaming_flagship(
     with ``q.processAllAvailable()`` then ``q.stop()`` — the same
     micro-batch sequence without a query restart between triggers (the
     certificate uses this; per-restart planning overhead would otherwise
-    dominate a bounded drain). ``source`` overrides the default
-    ``queue_stream`` for callers composing their own overlays.
+    dominate a bounded drain). ``queue_opts`` are ``queue_stream``'s.
 
-    The watermark default (4 hours > the bounded queue's full event-time
+    The 4-hour dedup watermark (> the bounded queue's full event-time
     span) keeps dedup state alive across every drain run of the
     certificate/tests; a production deployment sets it to its actual
     redelivery horizon so state stays O(rate × watermark)."""
-    if source is not None and queue_opts:
-        raise ValueError(
-            "source and queue options are mutually exclusive — a "
-            f"caller-composed source ignores {sorted(queue_opts)}; bake "
-            "them into the source (queue_stream/resend_overlay) instead"
-        )
-    raw = source if source is not None else queue_stream(spark, **queue_opts)
+    raw = queue_stream(spark, **queue_opts)
     with_ts = raw.withColumn("ts", parse_reference_ts(F.col("transaction_date")))
     deduped = stream_dedup_within_watermark(
-        with_ts, ["transaction_id"], "ts", watermark=watermark
+        with_ts, ["transaction_id"], "ts", watermark="4 hours"
     )
-    handler = flagship_batch_handler(
-        warehouse_root, dim_products, dim_customers, neardup_threshold
-    )
+    handler = flagship_batch_handler(warehouse_root, dim_products, dim_customers)
     writer = deduped.writeStream.foreachBatch(handler).option(
         "checkpointLocation", checkpoint
     )

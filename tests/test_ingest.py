@@ -343,7 +343,7 @@ def test_compact_landing_partitioned_layout_stays_compact(spark, tmp_path):
 
     before = len(parquet_files())
     assert before >= 40
-    compact_landing(spark, path, partition_cols=["day"], target_file_mb=128)
+    compact_landing(spark, path, partition_cols=["day"])
     after = len(parquet_files())
     assert after <= 5  # ~1 file per partition dir at this tiny size
     got = spark.read.parquet(path)

@@ -12,10 +12,7 @@ from pyspark.sql import functions as F
 from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
-
-
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.plan_invariants import executed_plan
 
 
 def test_lloyd_step_broadcasts_centroids(spark):
@@ -23,7 +20,7 @@ def test_lloyd_step_broadcasts_centroids(spark):
     must broadcast the centroid side — a shuffle there would move the
     whole exploded corpus for a 640-row model."""
     df = REGISTRY["kmeans_lloyd_step_certificate"].fn(spark, SF_SMOKE)
-    plan = _executed_plan(df)
+    plan = executed_plan(df)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -86,7 +83,7 @@ def test_classifier_is_single_pass_no_join(spark):
     """Inference = one hash aggregate over the token stream: the hashing
     trick means NO join against a vocabulary/weight table may appear."""
     df = REGISTRY["hashed_linear_classifier"].fn(spark, SF_SMOKE)
-    plan = _executed_plan(df)
+    plan = executed_plan(df)
     assert "Join" not in plan
     rows = df.collect()
     assert rows, "classifier produced no rows"
@@ -111,7 +108,7 @@ def test_stupid_backoff_scores_are_valid_logprobs(spark):
     for r in rows:
         assert r["n_trigrams"] >= 1
         assert r["avg_logscore"] <= 0.0
-    plan = _executed_plan(out)
+    plan = executed_plan(out)
     assert "CartesianProduct" not in plan
 
 
@@ -147,7 +144,7 @@ def test_xcorr_lag_zero_is_symmetric_bounded(spark):
         assert r["n_pairs"] > 2
         if r["xcorr"] is not None:
             assert -1.0 <= r["xcorr"] <= 1.0
-    plan = _executed_plan(REGISTRY["revenue_xcorr_lags"].fn(spark, SF_SMOKE))
+    plan = executed_plan(REGISTRY["revenue_xcorr_lags"].fn(spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
 
 
@@ -281,7 +278,7 @@ def test_blocking_certificate_set_algebra(spark):
     and reduction are valid ratios; no CartesianProduct anywhere (the
     ground truth must come from the length-band equi-join)."""
     df = REGISTRY["blocking_quality_certificate"].fn(spark, SF_SMOKE)
-    plan = _executed_plan(df)
+    plan = executed_plan(df)
     assert "CartesianProduct" not in plan
     r = df.collect()[0]
     assert r["n_retained"] <= min(r["n_true_matches"], r["n_blocked_candidates"])

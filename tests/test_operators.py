@@ -206,7 +206,7 @@ def test_operators_on_empty_and_tiny_inputs(spark):
 
     empty_docs = spark.createDataFrame([], "doc_id long, text string")
     assert jaccard_pairs(empty_docs, 0.8).count() == 0
-    assert minhash_lsh_neardup(empty_docs, 0.8).count() == 0
+    assert minhash_lsh_neardup(empty_docs).count() == 0
 
     one_doc = spark.createDataFrame([(1, "only two")], "doc_id long, text string")
     assert jaccard_pairs(one_doc, 0.8).count() == 0  # < 3 tokens → no shingles
@@ -246,7 +246,7 @@ def test_stratified_sample_proportions_and_determinism(spark):
 
     docs = load_table(spark, SF_SMOKE, "documents")
     fractions = {"en": 0.3, "de": 1.0, "fr": 1.0, "es": 1.0, "zh": 1.0}
-    out = stratified_sample(docs, "lang", fractions, seed=42)
+    out = stratified_sample(docs, "lang", fractions)
     base = {r["lang"]: r["n"] for r in docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
     got = {r["lang"]: r["n"] for r in out.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
     for lang, frac in fractions.items():
@@ -258,7 +258,7 @@ def test_stratified_sample_proportions_and_determinism(spark):
     n, p = base["en"], 0.3
     sigma = math.sqrt(n * p * (1 - p))
     assert abs(got.get("en", 0) - n * p) <= 3 * sigma
-    again = stratified_sample(docs, "lang", fractions, seed=42)
+    again = stratified_sample(docs, "lang", fractions)
     assert sorted(r["doc_id"] for r in out.select("doc_id").collect()) == sorted(
         r["doc_id"] for r in again.select("doc_id").collect()
     )

@@ -117,14 +117,10 @@ def test_grade_priority_is_sound():
     pins that prefix by hand each round. A typo'd name would silently
     drop out of the prefix and the driver would grade something
     unintended — fail loudly instead: every pinned name must resolve,
-    no duplicates, and every rows-only entry in the sampled prefix must
-    be DECLARED below (the r7 slate deliberately spends 8 slots giving
-    the never-sampled rows-only tier its first CORRECTNESS rows —
-    VERDICT r6 task #3; anything else rows-only in the prefix is a
-    mistake)."""
+    no duplicates, and no entry in the sampled prefix may be rows-only
+    (every slot is an oracle-backed hash grade)."""
     from ecommerce_data_pipeline_spark.plans.registry import (
         GRADE_PRIORITY,
-        ROWS_ONLY_SLATE,
         REGISTRY,
         oracle_sql,
         queries,
@@ -136,10 +132,7 @@ def test_grade_priority_is_sound():
     sampled = list(queries())[:50]
     oracles = oracle_sql()
     weak = [n for n in sampled if n not in oracles]
-    undeclared = [n for n in weak if n not in ROWS_ONLY_SLATE]
-    assert undeclared == [], (
-        f"driver-sampled prefix has UNDECLARED rows-only entries: {undeclared}"
-    )
+    assert weak == [], f"driver-sampled prefix has rows-only entries: {weak}"
     # Slate-size drift guard (advisor r9): with exactly 50 pins there is
     # zero slack — one more prepended name would silently push the last
     # rotation entry out of the graded prefix. Pin the length so drift

@@ -22,6 +22,7 @@ from pyspark.sql.types import (
 from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
+from tests.plan_invariants import executed_plan
 
 
 # ---------------------------------------------------------------------------
@@ -208,10 +209,6 @@ def test_dp_cap_still_raises_on_true_reorder(spark, tmp_path):
 # plan-shape pins for the r10 queries
 
 
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_consistent_hashing_plans_case_lookup_no_joins(spark):
     """The ring-audit scale claim, re-pinned for the r13 form: the ring
     is a plan-build-time constant, so key->shard assignment compiles to
@@ -237,7 +234,7 @@ def test_consistent_hashing_plans_case_lookup_no_joins(spark):
 
     df = REGISTRY["consistent_hashing_rebalance_audit"].fn(spark, SF_SMOKE)
     audit_bytes = input_bytes(df.collect)
-    plan = _executed_plan(df)
+    plan = executed_plan(df)
     assert "SortMergeJoin" not in plan
     assert "CASE WHEN" in plan and "kpos" in plan  # the literal lookup
     # r10's persisted fact-shaped intermediate is gone...

@@ -14,10 +14,7 @@ from pyspark.sql import functions as F
 from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
-
-
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.plan_invariants import executed_plan
 
 
 def test_approx_count_distinct_within_rsd(spark):
@@ -69,7 +66,7 @@ def test_bucketed_join_has_no_shuffle(spark):
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         assert joined.count() == li.count()
-        plan = _executed_plan(joined)
+        plan = executed_plan(joined)
         assert "SortMergeJoin" in plan
         assert "Exchange hashpartitioning" not in plan, (
             "bucketed join should not shuffle:\n" + plan
@@ -117,7 +114,7 @@ def test_flagship_bucketed_zero_fact_shuffle(spark):
             load_table(spark, SF_SMOKE, "customer"),
             co_located=True,
         )
-        plan = _executed_plan(out)
+        plan = executed_plan(out)
         assert plan.count("BroadcastHashJoin") >= 2  # dims still broadcast
         n_exchanges = plan.count("Exchange hashpartitioning")
         assert n_exchanges <= 1, (
@@ -146,7 +143,7 @@ def test_flagship_plan_shape(spark):
     hash-partitioning exchange for the fact side (+1 for the final agg)."""
     from ecommerce_data_pipeline_spark.pipeline import flagship_revenue
 
-    plan = _executed_plan(flagship_revenue(spark, SF_SMOKE))
+    plan = executed_plan(flagship_revenue(spark, SF_SMOKE))
     assert plan.count("BroadcastHashJoin") >= 2  # part + customer dims
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges <= 2, f"fact should shuffle once (+agg): {n_exchanges}"
@@ -168,7 +165,7 @@ def test_filter_pushdown_reaches_scan(spark):
     """P5 predicates appear as PushedFilters in the Parquet scan, and
     column pruning shrinks ReadSchema to the selected columns."""
     q = REGISTRY["filter_predicates"].fn(spark, SF_SMOKE)
-    plan = _executed_plan(q)
+    plan = executed_plan(q)
     assert "PushedFilters: [" in plan
     assert "GreaterThan(l_quantity,30" in plan.replace(" ", "")
     # pruned: the scan must not read all 11 lineitem columns
@@ -179,7 +176,7 @@ def test_filter_pushdown_reaches_scan(spark):
 def test_topk_plans_take_ordered(spark):
     """O3: orderBy+limit must plan as TakeOrderedAndProject (per-partition
     heaps), not a global Sort."""
-    plan = _executed_plan(REGISTRY["top_k_customers"].fn(spark, SF_SMOKE))
+    plan = executed_plan(REGISTRY["top_k_customers"].fn(spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -203,7 +200,7 @@ def test_dynamic_partition_pruning(spark):
         # dim: one row per year, filtered to a single year
         years = fact.select("year").distinct().filter(F.col("year") == 1997)
         joined = fact.join(years.hint("broadcast"), "year")
-        plan = _executed_plan(joined)
+        plan = executed_plan(joined)
         assert "dynamicpruning" in plan.lower() or "PartitionFilters: [isnotnull(year" in plan, plan[:2000]
         expected = orders.filter(F.year("o_orderdate") == 1997).count()
         assert joined.count() == expected
@@ -219,7 +216,7 @@ def test_topk_per_group_plans_window_group_limit(spark):
     corpus. Guarded for the ANN scorers (full-corpus fan-in per query)
     and the per-group ranking query."""
     for q in ("embedding_cosine_topk", "window_rank_in_group"):
-        plan = _executed_plan(REGISTRY[q].fn(spark, SF_SMOKE))
+        plan = executed_plan(REGISTRY[q].fn(spark, SF_SMOKE))
         assert "WindowGroupLimit" in plan, f"{q}: no WindowGroupLimit\n{plan[:2000]}"
 
 
@@ -254,7 +251,7 @@ def test_item_item_cf_plans_equi_join_not_cartesian(spark):
     l_orderkey — a CartesianProduct/BroadcastNestedLoopJoin would mean
     the basket key fell out of the join condition (O(N²) at scale)."""
     df = REGISTRY["item_item_cf_topk"].fn(spark, SF_SMOKE)
-    plan = _executed_plan(df)
+    plan = executed_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -264,7 +261,7 @@ def test_rrf_rankings_plan_take_ordered(spark):
     TakeOrderedAndProject (distributed top-k), not a global sort or a
     single-reducer window over all matched docs."""
     df = REGISTRY["rrf_rank_fusion"].fn(spark, SF_SMOKE)
-    plan = _executed_plan(df)
+    plan = executed_plan(df)
     assert "TakeOrderedAndProject" in plan
 
 
@@ -274,7 +271,7 @@ def test_trimmed_stats_window_runs_on_histogram_not_fact(spark):
     HashAggregate keyed by (prio, c) has to sit BELOW the Window in the
     executed plan."""
     df = REGISTRY["trimmed_order_value_stats"].fn(spark, SF_SMOKE)
-    plan = _executed_plan(df)
+    plan = executed_plan(df)
     win = plan.find("Window")
     assert win != -1
     below = plan[win:]
@@ -287,7 +284,7 @@ def test_cusum_window_runs_on_daily_not_fact(spark):
     day has to sit BELOW the Window in the executed plan (the
     boundedness argument for its _BOUNDED_WINDOW_OK exemption)."""
     df = REGISTRY["revenue_cusum_changepoint"].fn(spark, SF_SMOKE)
-    plan = _executed_plan(df)
+    plan = executed_plan(df)
     win = plan.find("Window")
     assert win != -1
     assert "HashAggregate" in plan[win:]  # daily agg feeds the window
@@ -299,7 +296,7 @@ def test_survival_global_window_runs_on_buckets(spark):
     bucket windows are the bucket/episode reductions — the global window
     never consumes per-customer rows directly."""
     df = REGISTRY["repeat_purchase_survival"].fn(spark, SF_SMOKE)
-    plan = _executed_plan(df)
+    plan = executed_plan(df)
     assert "windowspecdefinition(o_custkey" in plan
     win = plan.find("Window")
     assert win != -1
@@ -339,6 +336,6 @@ def test_scale_mode_cluster_pins_one_fact_scan(spark):
     """Each multi-consumer plan keeps the measured-faster pipelined form:
     no InMemory* nodes, exactly N redundant column-pruned fact passes."""
     for name, (table, n_passes) in _MULTI_CONSUMER_QUERIES.items():
-        plan = _executed_plan(REGISTRY[name].fn(spark, SF_SMOKE))
+        plan = executed_plan(REGISTRY[name].fn(spark, SF_SMOKE))
         assert "InMemoryTableScan" not in plan, name
         assert len(_fact_scan_lines(plan, table)) == n_passes, name

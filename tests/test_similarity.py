@@ -29,7 +29,7 @@ def _pairs(df):
 def test_minhash_lsh_matches_exact_jaccard(spark):
     docs = load_table(spark, SF_SMOKE, "documents")
     exact = _pairs(jaccard_pairs(docs, threshold=0.8))
-    lsh = _pairs(minhash_lsh_neardup(docs, threshold=0.8))
+    lsh = _pairs(minhash_lsh_neardup(docs))
     assert exact, "expected planted near-dup pairs in the fixture"
     # LSH candidates are verified with exact jaccard → no false positives
     assert lsh <= exact
@@ -53,7 +53,7 @@ def test_lsh_ann_recall_vs_bruteforce(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     exact = cosine_topk(queries, emb, k=10).collect()
-    approx = lsh_bucketed_topk(queries, emb, dim=64, k=10, planes=4).collect()
+    approx = lsh_bucketed_topk(queries, emb, dim=64).collect()
     exact_set = {(r["query_id"], r["cand_id"]) for r in exact}
     approx_set = {(r["query_id"], r["cand_id"]) for r in approx}
     # bucketed search scores ~1/64 of the corpus; nearest neighbors
@@ -80,7 +80,7 @@ def test_multimodal_feature_schema_and_determinism(spark):
 def test_frame_sample_shapes(spark):
     docs = load_table(spark, SF_SMOKE, "documents").limit(10)
     media = attach_binary_payload(docs)
-    frames = frame_sample(media, n_frames=4, frame_bytes=8).collect()
+    frames = frame_sample(media, frame_bytes=8).collect()
     for r in frames:
         assert len(r["frames"]) == 4
         assert all(f is not None and len(f) <= 8 for f in r["frames"])
@@ -93,7 +93,7 @@ def test_ivf_recall_vs_bruteforce(spark):
     queries = emb.filter(F.col("vec_id") < 8)
     exact = {(r["query_id"], r["cand_id"])
              for r in cosine_topk(queries, emb, k=10).collect()}
-    approx_rows = ivf_topk(queries, emb, n_centroids=16, nprobe=4, k=10).collect()
+    approx_rows = ivf_topk(queries, emb, nprobe=4).collect()
     approx = {(r["query_id"], r["cand_id"]) for r in approx_rows}
     recall = len(exact & approx) / len(exact)
     # probing 4/16 lists of near-uniform vectors ≈ 25% baseline; nearest
@@ -101,7 +101,7 @@ def test_ivf_recall_vs_bruteforce(spark):
     assert recall >= 0.3, f"IVF recall {recall} too low"
     # determinism: same seed → same result
     again = {(r["query_id"], r["cand_id"])
-             for r in ivf_topk(queries, emb, n_centroids=16, nprobe=4, k=10).collect()}
+             for r in ivf_topk(queries, emb, nprobe=4).collect()}
     assert approx == again
 
 
@@ -161,7 +161,7 @@ def test_pq_recall_and_determinism(spark):
     exact_rows = cosine_topk(queries, emb, k=10).collect()
     exact = {(r["query_id"], r["cand_id"]) for r in exact_rows}
     exact_cos = {(r["query_id"], r["cand_id"]): r["cosine"] for r in exact_rows}
-    approx_rows = pq_topk(queries, emb, dim=64, m=8, k_codes=16, k=10, rerank=50).collect()
+    approx_rows = pq_topk(queries, emb, dim=64).collect()
     approx = {(r["query_id"], r["cand_id"]) for r in approx_rows}
     recall = len(exact & approx) / len(exact)
     # 8×16 codebooks on near-uniform 64-dim vectors is a hard regime for
@@ -172,7 +172,7 @@ def test_pq_recall_and_determinism(spark):
         if key in exact_cos:
             assert r["cosine"] == exact_cos[key]
     again = {(r["query_id"], r["cand_id"])
-             for r in pq_topk(queries, emb, dim=64, m=8, k_codes=16, k=10, rerank=50).collect()}
+             for r in pq_topk(queries, emb, dim=64).collect()}
     assert approx == again
 
 
@@ -182,7 +182,7 @@ def test_pq_training_collect_is_bounded(spark):
     from ecommerce_data_pipeline_spark.operators.pq import train_pq_codebooks
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    books = train_pq_codebooks(emb, dim=64, m=8, k_codes=16, max_train_rows=64)
+    books = train_pq_codebooks(emb, dim=64, max_train_rows=64)
     assert len(books) == 8
     assert all(len(b) <= 16 for b in books)
     assert all(len(c) == 8 for b in books for c in b)
@@ -202,14 +202,14 @@ def test_incremental_neardup_matches_full_run(spark):
     base = docs.filter(F.col("doc_id") % 7 != 0)
     delta = docs.filter(F.col("doc_id") % 7 == 0)
     delta_ids = {r[0] for r in delta.select("doc_id").collect()}
-    full = minhash_lsh_neardup(docs, threshold=0.8).collect()
+    full = minhash_lsh_neardup(docs).collect()
     expected = {
         (r["id1"], r["id2"], round(r["jaccard"], 9))
         for r in full
         if r["id1"] in delta_ids or r["id2"] in delta_ids
     }
     inc = incremental_neardup(
-        signature_store(base), base, delta, threshold=0.8
+        signature_store(base), base, delta
     ).collect()
     got = {(r["id1"], r["id2"], round(r["jaccard"], 9)) for r in inc}
     assert got == expected
@@ -226,7 +226,7 @@ def test_df_cap_bounds_pair_join_volume(spark):
     volume linear in corpus size (<= max_df * shingle_rows)."""
     from ecommerce_data_pipeline_spark.operators.similarity import (
         df_capped_shingles,
-        shingle_sets,
+        shingle_rows,
     )
 
     footer = (
@@ -259,7 +259,7 @@ def test_df_cap_bounds_pair_join_volume(spark):
         )
 
     K = 64
-    un = join_volume(shingle_sets(big))
+    un = join_volume(shingle_rows(big))
     cap = join_volume(df_capped_shingles(big, max_df=K))
     assert cap["max_df"] <= K
     assert cap["vol"] <= K * cap["rows"]  # linear-in-corpus bound
@@ -275,8 +275,8 @@ def test_pq_training_sample_layout_independent(spark):
     from ecommerce_data_pipeline_spark.operators.pq import train_pq_codebooks
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    b1 = train_pq_codebooks(emb.coalesce(1), dim=64, m=8, k_codes=8, max_train_rows=40)
-    b7 = train_pq_codebooks(emb.repartition(7), dim=64, m=8, k_codes=8, max_train_rows=40)
+    b1 = train_pq_codebooks(emb.coalesce(1), dim=64, k_codes=8, max_train_rows=40)
+    b7 = train_pq_codebooks(emb.repartition(7), dim=64, k_codes=8, max_train_rows=40)
     assert b1 == b7
 
 
@@ -379,7 +379,7 @@ def test_multiprobe_hamming2_probes_more_and_recall_monotone(spark):
     def recall(h):
         got = {(r["query_id"], r["cand_id"])
                for r in lsh_bucketed_topk(
-                   queries, emb, dim=64, k=10, planes=4, probe_hamming=h
+                   queries, emb, dim=64, probe_hamming=h
                ).collect()}
         return len(got & exact) / len(exact)
 
@@ -387,7 +387,7 @@ def test_multiprobe_hamming2_probes_more_and_recall_monotone(spark):
     import pytest
 
     with pytest.raises(ValueError, match="probe_hamming"):
-        lsh_bucketed_topk(queries, emb, dim=64, planes=4, probe_hamming=5)
+        lsh_bucketed_topk(queries, emb, dim=64, probe_hamming=5)
 
 
 def test_sign_grid_bits_bound_pair_join_volume(spark):
@@ -541,7 +541,7 @@ def test_pq_encode_drops_null_and_wrong_length_vectors(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings").select(
         "vec_id", "embedding"
     ).limit(50)
-    books = train_pq_codebooks(emb, dim=64, m=8, k_codes=4)
+    books = train_pq_codebooks(emb, dim=64, k_codes=4)
     bad = spark.createDataFrame(
         [(9001, None), (9002, [0.1] * 3)],
         StructType(
@@ -572,7 +572,7 @@ def test_pq_encode_vectorized_bit_identical_to_fold(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings").select(
         "vec_id", "embedding"
     )
-    books = train_pq_codebooks(emb, dim=64, m=8, k_codes=16)
+    books = train_pq_codebooks(emb, dim=64)
     fold = {
         r["cand_id"]: list(r["codes"])
         for r in pq_encode(emb, books, vectorized=False).collect()
@@ -648,7 +648,7 @@ def test_incremental_neardup_tolerates_overlapping_delta(spark):
     clean = {
         tuple(r)
         for r in incremental_neardup(
-            signature_store(base), base, delta, threshold=0.8
+            signature_store(base), base, delta
         ).collect()
     }
     # overlap: delta re-delivers half of base's docs verbatim
@@ -659,7 +659,7 @@ def test_incremental_neardup_tolerates_overlapping_delta(spark):
     dirty = {
         tuple(r)
         for r in incremental_neardup(
-            signature_store(base), base, overlap_delta, threshold=0.8
+            signature_store(base), base, overlap_delta
         ).collect()
         if r["id1"] % 2 == 1 or r["id2"] % 2 == 1
     }
@@ -684,7 +684,7 @@ def test_prefix_filter_matches_uncapped_exact(spark):
     }
     pf = {
         tuple(r)
-        for r in prefix_filter_jaccard_pairs(docs, 4, 5).collect()
+        for r in prefix_filter_jaccard_pairs(docs, 4).collect()
     }
     assert naive, "expected planted near-dup pairs in the fixture"
     assert pf == naive
@@ -698,7 +698,7 @@ def test_prefix_filter_candidate_volume_bounded(spark):
     without changing semantics (unlike the df cap)."""
     from pyspark.sql import Window
     from ecommerce_data_pipeline_spark.operators.similarity import (
-        shingle_sets,
+        shingle_rows,
     )
 
     footer = (
@@ -723,7 +723,7 @@ def test_prefix_filter_candidate_volume_bounded(spark):
             .first()["vol"]
         )
 
-    sh = shingle_sets(big, "doc_id", "text")
+    sh = shingle_rows(big)
     df_tbl = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("id")
     ranked = sh.join(df_tbl, "s").select(
@@ -750,9 +750,9 @@ def test_prefix_filter_rejects_bad_threshold(spark):
 
     docs = load_table(spark, SF_SMOKE, "documents")
     with pytest.raises(ValueError):
-        prefix_filter_jaccard_pairs(docs, 0, 5)
+        prefix_filter_jaccard_pairs(docs, 0)
     with pytest.raises(ValueError):
-        prefix_filter_jaccard_pairs(docs, 6, 5)
+        prefix_filter_jaccard_pairs(docs, 6)
 
 
 def test_sign_grid_bits_keeps_pair_volume_subquadratic_at_10x(spark):

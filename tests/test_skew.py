@@ -14,7 +14,7 @@ def test_salted_sum_equals_plain_sum(spark):
     li = load_table(spark, SF_SMOKE, "lineitem")
     salted = {
         r["l_returnflag"]: (r["sum_l_quantity"], r["n_rows"])
-        for r in salted_sum(li, ["l_returnflag"], "l_quantity", 16).collect()
+        for r in salted_sum(li, ["l_returnflag"], "l_quantity").collect()
     }
     plain = {
         r["l_returnflag"]: (r["s"], r["n"])
@@ -33,7 +33,7 @@ def test_salted_join_equals_plain_join(spark):
         "l_orderkey", "l_linenumber", F.col("l_partkey").alias("p_partkey")
     )
     part = load_table(spark, SF_SMOKE, "part").select("p_partkey", "p_brand")
-    salted = salted_join(li, part, "p_partkey", salt_buckets=8)
+    salted = salted_join(li, part, "p_partkey")
     plain = li.join(part, "p_partkey")
     assert salted.count() == plain.count()
     assert salted.select("l_orderkey", "l_linenumber", "p_brand").exceptAll(

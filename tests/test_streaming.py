@@ -70,7 +70,7 @@ def test_stream_dedup_drops_redelivered_batch(spark, landing_dir, events_schema)
 def test_tumbling_counts_match_batch(spark, landing_dir, events_schema):
     stream = read_file_stream(spark, landing_dir, events_schema)
     deduped = stream_dedup(stream, ["event_id"], "ts", watermark="1 hour")
-    agg = tumbling_counts(deduped, window_len="5 minutes", watermark=None)
+    agg = tumbling_counts(deduped, watermark=None)
     name = _drain(agg, output_mode="complete")
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
@@ -93,7 +93,7 @@ def test_tumbling_counts_match_batch(spark, landing_dir, events_schema):
 def test_session_windows_stream(spark, landing_dir, events_schema):
     stream = read_file_stream(spark, landing_dir, events_schema)
     deduped = stream_dedup(stream, ["event_id"], "ts", watermark="1 hour")
-    sess = session_aggregate(deduped, gap="30 minutes", watermark=None)
+    sess = session_aggregate(deduped, watermark=None)
     name = _drain(sess, output_mode="complete")
     rows = spark.table(name).collect()
     assert rows
@@ -136,7 +136,7 @@ def test_stream_stream_join_bounded(spark, landing_dir, events_schema):
         "user_id", F.col("ts").alias("s_ts"), F.col("event_id").alias("s_id")
     )
     joined = stream_stream_join(
-        purchases, signups, on="user_id", left_ts="ts", right_ts="s_ts"
+        purchases, signups, on="user_id", right_ts="s_ts"
     ).select("p_id", "s_id")
     name = _drain(joined)
     got = {(r["p_id"], r["s_id"]) for r in spark.table(name).collect()}
@@ -463,7 +463,6 @@ def test_streaming_incremental_neardup_matches_batch_run(spark):
                 sigs_path=os.path.join(root, "sigs"),
                 pairs_path=os.path.join(root, "pairs"),
                 checkpoint=os.path.join(root, "ckpt"),
-                threshold=0.8,
             )
         )
         got = {
@@ -472,7 +471,7 @@ def test_streaming_incremental_neardup_matches_batch_run(spark):
         }
         expected = {
             (r["id1"], r["id2"])
-            for r in minhash_lsh_neardup(docs, threshold=0.8).collect()
+            for r in minhash_lsh_neardup(docs).collect()
         }
         assert got == expected and len(expected) > 0
         # store completeness: every doc landed exactly once
@@ -834,7 +833,5 @@ def test_retry_retries_only_on_handshake_and_is_bounded():
         raise RuntimeError(_SIG)
 
     with pytest.raises(RuntimeError):
-        run_stream_with_handshake_retry(
-            always_flaky, attempts=3, backoff_sec=0.0
-        )
+        run_stream_with_handshake_retry(always_flaky, backoff_sec=0.0)
     assert calls["n"] == 3
