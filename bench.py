@@ -45,6 +45,8 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 RUNS = 3
 PROFILE = os.path.join(REPO, "BENCH_PROFILE.json")
 
+# The first 21 entries are CORE21 (below). The stream certificates run an
+# eager streaming lifecycle inside the query function and are not benched.
 HEADLINE = [
     "flagship_revenue",
     "q1_pricing_summary",
@@ -67,137 +69,59 @@ HEADLINE = [
     "pivot_priority_counts",
     "percentiles_exact",
     "q7_volume_shipping",
-    # round 2: the heaviest new TPC-H shapes (correlated-min window,
-    # 5-way profit join, double-negation exists). The suite wall grows
-    # accordingly — BASELINE.md notes the 21→24 query change.
     "q2_min_cost_supplier",
     "q9_product_type_profit",
     "q21_suppliers_kept_waiting",
-    # round 3: the heaviest new extension ops (PQ ANN with relational
-    # encode; shingle-DF novelty scoring). 24→26 queries — BASELINE.md
-    # tracks the set change for cross-round wall comparisons.
     "embedding_pq_topk",
     "doc_novelty_score",
-    # round 4: the heaviest new curation queries (bigram LM scoring,
-    # source-overlap contamination matrix). 26→28; core21 unchanged.
     "bigram_logprob_score",
     "source_overlap_matrix",
-    # round 4b: cluster-aware split (CC iteration) and substring-granular
-    # dedup. 28→30; core21 unchanged.
     "leakage_safe_split",
     "cross_doc_substring_dups",
-    # round 4c: the heaviest of the semantic-dedup/ANN-tuning additions.
-    # 30→32; core21 unchanged.
     "semantic_dedup_keeplist",
     "ivf_probe_recall_curve",
-    # round 4d: the Poisson-bootstrap CI (digest-bound by design — see
-    # the three-way formulation measurement in plans/profiling.py).
-    # 32→33; core21 unchanged.
     "bootstrap_ci_order_value",
-    # round 5: kNN label voting and MMR diversity re-ranking (the new
-    # similarity-application tier). 33→35; core21 unchanged.
     "knn_label_vote",
     "mmr_diverse_topk",
-    # round 5b: basket CF, rank fusion, forecast backtest, histogram
-    # trimming. 35→39; core21 unchanged.
     "item_item_cf_topk",
     "rrf_rank_fusion",
     "seasonal_naive_backtest",
     "trimmed_order_value_stats",
-    # round 5c: prefix-filter exact similarity join (the third near-dup
-    # path) and the statistics tier (Welch A/B, KM survival, CUSUM).
-    # 39→43; core21 unchanged.
     "prefix_filter_jaccard_join",
     "ab_welch_ttest_segments",
     "repeat_purchase_survival",
     "revenue_cusum_changepoint",
-    # round 5d (continuation session): the curation/robust-stats batch —
-    # DSIR importance weighting, RAKE keywords, seasonal decomposition,
-    # Siegel repeated-median trend. 43→47; core21 unchanged.
     "dsir_importance_weights",
     "rake_keyword_extraction",
     "revenue_seasonal_decomposition",
-    # (registered as theilsen_revenue_trend through r5 — renamed to the
-    # estimator it implements; same plan, BASELINE.md maps the r5 row)
     "siegel_revenue_trend",
-    # round 5e: distributed-ML primitives — Stupid-Backoff trigram LM
-    # (the heaviest new op: five count-table joins over the trigram
-    # stream) and the fully-relational Lloyd step. 47→49; core21
-    # unchanged.
     "stupid_backoff_trigram_score",
     "kmeans_lloyd_step_certificate",
-    # round 5f: the CF holdout backtest (train-split model build + two
-    # ranking windows — the heaviest of the eval-certificate batch).
-    # 49→50; core21 unchanged.
     "cf_holdout_hitrate",
-    # round 5g: the heaviest of the statistics/certificate tier —
-    # log-rank survival inference (episode windows + dense risk grid)
-    # and split-conformal coverage (three hash splits + rank window).
-    # 50→52; core21 unchanged.
     "logrank_survival_test",
     "conformal_interval_coverage",
-    # round 7: the heaviest of the new tuning/tokenizer queries — the
-    # LSH design curve (df-capped pair self-join) and the vocabulary
-    # coverage curve (fact-scale token agg + bucket-offset ranking).
-    # 52→54; core21 unchanged.
     "minhash_band_tuning_curve",
     "vocab_coverage_curve",
-    # round 8: the heaviest of the new tier — Huber IRLS (three full
-    # fact aggregates + two reweight joins), the HLL window union
-    # (7-day range-join fan-out ×2), golden-record survivorship (two
-    # per-entity windows), graded-relevance nDCG (two fact aggregates +
-    # two segment windows). 54→58; core21 unchanged.
     "robust_regression_huber_irls",
     "hyperloglog_union_over_time",
     "survivorship_merge_rules",
     "ndcg_ranking_eval",
-    # round 9: the four new queries (watermark replay with its grid
-    # join-back, CDC bucket ledger with two fact windows, the ESD
-    # localCheckpoint trim rounds, the per-segment Holt fold).
-    # 58→62; core21 unchanged.
     "watermark_late_data_audit",
     "cdc_compaction_io_audit",
     "generalized_esd_outlier_test",
     "holt_winters_level_trend",
-    # round 9b: the heaviest of the late-r9 additions (coalition-game
-    # attribution over the journey window, the 12-round k-core peel,
-    # the banded-decile Qini aggregate, the calendar-quadratic Kendall
-    # pair census). 62→66; core21 unchanged.
     "attribution_shapley_values",
     "kcore_peel_certificate",
     "qini_uplift_curve",
     "kendall_tau_daily",
-    # round 9c: the exact ALS half-step (two fact joins + two
-    # user-keyed aggregates). 66→67; core21 unchanged.
     "als_implicit_step_certificate",
-    # round 10: the two new queries — the 4-round HITS power iteration
-    # (8 node-keyed shuffles over the persisted trade-edge relation)
-    # and the consistent-hashing ring audit (2 chained BNL joins + the
-    # 9-row rollup). 67→69; core21 unchanged.
     "hits_hub_authority",
     "consistent_hashing_rebalance_audit",
-    # round 10 batch 2: the oriented triangle census (3 node-keyed
-    # joins over the persisted oriented-edge relation) and the McNemar
-    # paired test (one fact agg + the customer-spine join). 69→71;
-    # core21 unchanged.
     "triangle_clustering_coefficient",
     "mcnemar_repeat_purchase",
-    # round 10 batch 3: Cochran's Q (distinct projection + two hash
-    # aggs). 71→72; core21 unchanged.
     "cochran_q_event_types",
-    # round 10 batch 4: the HRW placement audit (9 per-row hashes +
-    # array argmax, zero-shuffle assignment). 72→73; core21 unchanged.
     "rendezvous_hashing_audit",
-    # round 10 batch 5: the Pareto skyline (two-level prefix sweep,
-    # never the quadratic anti-join). 73→74; core21 unchanged.
     "pareto_skyline_parts",
-    # round 11: the seven new operators — the nested k-core ladder (the
-    # heaviest: up to 6 rungs of node-keyed peel rounds), the Friedman /
-    # Brown-Forsythe / runs hypothesis tests (histogram + k-row
-    # arithmetic), the Hilbert key (constant-lookup broadcast join),
-    # LPA modularity (vote loop + two label-keyed aggs), and the
-    # butterfly census (one codegree self-join on the cheaper side).
-    # 74→81; core21 unchanged.
     "graph_core_decomposition_full",
     "friedman_rank_test_events",
     "brown_forsythe_variance_test",
@@ -205,68 +129,26 @@ HEADLINE = [
     "runs_test_daily_revenue",
     "modularity_lpa_communities",
     "butterfly_count_bipartite",
-    # round 11 batch 5: common-neighbors link prediction (adjacency
-    # self-join + TakeOrdered) and the Page-Hinkley drift scan
-    # (calendar-bounded window passes). 81→83; core21 unchanged.
     "link_prediction_common_neighbors",
     "page_hinkley_drift_daily",
-    # round 11 batch 6: the k-truss edge peel (per-round support
-    # recount joins). 83→84; core21 unchanged.
     "ktruss_peel_certificate",
-    # round 11 batch 7: the Theil-Sen pair-census median (the
-    # calendar-quadratic self-join + slope-histogram window). 84→85;
-    # core21 unchanged.
     "theilsen_daily_trend",
-    # round 11 batch 8: Cohen's kappa (single-pass 2x2) and Cramér's V
-    # (taxonomy-bounded grid). 85→87; core21 unchanged.
     "cohens_kappa_quality_gates",
     "cramers_v_segment_priority",
-    # round 12: Jonckheere-Terpstra + Mood's median (value-domain
-    # histogram windows), the mixture-convergence monitor (integer
-    # micros, batch-grid windows), Cliff's delta (two-segment histogram
-    # fold), and Cochran-Armitage (5-row scalar fold). 87→92; core21
-    # unchanged.
     "jonckheere_terpstra_priority_trend",
     "moods_median_test",
     "mixture_convergence_monitor",
     "cliffs_delta_segments",
     "cochran_armitage_priority_trend",
-    # round 12 batch 6: RA link prediction (wedge join + nano weights).
-    # 92→93; core21 unchanged.
     "link_prediction_resource_allocation",
-    # round 12 batch 7: Hellinger drift (20-bin histogram fold). 93→94;
-    # core21 unchanged.
     "hellinger_price_drift",
-    # round 12 batch 9: Ansari-Bradley (value-domain rank fold). 94→95;
-    # core21 unchanged. (Batch 8's stream certificate is excluded per
-    # the streaming_flagship_certificate convention — eager lifecycle.)
     "ansari_bradley_dispersion",
-    # round 13: the decontamination growth curve (corpus shingle pass +
-    # broadcast benchmark-gram join) and Page's ordered trend test (one
-    # fact agg to the segment x year grid). 95→97; core21 unchanged.
-    # (The decontam stream certificate is excluded per the
-    # streaming_flagship_certificate convention — eager lifecycle.)
     "decontamination_growth_monitor",
     "page_trend_yearly_revenue",
-    # round 13 batch 2: the heaviest of the new tier — chi-square
-    # keyness (corpus explode + term-keyed agg + TakeOrdered) and
-    # Kendall's W (the shared segment x year grid). 97→99; core21
-    # unchanged. (lang_temperature_sampling_weights is a single
-    # language-keyed aggregate — sub-second, not benched.)
     "keyness_chi2_terms",
     "kendalls_w_concordance",
-    # round 13 batch 3: the CvM drift test (two-segment histogram +
-    # value-domain prefix windows). 99→100; core21 unchanged.
     "cramer_von_mises_two_sample",
-    # round 13 batch 4: the Quade range-weighted rank test (shared
-    # segment x year grid + the m-row range spine). 100→101; core21
-    # unchanged.
     "quade_weighted_friedman",
-    # round 13 batch 5: span-level decontamination accounting (the
-    # positional shingle pass + island-merge windows). 101→102; core21
-    # unchanged. (token_budget_epoch_allocation is a single
-    # language-keyed aggregate — sub-second, not benched, the
-    # lang_temperature precedent.)
     "decontam_span_removal_stats",
 ]
 

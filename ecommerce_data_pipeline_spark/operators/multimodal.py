@@ -27,23 +27,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), True),
-        StructField("media_type", StringType(), True),
-        StructField("n_bytes", LongType(), True),
-        StructField("checksum", StringType(), True),
-    ]
 )
 
 FEATURE_SCHEMA = StructType(

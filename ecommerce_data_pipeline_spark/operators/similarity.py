@@ -7,7 +7,7 @@ Three families (SURVEY.md §2.11, the BASELINE north-star extension tier):
    SQL-expressible (oracle-checkable), but all-pairs-sharing-a-shingle:
    only viable when shingle frequencies are bounded. The 100 TB path is:
 
-2. **MinHash + LSH** (`minhash_signatures` / `lsh_candidate_pairs` /
+2. **MinHash + LSH** (`minhash_signature_agg` / `lsh_candidate_pairs` /
    `minhash_lsh_neardup`): k seeded xxhash64 min-hashes per document,
    banded into b groups of r; documents colliding on any band become
    candidates; candidates are verified with exact Jaccard. Every stage is
@@ -281,26 +281,6 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, threshold_num: int = 4) -> Data
 # of r = 2 (b·r = k, so every band indexes inside ``mh``).
 _NUM_HASHES = 16
 _BANDS, _ROWS = 8, 2
-
-
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(id, mh: array<bigint>) — k min-hashes over the document's shingles.
-
-    Shape: shingle rows (codegen'd, distributed — see shingle_rows) →
-    ONE hash aggregate with k MIN(xxhash64(shingle ∥ '#j')) columns.
-    Documents with no shingles (< n tokens) are absent from the output
-    (they can have no shingle-overlap with anything).
-
-    The salt is concatenated into the hashed string rather than passed as
-    an extra xxhash64 argument: inside expressions built from Python
-    lambdas, PySpark drops the extra literal argument (all k positions
-    collapse to the same hash — caught by the sf0.01 recall check); the
-    concat form is immune everywhere.
-    """
-    # delegate to THE signature scheme (minhash_signature_agg) — a fourth
-    # inline copy of the salt format would silently desynchronize from
-    # signature_store/incremental_neardup on a salt change
-    return minhash_signature_agg(shingle_rows(docs)).select("id", "mh")
 
 
 def minhash_signature_agg(sh: DataFrame) -> DataFrame:

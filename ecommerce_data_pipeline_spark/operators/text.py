@@ -50,15 +50,6 @@ def mean_token_length(col: str | Column) -> Column:
     return F.when(F.size(t) > 0, total / F.size(t)).otherwise(F.lit(0.0))
 
 
-def non_ascii_ratio(col: str | Column) -> Column:
-    """Share of non-ASCII characters — the cheap first cut of language ID."""
-    c = _c(col)
-    ascii_only = F.regexp_replace(c, r"[\x00-\x7F]", "")
-    return F.when(F.length(c) > 0, F.length(ascii_only) / F.length(c)).otherwise(
-        F.lit(0.0)
-    )
-
-
 def rolling_fingerprint(col: str | Column) -> Column:
     """Deterministic 128-bit document fingerprint (md5 of the normalized
     token stream) — content-identity key robust to whitespace/case noise."""

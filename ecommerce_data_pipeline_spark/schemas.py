@@ -1,49 +1,20 @@
-"""Explicit schemas for every table the engine touches.
+"""The explicit schema of the reference's CSV-landed transactions fact.
 
-The reference pins its schemas implicitly — INSERT column lists
-(``dimension_tables_mock.py:71,126``) and CSV header order
-(``transactions_mock_data.py:95``). Here every table gets an explicit
-``StructType`` so CSV/JSON ingest never falls back to sampling-based
-inference (non-deterministic and a full extra pass at 100 TB).
+The reference pins this schema implicitly, through its CSV header order
+(``transactions_mock_data.py:95``). Here it is an explicit ``StructType``
+so CSV ingest (``sources/readers.py``) never falls back to sampling-based
+inference (non-deterministic and a full extra pass at 100 TB). The
+parquet fixture tables carry their own schemas in their footers.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
-    FloatType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
-)
-
-# --- Reference star schema (reconstructed from the generator code; see
-# FIXTURES.md §A) -----------------------------------------------------------
-
-# dim_products — dimension_tables_mock.py:50-56,71
-DIM_PRODUCTS = StructType(
-    [
-        StructField("product_id", StringType(), False),
-        StructField("product_name", StringType(), True),
-        StructField("category", StringType(), True),
-        StructField("price", DoubleType(), True),
-        StructField("supplier_id", StringType(), True),
-    ]
-)
-
-# dim_customers — dimension_tables_mock.py:84-105,126
-DIM_CUSTOMERS = StructType(
-    [
-        StructField("customer_id", StringType(), False),
-        StructField("first_name", StringType(), True),
-        StructField("last_name", StringType(), True),
-        StructField("email", StringType(), True),
-        StructField("membership_level", StringType(), True),
-    ]
 )
 
 # transactions fact, CSV-landed — transactions_mock_data.py:68-77.
@@ -62,119 +33,3 @@ TRANSACTIONS_RAW = StructType(
         StructField("status", StringType(), True),
     ]
 )
-
-# --- Driver testdata tables (FIXTURES.md §B) -------------------------------
-
-REGION = StructType(
-    [
-        StructField("r_regionkey", IntegerType(), True),
-        StructField("r_name", StringType(), True),
-    ]
-)
-
-NATION = StructType(
-    [
-        StructField("n_nationkey", IntegerType(), True),
-        StructField("n_name", StringType(), True),
-        StructField("n_regionkey", IntegerType(), True),
-    ]
-)
-
-CUSTOMER = StructType(
-    [
-        StructField("c_custkey", LongType(), True),
-        StructField("c_name", StringType(), True),
-        StructField("c_nationkey", IntegerType(), True),
-        StructField("c_acctbal", DoubleType(), True),
-        StructField("c_mktsegment", StringType(), True),
-    ]
-)
-
-SUPPLIER = StructType(
-    [
-        StructField("s_suppkey", LongType(), True),
-        StructField("s_name", StringType(), True),
-        StructField("s_nationkey", IntegerType(), True),
-        StructField("s_acctbal", DoubleType(), True),
-    ]
-)
-
-PART = StructType(
-    [
-        StructField("p_partkey", LongType(), True),
-        StructField("p_name", StringType(), True),
-        StructField("p_brand", StringType(), True),
-        StructField("p_type", StringType(), True),
-        StructField("p_size", IntegerType(), True),
-        StructField("p_retailprice", DoubleType(), True),
-    ]
-)
-
-ORDERS = StructType(
-    [
-        StructField("o_orderkey", LongType(), True),
-        StructField("o_custkey", LongType(), True),
-        StructField("o_orderstatus", StringType(), True),
-        StructField("o_totalprice", DoubleType(), True),
-        StructField("o_orderdate", TimestampType(), True),
-        StructField("o_orderpriority", StringType(), True),
-    ]
-)
-
-LINEITEM = StructType(
-    [
-        StructField("l_orderkey", LongType(), True),
-        StructField("l_partkey", LongType(), True),
-        StructField("l_suppkey", LongType(), True),
-        StructField("l_linenumber", IntegerType(), True),
-        StructField("l_quantity", DoubleType(), True),
-        StructField("l_extendedprice", DoubleType(), True),
-        StructField("l_discount", DoubleType(), True),
-        StructField("l_tax", DoubleType(), True),
-        StructField("l_returnflag", StringType(), True),
-        StructField("l_linestatus", StringType(), True),
-        StructField("l_shipdate", TimestampType(), True),
-    ]
-)
-
-EVENTS = StructType(
-    [
-        StructField("event_id", LongType(), True),
-        StructField("ts", TimestampType(), True),
-        StructField("user_id", LongType(), True),
-        StructField("event_type", StringType(), True),
-        StructField("value", DoubleType(), True),
-        StructField("props", StringType(), True),
-    ]
-)
-
-DOCUMENTS = StructType(
-    [
-        StructField("doc_id", LongType(), True),
-        StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-        StructField("source", StringType(), True),
-        StructField("n_chars", LongType(), True),
-    ]
-)
-
-EMBEDDINGS = StructType(
-    [
-        StructField("vec_id", LongType(), True),
-        StructField("embedding", ArrayType(FloatType()), True),
-        StructField("label", IntegerType(), True),
-    ]
-)
-
-TESTDATA_TABLES = {
-    "region": REGION,
-    "nation": NATION,
-    "customer": CUSTOMER,
-    "supplier": SUPPLIER,
-    "part": PART,
-    "orders": ORDERS,
-    "lineitem": LINEITEM,
-    "events": EVENTS,
-    "documents": DOCUMENTS,
-    "embeddings": EMBEDDINGS,
-}

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ecommerce_data_pipeline_spark.functions.datetime import parse_reference_ts
+from ecommerce_data_pipeline_spark.operators.joins import enrich_facts
 from ecommerce_data_pipeline_spark.operators.generators import (
     MEMBERSHIP_WEIGHTS,
     PRODUCT_CATEGORIES,
@@ -129,20 +130,19 @@ def payload_text(df: DataFrame) -> DataFrame:
 def enrich_transactions(
     batch: DataFrame, dim_products: DataFrame, dim_customers: DataFrame
 ) -> DataFrame:
-    """EP2's Glue enrichment join over one micro-batch: both dims
-    broadcast (the fact side never shuffles), revenue derived in exact
-    decimal. Inner joins — the certificate dims cover the full id space,
-    and production orphans are surfaced by the ingest metrics path
-    (ingest.py), not silently kept as null-brand rows."""
-    return (
-        batch.join(F.broadcast(dim_products), "product_id", "inner")
-        .join(F.broadcast(dim_customers), "customer_id", "inner")
-        .withColumn(
-            "revenue",
-            (
-                F.col("price") * F.col("quantity").cast("decimal(18,2)")
-            ).cast("decimal(18,2)"),
-        )
+    """EP2's Glue enrichment join over one micro-batch: the batch tier's
+    ``enrich_facts`` (both dims broadcast, the fact side never
+    shuffles), revenue derived in exact decimal. Inner joins — the
+    certificate dims cover the full id space, and production orphans are
+    surfaced by the ingest metrics path (ingest.py), not silently kept
+    as null-brand rows."""
+    return enrich_facts(
+        batch, {"product_id": dim_products, "customer_id": dim_customers}
+    ).withColumn(
+        "revenue",
+        (F.col("price") * F.col("quantity").cast("decimal(18,2)")).cast(
+            "decimal(18,2)"
+        ),
     )
 
 

@@ -10,8 +10,8 @@ Reference parity (SURVEY.md §2.9 — all [implied]):
   1-minute partition granularity (``:90``) — crude late-data handling →
   real watermarks (``withWatermark``) + windowed aggregation.
 - The fire-and-forget Glue append (``:105-123``) → ``foreachBatch``
-  running the enrichment join + warehouse append transactionally per
-  micro-batch, with checkpointing instead of blind triggers.
+  sinks that land each micro-batch exactly once (``land_batch``), with
+  checkpointing instead of blind triggers.
 
 Scale notes: streaming state (dedup keys, open windows) is partitioned by
 key across executors; watermarks bound state size — without them the
@@ -188,10 +188,15 @@ def read_file_stream(
     return reader.load(path)
 
 
-def stream_dedup(
-    events: DataFrame, key_cols: list[str], ts_col: str, watermark: str = "10 minutes"
-) -> DataFrame:
-    """Stateful streaming dedup — P3's semantic over an infinite stream.
+# The lateness bound ``stream_dedup`` puts on the stream. The windowed
+# and stateful operators below chain after it and inherit this watermark
+# (Spark takes one watermark definition per stream).
+_DEDUP_WATERMARK = "1 hour"
+
+
+def stream_dedup(events: DataFrame, key_cols: list[str], ts_col: str) -> DataFrame:
+    """Stateful streaming dedup — P3's semantic over an infinite stream,
+    watermarked ``_DEDUP_WATERMARK`` (1 hour) on ``ts_col``.
 
     CAUTION at scale: ``dropDuplicates(keys)`` without the event-time
     column among the keys keeps one state row PER KEY FOREVER — on an
@@ -200,7 +205,7 @@ def stream_dedup(
     are near-in-time; prefer ``stream_dedup_within_watermark`` whenever
     duplicates can only arrive within the lateness bound.
     """
-    return events.withWatermark(ts_col, watermark).dropDuplicates(key_cols)
+    return events.withWatermark(ts_col, _DEDUP_WATERMARK).dropDuplicates(key_cols)
 
 
 def stream_dedup_within_watermark(
@@ -218,17 +223,10 @@ def stream_dedup_within_watermark(
     )
 
 
-def tumbling_counts(
-    events: DataFrame, watermark: str | None = "10 minutes"
-) -> DataFrame:
-    """5-minute tumbling-window counts/sums per event type over ``ts``,
-    watermark-bounded.
-
-    Pass ``watermark=None`` when an upstream stateful operator (e.g.
-    stream_dedup) already set one — Spark disallows redefining it.
-    """
-    if watermark is not None:
-        events = events.withWatermark("ts", watermark)
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """5-minute tumbling-window counts/sums per event type over ``ts``.
+    The watermark that bounds the open windows is the upstream
+    ``stream_dedup``'s; this operator sets none of its own."""
     return (
         events.groupBy(F.window("ts", "5 minutes"), F.col("event_type"))
         .agg(
@@ -245,15 +243,11 @@ def tumbling_counts(
     )
 
 
-def session_aggregate(events: DataFrame, watermark: str | None = "1 hour") -> DataFrame:
+def session_aggregate(events: DataFrame) -> DataFrame:
     """Per-user session windows over ``ts`` (30-minute gap) — the
     stateful operator the reference's minute-partitioned landing layout
-    approximates.
-
-    ``watermark=None`` when chained after another stateful operator.
-    """
-    if watermark is not None:
-        events = events.withWatermark("ts", watermark)
+    approximates. The watermark that closes sessions is the upstream
+    ``stream_dedup``'s; this operator sets none of its own."""
     return (
         events.groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
         .agg(
@@ -270,31 +264,19 @@ def session_aggregate(events: DataFrame, watermark: str | None = "1 hour") -> Da
     )
 
 
-def foreach_batch_append(
+def _start_foreach_batch(
     stream: DataFrame,
-    out_path: str,
+    handle: Callable[[DataFrame, int], None],
     checkpoint: str,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    output_mode: str = "append",
 ) -> StreamingQuery:
-    """EP2's Glue step as foreachBatch: per micro-batch, apply the
-    enrichment transform and append to the warehouse table, with
-    checkpoint bookkeeping instead of the reference's fire-and-forget
-    ``glue.start_job_run`` + sleep. AT-LEAST-ONCE across a crash between
-    the append and the checkpoint commit (the re-run batch appends a
-    second copy); use ``foreach_batch_append_idempotent`` below when the
-    sink must be exactly-once."""
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        out = transform(batch) if transform else batch
-        out.write.mode("append").parquet(out_path)
-
-    # output_mode governs what upstream stateful operators emit into the
-    # batch ("update" for applyInPandasWithState twins); the sink itself
-    # always appends
+    """Start ``handle(batch, batch_id)`` as one ``availableNow`` drain of
+    ``stream`` under ``checkpoint`` — the one sink shell of every
+    ``foreachBatch`` sink here. Update mode: stateful folds emit their
+    changed rows per trigger, and for a stateless stream update is the
+    same as append."""
     return (
         stream.writeStream.foreachBatch(handle)
-        .outputMode(output_mode)
+        .outputMode("update")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -320,22 +302,15 @@ def land_batch(df: DataFrame, path: str, batch_id: int) -> None:
 def foreach_batch_append_idempotent(
     stream: DataFrame, out_path: str, checkpoint: str
 ) -> StreamingQuery:
-    """Exactly-once variant of ``foreach_batch_append``: each micro-batch
-    lands through ``land_batch``, so a batch re-run after a
-    crash-between-write-and-commit replaces its own output instead of
-    appending a duplicate copy. The plain append form is only
-    at-least-once across that crash window; this one is idempotent per
-    batch — the standard pattern when the sink has no transactional
-    commit."""
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        land_batch(batch, out_path, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """EP2's warehouse append as an exactly-once ``foreachBatch`` sink:
+    each micro-batch lands through ``land_batch``, so a batch re-run
+    after a crash between its write and its checkpoint commit replaces
+    its own output instead of appending a duplicate copy — the standard
+    pattern when the sink has no transactional commit."""
+    return _start_foreach_batch(
+        stream,
+        lambda batch, batch_id: land_batch(batch, out_path, batch_id),
+        checkpoint,
     )
 
 
@@ -408,9 +383,11 @@ def fold_landing(
     ckpt: str,
 ) -> DataFrame:
     """Fold the landing through the stateful operator ``op`` one file per
-    trigger, appending its update-mode emissions to ``out`` under the
-    checkpoint ``ckpt``, and return everything ``out`` holds. Calling it
-    again on the same directories is the checkpoint restart.
+    trigger, landing each trigger's update-mode emissions in ``out``
+    through ``land_batch`` under the checkpoint ``ckpt``, and return
+    everything ``out`` holds. Calling it again on the same directories
+    is the checkpoint restart; a re-run trigger replaces its own
+    emissions, so ``out`` holds each of them once.
 
     The fold runs under ``stateful_shuffle_partitions``. An empty
     landing folds to an empty relation with ``op``'s output schema."""
@@ -420,31 +397,36 @@ def fold_landing(
         folded = op(
             read_file_stream(spark, landing_dir, schema, max_files_per_trigger=1)
         )
-        drain(foreach_batch_append(folded, out, ckpt, output_mode="update"))
+        drain(
+            _start_foreach_batch(
+                folded,
+                lambda batch, batch_id: land_batch(batch, out, batch_id),
+                ckpt,
+            )
+        )
     if not os.path.exists(out):  # no trigger ran: nothing was ever landed
         return spark.createDataFrame([], folded.schema)
-    return spark.read.parquet(out)
+    # read under op's schema: triggers that all emitted nothing landed no
+    # file to infer it from
+    return spark.read.schema(folded.schema).parquet(out).drop("_batch_id")
 
 
-def stream_stream_join(
-    left: DataFrame, right: DataFrame, on: str, right_ts: str = "ts"
-) -> DataFrame:
-    """Stream-stream inner join with a time-range condition.
+def stream_stream_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
+    """Stream-stream inner join with a time-range condition. The left
+    side's event time is ``ts``, the right side's ``s_ts`` (distinct
+    names, so both stay addressable in the joined rows).
 
     Both sides carry 1-hour watermarks and the join requires
-    ``right_ts ∈ [ts - 30 minutes, ts]`` — the bounded-state form:
+    ``s_ts ∈ [ts - 30 minutes, ts]`` — the bounded-state form:
     Spark can discard buffered rows once the watermark passes the range,
     so state stays O(rate × 30 minutes) per key instead of unbounded.
     """
     l = left.withWatermark("ts", "1 hour").alias("l")
-    r = right.withWatermark(right_ts, "1 hour").alias("r")
+    r = right.withWatermark("s_ts", "1 hour").alias("r")
     cond = (
         (F.col(f"l.{on}") == F.col(f"r.{on}"))
-        & (F.col(f"r.{right_ts}") <= F.col("l.ts"))
-        & (
-            F.col(f"r.{right_ts}")
-            >= F.col("l.ts") - F.expr("INTERVAL 30 minutes")
-        )
+        & (F.col("r.s_ts") <= F.col("l.ts"))
+        & (F.col("r.s_ts") >= F.col("l.ts") - F.expr("INTERVAL 30 minutes"))
     )
     return l.join(r, cond, "inner")
 
@@ -470,11 +452,13 @@ def _fold_by_key(
     )
 
 
-def stateful_user_counts(events: DataFrame, watermark: str | None = "1 hour") -> DataFrame:
+def stateful_user_counts(events: DataFrame) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: a per-user
     running event count + running value sum maintained across
     micro-batches (the arbitrary-state API the built-in windows can't
-    express — e.g. lifetime counters, custom session logic).
+    express — e.g. lifetime counters, custom session logic). The
+    watermark is the upstream ``stream_dedup``'s; this operator sets
+    none of its own.
 
     The state handler below is fully self-contained (stdlib + pandas
     only) per the engine's worker-pickling rule.
@@ -508,30 +492,13 @@ def stateful_user_counts(events: DataFrame, watermark: str | None = "1 hour") ->
             n += len(pdf)
             total += float(pdf["value"].sum())
         # store the UNROUNDED total (round only on emit): rounding state
-        # compounds error across micro-batches and diverges from the
-        # transformWithStateInPandas twin, which keeps the raw sum
+        # compounds error across micro-batches
         state.update((n, total))
         yield pd.DataFrame(
             {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
         )
 
-    if watermark is not None:
-        events = events.withWatermark("ts", watermark)
     return _fold_by_key(events, "user_id", update, out_schema, state_schema)
-
-
-def stream_static_enrich(
-    stream: DataFrame, dim: DataFrame, stream_key: str, dim_key: str
-) -> DataFrame:
-    """Stream-static left join: each micro-batch joins against the
-    static dimension snapshot — the streaming twin of the batch star
-    join (J1). The static side is broadcast per micro-batch (dims are
-    broadcast-small by the same contract as the batch path), so the
-    stream never shuffles for the join; state is zero because the static
-    side is not buffered."""
-    return stream.join(
-        F.broadcast(dim), stream[stream_key] == dim[dim_key], "left"
-    )
 
 
 def foreach_batch_cdc_snapshot(
@@ -550,11 +517,11 @@ def foreach_batch_cdc_snapshot(
     the latest prior version and writes its own, never overwriting what
     it reads (read-then-overwrite of the same files races the lazy
     scan), and a crashed batch's re-run overwrites only its own version
-    dir — idempotent replay, same discipline as
-    ``foreach_batch_append_idempotent``. Readers take the max version;
-    old versions are retention-pruned out-of-band (time travel for
-    free). Per-batch work is |snapshot|+|batch| (one shuffle on the
-    key), never the full history."""
+    dir — idempotent replay, same discipline as ``land_batch``.
+    Readers take the max version; old versions are retention-pruned
+    out-of-band (time travel for free). Per-batch work is
+    |snapshot|+|batch| (one shuffle on the key), never the full
+    history."""
     session = stream.sparkSession
 
     def handle(batch: DataFrame, batch_id: int) -> None:
@@ -576,85 +543,7 @@ def foreach_batch_cdc_snapshot(
         out = cdc_apply_increment(snap, batch, key, order_cols)
         out.write.mode("overwrite").parquet(f"{snapshot_path}/v={batch_id}")
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stateful_user_counts_tws(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas twin of ``stateful_user_counts`` —
-    Spark 4's arbitrary-state API (StatefulProcessor + typed state
-    handles over the RocksDB state store) replacing the older
-    applyInPandasWithState callback. Same semantics: per-user lifetime
-    event count + value sum, emitted per micro-batch in update mode.
-    The processor is self-contained (worker-pickling rule); requires
-    ``spark.sql.streaming.stateStore.providerClass`` =
-    RocksDBStateStoreProvider (set by the caller/test — the HDFS-backed
-    default store does not support transformWithState).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("total_value", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("total", DoubleType())]
-    )
-
-    class _Counter(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n = 0
-            total = 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            if self._agg.exists():
-                prev = self._agg.get()
-                n += int(prev[0])
-                total += float(prev[1])
-            self._agg.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.selectExpr("user_id", "CAST(value AS DOUBLE) AS value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_Counter(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
+    return _start_foreach_batch(stream, handle, checkpoint)
 
 
 def foreach_batch_incremental_neardup(
@@ -698,12 +587,7 @@ def foreach_batch_incremental_neardup(
         finally:
             batch.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream, handle, checkpoint)
 
 
 def neardup_store_increment(
@@ -788,16 +672,22 @@ def neardup_store_increment(
             df.unpersist()
 
 
-def rate_limit_backpressure(events: DataFrame, cap: int = 3) -> DataFrame:
-    """Streaming rate limiter with carry-over backlog — the stateful twin
-    of the batch replay ``plans/events_plans.py::
-    stream_rate_limit_backpressure`` (which carries the exact DuckDB
-    oracle; tests pin stream == replay, including checkpoint restart).
+# Events admitted per key per hour slot by ``rate_limit_backpressure``.
+_BACKPRESSURE_CAP = 1
 
-    Per event_type, at most ``cap`` events are admitted per hour slot;
-    excess queues and drains ``cap`` per slot INCLUDING empty slots
-    (Lindley recursion). State per key is two integers (last processed
-    slot, backlog) — O(keys), not O(events): the backpressure operator
+
+def rate_limit_backpressure(events: DataFrame) -> DataFrame:
+    """Streaming rate limiter with carry-over backlog — the stateful twin
+    of the batch replay ``plans/events_plans.py::backpressure_replay``
+    (the plan of ``stream_rate_limit_backpressure``, which carries the
+    exact DuckDB oracle; tests pin stream == replay at the same cap,
+    including checkpoint restart).
+
+    Per event_type, at most ``cap`` (``_BACKPRESSURE_CAP``) events are
+    admitted per hour slot; excess queues and drains ``cap`` per slot
+    INCLUDING empty slots (Lindley recursion). State per key is two
+    integers (last processed slot, backlog) — O(keys), not O(events):
+    the backpressure operator
     stays viable at any stream volume because gaps are drained by
     arithmetic (cap × gap length), never by materializing empty slots.
     Emits one row per (key, observed slot) in update mode. Slots must
@@ -813,6 +703,7 @@ def rate_limit_backpressure(events: DataFrame, cap: int = 3) -> DataFrame:
     """
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    cap = _BACKPRESSURE_CAP
     out_schema = StructType(
         [
             StructField("event_type", StringType()),

@@ -23,11 +23,11 @@ _PAIR_SCHEMA = StructType(
 )
 
 
-def _fold_pairs(spark, tmp_path, chunks):
+def _fold_pairs(spark, tmp_path, chunks, ckpt="ckpt"):
     """Land each chunk of (shard_id, doc_id) pairs as one file (numbering
     continues on a second call) and fold the landing file-per-trigger
-    through decontam_monitor_stream; returns the emitted rows as a
-    sorted list of (doc_id, first_shard)."""
+    through decontam_monitor_stream under the checkpoint ``ckpt``;
+    returns the emitted rows as a sorted list of (doc_id, first_shard)."""
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
         decontam_monitor_stream,
         fold_landing,
@@ -38,7 +38,7 @@ def _fold_pairs(spark, tmp_path, chunks):
     land_chunks(chunks, _PAIR_SCHEMA, d)
     out = fold_landing(
         spark, decontam_monitor_stream, d, _PAIR_SCHEMA,
-        str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        str(tmp_path / "out"), str(tmp_path / ckpt),
     )
     return sorted((r["doc_id"], r["first_shard"]) for r in out.collect())
 
@@ -73,11 +73,15 @@ def test_decontam_stream_tolerates_harmless_disorder(spark, tmp_path):
 def test_decontam_stream_checkpoint_restart(spark, tmp_path):
     """Kill-and-restart across a half-drained landing zone: the resumed
     fold must restore per-doc flagged state — doc 300, flagged in the
-    first run, must NOT re-emit when re-hit after the restart."""
+    first run, must NOT re-emit when re-hit after the restart. Refolding
+    the whole landing under a fresh checkpoint into the same output
+    re-runs each trigger with its old batch id, which replaces its own
+    emissions: the output still holds each emission once."""
     _fold_pairs(spark, tmp_path, [[(0, 300), (1, 301)]])
     # 300 re-hit post-restart: restored state
     got = _fold_pairs(spark, tmp_path, [[(2, 300), (2, 302)]])
     assert got == [(300, 0), (301, 1), (302, 2)]
+    assert _fold_pairs(spark, tmp_path, [], ckpt="ckpt_fresh") == got
 
 
 def test_decontam_stream_rejects_shard_regression(spark, tmp_path):

@@ -304,25 +304,18 @@ def _bp_chunks(spark, n_chunks=6):
     ]
 
 
-def _rate_limit_cap1(stream):
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        rate_limit_backpressure,
-    )
-
-    return rate_limit_backpressure(stream, cap=1)
-
-
 def test_stream_rate_limit_matches_batch_replay(spark, tmp_path):
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
         fold_landing,
         land_chunks,
+        rate_limit_backpressure,
     )
 
     schema, chunks = _bp_chunks(spark)
     d = str(tmp_path / "landing")
     land_chunks(chunks, schema, d)
     got = fold_landing(
-        spark, _rate_limit_cap1, d, schema,
+        spark, rate_limit_backpressure, d, schema,
         str(tmp_path / "out"), str(tmp_path / "ckpt"),
     )
     expected = backpressure_replay(load_table(spark, SF_SMOKE, "events"), cap=1)
@@ -337,14 +330,17 @@ def test_stream_rate_limit_checkpoint_restart_no_duplicates(spark, tmp_path):
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
         fold_landing,
         land_chunks,
+        rate_limit_backpressure,
     )
 
     schema, chunks = _bp_chunks(spark)
     d, out, ckpt = (str(tmp_path / n) for n in ("landing", "out", "ckpt"))
     land_chunks(chunks[:3], schema, d)
-    fold_landing(spark, _rate_limit_cap1, d, schema, out, ckpt)
+    fold_landing(spark, rate_limit_backpressure, d, schema, out, ckpt)
     land_chunks(chunks[3:], schema, d)
-    rows = fold_landing(spark, _rate_limit_cap1, d, schema, out, ckpt).collect()
+    rows = fold_landing(
+        spark, rate_limit_backpressure, d, schema, out, ckpt
+    ).collect()
     got = _bp_ledger(rows)
     assert len(rows) == len(got)  # restart re-emitted nothing
     expected = backpressure_replay(load_table(spark, SF_SMOKE, "events"), cap=1)
@@ -533,6 +529,7 @@ def test_stream_rate_limit_rejects_straddled_slot(spark, tmp_path):
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
         fold_landing,
         land_chunks,
+        rate_limit_backpressure,
     )
 
     events = load_table(spark, SF_SMOKE, "events")
@@ -559,6 +556,6 @@ def test_stream_rate_limit_rejects_straddled_slot(spark, tmp_path):
     land_chunks([one_hour[:1], one_hour[1:]], events.schema, d)
     with pytest.raises(StreamingQueryException, match="strictly"):
         fold_landing(
-            spark, _rate_limit_cap1, d, events.schema,
+            spark, rate_limit_backpressure, d, events.schema,
             str(tmp_path / "out"), str(tmp_path / "ckpt"),
         )

@@ -2,25 +2,30 @@
 
 Usage: python tools/oracle_spot_check.py <query> [<query> ...]
 Runs each named registry query AND its DuckDB oracle at sf0.001 and
-sf0.01 on a small local session and value-diffs them via the pytest
-harness — seconds per query, the inner loop while a new operator is
-being built (the full driver-mimic verify stays the round gate; see
-.claude/skills/verify). Round-9 workflow: every new query went
-through this at both SFs before its property test was written.
+sf0.01 on the engine's session (``session.get_spark``, so its host-aware
+heap applies) and value-diffs them via the pytest harness — seconds per
+query, the inner loop while a new operator is being built (the full
+oracle sweep, ``tests/test_oracle.py``, stays the gate).
 """
-import sys, time
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
-from tests.oracle_harness import duckdb_connection, compare, assert_oracle_types_safe
-from ecommerce_data_pipeline_spark.plans import REGISTRY
+import os
+import sys
+import time
 
-spark = (SparkSession.builder.master("local[8]")
-         .config("spark.sql.shuffle.partitions", "8")
-         .config("spark.driver.memory", "8g")
-         .config("spark.ui.enabled", "false")
-         .getOrCreate())
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from ecommerce_data_pipeline_spark.plans import REGISTRY  # noqa: E402
+from ecommerce_data_pipeline_spark.session import get_spark  # noqa: E402
+from tests.conftest import SF_CORRECT, SF_SMOKE  # noqa: E402
+from tests.oracle_harness import (  # noqa: E402
+    assert_oracle_types_safe,
+    compare,
+    duckdb_connection,
+)
+
+spark = get_spark("oracle-spot-check")
 names = sys.argv[1:] or ["attribution_shapley_values"]
-for sf in ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]:
+for sf in [SF_SMOKE, SF_CORRECT]:
     con = duckdb_connection(sf)
     for name in names:
         q = REGISTRY[name]
