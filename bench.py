@@ -11,14 +11,16 @@ stages, tasks, shuffle records and input bytes are read from the status
 store (``perfbench.trace.job_group_counters``).
 
 The regression gate is structural. The counters do not depend on host
-speed, so each run compares them with the committed
-``BENCH_PROFILE.json`` entry for its fixture and core count, prints FAIL
-with every query/counter that went up, and rewrites that entry (one line
-per query; a counter that differs between a query's executions is kept
-as its [lowest, highest]). A change that moves a plan commits the
-rewritten file, so the counter diff is what review sees. A fixture/core
-count with no entry is recorded and passes. Walls stay in the payload as
-corroboration.
+speed, so a query's executions must agree on every one of them: a
+counter that differs between them FAILs the gate, named with its values
+(a plan whose strategy AQE picks from runtime timing is pinned with a
+join hint in the plan, so the counters it gives are exact). The agreed
+counters are compared with the committed ``BENCH_PROFILE.json`` entry
+for the fixture and core count; every query/counter that went up is a
+FAIL, and the entry is rewritten (one line per query, one int per
+counter). A change that moves a plan commits the rewritten file, so the
+counter diff is what review sees. A fixture/core count with no entry is
+recorded and passes. Walls stay in the payload as corroboration.
 
 Prints the full payload as one JSON line (also written to
 ``BENCH_LOCAL.json``), then a short summary line.
@@ -186,48 +188,48 @@ def run_query(spark, name: str, i: int) -> tuple[float, dict]:
     return wall, {k: counters[k] for k in COUNTERS}
 
 
-def counter_span(value) -> tuple[int, int]:
-    """(lowest, highest) of a profile value: an int, or [lo, hi] for a
-    counter that differed between a query's executions."""
-    return tuple(value) if isinstance(value, list) else (value, value)
-
-
-def profile_value(lo: int, hi: int):
-    return lo if lo == hi else [lo, hi]
-
-
 def compare_counters(committed: dict | None, current: dict) -> tuple[dict, dict]:
-    """The gate. ``current`` holds each query's counters from this run as
-    profile values. A counter went up when every execution this run did
-    more than any committed execution (lo > committed hi): FAIL. It went
-    down when every execution did less (hi < committed lo): reported.
-    Either way the entry takes this run's value; otherwise the entry
-    widens to every value the plan has produced. Queries missing from
-    the entry, or a missing entry, are recorded and pass. Returns the
-    verdict and the rewritten entry."""
-    up, down, entry = [], [], {}
+    """The committed-profile half of the gate. A counter above its
+    committed value went up: FAIL. One below it went down: reported.
+    The entry takes this run's counters. Queries missing from the entry,
+    or a missing entry, are recorded and pass. Returns the verdict and
+    the rewritten entry."""
+    up, down = [], []
     for name, counters in current.items():
         before = (committed or {}).get(name, {})
-        line = {}
         for key, value in counters.items():
-            lo, hi = counter_span(value)
-            if key in before:
-                old_lo, old_hi = counter_span(before[key])
-                moved = f"{name}.{key} {before[key]}->{value}"
-                if lo > old_hi:
-                    up.append(moved)
-                elif hi < old_lo:
-                    down.append(moved)
-                else:
-                    lo, hi = min(lo, old_lo), max(hi, old_hi)
-            line[key] = profile_value(lo, hi)
-        entry[name] = line
+            if key not in before or value == before[key]:
+                continue
+            moved = f"{name}.{key} {before[key]}->{value}"
+            (up if value > before[key] else down).append(moved)
     gate = {
         "verdict": "FAIL" if up else "PASS",
         "recorded": committed is None,
         "up": up,
         "down": down,
     }
+    return gate, current
+
+
+def counter_gate(committed: dict | None, runs: dict) -> tuple[dict, dict]:
+    """The gate over one bench run. ``runs`` holds each query's
+    per-execution counters. Every counter must be equal across a
+    query's executions; each one that is not FAILs the gate as
+    "query.counter [values]". Then ``compare_counters`` checks the agreed
+    values (the first execution's, where they disagree) against
+    ``committed``. Returns the verdict and the rewritten entry."""
+    disagree = []
+    for name, executions in runs.items():
+        for key in executions[0]:
+            values = [c[key] for c in executions]
+            if len(set(values)) > 1:
+                disagree.append(f"{name}.{key} {values}")
+    gate, entry = compare_counters(
+        committed, {name: executions[0] for name, executions in runs.items()}
+    )
+    gate["disagree"] = disagree
+    if disagree:
+        gate["verdict"] = "FAIL"
     return gate, entry
 
 
@@ -279,24 +281,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     walls: dict[str, float] = {}
-    counters: dict[str, dict] = {}
+    runs: dict[str, list[dict]] = {}
     for name in HEADLINE:
-        runs = [run_query(spark, name, i) for i in range(1 + RUNS)]
-        walls[name] = round(min(wall for wall, _ in runs[1:]), 3)
-        # A few plans over persisted or checkpointed relations do not
-        # repeat their counters from one execution to the next (measured
-        # in one session: leakage_safe_split 25 or 26 jobs,
-        # siegel_revenue_trend 7,214 or 2,898,024 shuffle records); such
-        # a counter is kept as its [lowest, highest] over the executions.
-        counters[name] = {}
-        for k in COUNTERS:
-            values = [c[k] for _, c in runs]
-            counters[name][k] = profile_value(min(values), max(values))
+        timed = [run_query(spark, name, i) for i in range(1 + RUNS)]
+        walls[name] = round(min(wall for wall, _ in timed[1:]), 3)
+        runs[name] = [c for _, c in timed]
     spark.stop()
 
     key = f"{os.path.basename(SF_DIR.rstrip('/'))}/c{CPUS}"
     profile = read_profile(PROFILE)
-    gate, profile[key] = compare_counters(profile.get(key), counters)
+    gate, profile[key] = counter_gate(profile.get(key), runs)
     m = re.search(r"sf([0-9.]+)/?$", SF_DIR)
     payload = {
         "metric": "headline_suite_wall_sec",
@@ -305,7 +299,7 @@ def main() -> None:
         "queries": walls,
         "sf": float(m.group(1)) if m else 0.0,
         "core21_wall_sec": round(sum(walls[n] for n in CORE21), 3),
-        "counters": counters,
+        "counters": profile[key],
         "counter_gate": {"profile_key": key, **gate},
         "git_sha": _git_sha(),
     }
@@ -327,7 +321,11 @@ def main() -> None:
         "counter_gate": gate["verdict"],
         "full_payload": "BENCH_LOCAL.json",
     }))
-    for word, moved in (("FAIL: up", gate["up"]), ("lower", gate["down"])):
+    for word, moved in (
+        ("FAIL: executions disagree", gate["disagree"]),
+        ("FAIL: up", gate["up"]),
+        ("lower", gate["down"]),
+    ):
         for item in moved:
             print(f"bench counter gate {key} {word}: {item}", file=sys.stderr)
 

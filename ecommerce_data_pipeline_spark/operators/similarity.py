@@ -117,9 +117,11 @@ def jaccard_pairs(
     # the shingle relation feeds three consumers (sizes + both join
     # sides); persist it so the explode+window shuffle runs once
     sh = df_capped_shingles(docs, max_df=max_df).persist()
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
+    # shuffle_hash pinned on the three joins below: AQE broadcast whichever
+    # side's cached stats landed first, and every side is corpus-sized
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n")).hint("shuffle_hash")
     a = sh.alias("a")
-    b = sh.alias("b")
+    b = sh.alias("b").hint("shuffle_hash")
     pairs = (
         a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
         .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
@@ -179,7 +181,9 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, threshold_num: int = 4) -> Data
     # the shingle relation feeds df counts, the ranked prefix, sizes and
     # both verify sides — persist so the explode+window shuffle runs once
     sh = shingle_rows(docs).persist()
-    df_tbl = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
+    # shuffle_hash pinned on every join below: AQE broadcast whichever
+    # side's cached stats landed first, and every side is corpus-sized
+    df_tbl = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df")).hint("shuffle_hash")
     # rank + set size in ONE window partition (same key → no extra
     # shuffle beyond the df join)
     w = Window.partitionBy("id")
@@ -205,7 +209,7 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, threshold_num: int = 4) -> Data
         "id", "s", "set_n"
     )
     a = prefix.alias("a")
-    b = prefix.alias("b")
+    b = prefix.alias("b").hint("shuffle_hash")
     # PPJoin length filter: |∩| ≤ min(n1,n2) and |∪| ≥ max(n1,n2), so
     # J ≥ num/den forces den·min ≥ num·max — both inequalities below.
     # Sound (never drops a qualifying pair), and it prunes candidates
@@ -229,40 +233,27 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, threshold_num: int = 4) -> Data
             F.col("b.set_n").alias("n2"),
         )
         .distinct()
+        .persist()
     )
     # Array-intersect verification: build each CANDIDATE doc's sorted
-    # shingle array (broadcast-semi-filtered first, so the groupBy
-    # shuffles candidate docs' shingles only — verify volume scales with
+    # shingle array (semi-filtered first, so the groupBy shuffles
+    # candidate docs' shingles only — verify volume scales with
     # candidates, not corpus), then two hash joins and one row-local
-    # array_intersect per pair. Replaces the previous
-    # cand⋈sh(id1)⋈sh(id2,s)⋈sizes² chain: the exploded form paid a
-    # candidate×shingle row fan-out through a sort-merge join plus a
-    # re-aggregation (measured at sf0.1: 3.6 s → 2.0 s full query;
-    # the unfiltered-sets variant measures 1.3 s here but only because
-    # the fixture is dense — ~every doc is in some candidate pair, so
-    # the semi-filter saves nothing at this SF while at 100 TB it is
-    # the difference between shuffling the candidates' shingles and the
-    # whole corpus's).
-    cand = cand.persist()
-    s1 = (
-        sh.join(
-            cand.select(F.col("id1").alias("id")).distinct(), "id", "left_semi"
+    # array_intersect per pair — no candidate×shingle row fan-out and
+    # re-aggregation, as re-joining exploded shingle rows would pay.
+    def sorted_sets(side: str, out: str) -> DataFrame:
+        ids = cand.select(F.col(side).alias("id")).distinct().hint("shuffle_hash")
+        return (
+            sh.join(ids, "id", "left_semi")
+            .groupBy("id")
+            .agg(F.sort_array(F.collect_list("s")).alias(out))
+            .withColumnsRenamed({"id": side})
+            .hint("shuffle_hash")
         )
-        .groupBy("id")
-        .agg(F.sort_array(F.collect_list("s")).alias("ss1"))
-        .withColumnsRenamed({"id": "id1"})
-    )
-    s2 = (
-        sh.join(
-            cand.select(F.col("id2").alias("id")).distinct(), "id", "left_semi"
-        )
-        .groupBy("id")
-        .agg(F.sort_array(F.collect_list("s")).alias("ss2"))
-        .withColumnsRenamed({"id": "id2"})
-    )
+
     return (
-        cand.join(s1, "id1")
-        .join(s2, "id2")
+        cand.join(sorted_sets("id1", "ss1"), "id1")
+        .join(sorted_sets("id2", "ss2"), "id2")
         .withColumn(
             "common", F.size(F.array_intersect("ss1", "ss2")).cast("long")
         )

@@ -1466,7 +1466,9 @@ def triangle_clustering_coefficient(
     e2 = oedges.select(
         F.col("lo"), F.col("hi").alias("z"), F.col("hi_d").alias("z_d")
     )
-    wedge = e1.join(e2, "lo").filter(
+    # shuffle_hash pinned: AQE broadcast whichever side's cached stats
+    # landed first; both sides are the corpus-sized oriented edges
+    wedge = e1.join(e2.hint("shuffle_hash"), "lo").filter(
         (F.col("y_d") < F.col("z_d"))
         | ((F.col("y_d") == F.col("z_d")) & (F.col("y") < F.col("z")))
     )
@@ -1968,25 +1970,25 @@ def _linkpred_neighbor_arrays(edges: DataFrame) -> DataFrame:
     )
 
 
-def _wedge_pairs_from_arrays(nbrs: DataFrame, carry: tuple = ()) -> DataFrame:
+def _wedge_pairs_from_arrays(nbrs: DataFrame) -> DataFrame:
     """One row per wedge pair (u, v) with u < v, enumerated ROW-LOCALLY
     from each center's sorted neighbor array: posexplode fixes u and
     its position, slice takes the strictly-later neighbors as the v
     candidates. Both generators codegen; no join, no interpreted
     lambda (the r13 pq lesson: HOF lambdas interpret per element).
-    ``carry`` = names of per-center columns (e.g. the RA weight) to
-    ride through the fan-out. A center's pairs are generated inside one
-    task — the same co-location the self-join form has, so the skew
-    profile is unchanged while one adjacency exchange and the join
-    itself disappear (guide §2.3/§2.4). Worth it ONLY when the array
+    The center's RA weight ``ra_nanos`` rides through the fan-out. A
+    center's pairs are generated inside one task — the same co-location
+    the self-join form has, so the skew profile is unchanged while one
+    adjacency exchange and the join itself disappear (guide
+    §2.3/§2.4). Worth it ONLY when the array
     buys more than the collect costs (RA: the degree comes free);
     measured slower for bare pair counting — see the CN/butterfly
     rejection notes."""
     step1 = nbrs.select(
-        *carry, "nbs", F.posexplode("nbs").alias("i", "u")
+        "ra_nanos", "nbs", F.posexplode("nbs").alias("i", "u")
     )
     return step1.select(
-        *carry,
+        "ra_nanos",
         "u",
         F.explode(
             F.slice(
@@ -2293,7 +2295,7 @@ def link_prediction_resource_allocation(
         ).alias("ra_nanos"),
     )
     wedges = (
-        _wedge_pairs_from_arrays(nbrs, carry=("ra_nanos",))
+        _wedge_pairs_from_arrays(nbrs)
         .groupBy("u", "v")
         .agg(
             F.count(F.lit(1)).cast("long").alias("common_neighbors"),

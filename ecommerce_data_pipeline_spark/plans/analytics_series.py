@@ -367,7 +367,9 @@ def siegel_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     a, b = daily.alias("a"), daily.alias("b")
-    pairs = a.join(b, F.col("a.x") < F.col("b.x")).select(
+    # broadcast pinned: AQE built either side from cached-stage stats
+    # timing (BuildLeft reshuffled ~2.9M pairs); b is one row per day
+    pairs = a.join(F.broadcast(b), F.col("a.x") < F.col("b.x")).select(
         F.col("a.x").alias("x1"),
         (
             (F.col("b.c") - F.col("a.c"))

@@ -40,7 +40,11 @@ def _cf_scored_pairs(li: DataFrame) -> DataFrame:
     and cf_holdout_hitrate (train-split model). Persisted inputs are the
     caller's concern; this adds its own persist on the pair relation
     (consumed by both union branches)."""
-    pop = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_orders"))
+    # broadcast pinned: AQE broadcast the corpus-sized pair relation
+    # instead, shuffled first or not by stats timing; pop is one row per part
+    pop = F.broadcast(
+        li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_orders"))
+    )
     a = li.select("l_orderkey", F.col("l_partkey").alias("i"))
     b = li.select("l_orderkey", F.col("l_partkey").alias("j"))
     pairs = (

@@ -150,13 +150,11 @@ def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # Cleanup note: the operator's ``out`` contract serves LOOP callers
-    # (e.g. the incremental-neardup foreachBatch, which unpersists per
-    # trigger). A registered plan is one-shot and must return a LAZY
-    # DataFrame — it cannot unpersist without losing the multi-consumer
-    # cache DURING execution — so repeated-execution harnesses own the
-    # cleanup instead (bench.py clears the session cache between query
-    # loops; Spark's LRU eviction bounds a single run).
+    # Cleanup note: a registered plan is one-shot and must return a LAZY
+    # DataFrame — it cannot unpersist the operator's caches without
+    # losing them DURING execution — so repeated-execution harnesses own
+    # the cleanup (bench.py clears the session cache before every
+    # execution; Spark's LRU eviction bounds a single run).
     return prefix_filter_jaccard_pairs(docs, threshold_num=4)
 
 

@@ -88,19 +88,14 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def read_binary_files(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
+def read_binary_files(spark: SparkSession, path: str, glob: str) -> DataFrame:
     """Opaque-blob source for multimodal ingestion (images/audio/video
     land as raw files): Spark's binaryFile format yields one row per
     file — (path, modificationTime, length, content BINARY) — which is
     exactly the schema operators/multimodal.py consumes. pathGlobFilter
     prunes by extension at LISTING time (no content read for skipped
     files), the cheap first gate of a 100 TB media crawl."""
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
+    return spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
 
 
 def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:

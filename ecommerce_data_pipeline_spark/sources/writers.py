@@ -136,7 +136,7 @@ def write_orc(df: DataFrame, path: str) -> None:
 
 
 def write_sorted_parquet(
-    df: DataFrame, sort_col: str, path: str, n_files: int | None = None
+    df: DataFrame, sort_col: str, path: str, n_files: int
 ) -> None:
     """Layout-optimized Parquet: range-partition on ``sort_col`` then
     sort within each partition before writing.
@@ -148,8 +148,8 @@ def write_sorted_parquet(
     clustering key / Z-order for the 1-column case). The write costs
     one range-partition shuffle; reads on the sorted key repay it on
     every scan."""
-    out = df.repartitionByRange(n_files, sort_col) if n_files else df.repartitionByRange(sort_col)
-    out.sortWithinPartitions(sort_col).write.mode("overwrite").parquet(path)
+    out = df.repartitionByRange(n_files, sort_col).sortWithinPartitions(sort_col)
+    out.write.mode("overwrite").parquet(path)
 
 
 def write_with_metrics(

@@ -209,7 +209,7 @@ def stream_dedup(events: DataFrame, key_cols: list[str], ts_col: str) -> DataFra
 
 
 def stream_dedup_within_watermark(
-    events: DataFrame, key_cols: list[str], ts_col: str, watermark: str = "10 minutes"
+    events: DataFrame, key_cols: list[str], ts_col: str, watermark: str
 ) -> DataFrame:
     """Bounded-state streaming dedup: ``dropDuplicatesWithinWatermark``
     expires each key's state once the watermark passes its event time, so
@@ -296,21 +296,6 @@ def land_batch(df: DataFrame, path: str, batch_id: int) -> None:
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("_batch_id")
         .parquet(path)
-    )
-
-
-def foreach_batch_append_idempotent(
-    stream: DataFrame, out_path: str, checkpoint: str
-) -> StreamingQuery:
-    """EP2's warehouse append as an exactly-once ``foreachBatch`` sink:
-    each micro-batch lands through ``land_batch``, so a batch re-run
-    after a crash between its write and its checkpoint commit replaces
-    its own output instead of appending a duplicate copy — the standard
-    pattern when the sink has no transactional commit."""
-    return _start_foreach_batch(
-        stream,
-        lambda batch, batch_id: land_batch(batch, out_path, batch_id),
-        checkpoint,
     )
 
 

@@ -9,7 +9,9 @@ sweep (tests/test_oracle.py) on the DataFrame it already builds:
   broadcast side is the sanctioned stats-crossJoin pattern and is not
   flagged);
 - column pruning reaches every testdata scan (temp/derived parquet the
-  certificates write is not matched).
+  certificates write is not matched);
+- every join pinned against AQE's timing-dependent strategy choice
+  (_PINNED_JOINS) plans as its hinted operator.
 """
 
 from __future__ import annotations
@@ -194,6 +196,29 @@ _FULL_WIDTH_OK = {
 }
 
 
+# Joins hinted because AQE picked their strategy or build side from the
+# arrival order of cached stages' statistics: the hinted operators each
+# plan must contain. leakage_safe_split's pins are jaccard_pairs', seen
+# here in minhash_band_tuning_curve (its own plan reads checkpointed
+# label rounds). The two broadcast sides are broadcast unhinted too here.
+_SHJ = r"ShuffledHashJoin \[%s#\d+L?\], \[%s#\d+L?\], %s, BuildRight"
+_SHJ_S = _SHJ % ("s", "s", "Inner")
+_SHJ_IDS = [_SHJ % (k, k, "Inner") for k in ("id1", "id2")]
+_BHJ = r"BroadcastHashJoin \[%s#\d+L\], \[%s#\d+L\], Inner, BuildRight"
+_PINNED_JOINS = {
+    "siegel_revenue_trend": [r"BroadcastNestedLoopJoin BuildRight, Inner, \(x#"],
+    "doc_novelty_score": [_SHJ_S + "$"],
+    "bigram_logprob_score": [_SHJ_S + "$"],
+    "source_overlap_matrix": [_SHJ_S + ", NOT"],
+    "prefix_filter_jaccard_join": [
+        _SHJ_S + "$", _SHJ_S + r", \(\(\(id#", _SHJ % ("id", "id", "LeftSemi"),
+    ] + _SHJ_IDS,
+    "minhash_band_tuning_curve": [_SHJ_S + r", \(id#"] + _SHJ_IDS,
+    "item_item_cf_topk": [_BHJ % ("i", "i"), _BHJ % ("j", "j")],
+    "triangle_clustering_coefficient": [_SHJ % ("lo", "lo", "Inner")],
+}
+
+
 def plan_violations(name: str, plan: str) -> list[str]:
     """The invariants query ``name``'s executed ``plan`` breaks."""
     out = []
@@ -213,4 +238,7 @@ def plan_violations(name: str, plan: str) -> list[str]:
         width = _TABLE_WIDTHS.get(m.group(2))
         if width and ncols >= width and name not in _FULL_WIDTH_OK:
             out.append(f"full-width scan of {m.group(2)} ({ncols} columns)")
+    for pin in _PINNED_JOINS.get(name, ()):
+        if not re.search(pin, plan, re.M):
+            out.append(f"unpinned join: {pin}")
     return out

@@ -70,16 +70,18 @@ def test_core_count_without_entry_records_and_passes(bench, tmp_path):
     assert bench.read_profile(str(tmp_path / "missing.json")) == {}
 
 
-def test_varying_counter_gates_on_its_range(bench):
-    committed = _with("q3_shipping_priority", stages=[6, 7])
-    # inside or overlapping the range: the range widens, no verdict change
-    gate, entry = bench.compare_counters(committed, _with("q3_shipping_priority", stages=[7, 8]))
-    assert (gate["verdict"], gate["up"]) == ("PASS", [])
-    assert entry["q3_shipping_priority"]["stages"] == [6, 8]
-    # every execution above every committed one: FAIL
-    gate, entry = bench.compare_counters(committed, _with("q3_shipping_priority", stages=8))
-    assert gate["up"] == ["q3_shipping_priority.stages [6, 7]->8"]
-    assert entry["q3_shipping_priority"]["stages"] == 8
+def test_disagreeing_executions_fail_and_are_named(bench):
+    runs = {name: [counters] * 4 for name, counters in COMMITTED.items()}
+    gate, entry = bench.counter_gate(COMMITTED, runs)
+    assert (gate["verdict"], gate["disagree"], entry) == ("PASS", [], COMMITTED)
+    # the second of four executions re-plans with one more stage: FAIL,
+    # named with every execution's value, though the first one matches
+    q3 = COMMITTED["q3_shipping_priority"]
+    runs["q3_shipping_priority"] = [q3, {**q3, "stages": 7}, q3, q3]
+    gate, entry = bench.counter_gate(COMMITTED, runs)
+    assert gate["verdict"] == "FAIL"
+    assert gate["disagree"] == ["q3_shipping_priority.stages [6, 7, 6, 6]"]
+    assert (gate["up"], gate["down"], entry) == ([], [], COMMITTED)  # one int each
 
 
 def test_profile_file_has_one_line_per_query_and_round_trips(bench, tmp_path):

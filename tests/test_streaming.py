@@ -190,22 +190,14 @@ def test_stream_dedup_within_watermark_bounded_state(spark, landing_dir, events_
 def test_foreach_batch_idempotent_replay_no_duplicates(spark, landing_dir, events_schema, tmp_path):
     """Re-running a batch (fresh checkpoint, same input) overwrites its
     own _batch_id partition instead of appending a second copy."""
-    import shutil as _sh
-    import tempfile as _tf
-
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        foreach_batch_append_idempotent,
-    )
+    from ecommerce_data_pipeline_spark.streaming.pipeline import fold_landing
 
     out = str(tmp_path / "warehouse")
-    for _ in range(2):  # second run = full replay with a new checkpoint
-        ckpt = _tf.mkdtemp(prefix="ckpt_idem_")
-        stream = read_file_stream(spark, landing_dir, events_schema)
-        drain(foreach_batch_append_idempotent(stream, out, ckpt))
-        _sh.rmtree(ckpt, ignore_errors=True)
-    landed = spark.read.parquet(out)
+    for run in range(2):  # second run = full replay with a new checkpoint
+        ckpt = str(tmp_path / f"ckpt{run}")
+        landed = fold_landing(spark, lambda s: s, landing_dir, events_schema, out, ckpt)
     # the sink must hold exactly the landing rows, not 2x after replay
-    assert landed.drop("_batch_id").count() == spark.read.schema(
+    assert landed.count() == spark.read.schema(
         events_schema
     ).parquet(landing_dir).count()
 
