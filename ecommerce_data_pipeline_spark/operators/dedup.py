@@ -10,7 +10,7 @@ Reference parity (the load-bearing semantic of the whole pipeline):
 Extensions (LLM-data-pipeline tier):
 - exact content dedup via sha2(content) — hash-groupBy, one shuffle on a
   256-bit key (collision-free in practice), deterministic survivor.
-- streaming form lives in streaming/pipeline.py (dropDuplicates + watermark).
+- streaming form lives in streaming/pipeline.py (dropDuplicatesWithinWatermark).
 """
 
 from __future__ import annotations
@@ -27,15 +27,6 @@ def new_rows_only(candidates: DataFrame, existing: DataFrame, key: str) -> DataF
     (``dimension_tables_mock.py:62-63``).
     """
     return candidates.join(existing.select(key), on=key, how="left_anti")
-
-
-def insert_new(candidates: DataFrame, existing: DataFrame, key: str) -> DataFrame:
-    """EP1 insert-if-absent: existing ∪ (candidates ∖ existing-by-key).
-
-    Idempotent: re-running with the same candidates adds zero rows —
-    the invariant the reference enforces at dimension_tables_mock.py:61-68.
-    """
-    return existing.unionByName(new_rows_only(candidates, existing, key))
 
 
 def dedup_by_key(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:

@@ -94,19 +94,6 @@ def scd2_merge(
     )
 
 
-def scd1_upsert(current: DataFrame, updates: DataFrame, key: str) -> DataFrame:
-    """SCD type-1 upsert: overwrite-in-place dimension maintenance —
-    updated keys replace their old row, new keys insert, everything else
-    passes through. No history kept (that is scd2_merge's job).
-
-    Plan shape: ONE anti join (current rows whose key is not updated)
-    plus a union — the update side is broadcast when small (the common
-    dimension-refresh case), so the big current table never shuffles.
-    """
-    survivors = current.join(updates.select(key), key, "left_anti")
-    return survivors.unionByName(updates.select(*current.columns))
-
-
 def cdc_compact(changelog: DataFrame, key: str, order_cols: list[str]) -> DataFrame:
     """Compact an ordered upsert/delete changelog to its final snapshot:
     last writer wins per key (ordered by ``order_cols``, which must be a
@@ -114,8 +101,8 @@ def cdc_compact(changelog: DataFrame, key: str, order_cols: list[str]) -> DataFr
     Expects an ``op`` column of 'U'/'D'; all other columns pass through.
 
     One shuffle on the key, a partitioned latest-row pick, a filter —
-    the merge-on-read compaction shape (see the registered
-    ``cdc_apply_snapshot`` query for the oracle-checked twin)."""
+    the merge-on-read compaction shape; the registered
+    ``cdc_apply_snapshot`` query runs it against its oracle."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -125,28 +112,6 @@ def cdc_compact(changelog: DataFrame, key: str, order_cols: list[str]) -> DataFr
         .where((F.col("__rn") == 1) & (F.col("op") == "U"))
         .drop("__rn")
     )
-
-
-def cdc_apply_increment(
-    snapshot: DataFrame, batch: DataFrame, key: str, order_cols: list[str]
-) -> DataFrame:
-    """Incrementally advance a compacted snapshot with one new changelog
-    micro-batch: union the prior snapshot (its rows are implicit 'U'
-    entries at their original order position) with the batch, then
-    re-compact. Because compaction is associative over ordered batches,
-    folding batches one at a time equals compacting the full log in one
-    shot (pinned by test_cdc_incremental_fold_equals_batch_compaction) —
-    the property that lets a foreachBatch sink maintain the snapshot
-    with per-batch work proportional to |snapshot|+|batch|, never the
-    full history.
-
-    Caveat: the equivalence requires batches to partition the log in
-    ``order_cols`` order (the streaming watermark guarantee). With
-    cross-batch late data, a delete tombstone dropped at compaction
-    time can no longer veto an older update arriving later — retain
-    tombstones (filter ``op='D'`` only at read time) if the source can
-    reorder across batches."""
-    return cdc_compact(snapshot.unionByName(batch), key, order_cols)
 
 
 def scd2_as_of(history: DataFrame, as_of) -> DataFrame:

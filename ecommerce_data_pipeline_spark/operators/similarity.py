@@ -114,22 +114,26 @@ def jaccard_pairs(
     run exact-hash dedup FIRST — a cluster of k verbatim copies puts df≥k
     on every one of its shingles, so the cap would otherwise hide it).
     """
-    # the shingle relation feeds three consumers (sizes + both join
-    # sides); persist it so the explode+window shuffle runs once
+    # the shingle relation feeds both join sides; persist it so the
+    # explode+window shuffle runs once
     sh = df_capped_shingles(docs, max_df=max_df).persist()
-    # shuffle_hash pinned on the three joins below: AQE broadcast whichever
-    # side's cached stats landed first, and every side is corpus-sized
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n")).hint("shuffle_hash")
-    a = sh.alias("a")
-    b = sh.alias("b").hint("shuffle_hash")
-    pairs = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
+    # every shingle row carries its document's set size, so a pair knows
+    # both sizes without a sizes join (the prefix_filter_jaccard_pairs
+    # set_n form)
+    sized = sh.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("id")))
+    a = sized.alias("a")
+    # shuffle_hash pinned: AQE broadcast whichever side's cached stats
+    # landed first, and both sides are corpus-sized
+    b = sized.alias("b").hint("shuffle_hash")
     out = (
-        pairs.join(sizes.withColumnsRenamed({"id": "id1", "n": "n1"}), "id1")
-        .join(sizes.withColumnsRenamed({"id": "id2", "n": "n2"}), "id2")
+        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
+        .groupBy(
+            F.col("a.id").alias("id1"),
+            F.col("b.id").alias("id2"),
+            F.col("a.n").alias("n1"),
+            F.col("b.n").alias("n2"),
+        )
+        .agg(F.count(F.lit(1)).alias("common"))
         .withColumn("jaccard", F.col("common") / (F.col("n1") + F.col("n2") - F.col("common")))
         .filter(F.col("jaccard") >= threshold)
     )

@@ -1,10 +1,9 @@
-"""Skew mitigation: salted aggregation and salted joins.
+"""Skew mitigation: salted aggregation.
 
-AQE's skew-join splitting (on in session.py) handles most runtime skew;
-these explicit forms cover the cases AQE can't: skewed AGGREGATION keys
-(AQE only splits join partitions) and broadcast-inviable medium dims with
-a hot fact key. Both are pure DataFrame rewrites — no custom physical
-operators.
+AQE's skew-join splitting (on in session.py) handles runtime join skew;
+the explicit form here covers the case AQE can't: skewed AGGREGATION
+keys (AQE only splits join partitions). It is a pure DataFrame rewrite —
+no custom physical operator.
 """
 
 from __future__ import annotations
@@ -39,20 +38,3 @@ def salted_sum(df: DataFrame, group_cols: list[str], sum_col: str) -> DataFrame:
         )
     )
 
-
-def salted_join(facts: DataFrame, dim: DataFrame, key: str) -> DataFrame:
-    """Skew-proof equi-join: facts draw a random salt, the dim side is
-    replicated once per salt value, and the join key becomes (key, salt).
-
-    The hot fact key's rows land on 8 different reducers instead of one.
-    Replication multiplies the dim shuffle volume by the bucket count —
-    use when the dim is too big to broadcast but small enough to
-    replicate (the awkward middle AQE sometimes misses).
-    """
-    salted_facts = facts.withColumn("_salt", F.floor(F.rand(42) * 8).cast("int"))
-    replicated_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(7)))
-    )
-    return salted_facts.join(replicated_dim, on=[key, "_salt"], how="inner").drop(
-        "_salt"
-    )

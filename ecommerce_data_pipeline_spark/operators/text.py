@@ -142,31 +142,3 @@ def pack_documents(docs, budget_tokens: int = 512, shard_col: str | None = None)
         F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
     )
 
-
-def make_token_spans_udtf():
-    """Python UDTF (Spark 4, Arrow-optimized) emitting (token, start, end)
-    character spans per input text — the lateral-join form of
-    tokenization, for consumers that need OFFSETS (span highlighting,
-    annotation alignment) rather than just the token stream.
-
-    API-surface parity note: this is the engine's one UDTF, provided for
-    lateral-view ergonomics and registered nowhere in the graded query
-    surface — the repo's hot-path policy stands (Column expressions or
-    Arrow-batched mapInPandas; a UDTF evaluates per-row in Python even
-    with Arrow transfer, so it is the WRONG tool for corpus-sized scans).
-    Offsets follow the same token definition as tokens(): lowercased
-    [a-z0-9]+ runs; span indices are 0-based over the lowercased text.
-    """
-    import re
-
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="token: string, start: int, end: int", useArrow=True)
-    class TokenSpans:
-        def eval(self, text: str):
-            if not text:
-                return
-            for m in re.finditer(r"[a-z0-9]+", text.lower()):
-                yield m.group(0), m.start(), m.end()
-
-    return TokenSpans

@@ -50,23 +50,9 @@ def flagship_revenue_over(
     part: DataFrame,
     customer: DataFrame,
     *,
-    co_located: bool = False,
     skewed_fact: bool = False,
 ) -> DataFrame:
     """Flagship plan over caller-supplied relations.
-
-    ``co_located=True`` declares that ``lineitem`` and ``orders`` are
-    already hash-co-located on the order key — i.e. they were written as
-    bucketed tables with the same bucket count (``bucket_fact_tables``)
-    and read back via ``spark.table``. The plan then skips the explicit
-    repartition, and Spark's bucketing metadata satisfies both the dedup
-    groupBy's clustered-distribution requirement (l_orderkey is a subset
-    of the grouping key) and the sort-merge join's, so the fact stream is
-    joined with ZERO Exchange operators — the last avoidable fact
-    movement at 100 TB (guarded by tests/test_scale_paths.py::
-    test_flagship_bucketed_zero_fact_shuffle). The flag is a pure layout
-    hint: results are identical either way, Spark re-inserts exchanges if
-    the inputs are not actually co-located.
 
     ``skewed_fact=True`` trades the single-exchange optimization for
     skew tolerance. The default plan's one ``repartition("l_orderkey")``
@@ -82,16 +68,7 @@ def flagship_revenue_over(
     runtime. Two fact exchanges instead of one — the price of a hot key
     (guarded by tests/test_skew.py::
     test_flagship_skewed_orderkey_probe; results identical either way).
-    Mutually exclusive with ``co_located`` (a bucketed layout has fixed
-    the partitioning already — a hot key there needs a layout change,
-    not a plan flag).
     """
-    if co_located and skewed_fact:
-        raise ValueError(
-            "co_located and skewed_fact are mutually exclusive: bucketed "
-            "layout pins the partitioning; mitigate a hot key at the "
-            "layout level (e.g. more buckets or salting at write)"
-        )
     # Project BEFORE dedup: dedup_by_key's min-struct otherwise carries
     # every lineitem column through the aggregate and the scan reads all
     # 11 (the one full-width scan a ReadSchema audit found across the
@@ -100,8 +77,7 @@ def flagship_revenue_over(
     # ORDER BY list changes in lockstep (plans/relational.py), and a
     # winner flip can only happen between duplicate rows whose consumed
     # values the new tie-break itself orders, so Spark and the oracle
-    # stay bit-identical. Projection preserves bucketing metadata, so the
-    # co_located zero-exchange path is unaffected.
+    # stay bit-identical.
     lineitem = lineitem.select(
         "l_orderkey", "l_linenumber", "l_partkey",
         "l_quantity", "l_extendedprice", "l_discount",
@@ -113,9 +89,7 @@ def flagship_revenue_over(
     # clustered-distribution requirement is already satisfied) and the
     # orders join below — the fact stream shuffles once, not twice.
     facts = dedup_by_key(
-        lineitem
-        if (co_located or skewed_fact)
-        else lineitem.repartition("l_orderkey"),
+        lineitem if skewed_fact else lineitem.repartition("l_orderkey"),
         ["l_orderkey", "l_linenumber"],
         "l_partkey",
     )
@@ -157,79 +131,6 @@ def flagship_revenue_over(
     )
 
 
-def bucket_fact_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    database: str = "warehouse",
-    n_buckets: int = 32,
-) -> tuple[str, str]:
-    """One-time layout job: persist lineitem and orders as bucketed tables
-    co-located on the order key.
-
-    Both tables get the SAME bucket count (a requirement for bucket-wise
-    joins) and are sorted within buckets by the order key. Reading them
-    back with ``spark.table`` and passing ``co_located=True`` to
-    ``flagship_revenue_over`` yields a fact join with zero Exchange
-    operators: at 100 TB, bucketing is paid once at ingest and every
-    subsequent orderkey join/groupBy reads pre-shuffled files. Returns the
-    two qualified table names.
-    """
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-    li_name, ord_name = f"{database}.lineitem_b", f"{database}.orders_b"
-    (
-        load_table(spark, sf_dir, "lineitem")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "l_orderkey")
-        .sortBy("l_orderkey")
-        .saveAsTable(li_name)
-    )
-    (
-        load_table(spark, sf_dir, "orders")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "o_orderkey")
-        .sortBy("o_orderkey")
-        .saveAsTable(ord_name)
-    )
-    return li_name, ord_name
-
-
 def run_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """entry() body: the flagship query."""
     return flagship_revenue(spark, sf_dir)
-
-
-def run_flagship_observed(spark: SparkSession, sf_dir: str):
-    """Flagship with single-pass in-flight accounting: ``Dataset.observe``
-    attaches accumulator-backed metrics to the fact scan, so row counts /
-    null-key counts / raw revenue totals are collected DURING the one
-    execution — the 100 TB alternative to a separate DQ pass that would
-    re-read the fact table (dq_constraint_checks is the standalone audit;
-    this is the zero-extra-scan production form).
-
-    Returns ``(result_df, observation)``; ``observation.get`` blocks until
-    the result has been executed once and then yields the metrics dict.
-    Exact accounting: revenue accumulates in DECIMAL(18,4) — observe
-    metrics merge per-task like any partial aggregate, so a float sum
-    would be partition-order dependent.
-    """
-    from pyspark.sql import Observation
-
-    li = load_table(spark, sf_dir, "lineitem")
-    obs = Observation("flagship_dq")
-    li_obs = li.observe(
-        obs,
-        F.count(F.lit(1)).alias("fact_rows_scanned"),
-        F.sum(F.col("l_orderkey").isNull().cast("int")).alias("null_orderkeys"),
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(18,4)"
-            )
-        ).alias("raw_revenue"),
-    )
-    result = flagship_revenue_over(
-        li_obs,
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "customer"),
-    )
-    return result, obs

@@ -1151,68 +1151,6 @@ def _esd_r_col() -> F.Column:
     )
 
 
-def _generalized_esd_unrolled(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The pre-r14 fully-relational ESD form (5 moment aggregates + 5
-    TakeOrdered picks + 4 anti-join localCheckpoints), RETAINED as the
-    parity reference for the driver-fold rewrite — the pq_encode
-    vectorized/fold precedent. Not registered; exercised by the r14
-    parity pytest."""
-    daily = _esd_daily(spark, sf_dir).localCheckpoint()
-    active = daily
-    per_round = []
-    for i in range(1, _ESD_K + 1):
-        lam = _ESD_LAMBDA[i - 1]
-        stats = active.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("rev_q").cast("long").alias("s"),
-            F.sum(F.col("rev_q") * F.col("rev_q"))
-            .cast("long")
-            .alias("ss"),
-        )
-        cand = (
-            active.crossJoin(F.broadcast(stats))
-            .orderBy(
-                F.abs(F.col("rev_q") * F.col("n") - F.col("s")).desc(),
-                "day",
-            )
-            .limit(1)
-        )
-        per_round.append(
-            cand.select(
-                F.lit(i).cast("int").alias("round_i"),
-                "day",
-                (F.col("rev_cents").cast("double") / 100).alias("revenue"),
-                F.round(_esd_r_col(), 6).alias("r_stat"),
-                F.lit(lam).alias("lambda_crit"),
-                (F.round(_esd_r_col(), 6) > F.lit(lam)).alias("exceeds"),
-            )
-        )
-        if i < _ESD_K:
-            active = active.join(
-                F.broadcast(cand.select("day")), "day", "left_anti"
-            ).localCheckpoint()
-    res = per_round[0]
-    for df in per_round[1:]:
-        res = res.unionByName(df)
-    mx = res.agg(
-        F.max(F.when(F.col("exceeds"), F.col("round_i")).otherwise(0))
-        .cast("int")
-        .alias("n_outliers")
-    )
-    return res.crossJoin(F.broadcast(mx)).select(
-        "round_i",
-        "day",
-        "revenue",
-        "r_stat",
-        "lambda_crit",
-        "exceeds",
-        "n_outliers",
-        (F.col("round_i") <= F.col("n_outliers")).alias("is_esd_outlier"),
-    )
-
-
 @register(
     "generalized_esd_outlier_test",
     oracle=_esd_oracle(),
@@ -1246,9 +1184,9 @@ def generalized_esd_outlier_test(
     histogram), collected ONCE; the k trim-round SELECTIONS are a pure
     integer Python fold over those rows (argmax |x·n − S|, day
     tie-break — no floats, so nothing to diverge), and the published
-    float columns are computed back in Spark by the identical
-    expression text as the retained unrolled form
-    (_generalized_esd_unrolled; bit-parity pinned by the r14 pytest).
+    float columns are computed back in Spark by the same expression
+    text (_esd_r_col) the DuckDB oracle uses (_esd_r_sql), checked
+    against the oracle at all three fixture sizes.
     Job count: 31 → ~4 (collect + the 5-row certificate fold)."""
     # r14 driver-fold (VERDICT r13 item 4, guide §5): the five trim
     # rounds previously replayed as 5 moment aggregates + 5
@@ -1262,9 +1200,8 @@ def generalized_esd_outlier_test(
     # is no cross-engine fold parity to argue). Every published FLOAT
     # (revenue, r_stat, exceeds) is still computed by the same Spark
     # expression text as before, from the same exact integer inputs, so
-    # the IEEE bit pattern is unchanged — pinned by
-    # tests/test_round14.py::test_generalized_esd_driver_fold_matches_unrolled
-    # against the retained unrolled form below.
+    # the IEEE bit pattern is unchanged — the DuckDB oracle is the
+    # reference, at all three fixture sizes.
     rows = _esd_daily(spark, sf_dir).collect()
     active = [(r["day"], r["rev_cents"], r["rev_q"]) for r in rows]
     picked = []  # (round_i, day, rev_cents, rev_q, n, s, ss, lambda)

@@ -114,8 +114,8 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-minute gap) in batch form: lag +
-    cumulative-sum session ids — the deterministic twin of
-    streaming/session_aggregate's session_window state machine."""
+    cumulative-sum session ids — the deterministic form of Spark's
+    streaming ``session_window`` state machine."""
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
@@ -226,13 +226,12 @@ def events_error_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def view_purchase_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """View→purchase conversion latency per user: every (view, purchase)
-    pair within a 30-minute window — the BATCH TWIN of the bounded-state
-    stream-stream time-range join (streaming/pipeline.py::
-    stream_stream_join uses the identical range condition, so its
-    semantics are oracle-checked here rather than rows-only). The join
-    keys on user_id with a time-range refinement — at scale one shuffle
-    per side on the user key, pair fan-out bounded by per-user activity
-    in the window, exactly the state bound the streaming form enforces."""
+    pair within a 30-minute window — the batch form of a bounded-state
+    stream-stream time-range join under the same range condition. The
+    join keys on user_id with a time-range refinement — at scale one
+    shuffle per side on the user key, pair fan-out bounded by per-user
+    activity in the window, exactly the state bound a watermarked
+    streaming join enforces."""
     events = load_table(spark, sf_dir, "events")
     v = events.filter(F.col("event_type") == "view").select(
         F.col("user_id"), F.col("ts").alias("v_ts")
@@ -492,10 +491,8 @@ _BP_INF = 1 << 60  # lag default: "no prior running min"
 def stream_rate_limit_backpressure(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Rate-limited admission with carry-over backlog — the batch replay
-    of the streaming token-bucket limiter (streaming/pipeline.py::
-    rate_limit_backpressure, its stateful applyInPandasWithState twin;
-    tests pin stream == this replay incl. checkpoint restart). Per
+    """Rate-limited admission with carry-over backlog — the replay of a
+    streaming token-bucket limiter over the whole event log. Per
     (event_type, hour slot): at most CAP events admitted per slot,
     excess queues as backlog that drains CAP per slot including EMPTY
     slots — the Lindley waiting-queue recursion

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ecommerce_data_pipeline_spark.operators.scd import cdc_compact
 from ecommerce_data_pipeline_spark.operators.text import tokens
 from ecommerce_data_pipeline_spark.plans._helpers import rows_equal
 from ecommerce_data_pipeline_spark.plans.registry import register
@@ -475,16 +476,13 @@ def cdc_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else = U), keyed by user.
 
     This is THE shape every CDC sink (Hudi/Iceberg/Delta merge-on-read
-    compaction) reduces to: one shuffle on the primary key, a per-key
-    ordered latest-row pick, a filter. No global ordering — the
-    (ts, event_id) tiebreak is per-key, so a 100 TB changelog compacts
-    with exactly one exchange, and the same plan runs incrementally in
-    foreachBatch (new micro-batch unioned with prior snapshot, same
-    window). Tiebreak is unique (event_id), so the snapshot is
-    deterministic and the oracle matches exactly.
+    compaction) reduces to (``operators/scd.py::cdc_compact``): one
+    shuffle on the primary key, a per-key ordered latest-row pick, a
+    filter. No global ordering — the (ts, event_id) tiebreak is per-key,
+    so a 100 TB changelog compacts with exactly one exchange. Tiebreak is
+    unique (event_id), so the snapshot is deterministic and the oracle
+    matches exactly.
     """
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "ts",
@@ -495,19 +493,12 @@ def cdc_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         "event_type",
     )
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where((F.col("rn") == 1) & (F.col("op") == "U"))
-        .select(
-            "user_id",
-            F.unix_micros("ts").alias("last_ts_us"),
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_event_type"),
-            F.col("value").alias("last_value"),
-        )
+    return cdc_compact(ev, "user_id", ["ts", "event_id"]).select(
+        "user_id",
+        F.unix_micros("ts").alias("last_ts_us"),
+        F.col("event_id").alias("last_event_id"),
+        F.col("event_type").alias("last_event_type"),
+        F.col("value").alias("last_value"),
     )
 
 

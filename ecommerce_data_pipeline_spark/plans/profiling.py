@@ -799,7 +799,7 @@ def interevent_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-event arrival-gap distribution per user (median / p90 / max
     seconds between consecutive events) — the cadence profile that
     calibrates session timeouts (events_sessionize's 30-minute gap) and
-    streaming watermarks (stream_dedup's lateness bound) from data
+    streaming watermarks (a stream dedup's lateness bound) from data
     instead of folklore.
 
     Gaps are EXACT integer microsecond differences from a lag window
@@ -1301,9 +1301,9 @@ def parquet_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's split planning); a single giant file serializes the scan
     (the round-4 q1 probe: one 600k-row row group pinned every lineitem
     query to one core). Key ranges reveal whether files are
-    range-clustered (disjoint min/max ⇒ predicate file-pruning works —
-    write_sorted_parquet's contract) or salt-and-pepper. Metadata-scale
-    output: one row per file."""
+    range-clustered (disjoint min/max ⇒ predicate file-pruning works,
+    as after a range-partitioned sorted write) or salt-and-pepper.
+    Metadata-scale output: one row per file."""
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select(

@@ -75,34 +75,3 @@ def read_transactions_csv(
         .csv(path)
     )
 
-
-def read_json_lines(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    """Schema-pinned JSON-lines source: no inference pass (at 100 TB an
-    inference scan doubles the read), deterministic types, malformed rows
-    fail loudly (FAILFAST) instead of silently nulling."""
-    return spark.read.schema(schema).option("mode", "FAILFAST").json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source (native vectorized reader, pushdown like Parquet)."""
-    return spark.read.orc(path)
-
-
-def read_binary_files(spark: SparkSession, path: str, glob: str) -> DataFrame:
-    """Opaque-blob source for multimodal ingestion (images/audio/video
-    land as raw files): Spark's binaryFile format yields one row per
-    file — (path, modificationTime, length, content BINARY) — which is
-    exactly the schema operators/multimodal.py consumes. pathGlobFilter
-    prunes by extension at LISTING time (no content read for skipped
-    files), the cheap first gate of a 100 TB media crawl."""
-    return spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-
-
-def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution parquet read: mergeSchema unions the footers of
-    every file, so batches written before a column existed surface it as
-    NULL instead of failing the read — how a long-lived landing zone
-    stays readable as the producer's schema grows. Footer merging costs
-    one extra metadata pass (no data read); keep it OFF (the default)
-    for schema-stable tables."""
-    return spark.read.option("mergeSchema", "true").parquet(path)

@@ -188,26 +188,6 @@ def read_file_stream(
     return reader.load(path)
 
 
-# The lateness bound ``stream_dedup`` puts on the stream. The windowed
-# and stateful operators below chain after it and inherit this watermark
-# (Spark takes one watermark definition per stream).
-_DEDUP_WATERMARK = "1 hour"
-
-
-def stream_dedup(events: DataFrame, key_cols: list[str], ts_col: str) -> DataFrame:
-    """Stateful streaming dedup — P3's semantic over an infinite stream,
-    watermarked ``_DEDUP_WATERMARK`` (1 hour) on ``ts_col``.
-
-    CAUTION at scale: ``dropDuplicates(keys)`` without the event-time
-    column among the keys keeps one state row PER KEY FOREVER — on an
-    unbounded key domain that is a state leak (ARCHITECTURE.md §5). It
-    remains correct for re-delivery windows only because re-deliveries
-    are near-in-time; prefer ``stream_dedup_within_watermark`` whenever
-    duplicates can only arrive within the lateness bound.
-    """
-    return events.withWatermark(ts_col, _DEDUP_WATERMARK).dropDuplicates(key_cols)
-
-
 def stream_dedup_within_watermark(
     events: DataFrame, key_cols: list[str], ts_col: str, watermark: str
 ) -> DataFrame:
@@ -220,47 +200,6 @@ def stream_dedup_within_watermark(
     at-least-once sources."""
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         key_cols
-    )
-
-
-def tumbling_counts(events: DataFrame) -> DataFrame:
-    """5-minute tumbling-window counts/sums per event type over ``ts``.
-    The watermark that bounds the open windows is the upstream
-    ``stream_dedup``'s; this operator sets none of its own."""
-    return (
-        events.groupBy(F.window("ts", "5 minutes"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def session_aggregate(events: DataFrame) -> DataFrame:
-    """Per-user session windows over ``ts`` (30-minute gap) — the
-    stateful operator the reference's minute-partitioned landing layout
-    approximates. The watermark that closes sessions is the upstream
-    ``stream_dedup``'s; this operator sets none of its own."""
-    return (
-        events.groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("session_value"),
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "session_value",
-        )
     )
 
 
@@ -297,28 +236,6 @@ def land_batch(df: DataFrame, path: str, batch_id: int) -> None:
         .partitionBy("_batch_id")
         .parquet(path)
     )
-
-
-def run_available_now(
-    df: DataFrame, checkpoint: str, output_mode: str = "append"
-) -> tuple[StreamingQuery, str]:
-    """Drain the stream to an in-memory sink (deterministic test/backfill
-    runner); returns the query + the temp view name holding results.
-
-    Aggregations should use ``output_mode='complete'`` in tests: in append
-    mode a window only emits once the watermark passes it, so the tail
-    windows of a drained finite stream would never appear.
-    """
-    name = f"stream_out_{abs(hash(checkpoint)) % 10**8}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, name
 
 
 # Bound on ONE availableNow drain. A drain still running at this bound
@@ -396,26 +313,6 @@ def fold_landing(
     return spark.read.schema(folded.schema).parquet(out).drop("_batch_id")
 
 
-def stream_stream_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
-    """Stream-stream inner join with a time-range condition. The left
-    side's event time is ``ts``, the right side's ``s_ts`` (distinct
-    names, so both stay addressable in the joined rows).
-
-    Both sides carry 1-hour watermarks and the join requires
-    ``s_ts ∈ [ts - 30 minutes, ts]`` — the bounded-state form:
-    Spark can discard buffered rows once the watermark passes the range,
-    so state stays O(rate × 30 minutes) per key instead of unbounded.
-    """
-    l = left.withWatermark("ts", "1 hour").alias("l")
-    r = right.withWatermark("s_ts", "1 hour").alias("r")
-    cond = (
-        (F.col(f"l.{on}") == F.col(f"r.{on}"))
-        & (F.col("r.s_ts") <= F.col("l.ts"))
-        & (F.col("r.s_ts") >= F.col("l.ts") - F.expr("INTERVAL 30 minutes"))
-    )
-    return l.join(r, cond, "inner")
-
-
 def _fold_by_key(
     keyed: DataFrame,
     key: str,
@@ -423,11 +320,30 @@ def _fold_by_key(
     out_schema: StructType,
     state_schema: StructType,
 ) -> DataFrame:
-    """The shell of every ``applyInPandasWithState`` fold below:
-    ``update(key, pdfs, state)`` folds each ``key`` group's micro-batch
-    rows into its ``state_schema`` state and yields ``out_schema`` rows,
-    emitted in update mode with no state timeout (a fold's state lives
-    as long as its key)."""
+    """The shell of the three ``applyInPandasWithState`` folds below
+    (page-hinkley, mixture, decontam): ``update(key, pdfs, state)`` folds
+    each ``key`` group's micro-batch rows into its ``state_schema`` state
+    and yields ``out_schema`` rows, emitted in update mode with no state
+    timeout (a fold's state lives as long as its key).
+
+    Two rules every fold keeps:
+
+    - Frontier discipline. The state holds the fold's frontier: the last
+      sort key it consumed. A row strictly after the frontier extends
+      the fold deterministically; a row at or before it would re-order
+      output already released downstream, so ``update`` raises instead
+      of silently corrupting the suffix. Within a trigger ``update``
+      sorts its rows, so intra-batch order is free.
+    - Version-anchor rule. The state layout is versioned by a
+      ``_*_STATE_SCHEMA_VERSION`` constant, and a ``{version: n_fields}``
+      map is asserted against ``state_schema`` at plan build, so a
+      ``state_schema`` edit without the version bump fails there, not in
+      a later checkpoint restore. Restoring a checkpoint of an older
+      layout fails at query start through Spark's state-store schema
+      check (keep ``spark.sql.streaming.stateStore.stateSchemaCheck``
+      on: a short tuple read as a long one corrupts the frontier). The
+      migration is a cold replay into a fresh checkpoint: the state is
+      a deterministic fold of the source, so replay reproduces it."""
     return keyed.groupBy(key).applyInPandasWithState(
         update,
         outputStructType=out_schema,
@@ -437,144 +353,6 @@ def _fold_by_key(
     )
 
 
-def stateful_user_counts(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: a per-user
-    running event count + running value sum maintained across
-    micro-batches (the arbitrary-state API the built-in windows can't
-    express — e.g. lifetime counters, custom session logic). The
-    watermark is the upstream ``stream_dedup``'s; this operator sets
-    none of its own.
-
-    The state handler below is fully self-contained (stdlib + pandas
-    only) per the engine's worker-pickling rule.
-    """
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("total_value", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("total", DoubleType()),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        # store the UNROUNDED total (round only on emit): rounding state
-        # compounds error across micro-batches
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-        )
-
-    return _fold_by_key(events, "user_id", update, out_schema, state_schema)
-
-
-def foreach_batch_cdc_snapshot(
-    stream: DataFrame,
-    snapshot_path: str,
-    checkpoint: str,
-    key: str,
-    order_cols: list[str],
-) -> StreamingQuery:
-    """Streaming CDC materialization: each micro-batch of changelog rows
-    (op='U'/'D') advances a compacted snapshot via
-    ``operators/scd.py::cdc_apply_increment`` — the Structured-Streaming
-    form of merge-on-read compaction.
-
-    Snapshots are VERSIONED (``v=<batch_id>`` subdirs): a batch reads
-    the latest prior version and writes its own, never overwriting what
-    it reads (read-then-overwrite of the same files races the lazy
-    scan), and a crashed batch's re-run overwrites only its own version
-    dir — idempotent replay, same discipline as ``land_batch``.
-    Readers take the max version; old versions are retention-pruned
-    out-of-band (time travel for free). Per-batch work is
-    |snapshot|+|batch| (one shuffle on the key), never the full
-    history."""
-    session = stream.sparkSession
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        import os
-
-        from ecommerce_data_pipeline_spark.operators.scd import (
-            cdc_apply_increment,
-        )
-
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in (os.listdir(snapshot_path) if os.path.isdir(snapshot_path) else [])
-            if d.startswith("v=") and int(d.split("=", 1)[1]) < batch_id
-        ]
-        if prior:
-            snap = session.read.parquet(f"{snapshot_path}/v={max(prior)}")
-        else:
-            snap = session.createDataFrame([], batch.schema)
-        out = cdc_apply_increment(snap, batch, key, order_cols)
-        out.write.mode("overwrite").parquet(f"{snapshot_path}/v={batch_id}")
-
-    return _start_foreach_batch(stream, handle, checkpoint)
-
-
-def foreach_batch_incremental_neardup(
-    stream: DataFrame,
-    docs_path: str,
-    sigs_path: str,
-    pairs_path: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Continuous near-dedup of a growing corpus: each micro-batch of
-    documents is MinHash-banded against the persisted signature store,
-    the near-dup pairs it INTRODUCES land in ``pairs_path``, and the
-    batch's documents + signatures merge into the stores.
-
-    The streaming composition of ``operators/similarity.py::
-    incremental_neardup`` — banding cost per trigger is
-    O(batch · bands), never O(corpus · bands), which is what makes
-    continuous dedup of a 100 TB corpus affordable: the corpus is
-    touched only through its signature store plus the exact-verify
-    candidates' text. Every pair is emitted exactly once, at the batch
-    where its LATER member arrives (union over batches == the batch-mode
-    pair relation — pinned in tests/test_streaming.py).
-
-    Exactly-once: all three sinks land through ``land_batch``, so a
-    crash-replayed batch replaces its own output.
-    """
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        # banding, verify and the docs sink all read the batch — pin it.
-        # A persist (not localCheckpoint) so the finally below can RECLAIM
-        # the blocks per trigger: localCheckpoint blocks bypass the
-        # CacheManager and linger until ContextCleaner GC, which
-        # accumulates in a long-running stream (r6 ADVICE). The lineage is
-        # a deterministic micro-batch read, so an evicted block recomputing
-        # is merely slow, never wrong. The pin releases on EVERY exit,
-        # including the store-ahead-of-checkpoint RuntimeError.
-        batch = batch.persist()
-        try:
-            neardup_store_increment(
-                batch, batch_id, docs_path, sigs_path, pairs_path
-            )
-        finally:
-            batch.unpersist()
-
-    return _start_foreach_batch(stream, handle, checkpoint)
-
-
 def neardup_store_increment(
     batch: DataFrame,
     batch_id: int,
@@ -582,14 +360,25 @@ def neardup_store_increment(
     sigs_path: str,
     pairs_path: str,
 ) -> None:
-    """One micro-batch advance of the continuous near-dedup stores —
-    the ``foreach_batch_incremental_neardup`` body, module-level so other
-    foreachBatch compositions (``streaming/flagship.py``) and crash-replay
-    tests can invoke a single batch directly. The caller pins ``batch``
-    (it is read by the banding, the verify and the docs sink), as both
-    foreachBatch handlers do. Semantics, replay guards, and the
-    ``_batch_id`` idempotent landing scheme are documented on the
-    wrapper above."""
+    """One micro-batch advance of the continuous near-dedup stores: the
+    batch's documents are MinHash-banded against the persisted signature
+    store, the near-dup pairs it INTRODUCES land in ``pairs_path``, and
+    its documents + signatures merge into the stores. Called from the
+    ``streaming/flagship.py`` foreachBatch handler, and directly by the
+    crash-replay tests.
+
+    The streaming composition of ``operators/similarity.py::
+    incremental_neardup`` — banding cost per trigger is
+    O(batch · bands), never O(corpus · bands): the corpus is touched
+    only through its signature store plus the exact-verify candidates'
+    text. Every pair is emitted exactly once, at the batch where its
+    LATER member arrives (union over batches == the batch-mode pair
+    relation — pinned in tests/test_streaming.py).
+
+    Exactly-once: all three sinks land through ``land_batch``, so a
+    crash-replayed batch replaces its own output; the replay guards
+    are below. The caller pins ``batch`` (it is read by the banding,
+    the verify and the docs sink)."""
     from pyspark.errors import AnalysisException
 
     from ecommerce_data_pipeline_spark.operators.similarity import (
@@ -657,243 +446,6 @@ def neardup_store_increment(
             df.unpersist()
 
 
-# Events admitted per key per hour slot by ``rate_limit_backpressure``.
-_BACKPRESSURE_CAP = 1
-
-
-def rate_limit_backpressure(events: DataFrame) -> DataFrame:
-    """Streaming rate limiter with carry-over backlog — the stateful twin
-    of the batch replay ``plans/events_plans.py::backpressure_replay``
-    (the plan of ``stream_rate_limit_backpressure``, which carries the
-    exact DuckDB oracle; tests pin stream == replay at the same cap,
-    including checkpoint restart).
-
-    Per event_type, at most ``cap`` (``_BACKPRESSURE_CAP``) events are
-    admitted per hour slot; excess queues and drains ``cap`` per slot
-    INCLUDING empty slots (Lindley recursion). State per key is two
-    integers (last processed slot, backlog) — O(keys), not O(events):
-    the backpressure operator
-    stays viable at any stream volume because gaps are drained by
-    arithmetic (cap × gap length), never by materializing empty slots.
-    Emits one row per (key, observed slot) in update mode. Slots must
-    arrive in STRICTLY INCREASING event-time order across triggers —
-    i.e. file/trigger boundaries aligned to slot boundaries (the
-    per-day landing convention satisfies this for hourly slots). The
-    handler enforces it: a slot at or before the checkpointed last_slot
-    raises instead of silently double-admitting (advisor r8 — a slot
-    straddling two micro-batches would see gap = 0 and admit up to
-    ``cap`` AGAIN, emitting a duplicate (key, slot) row that diverges
-    from the batch replay). Within a trigger the handler sorts, so
-    intra-batch order is free.
-    """
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    cap = _BACKPRESSURE_CAP
-    out_schema = StructType(
-        [
-            StructField("event_type", StringType()),
-            StructField("slot", LongType()),
-            StructField("arrivals", LongType()),
-            StructField("carry_in", LongType()),
-            StructField("admitted", LongType()),
-            StructField("backlog", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("last_slot", LongType()), StructField("backlog", LongType())]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        last_slot, backlog = state.get if state.exists else (None, 0)
-        counts = {}
-        for pdf in pdfs:
-            for s in pdf["slot"]:
-                s = int(s)
-                counts[s] = counts.get(s, 0) + 1
-        out = {c: [] for c in ("slot", "arrivals", "carry_in", "admitted", "backlog")}
-        for s in sorted(counts):
-            if last_slot is not None and s <= last_slot:
-                # a straddled/reordered slot would re-admit up to cap for
-                # an already-emitted (key, slot) — fail loudly instead
-                raise ValueError(
-                    f"rate_limit_backpressure: slot {s} for key "
-                    f"{key[0]!r} arrived at or before already-processed "
-                    f"slot {last_slot}; slots must be strictly "
-                    "increasing across triggers (align trigger/file "
-                    "boundaries to slot boundaries)"
-                )
-            a = counts[s]
-            # drain cap per empty slot since the last observed one
-            gap = 0 if last_slot is None else max(0, s - last_slot - 1)
-            carry = max(0, backlog - cap * gap)
-            admitted = min(carry + a, cap)
-            backlog = carry + a - admitted
-            last_slot = s
-            out["slot"].append(s)
-            out["arrivals"].append(a)
-            out["carry_in"].append(carry)
-            out["admitted"].append(admitted)
-            out["backlog"].append(backlog)
-        state.update((last_slot, backlog))
-        yield pd.DataFrame({"event_type": [key[0]] * len(out["slot"]), **out})
-
-    slotted = events.select(
-        "event_type",
-        (
-            # hour slot 0 = 2024-01-01 00:00, the batch replay's anchor
-            F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date")) * 24
-            + F.hour("ts")
-        )
-        .cast("long")
-        .alias("slot"),
-    )
-    return _fold_by_key(slotted, "event_type", update, out_schema, state_schema)
-
-
-def dp_contribution_cap(
-    orders: DataFrame,
-    cap: int | None = None,
-    clip_cents: int | None = None,
-) -> DataFrame:
-    """Streaming contribution bounding — the stateful twin of
-    ``plans/entity_resolution.py::dp_contribution_bounding`` (which
-    carries the exact DuckDB oracle): per customer, only the FIRST
-    ``cap`` orders (full event-TIMESTAMP order, orderkey tiebreak —
-    exactly the batch twin's (o_orderdate, o_orderkey) sort) contribute,
-    each clipped at ``clip_cents``, so a DP release pipeline can
-    enforce its L1 sensitivity bound ON INGEST instead of in a batch
-    rewrite. State per customer is five integers — the (last_ts,
-    last_okey) admission frontier plus three ledger counters —
-    O(customers), not O(orders).
-
-    State-schema migration (advisor r10; runbook: ARCHITECTURE.md §21):
-    the state layout is versioned by ``_DP_STATE_SCHEMA_VERSION`` (v1 =
-    4 fields pre-r10, v2 = 5 fields with last_okey). Restoring a v1
-    checkpoint fails AT QUERY START via Spark's state-store schema
-    check (``spark.sql.streaming.stateStore.stateSchemaCheck``, default
-    on — do NOT disable it for this query: a 4-field tuple silently
-    reinterpreted would corrupt the admission frontier). The migration
-    is a COLD REPLAY into a fresh checkpoint directory: the ledger is a
-    deterministic fold of the source in (ts, orderkey) order, so replay
-    reproduces v2 state exactly — there is no in-place upgrade path.
-
-    Emits one cumulative ledger row per (customer, trigger) in update
-    mode: orders seen, orders admitted, bounded contribution cents.
-    The final row per customer must equal the batch ledger (pinned in
-    tests/test_round9.py, including checkpoint restart).
-
-    Ordering contract (the backpressure discipline): the per-key
-    admission frontier is the full (timestamp, orderkey) SORT KEY, not
-    the timestamp alone (advisor r9: date-granularity o_orderdate makes
-    two same-day orders split across triggers a routine layout — under
-    a ts-only frontier that raised, turning a data-layout nit into a
-    pipeline outage). A batch row strictly after the checkpointed
-    (last_ts, last_okey) in sort order extends the "first N" prefix and
-    admits deterministically; only a row AT OR BEFORE the frontier —
-    which would re-order membership already released downstream —
-    raises. Within a trigger the handler sorts by (ts, orderkey), so
-    intra-batch order is free.
-    """
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from ecommerce_data_pipeline_spark.plans.entity_resolution import (
-        _DP_CAP_ORDERS,
-        _DP_CLIP_CENTS,
-    )
-
-    cap = _DP_CAP_ORDERS if cap is None else cap
-    clip_cents = _DP_CLIP_CENTS if clip_cents is None else clip_cents
-
-    # v1 = 4 fields (pre-r10, ts-only frontier); v2 = 5 fields (+ last_okey).
-    # Bump this whenever state_schema below changes, and add the matching
-    # migration note to the docstring + ARCHITECTURE.md §21 runbook.
-    _DP_STATE_SCHEMA_VERSION = 2
-
-    out_schema = StructType(
-        [
-            StructField("o_custkey", LongType()),
-            StructField("n_seen", LongType()),
-            StructField("n_admitted", LongType()),
-            StructField("bounded_cents", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("last_ts", LongType()),
-            StructField("last_okey", LongType()),
-            StructField("n_seen", LongType()),
-            StructField("n_admitted", LongType()),
-            StructField("bounded_cents", LongType()),
-        ]
-    )
-
-    # the version anchor is LOAD-BEARING (review r11): a state_schema
-    # edit without the version bump (or vice versa) fails here at
-    # plan-build time, not in a future maintainer's checkpoint restore
-    _DP_STATE_FIELDS_BY_VERSION = {1: 4, 2: 5}
-    assert (
-        _DP_STATE_FIELDS_BY_VERSION[_DP_STATE_SCHEMA_VERSION]
-        == len(state_schema.fields)
-    ), "bump _DP_STATE_SCHEMA_VERSION with the state_schema change"
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        last_ts, last_okey, n_seen, n_admitted, cents = (
-            state.get if state.exists else (None, None, 0, 0, 0)
-        )
-        rows = []
-        for pdf in pdfs:
-            for ts, okey, c in zip(
-                pdf["ts_sec"], pdf["o_orderkey"], pdf["cents"]
-            ):
-                rows.append((int(ts), int(okey), int(c)))
-        rows.sort()
-        if (
-            rows
-            and last_ts is not None
-            and (rows[0][0], rows[0][1]) <= (last_ts, last_okey)
-        ):
-            raise ValueError(
-                f"dp_contribution_cap: order (ts={rows[0][0]}, "
-                f"orderkey={rows[0][1]}) for customer {key[0]} arrived "
-                f"at or before the already-processed sort frontier "
-                f"(ts={last_ts}, orderkey={last_okey}); this would "
-                "re-order first-N membership already released — land "
-                "files in non-decreasing (date, orderkey) order"
-            )
-        for ts, okey, c in rows:
-            n_seen += 1
-            if n_admitted < cap:
-                n_admitted += 1
-                cents += min(c, clip_cents)
-            last_ts, last_okey = ts, okey
-        state.update((last_ts, last_okey, n_seen, n_admitted, cents))
-        yield pd.DataFrame(
-            {
-                "o_custkey": [int(key[0])],
-                "n_seen": [n_seen],
-                "n_admitted": [n_admitted],
-                "bounded_cents": [cents],
-            }
-        )
-
-    prepared = orders.select(
-        "o_custkey",
-        # FULL timestamp seconds, not calendar day: the batch twin
-        # orders by the o_orderdate TIMESTAMP (orderkey tiebreak), so
-        # intra-day times must order identically here (review r9)
-        F.col("o_orderdate").cast("long").alias("ts_sec"),
-        "o_orderkey",
-        (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
-    )
-    return _fold_by_key(prepared, "o_custkey", update, out_schema, state_schema)
-
-
 def page_hinkley_stream(daily: DataFrame) -> DataFrame:
     """Streaming twin of ``plans/analytics_series.py::
     page_hinkley_drift_daily`` (which carries the exact DuckDB oracle):
@@ -911,7 +463,7 @@ def page_hinkley_stream(daily: DataFrame) -> DataFrame:
     query's published values (pinned in tests/test_round11.py,
     including checkpoint restart).
 
-    Ordering contract (the dp_contribution_cap frontier discipline):
+    Ordering contract (the ``_fold_by_key`` frontier discipline):
     days must arrive in strictly increasing order ACROSS triggers —
     the running mean makes every statistic a prefix fold, so a
     re-delivered or late day would silently corrupt the whole suffix;
@@ -1080,7 +632,7 @@ def mixture_monitor_stream(
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     # v1 = 3 fields (frontier, cum_total, counts CSV). Bump with any
-    # state_schema change (the dp_contribution_cap version-anchor rule).
+    # state_schema change (the ``_fold_by_key`` version-anchor rule).
     _MIX_STATE_SCHEMA_VERSION = 1
 
     out_schema = StructType(
@@ -1231,7 +783,7 @@ def decontam_monitor_stream(hits: DataFrame) -> DataFrame:
     from pyspark.sql.types import LongType, StructField, StructType
 
     # v1 = 1 field (first_shard). Bump with any state_schema change
-    # (the dp_contribution_cap version-anchor rule).
+    # (the ``_fold_by_key`` version-anchor rule).
     _DECON_STATE_SCHEMA_VERSION = 1
 
     out_schema = StructType(

@@ -213,7 +213,7 @@ _PINNED_JOINS = {
     "prefix_filter_jaccard_join": [
         _SHJ_S + "$", _SHJ_S + r", \(\(\(id#", _SHJ % ("id", "id", "LeftSemi"),
     ] + _SHJ_IDS,
-    "minhash_band_tuning_curve": [_SHJ_S + r", \(id#"] + _SHJ_IDS,
+    "minhash_band_tuning_curve": [_SHJ_S + r", \(id#"],
     "item_item_cf_topk": [_BHJ % ("i", "i"), _BHJ % ("j", "j")],
     "triangle_clustering_coefficient": [_SHJ % ("lo", "lo", "Inner")],
 }

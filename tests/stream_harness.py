@@ -1,0 +1,58 @@
+"""Streaming test plumbing: a memory-sink drain and the near-dedup
+foreachBatch sink shell. Neither is engine code: the engine's streaming
+jobs land through ``fold_landing`` and ``streaming/flagship.py``."""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
+
+from ecommerce_data_pipeline_spark.streaming.pipeline import (
+    _start_foreach_batch,
+    neardup_store_increment,
+)
+
+
+def run_available_now(
+    df: DataFrame, checkpoint: str, output_mode: str = "append"
+) -> tuple[StreamingQuery, str]:
+    """Drain the stream to an in-memory sink; returns the query + the
+    temp view name holding results.
+
+    Aggregations should use ``output_mode='complete'``: in append mode a
+    window only emits once the watermark passes it, so the tail windows
+    of a drained finite stream would never appear.
+    """
+    name = f"stream_out_{abs(hash(checkpoint)) % 10**8}"
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    return q, name
+
+
+def foreach_batch_incremental_neardup(
+    stream: DataFrame,
+    docs_path: str,
+    sigs_path: str,
+    pairs_path: str,
+    checkpoint: str,
+) -> StreamingQuery:
+    """Continuous near-dedup of a growing corpus: every micro-batch runs
+    ``neardup_store_increment`` under its own pin, released on every
+    exit, including the store-ahead-of-checkpoint ``RuntimeError``."""
+
+    def handle(batch: DataFrame, batch_id: int) -> None:
+        batch = batch.persist()
+        try:
+            neardup_store_increment(
+                batch, batch_id, docs_path, sigs_path, pairs_path
+            )
+        finally:
+            batch.unpersist()
+
+    return _start_foreach_batch(stream, handle, checkpoint)

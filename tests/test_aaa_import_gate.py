@@ -1,9 +1,10 @@
 """Fresh-interpreter import-integrity gate (VERDICT r8 task #2).
 
 Named ``test_aaa_*`` so pytest's alphabetical collection runs it FIRST:
-a dropped module-level import (the r7/r8 module-surgery incident class)
-or an oracle string DuckDB cannot bind fails the suite within seconds,
-instead of surfacing at the full oracle pass. The gate must run in a
+a dropped module-level import (the r7/r8 module-surgery incident class),
+an oracle string DuckDB cannot bind, or an engine def or constant that
+no non-test code reaches fails the suite within seconds, instead of
+surfacing at the full oracle pass. The gate must run in a
 FRESH interpreter: the pytest session's own module cache can mask a
 broken import order (the module that defines the missing name may
 already be imported by conftest before the broken module loads).

@@ -1,5 +1,5 @@
 """Unit tests for operator semantics the oracle can't express:
-idempotent insert (EP1 invariant), seeded sampling determinism, as-of and
+EP1 anti-join insert semantics, seeded sampling determinism, as-of and
 range joins, partitioned sinks, CSV ingest round-trip (SURVEY.md §5.3-5.4).
 """
 
@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.operators.dedup import (
     dedup_by_key,
-    insert_new,
     new_rows_only,
 )
 from ecommerce_data_pipeline_spark.operators.joins import as_of_join, range_join
@@ -31,20 +30,6 @@ from ecommerce_data_pipeline_spark.sources.writers import (
     write_partitioned_parquet,
 )
 from tests.conftest import SF_SMOKE
-
-
-def test_insert_new_is_idempotent(spark):
-    """EP1 invariant (dimension_tables_mock.py:61-68): re-inserting the
-    same candidate batch adds zero rows."""
-    customer = load_table(spark, SF_SMOKE, "customer")
-    existing = customer.filter(F.col("c_custkey") <= 75)
-    candidates = customer.filter(F.col("c_custkey") <= 100)
-    expected = candidates.count()  # candidates ⊇ existing by construction
-    once = insert_new(candidates, existing, "c_custkey")
-    assert once.count() == expected
-    twice = insert_new(candidates, once, "c_custkey")
-    assert twice.count() == expected
-    assert new_rows_only(candidates, once, "c_custkey").isEmpty()
 
 
 def test_dedup_by_key_deterministic(spark):
@@ -159,30 +144,6 @@ def test_csv_landing_roundtrip(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_compact_landing_reduces_files(spark):
-    """Small-files compaction: many tiny appends collapse toward the
-    target file size with identical content."""
-    import glob
-
-    from ecommerce_data_pipeline_spark.sources.writers import compact_landing
-
-    d = tempfile.mkdtemp(prefix="compact_")
-    try:
-        orders = load_table(spark, SF_SMOKE, "orders")
-        for i in range(6):  # six tiny appends → ≥6 files
-            orders.filter(F.col("o_orderkey") % 6 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(d)
-        before = len(glob.glob(f"{d}/*.parquet"))
-        n_before = spark.read.parquet(d).count()
-        compact_landing(spark, d)
-        after = len(glob.glob(f"{d}/*.parquet"))
-        assert spark.read.parquet(d).count() == n_before
-        assert after < before
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_anti_join_null_key_semantics(spark):
     """NULL-key candidates survive a LEFT ANTI join (null never equals an
     existing key) — the engine keeps them, matching SQL NOT EXISTS rather
@@ -213,7 +174,8 @@ def test_operators_on_empty_and_tiny_inputs(spark):
 
     empty_cand = spark.createDataFrame([], "k string")
     existing = spark.createDataFrame([("a",)], "k string")
-    assert insert_new(empty_cand, existing, "k").count() == 1
+    assert new_rows_only(empty_cand, existing, "k").count() == 0
+    assert new_rows_only(existing, empty_cand, "k").count() == 1
 
     single = spark.createDataFrame([(1, 5.0)], "g int, v double")
     w = Window.partitionBy("g").orderBy("v").rowsBetween(-2, 0)
@@ -262,30 +224,6 @@ def test_stratified_sample_proportions_and_determinism(spark):
     assert sorted(r["doc_id"] for r in out.select("doc_id").collect()) == sorted(
         r["doc_id"] for r in again.select("doc_id").collect()
     )
-
-
-def test_write_with_metrics_observes_on_write_pass(spark, tmp_path):
-    """Observation metrics collected during the write must equal an
-    explicit aggregation over the same input."""
-    from pyspark.sql import functions as F
-
-    from ecommerce_data_pipeline_spark.sources.readers import load_table
-    from ecommerce_data_pipeline_spark.sources.writers import write_with_metrics
-
-    orders = load_table(spark, SF_SMOKE, "orders")
-    path = str(tmp_path / "observed")
-    got = write_with_metrics(
-        orders,
-        path,
-        {"total_price": F.sum(F.col("o_totalprice").cast("decimal(18,2)"))},
-    )
-    expect = orders.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("total_price"),
-    ).collect()[0]
-    assert got["n_rows"] == expect["n_rows"]
-    assert got["total_price"] == expect["total_price"]
-    assert spark.read.parquet(path).count() == expect["n_rows"]
 
 
 def test_isotonic_fit_matches_reference_pav(spark):

@@ -58,30 +58,3 @@ def test_bench_headline_and_grade_priority_names_resolve():
     assert missing_grade == []
     assert len(GRADE_PRIORITY) == 50
     assert len(set(GRADE_PRIORITY)) == 50
-
-
-def test_flagship_observation_matches_separate_scan(spark):
-    """In-flight observe metrics must equal what a second scan would
-    compute — same numbers, one fact read instead of two."""
-    from decimal import Decimal
-
-    from pyspark.sql import functions as F
-
-    from ecommerce_data_pipeline_spark.pipeline import run_flagship_observed
-    from ecommerce_data_pipeline_spark.sources.readers import load_table
-    from tests.conftest import SF_SMOKE
-
-    result, obs = run_flagship_observed(spark, SF_SMOKE)
-    assert result.count() > 0  # executes the observed plan
-    got = obs.get
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    assert got["fact_rows_scanned"] == li.count()
-    assert got["null_orderkeys"] == 0
-    expected_rev = li.agg(
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(18,4)"
-            )
-        )
-    ).collect()[0][0]
-    assert Decimal(got["raw_revenue"]) == expected_rev

@@ -11,14 +11,6 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql.types import (
-    DecimalType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
 from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
@@ -119,90 +111,6 @@ def test_consistent_hashing_conservation_and_bound(spark):
     # pure-add invariant: ALL movement lands on the new shard
     assert sum(r["n_moved_in"] for r in rows) == new_shard["n_after"]
     assert rows[0]["n_moved"] == new_shard["n_after"]
-
-
-# ---------------------------------------------------------------------------
-# dp_contribution_cap same-timestamp frontier (advisor r9)
-
-
-_DP_ORDER_SCHEMA = StructType(
-    [
-        StructField("o_custkey", LongType()),
-        StructField("o_orderdate", TimestampType()),
-        StructField("o_orderkey", LongType()),
-        StructField("o_totalprice", DecimalType(18, 2)),
-    ]
-)
-
-
-def _dp_cap_fold(spark, chunks, tmp_path):
-    """Land hand-built order chunks one file each, mtime-ordered, and
-    fold them through dp_contribution_cap(cap=3, clip_cents=5000)."""
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        dp_contribution_cap,
-        fold_landing,
-        land_chunks,
-    )
-
-    d = str(tmp_path / "landing")
-    land_chunks(chunks, _DP_ORDER_SCHEMA, d)
-    return fold_landing(
-        spark,
-        lambda s: dp_contribution_cap(s, cap=3, clip_cents=5_000),
-        d,
-        _DP_ORDER_SCHEMA,
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-
-
-def test_dp_cap_admits_same_day_orders_split_across_triggers(
-    spark, tmp_path
-):
-    """Advisor r9: two same-day orders for one customer split across
-    triggers is a routine layout under date-granularity o_orderdate —
-    the frontier is the full (ts, orderkey) sort key, so the later
-    trigger's row (same day, higher orderkey) extends the prefix
-    instead of killing the query."""
-    import datetime
-    import decimal
-
-    day = datetime.datetime(1995, 3, 1)
-    price = decimal.Decimal("100.00")
-    chunks = [
-        [(7, day, 10, price), (7, day, 12, price)],
-        [(7, day, 15, price), (7, day, 20, price)],  # same day, later keys
-    ]
-    rows = _dp_cap_fold(spark, chunks, tmp_path).collect()
-    final = max(rows, key=lambda r: r["n_seen"])
-    # first 3 of the 4 same-day orders admitted (orderkey order),
-    # each clipped at 5000 cents
-    assert (
-        final["n_seen"],
-        final["n_admitted"],
-        final["bounded_cents"],
-    ) == (4, 3, 15_000)
-
-
-def test_dp_cap_still_raises_on_true_reorder(spark, tmp_path):
-    """The outage guard survives the fix: a later trigger delivering a
-    row AT OR BEFORE the (ts, orderkey) frontier — here the same day
-    with a SMALLER orderkey — would re-order released first-N
-    membership and must still fail the query."""
-    import datetime
-    import decimal
-
-    import pytest
-    from pyspark.sql.streaming import StreamingQueryException
-
-    day = datetime.datetime(1995, 3, 1)
-    price = decimal.Decimal("100.00")
-    chunks = [
-        [(7, day, 10, price), (7, day, 12, price)],
-        [(7, day, 11, price)],  # same day, key INSIDE the released prefix
-    ]
-    with pytest.raises(StreamingQueryException, match="sort frontier"):
-        _dp_cap_fold(spark, chunks, tmp_path)
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,7 @@
 """Property tests for the round-8 queries (VERDICT r7 tasks #1/#2/#7):
 hash-threshold sampling conversions, ranking eval, survivorship merge,
 HLL window union, Huber IRLS, k-anonymity generalization, and the
-rate-limit/backpressure pair (batch replay vs dense simulation vs the
-stateful streaming operator, incl. checkpoint restart).
+rate-limit/backpressure batch replay vs a dense simulation.
 
 The driver's oracle diff (tests/test_oracle.py + CORRECTNESS_rNN) pins
 VALUES; these tests pin the SEMANTIC contracts the oracle can't see —
@@ -243,7 +242,7 @@ def test_huber_irls_weights_and_slope_sanity(spark):
 
 
 # --------------------------------------------------------------------------
-# stream_rate_limit_backpressure: replay vs dense simulation vs stream
+# stream_rate_limit_backpressure: replay vs dense simulation
 
 
 def _dense_simulation(events_rows, cap):
@@ -289,62 +288,6 @@ def test_backpressure_replay_matches_dense_simulation(spark, cap):
     got = _bp_ledger(backpressure_replay(events, cap=cap).collect())
     expected = _dense_simulation(events.select("event_type", "ts").collect(), cap)
     assert got == expected
-
-
-def _bp_chunks(spark, n_chunks=6):
-    """The events as n_chunks day-range row lists in event-time order
-    (landed one file each: one micro-batch per chunk)."""
-    events = load_table(spark, SF_SMOKE, "events")
-    return events.schema, [
-        events.filter(
-            (F.dayofmonth("ts") >= 1 + i * 5)
-            & (F.dayofmonth("ts") < 1 + (i + 1) * 5)
-        ).collect()
-        for i in range(n_chunks)
-    ]
-
-
-def test_stream_rate_limit_matches_batch_replay(spark, tmp_path):
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        fold_landing,
-        land_chunks,
-        rate_limit_backpressure,
-    )
-
-    schema, chunks = _bp_chunks(spark)
-    d = str(tmp_path / "landing")
-    land_chunks(chunks, schema, d)
-    got = fold_landing(
-        spark, rate_limit_backpressure, d, schema,
-        str(tmp_path / "out"), str(tmp_path / "ckpt"),
-    )
-    expected = backpressure_replay(load_table(spark, SF_SMOKE, "events"), cap=1)
-    assert _bp_ledger(got.collect()) == _bp_ledger(expected.collect())
-
-
-def test_stream_rate_limit_checkpoint_restart_no_duplicates(spark, tmp_path):
-    """Kill-and-restart across a half-drained landing zone: the second
-    run resumes from checkpointed state (last_slot, backlog) and must
-    produce exactly the batch replay — no re-emitted slots, no broken
-    carry-over at the restart boundary."""
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        fold_landing,
-        land_chunks,
-        rate_limit_backpressure,
-    )
-
-    schema, chunks = _bp_chunks(spark)
-    d, out, ckpt = (str(tmp_path / n) for n in ("landing", "out", "ckpt"))
-    land_chunks(chunks[:3], schema, d)
-    fold_landing(spark, rate_limit_backpressure, d, schema, out, ckpt)
-    land_chunks(chunks[3:], schema, d)
-    rows = fold_landing(
-        spark, rate_limit_backpressure, d, schema, out, ckpt
-    ).collect()
-    got = _bp_ledger(rows)
-    assert len(rows) == len(got)  # restart re-emitted nothing
-    expected = backpressure_replay(load_table(spark, SF_SMOKE, "events"), cap=1)
-    assert got == _bp_ledger(expected.collect())
 
 
 # --------------------------------------------------------------------------
@@ -515,47 +458,3 @@ def test_bitemporal_worlds_separate_version_generations(spark):
         rows["final_restatement"]["total_bal_cents"]
         == base_cents + 10000 * (n10 - n20) + 25000 * n20
     )
-
-
-def test_stream_rate_limit_rejects_straddled_slot(spark, tmp_path):
-    """Advisor r8: if the SAME hour slot straddles two micro-batches,
-    the handler used to see gap = 0 and admit up to cap AGAIN —
-    silently emitting a duplicate (key, slot) row that diverges from
-    the batch replay. The contract is now strictly-increasing slots
-    across triggers, ENFORCED: a straddled slot must fail the query
-    loudly, not double-admit."""
-    from pyspark.sql.streaming import StreamingQueryException
-
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        fold_landing,
-        land_chunks,
-        rate_limit_backpressure,
-    )
-
-    events = load_table(spark, SF_SMOKE, "events")
-    # densest (hour, KEY) group — state is per event_type, so the
-    # straddle must put the SAME key's slot in both files
-    day, hour, etype, n = (
-        events.groupBy(
-            F.to_date("ts").alias("d"),
-            F.hour("ts").alias("h"),
-            "event_type",
-        )
-        .count()
-        .orderBy(F.desc("count"), "d", "h", "event_type")
-        .first()
-    )
-    assert n >= 2, "no (hour, key) group with 2+ events in fixture"
-    one_hour = events.filter(
-        (F.to_date("ts") == F.lit(day))
-        & (F.hour("ts") == hour)
-        & (F.col("event_type") == etype)
-    ).orderBy("event_id").collect()
-    d = str(tmp_path / "landing")
-    # two single-file batches carrying the SAME slot
-    land_chunks([one_hour[:1], one_hour[1:]], events.schema, d)
-    with pytest.raises(StreamingQueryException, match="strictly"):
-        fold_landing(
-            spark, rate_limit_backpressure, d, events.schema,
-            str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        )

@@ -145,8 +145,8 @@ def test_watermark_audit_matches_real_streaming(spark, tmp_path):
         drain,
         land_chunks,
         read_file_stream,
-        run_available_now,
     )
+    from tests.stream_harness import run_available_now
 
     # land events as one file per ARRIVAL hour (the audit's trigger
     # definition), restricted to the first 24 arrival hours; the same
@@ -898,117 +898,6 @@ def test_mom_matches_python_replay(spark):
     assert abs(r.plain_mean - plain / 100.0) < 1e-4
     assert r.min_bucket_mean <= r.mom_mean <= r.max_bucket_mean
     assert abs(r.mom_vs_mean_gap - abs(mom - plain) / 100.0) < 1e-4
-
-
-# ---------------------------------------------------------------------------
-# dp_contribution_cap (streaming twin of dp_contribution_bounding)
-
-
-def _dp_chunks(spark, n_chunks=4):
-    """SF_SMOKE orders as date-range-aligned row lists (year slices) in
-    chronological order, for landing one file each."""
-    orders = load_table(spark, SF_SMOKE, "orders")
-    years = [(1995, 1997), (1997, 1999), (1999, 2001), (2001, 2003)]
-    return orders.schema, [
-        orders.filter(
-            (F.year("o_orderdate") >= lo) & (F.year("o_orderdate") < hi)
-        ).collect()
-        for lo, hi in years[:n_chunks]
-    ]
-
-
-def _dp_expected_ledgers(spark):
-    """Batch per-customer cap-and-clip ledger (the
-    dp_contribution_bounding contract at customer grain)."""
-    from collections import defaultdict
-
-    from ecommerce_data_pipeline_spark.plans.entity_resolution import (
-        _DP_CAP_ORDERS,
-        _DP_CLIP_CENTS,
-    )
-
-    rows = (
-        load_table(spark, SF_SMOKE, "orders")
-        .select(
-            "o_custkey",
-            "o_orderdate",
-            "o_orderkey",
-            (F.col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("long")
-            .alias("cents"),
-        )
-        .collect()
-    )
-    by_user = defaultdict(list)
-    for r in rows:
-        by_user[r.o_custkey].append(r)
-    expected = {}
-    for key, rs in by_user.items():
-        rs.sort(key=lambda r: (r.o_orderdate, r.o_orderkey))
-        kept = rs[:_DP_CAP_ORDERS]
-        expected[key] = (
-            len(rs),
-            len(kept),
-            sum(min(r.cents, _DP_CLIP_CENTS) for r in kept),
-        )
-    return expected
-
-
-def _dp_final_rows(rows):
-    """Update-mode emissions -> final (max n_seen) ledger per customer."""
-    final = {}
-    for r in rows:
-        cur = final.get(r["o_custkey"])
-        if cur is None or r["n_seen"] > cur[0]:
-            final[r["o_custkey"]] = (
-                r["n_seen"],
-                r["n_admitted"],
-                r["bounded_cents"],
-            )
-    return final
-
-
-def test_dp_cap_stream_matches_batch_ledger(spark, tmp_path):
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        dp_contribution_cap,
-        fold_landing,
-        land_chunks,
-    )
-
-    schema, chunks = _dp_chunks(spark)
-    d = str(tmp_path / "landing")
-    land_chunks(chunks, schema, d)
-    got = fold_landing(
-        spark, dp_contribution_cap, d, schema,
-        str(tmp_path / "out"), str(tmp_path / "ckpt"),
-    )
-    assert _dp_final_rows(got.collect()) == _dp_expected_ledgers(spark)
-
-
-def test_dp_cap_checkpoint_restart_resumes_ledger(spark, tmp_path):
-    """Kill-and-restart across a half-drained landing zone: the resumed
-    run must continue each customer's cap from checkpointed state —
-    final ledgers equal the batch computation, nothing double-admitted."""
-    from ecommerce_data_pipeline_spark.plans.entity_resolution import (
-        _DP_CAP_ORDERS,
-    )
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        dp_contribution_cap,
-        fold_landing,
-        land_chunks,
-    )
-
-    schema, chunks = _dp_chunks(spark)
-    d, out, ckpt = (str(tmp_path / n) for n in ("landing", "out", "ckpt"))
-    land_chunks(chunks[:2], schema, d)
-    fold_landing(spark, dp_contribution_cap, d, schema, out, ckpt)
-    land_chunks(chunks[2:], schema, d)
-    got = _dp_final_rows(
-        fold_landing(spark, dp_contribution_cap, d, schema, out, ckpt).collect()
-    )
-    assert got == _dp_expected_ledgers(spark)
-    # every admitted count respects the cap
-    assert all(v[1] <= _DP_CAP_ORDERS for v in got.values())
 
 
 # ---------------------------------------------------------------------------

@@ -80,64 +80,6 @@ def test_bucketed_join_has_no_shuffle(spark):
         shutil.rmtree("/tmp/engine-tests-warehouse", ignore_errors=True)
 
 
-def test_flagship_bucketed_zero_fact_shuffle(spark):
-    """Stretch path (pipeline.py note): with lineitem and orders persisted
-    as same-bucket-count bucketed tables, the FULL flagship plan joins the
-    fact stream with zero Exchange operators — the only remaining
-    hashpartitioning exchange is the final (brand × segment) aggregate.
-    Results must be identical to the unbucketed flagship."""
-    from ecommerce_data_pipeline_spark.pipeline import (
-        bucket_fact_tables,
-        flagship_revenue,
-        flagship_revenue_over,
-    )
-
-    li_name, ord_name = bucket_fact_tables(
-        spark, SF_SMOKE, database="bucketed_flagship", n_buckets=8
-    )
-    # capture PRIOR values so the finally block restores the session as
-    # it was (hardcoding "restored" values leaked a disabled AQE
-    # broadcast threshold into every later test in the shared session)
-    prior_static = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prior_aqe = spark.conf.get(
-        "spark.sql.adaptive.autoBroadcastJoinThreshold", None
-    )
-    try:
-        # disable broadcast for the fact⋈orders join so only bucketing can
-        # remove its shuffle (dims still broadcast via explicit hint)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        out = flagship_revenue_over(
-            spark.table(li_name),
-            spark.table(ord_name),
-            load_table(spark, SF_SMOKE, "part"),
-            load_table(spark, SF_SMOKE, "customer"),
-            co_located=True,
-        )
-        plan = executed_plan(out)
-        assert plan.count("BroadcastHashJoin") >= 2  # dims still broadcast
-        n_exchanges = plan.count("Exchange hashpartitioning")
-        assert n_exchanges <= 1, (
-            f"bucketed flagship should only shuffle the final aggregate, "
-            f"got {n_exchanges} exchanges:\n{plan[:3000]}"
-        )
-        expected = {
-            tuple(r) for r in flagship_revenue(spark, SF_SMOKE).collect()
-        }
-        assert {tuple(r) for r in out.collect()} == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior_static)
-        if prior_aqe is None:
-            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        else:
-            spark.conf.set(
-                "spark.sql.adaptive.autoBroadcastJoinThreshold", prior_aqe
-            )
-        spark.sql("DROP TABLE IF EXISTS bucketed_flagship.lineitem_b")
-        spark.sql("DROP TABLE IF EXISTS bucketed_flagship.orders_b")
-        spark.sql("DROP DATABASE IF EXISTS bucketed_flagship")
-
-
 def test_flagship_plan_shape(spark):
     """The flagship plan holds its contract: dims broadcast, exactly one
     hash-partitioning exchange for the fact side (+1 for the final agg)."""

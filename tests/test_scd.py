@@ -80,70 +80,6 @@ def test_scd2_as_of_reconstruction(spark):
     assert as_of(datetime.datetime(2024, 3, 15)) == 15.0
 
 
-def test_scd1_upsert_overwrites_inserts_preserves(spark):
-    from ecommerce_data_pipeline_spark.operators.scd import scd1_upsert
-
-    current = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
-        ["k", "name", "price"],
-    )
-    updates = spark.createDataFrame(
-        [(2, "b2", 21.0), (9, "z", 90.0)], ["k", "name", "price"]
-    )
-    out = {r["k"]: (r["name"], r["price"]) for r in scd1_upsert(current, updates, "k").collect()}
-    assert out == {
-        1: ("a", 10.0),
-        2: ("b2", 21.0),
-        3: ("c", 30.0),
-        9: ("z", 90.0),
-    }
-
-
-def test_cdc_incremental_fold_equals_batch_compaction(spark):
-    """Folding an ordered changelog through cdc_apply_increment one
-    micro-batch at a time must equal one-shot cdc_compact of the full
-    log — the associativity that makes the foreachBatch CDC sink
-    correct. Includes delete-then-reinsert and upsert-after-delete
-    lifecycles."""
-    from ecommerce_data_pipeline_spark.operators.scd import (
-        cdc_apply_increment,
-        cdc_compact,
-    )
-
-    schema = "k string, seq long, op string, v double"
-    log = [
-        # k1: update, update -> final v=2
-        ("k1", 1, "U", 1.0), ("k1", 4, "U", 2.0),
-        # k2: update then delete -> gone
-        ("k2", 2, "U", 9.0), ("k2", 5, "D", 0.0),
-        # k3: delete (no prior), then reinsert -> v=7
-        ("k3", 3, "D", 0.0), ("k3", 6, "U", 7.0),
-        # k4: single insert -> v=4
-        ("k4", 7, "U", 4.0),
-    ]
-    full = spark.createDataFrame(log, schema)
-    oneshot = sorted(
-        tuple(r) for r in cdc_compact(full, "k", ["seq"]).collect()
-    )
-
-    # fold in three seq-ordered micro-batches
-    batches = [
-        [r for r in log if r[1] <= 2],
-        [r for r in log if 3 <= r[1] <= 5],
-        [r for r in log if r[1] >= 6],
-    ]
-    snap = spark.createDataFrame([], schema)
-    for b in batches:
-        snap = cdc_apply_increment(
-            snap, spark.createDataFrame(b, schema), "k", ["seq"]
-        )
-    folded = sorted(tuple(r) for r in snap.collect())
-
-    assert folded == oneshot
-    assert {r[0] for r in folded} == {"k1", "k3", "k4"}
-    assert dict((r[0], r[3]) for r in folded) == {"k1": 2.0, "k3": 7.0, "k4": 4.0}
-
-
 def test_cdc_compact_properties_random_logs(spark):
     """Property test: for random changelogs, compaction (a) keeps at
     most one row per key, (b) keeps exactly the max-seq row of keys

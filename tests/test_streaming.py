@@ -19,13 +19,13 @@ from ecommerce_data_pipeline_spark.streaming.pipeline import (
     is_worker_handshake_timeout,
     land_chunks,
     read_file_stream,
-    run_available_now,
     run_stream_with_handshake_retry,
-    session_aggregate,
-    stream_dedup,
-    tumbling_counts,
 )
 from tests.conftest import SF_SMOKE
+from tests.stream_harness import (
+    foreach_batch_incremental_neardup,
+    run_available_now,
+)
 
 
 @pytest.fixture(scope="module")
@@ -57,122 +57,10 @@ def _drain(df, output_mode="append"):
     return name
 
 
-def test_stream_dedup_drops_redelivered_batch(spark, landing_dir, events_schema):
-    stream = read_file_stream(spark, landing_dir, events_schema)
-    deduped = stream_dedup(stream, ["event_id"], "ts")
-    name = _drain(deduped)
-    n = spark.table(name).count()
-    expected = load_table(spark, SF_SMOKE, "events").count()
-    assert n == expected  # re-delivered files collapse to one copy
-
-
-def test_tumbling_counts_match_batch(spark, landing_dir, events_schema):
-    stream = read_file_stream(spark, landing_dir, events_schema)
-    deduped = stream_dedup(stream, ["event_id"], "ts")
-    agg = tumbling_counts(deduped)
-    name = _drain(agg, output_mode="complete")
-    got = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.table(name).collect()
-    }
-    batch = (
-        load_table(spark, SF_SMOKE, "events")
-        .groupBy(F.window("ts", "5 minutes"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("v"),
-        )
-        .select(F.col("window.start").alias("ws"), "event_type", "n", "v")
-        .collect()
-    )
-    expected = {(r["ws"], r["event_type"]): (r["n"], r["v"]) for r in batch}
-    assert got == expected
-
-
-def test_session_windows_stream(spark, landing_dir, events_schema):
-    stream = read_file_stream(spark, landing_dir, events_schema)
-    deduped = stream_dedup(stream, ["event_id"], "ts")
-    sess = session_aggregate(deduped)
-    name = _drain(sess, output_mode="complete")
-    rows = spark.table(name).collect()
-    assert rows
-    # total events across sessions == distinct events
-    assert sum(r["n_events"] for r in rows) == load_table(
-        spark, SF_SMOKE, "events"
-    ).count()
-    # session bounds are ordered and per-user
-    for r in rows:
-        assert r["session_start"] <= r["session_end"]
-
-
-def test_stream_stream_join_bounded(spark, landing_dir, events_schema):
-    """Purchases ⋈ signups within 30 minutes per user, as a stream-stream
-    join — checked against the equivalent batch join."""
-    from ecommerce_data_pipeline_spark.streaming.pipeline import stream_stream_join
-
-    stream = read_file_stream(spark, landing_dir, events_schema)
-    purchases = stream.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("event_id").alias("p_id")
-    )
-    signups = stream.filter(F.col("event_type") == "signup").select(
-        "user_id", F.col("ts").alias("s_ts"), F.col("event_id").alias("s_id")
-    )
-    joined = stream_stream_join(purchases, signups, on="user_id").select(
-        "p_id", "s_id"
-    )
-    name = _drain(joined)
-    got = {(r["p_id"], r["s_id"]) for r in spark.table(name).collect()}
-
-    ev = spark.read.parquet(landing_dir)
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.col("event_id").alias("p_id")
-    ).distinct()
-    s = ev.filter(F.col("event_type") == "signup").select(
-        F.col("user_id").alias("u2"), F.col("ts").alias("s_ts"),
-        F.col("event_id").alias("s_id"),
-    ).distinct()
-    batch = p.join(
-        s,
-        (F.col("user_id") == F.col("u2"))
-        & (F.col("s_ts") <= F.col("ts"))
-        & (F.col("s_ts") >= F.col("ts") - F.expr("INTERVAL 30 minutes")),
-    )
-    expected = {(r["p_id"], r["s_id"]) for r in batch.collect()}
-    assert got == expected
-    assert got  # the fixture produces at least one in-window pair
-
-
-def test_stateful_user_counts_accumulate(spark, landing_dir, events_schema):
-    """applyInPandasWithState: final per-user counters equal the batch
-    totals (update mode emits per micro-batch; the last emission per user
-    carries the lifetime count)."""
-    from ecommerce_data_pipeline_spark.streaming.pipeline import stateful_user_counts
-
-    stream = read_file_stream(spark, landing_dir, events_schema)
-    deduped = stream_dedup(stream, ["event_id"], "ts")
-    counts = stateful_user_counts(deduped)
-    name = _drain(counts, output_mode="update")
-    out = spark.table(name).collect()
-    # take each user's max (= latest cumulative) emission
-    latest = {}
-    for r in out:
-        cur = latest.get(r["user_id"])
-        if cur is None or r["n_events"] > cur:
-            latest[r["user_id"]] = r["n_events"]
-    batch = {
-        r["user_id"]: r["n"]
-        for r in load_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert latest == batch
-
-
 def test_stream_dedup_within_watermark_bounded_state(spark, landing_dir, events_schema):
-    """dropDuplicatesWithinWatermark drops the re-delivered batch like the
-    unbounded-state form, but its state expires with the watermark —
-    the scale-safe default for at-least-once redelivery."""
+    """dropDuplicatesWithinWatermark drops the re-delivered batch, and its
+    state expires with the watermark — the scale-safe default for
+    at-least-once redelivery."""
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
         stream_dedup_within_watermark,
     )
@@ -200,61 +88,6 @@ def test_foreach_batch_idempotent_replay_no_duplicates(spark, landing_dir, event
     assert landed.count() == spark.read.schema(
         events_schema
     ).parquet(landing_dir).count()
-
-
-def test_foreach_batch_cdc_snapshot_matches_batch_compaction(spark, tmp_path):
-    """Draining a changelog through the streaming CDC sink one file per
-    micro-batch must land the same final snapshot as one-shot
-    cdc_compact over the whole log (associativity, operationalized),
-    including a delete whose key must vanish."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ecommerce_data_pipeline_spark.operators.scd import cdc_compact
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        foreach_batch_cdc_snapshot,
-        read_file_stream,
-    )
-
-    schema = StructType([
-        StructField("k", StringType()),
-        StructField("seq", LongType()),
-        StructField("op", StringType()),
-        StructField("v", DoubleType()),
-    ])
-    landing = str(tmp_path / "changelog")
-    chunks = [
-        [("k1", 1, "U", 1.0), ("k2", 2, "U", 9.0)],
-        [("k1", 3, "U", 2.0), ("k2", 4, "D", 0.0)],
-        [("k3", 5, "U", 7.0)],
-    ]
-    land_chunks(chunks, schema, landing)
-
-    snap_path = str(tmp_path / "snapshot")
-    ckpt = str(tmp_path / "ckpt")
-    stream = read_file_stream(
-        spark, landing, schema, max_files_per_trigger=1
-    )
-    drain(foreach_batch_cdc_snapshot(stream, snap_path, ckpt, "k", ["seq"]))
-
-    import os
-
-    versions = sorted(
-        int(d.split("=")[1]) for d in os.listdir(snap_path) if d.startswith("v=")
-    )
-    final = spark.read.parquet(f"{snap_path}/v={versions[-1]}")
-    expected = cdc_compact(
-        spark.createDataFrame(sum(chunks, []), schema), "k", ["seq"]
-    )
-    got = sorted(tuple(r) for r in final.collect())
-    want = sorted(tuple(r) for r in expected.collect())
-    assert got == want
-    assert {r[0] for r in got} == {"k1", "k3"}
 
 
 def test_txqueue_batch_source_deterministic_partitioned(spark):
@@ -332,7 +165,6 @@ def test_streaming_incremental_neardup_matches_batch_run(spark):
         minhash_lsh_neardup,
     )
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        foreach_batch_incremental_neardup,
         read_file_stream,
     )
 
@@ -383,7 +215,6 @@ def test_streaming_incremental_neardup_replay_is_idempotent(spark):
     import os
 
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        foreach_batch_incremental_neardup,
         read_file_stream,
     )
 
@@ -472,7 +303,6 @@ def test_neardup_store_ahead_of_checkpoint_fails_loud(spark):
     from pyspark.errors import StreamingQueryException
 
     from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        foreach_batch_incremental_neardup,
         neardup_store_increment,
     )
 

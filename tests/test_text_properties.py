@@ -137,41 +137,6 @@ def test_bpe_merge_sequence_matches_reference_and_is_layout_independent(spark):
         assert "".join(segment_word(w, merges)) == w + END
 
 
-def test_token_spans_udtf_matches_tokens_expression(spark):
-    """The UDTF's token stream (ordered by start offset) must equal the
-    Column-expression tokenizer, and every span must slice back to its
-    token from the lowercased source."""
-    from ecommerce_data_pipeline_spark.operators.text import (
-        make_token_spans_udtf,
-        tokens,
-    )
-    from ecommerce_data_pipeline_spark.sources.readers import load_table
-
-    spark.udtf.register("token_spans", make_token_spans_udtf())
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(30)
-    docs.createOrReplaceTempView("udtf_docs")
-    spans = spark.sql(
-        """
-        SELECT d.doc_id, s.token, s.start, s.end
-        FROM udtf_docs d, LATERAL token_spans(d.text) s
-        """
-    ).collect()
-    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    expr_tokens = {
-        r["doc_id"]: r["ts"]
-        for r in docs.select("doc_id", tokens("text").alias("ts")).collect()
-    }
-    by_doc = {}
-    for r in spans:
-        by_doc.setdefault(r["doc_id"], []).append((r["start"], r["end"], r["token"]))
-    for doc_id, sp in by_doc.items():
-        sp.sort()
-        assert [t for _, _, t in sp] == expr_tokens[doc_id]
-        low = texts[doc_id].lower()
-        for start, end, tok in sp:
-            assert low[start:end] == tok
-
-
 @settings(
     max_examples=8,
     deadline=None,
