@@ -13,14 +13,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from ecommerce_data_pipeline_spark import plans
-from ecommerce_data_pipeline_spark.pipeline import run_flagship
+from ecommerce_data_pipeline_spark.pipeline import flagship_revenue
 
 SF0001 = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return run_flagship(spark, SF0001)
+    return flagship_revenue(spark, SF0001)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -28,6 +28,7 @@ from pyspark.sql.types import StringType
 from ecommerce_data_pipeline_spark.functions.datetime import parse_reference_ts
 from ecommerce_data_pipeline_spark.operators.dedup import new_rows_only
 from ecommerce_data_pipeline_spark.operators.joins import enrich_facts
+from ecommerce_data_pipeline_spark.sources.readers import read_parquet_or_none
 from ecommerce_data_pipeline_spark.sources.writers import (
     append_table,
     write_partitioned_parquet,
@@ -42,21 +43,6 @@ class Warehouse:
 
     def table(self, name: str) -> str:
         return f"{self.root}/{name}"
-
-
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a warehouse table, or None if it was never created.
-
-    ONLY path-resolution failures mean "does not exist" — a broader
-    except would let a transient filesystem error or one corrupt footer
-    masquerade as first-load and trigger an OVERWRITE of the table
-    (silent loss of every accumulated row)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return None
 
 
 def refresh_dimension(
@@ -75,7 +61,7 @@ def refresh_dimension(
     contract, and the P4 empty-set guard needs the count before writing.
     """
     path = wh.table(table)
-    existing = _read_or_none(spark, path)
+    existing = read_parquet_or_none(spark, path)
     if existing is None:  # first load
         candidates.write.mode("overwrite").parquet(path)
         return candidates.count()
@@ -157,7 +143,7 @@ def ingest_fact_batch(
 
     fact_path = wh.table("fact_enriched")
     if dedup_key is not None:
-        existing = _read_or_none(spark, fact_path)
+        existing = read_parquet_or_none(spark, fact_path)
         if existing is not None:
             enriched = new_rows_only(
                 enriched, existing.select(dedup_key), dedup_key

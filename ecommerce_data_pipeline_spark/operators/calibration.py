@@ -18,7 +18,6 @@ independently — one shuffle on the group key, embarrassingly parallel.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 

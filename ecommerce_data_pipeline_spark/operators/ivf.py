@@ -19,7 +19,7 @@ results are directly comparable; recall is tuned by k and nprobe.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 

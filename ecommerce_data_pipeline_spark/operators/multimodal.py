@@ -30,7 +30,6 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )

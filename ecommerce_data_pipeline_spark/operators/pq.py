@@ -33,7 +33,7 @@ tests/test_similarity.py).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.functions.vectors import cosine_similarity

@@ -29,13 +29,7 @@ def scd2_init(dim: DataFrame, as_of) -> DataFrame:
     )
 
 
-def scd2_merge(
-    history: DataFrame,
-    updates: DataFrame,
-    key: str,
-    as_of,
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
+def scd2_merge(history: DataFrame, updates: DataFrame, key: str, as_of) -> DataFrame:
     """Merge an update snapshot into SCD2 history.
 
     - brand-new keys → inserted as current versions
@@ -47,15 +41,7 @@ def scd2_merge(
     on a real deployment this is a MERGE INTO against a transactional
     table format; the logic is identical).
     """
-    # attr_cols = every column CARRIED into new versions; compare_cols
-    # only narrows the CHANGE DETECTION. Conflating the two (the old
-    # behavior) dropped non-compared attributes from new versions and
-    # crashed the final unionByName.
     attr_cols = [c for c in updates.columns if c != key and c not in META_COLS]
-    cmp_cols = list(compare_cols) if compare_cols else attr_cols
-    missing = [c for c in cmp_cols if c not in attr_cols]
-    if missing:
-        raise ValueError(f"compare_cols not in updates: {missing}")
     ts = F.lit(as_of).cast("timestamp")
 
     current = history.filter(F.col("is_current"))
@@ -65,10 +51,10 @@ def scd2_merge(
     # null-safe equality so NULL→value and value→NULL count as changes
     upd = updates.select(key, *attr_cols)
     cur_cmp = current.select(
-        F.col(key), *[F.col(c).alias(f"_cur_{c}") for c in cmp_cols]
+        F.col(key), *[F.col(c).alias(f"_cur_{c}") for c in attr_cols]
     )
     unchanged_pred = F.lit(True)
-    for c in cmp_cols:
+    for c in attr_cols:
         unchanged_pred = unchanged_pred & F.col(c).eqNullSafe(F.col(f"_cur_{c}"))
     # a key with no current row joins to all-null _cur columns, which a
     # legitimately-all-NULL update row would mimic — detect "has a current

@@ -40,9 +40,6 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ecommerce_data_pipeline_spark.functions.vectors import (  # noqa: F401 — re-exported for callers
-    cosine_similarity,
-)
 from ecommerce_data_pipeline_spark.operators.text import tokens
 
 # --- exact Jaccard (oracle-checkable) --------------------------------------
@@ -537,10 +534,9 @@ def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per query (brute force baseline).
+    """Exact top-k cosine neighbors per query (brute force baseline) over
+    ``vec_id`` / ``embedding`` rows.
 
     Broadcast the (small) query set against the corpus; the dot product is
     a codegen'd fold. Ranking uses the score rounded to 6 digits
@@ -554,14 +550,14 @@ def cosine_topk(
     # norms once per side before the fan-out: the q×corpus scoring loop
     # then runs one interpreted fold per pair instead of three
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        l2_norm(vec_col).alias("qn"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"),
+        l2_norm("embedding").alias("qn"),
     )
     # spread BEFORE the computed columns so the norm fold (and the
     # scoring fold after the join) run across all cores, not on the
     # scan's single input split
     c = spread_for_fanout(
-        corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
+        corpus.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"))
     ).withColumn("cn", l2_norm("cv"))
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -779,8 +775,6 @@ def mmr_rerank(
     k: int = 5,
     pool: int = 20,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal-marginal-relevance re-ranking (Carbonell & Goldstein 1998):
     from each query's ``pool`` most-relevant candidates, greedily pick
@@ -806,7 +800,7 @@ def mmr_rerank(
 
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    nn = cosine_topk(queries, corpus, k=pool, id_col=id_col, vec_col=vec_col)
+    nn = cosine_topk(queries, corpus, k=pool)
     cand = (
         nn
         # zero-norm vectors carry NULL cosine (cosine_with_norms contract);
@@ -818,7 +812,7 @@ def mmr_rerank(
         .filter(F.col("cosine").isNotNull())
         .join(
             corpus.select(
-                F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv")
+                F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv")
             ),
             "cand_id",
         )
@@ -827,7 +821,7 @@ def mmr_rerank(
 
     # id type derived from the input schema (pq_topk precedent) — a
     # hardcoded LONG would break string/int32 ids
-    id_type = corpus.schema[id_col].dataType
+    id_type = corpus.schema["vec_id"].dataType
     out_schema = StructType(
         [
             StructField("query_id", id_type),

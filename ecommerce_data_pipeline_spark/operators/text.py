@@ -103,7 +103,7 @@ def chunk_documents(docs):
     )
 
 
-def pack_documents(docs, budget_tokens: int = 512, shard_col: str | None = None):
+def pack_documents(docs, shard_col: str, budget_tokens: int = 512):
     """Sequence packing: assign documents to fixed-budget bins in a
     deterministic order (doc id) via cumulative token counts — the
     'example packing' step that keeps training batches dense.
@@ -111,32 +111,29 @@ def pack_documents(docs, budget_tokens: int = 512, shard_col: str | None = None)
     bin = floor((cumsum(n_tokens) − n_tokens) / budget): a document
     starts a new bin when its prefix-sum crosses the budget boundary.
 
-    SCALE: an unsharded call uses one global window — a single reducer.
-    Pass ``shard_col`` at corpus scale: packing runs independently per
-    shard (source file, hash bucket, …), which is semantically fine —
-    bins never need to span shards — and fully parallel. Output bins are
-    then keyed (shard, bin_id).
+    SCALE: packing runs independently per ``shard_col`` value (source
+    file, hash bucket, …), which is semantically fine — bins never need
+    to span shards — and fully parallel, never one global-window
+    reducer. Output bins are keyed (shard, bin_id).
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    cols = [F.col("doc_id"), token_count("text").alias("n_tokens")]
-    group_keys = ["bin_id"]
-    if shard_col is not None:
-        cols.append(F.col(shard_col).alias("shard"))
-        w = Window.partitionBy("shard").orderBy("doc_id")
-        group_keys = ["shard", "bin_id"]
-    else:
-        w = Window.orderBy("doc_id")
-    w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    with_n = docs.select(*cols)
+    w = Window.partitionBy("shard").orderBy("doc_id").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    with_n = docs.select(
+        F.col("doc_id"),
+        token_count("text").alias("n_tokens"),
+        F.col(shard_col).alias("shard"),
+    )
     packed = with_n.withColumn(
         "bin_id",
         F.floor((F.sum("n_tokens").over(w) - F.col("n_tokens")) / budget_tokens).cast(
             "int"
         ),
     )
-    return packed.groupBy(*group_keys).agg(
+    return packed.groupBy("shard", "bin_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("total_tokens"),
         F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),

@@ -36,39 +36,10 @@ def flagship_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (J1) feeding the warehouse aggregation (A1), with EP1's key-dedup (J2)
     applied to the fact stream first.
     """
-    return flagship_revenue_over(
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "customer"),
-    )
-
-
-def flagship_revenue_over(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    part: DataFrame,
-    customer: DataFrame,
-    *,
-    skewed_fact: bool = False,
-) -> DataFrame:
-    """Flagship plan over caller-supplied relations.
-
-    ``skewed_fact=True`` trades the single-exchange optimization for
-    skew tolerance. The default plan's one ``repartition("l_orderkey")``
-    serves both the dedup groupBy and the orders join — but under a hot
-    order key it is the WORST shape: every hot row lands in one task,
-    and AQE cannot split it (user-specified repartitions and
-    aggregate-co-partitioned join inputs are both outside
-    OptimizeSkewedJoin, which only rewrites ENSURE_REQUIREMENTS
-    shuffles). Skipping the repartition restores the skew-safe form:
-    the dedup groupBy hashes the full COMPOSITE key, spreading a hot
-    orderkey across its linenumbers, and the orders join gets its own
-    ENSURE_REQUIREMENTS exchange that AQE's skew-join handling splits at
-    runtime. Two fact exchanges instead of one — the price of a hot key
-    (guarded by tests/test_skew.py::
-    test_flagship_skewed_orderkey_probe; results identical either way).
-    """
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    part = load_table(spark, sf_dir, "part")
+    customer = load_table(spark, sf_dir, "customer")
     # Project BEFORE dedup: dedup_by_key's min-struct otherwise carries
     # every lineitem column through the aggregate and the scan reads all
     # 11 (the one full-width scan a ReadSchema audit found across the
@@ -87,9 +58,12 @@ def flagship_revenue_over(
     # Pre-partitioning by l_orderkey makes ONE exchange serve both the
     # dedup groupBy (orderkey is a prefix of the grouping key, so the
     # clustered-distribution requirement is already satisfied) and the
-    # orders join below — the fact stream shuffles once, not twice.
+    # orders join below — the fact stream shuffles once, not twice. Under
+    # a hot order key that one exchange is a single straggler task AQE
+    # cannot split (OptimizeSkewedJoin rewrites only ENSURE_REQUIREMENTS
+    # shuffles, not a user repartition).
     facts = dedup_by_key(
-        lineitem if skewed_fact else lineitem.repartition("l_orderkey"),
+        lineitem.repartition("l_orderkey"),
         ["l_orderkey", "l_linenumber"],
         "l_partkey",
     )
@@ -129,8 +103,3 @@ def flagship_revenue_over(
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
-
-
-def run_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """entry() body: the flagship query."""
-    return flagship_revenue(spark, sf_dir)

@@ -25,7 +25,6 @@ from ecommerce_data_pipeline_spark.sources.readers import load_table
     JOIN nation n ON c.c_nationkey = n.n_nationkey
     GROUP BY n.n_name
     """,
-    tags=("S1",),
 )
 def sql_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1: the reference's df_sql executor (dimension_tables_mock.py:15-43
@@ -56,7 +55,6 @@ def sql_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM purchases p
     ASOF LEFT JOIN signups s ON p.user_id = s.user_id AND p.ts >= s.ts
     """,
-    tags=("J6", "asof"),
 )
 def asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 as-of join: each purchase paired with the user's latest
@@ -93,7 +91,6 @@ def asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem l JOIN bands b ON l.l_quantity >= b.lo AND l.l_quantity < b.hi
     GROUP BY b.band
     """,
-    tags=("J6", "range"),
 )
 def range_join_quantity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 range join: facts into value bands via a broadcast nested-loop
@@ -120,7 +117,6 @@ def range_join_quantity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY GROUPING SETS ((c.c_mktsegment), (o.o_orderstatus), ())
     """,
-    tags=("A4",),
 )
 def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 explicit GROUPING SETS (segment-only, status-only, grand total)
@@ -150,7 +146,6 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY c.c_mktsegment
     """,
-    tags=("A4", "pivot"),
 )
 def pivot_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (priority → columns) with the value list pinned — pinning
@@ -192,7 +187,6 @@ def pivot_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer c JOIN seg s ON c.c_mktsegment = s.c_mktsegment
     WHERE c.c_acctbal > s.seg_avg
     """,
-    tags=("subquery",),
 )
 def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated-scalar-subquery shape (customers above their segment's
@@ -222,7 +216,6 @@ def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(CAST(quantile_cont(l_extendedprice, 0.9) AS DOUBLE), 4) AS price_p90
     FROM lineitem GROUP BY l_returnflag
     """,
-    tags=("A5", "percentile"),
 )
 def percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact linear-interpolation percentiles (PERCENTILE_CONT semantics
@@ -245,7 +238,7 @@ def percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("approx_aggregates", oracle=None, tags=("A3", "sketch"))
+@register("approx_aggregates", oracle=None)
 def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 sketch aggregates (HLL++ / GK-quantile): engine-specific values
     by design → rows-only driver check; the unit test asserts the HLL
@@ -277,7 +270,6 @@ def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS median_within_1pct
     FROM lineitem
     """,
-    tags=("A3", "sketch", "certificate"),
 )
 def sketch_error_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 accuracy certificate: HLL++ count-distinct within 3x its
@@ -312,7 +304,6 @@ def sketch_error_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(stddev_samp(l_quantity), 6) AS sd_qty
     FROM lineitem GROUP BY l_returnflag
     """,
-    tags=("A5", "stats"),
 )
 def stats_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bivariate statistics surface: correlation, sample covariance,
@@ -338,7 +329,7 @@ def stats_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("hll_sketch_rollup", oracle=None, tags=("A3", "sketch", "rollup"))
+@register("hll_sketch_rollup", oracle=None)
 def hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable-sketch rollup: HLL sketches built per (returnflag,
     linestatus), then UNION-MERGED up to returnflag — distinct counts
@@ -359,7 +350,7 @@ def hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("percentiles_approx_by_group", oracle=None, tags=("A3", "A5", "sketch"))
+@register("percentiles_approx_by_group", oracle=None)
 def percentiles_approx_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100×-scale twin of ``percentiles_exact``: same grouped
     percentiles via the GK sketch (``percentile_approx``). The sketch is
@@ -403,7 +394,6 @@ def percentiles_approx_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS gk_median_within_1pct
     FROM lineitem GROUP BY l_returnflag
     """,
-    tags=("A3", "A5", "sketch", "rollup", "certificate"),
 )
 def grouped_sketch_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped/merged sketch accuracy certificate (see oracle comment) —
@@ -458,7 +448,6 @@ def grouped_sketch_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(dayofweek(o_orderdate) + 1 AS INT) AS dow -- DuckDB 0=Sun, Spark 1=Sun
     FROM orders
     """,
-    tags=("F2",),
 )
 def date_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 date arithmetic: truncation, month-end, offsets, day diffs —
@@ -487,7 +476,6 @@ def date_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN regexp_matches(p_name, 'widget') THEN 1 ELSE 0 END AS is_widget
     FROM part
     """,
-    tags=("F1", "regex"),
 )
 def regexp_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regex surface: extract, count-matches, replace-all, predicate."""
@@ -521,7 +509,6 @@ def regexp_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
              hex(encode(substring(text, 3 * stride + 1, 16)))) AS frames_hex
     FROM m
     """,
-    tags=("extension", "multimodal"),
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'Video' frame sampling over the binary payload table: N evenly
@@ -556,7 +543,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(len(embedding) AS INT) AS dim
     FROM embeddings
     """,
-    tags=("extension", "F6"),
 )
 def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector-math surface over array<float>: JVM-side fold norms
@@ -608,7 +594,6 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(f.y_fit, 6) AS fitted_qty
     FROM pts p JOIN fit f ON f.g = p.g AND f.x = p.x
     """,
-    tags=("extension", "calibration", "grouped-map"),
 )
 def discount_response_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monotone discount→quantity response curve per return flag:

@@ -54,7 +54,6 @@ from ecommerce_data_pipeline_spark.sources.readers import load_table
            (SELECT COUNT(*) FROM c) AS n_clicked_after_view,
            (SELECT COUNT(*) FROM p) AS n_purchased_after_click
     """,
-    tags=("extension", "analytics", "events"),
 )
 def event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered view→click→purchase funnel: each stage must occur strictly
@@ -110,7 +109,6 @@ def event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM e JOIN cohort c ON e.user_id = c.user_id
     GROUP BY 1, 2
     """,
-    tags=("extension", "analytics", "events"),
 )
 def user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention triangle: users grouped by first-activity day,
@@ -145,7 +143,6 @@ def user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY 1
     """,
-    tags=("extension", "incremental", "aggregate"),
 )
 def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental rollup maintenance: a pre-aggregated STATE (orders
@@ -193,7 +190,6 @@ def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
     """,
-    tags=("window",),
 )
 def window_percentile_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank / cume_dist / ntile over balance within market segment
@@ -242,7 +238,6 @@ def window_percentile_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM grid g LEFT JOIN daily d
       ON g.user_id = d.user_id AND g.day = d.day
     """,
-    tags=("extension", "analytics", "timeseries"),
 )
 def events_activity_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-filled per-user daily activity grid: one row per (user, day)
@@ -309,7 +304,6 @@ def events_activity_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY path, n_events
     HAVING COUNT(*) >= 3
     """,
-    tags=("extension", "analytics", "sequence"),
 )
 def user_path_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent-journey mining: per (user, day) the ordered event-type
@@ -377,7 +371,6 @@ def user_path_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN n
     WHERE p.pair_count >= 5
     """,
-    tags=("extension", "analytics", "market-basket"),
 )
 def association_rules_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association rules over order baskets (antecedent
@@ -494,7 +487,6 @@ def association_rules_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS clustering_coeff
     FROM agg CROSS JOIN tri
     """,
-    tags=("extension", "graph"),
 )
 def copurchase_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-purchase graph topology profile: nodes = parts, edges = 'ever
@@ -607,7 +599,6 @@ def copurchase_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
-    tags=("extension", "analytics", "timeseries"),
 )
 def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average (alpha=0.25) of each user's
@@ -673,7 +664,6 @@ def ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE event_type = 'purchase'
     GROUP BY COALESCE(touch_type, 'direct')
     """,
-    tags=("extension", "analytics", "attribution"),
 )
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch attribution: credit each purchase to the user's most
@@ -735,7 +725,6 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE f.window_end <= b.dmax
     GROUP BY f.window_end
     """,
-    tags=("extension", "analytics", "timeseries"),
 )
 def rolling_7d_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day active-user counts (the WAU curve): for every day,
@@ -799,7 +788,6 @@ def rolling_7d_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM clipped
     GROUP BY o_orderpriority
     """,
-    tags=("extension", "ml-prep", "robust-stats"),
 )
 def winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorized robust mean: clip order totals to their group's
@@ -872,7 +860,6 @@ def winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM streaks
     GROUP BY user_id
     """,
-    tags=("extension", "analytics", "sequence"),
 )
 def activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consecutive-day activity streaks per user (gaps-and-islands): the
@@ -926,7 +913,6 @@ def activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM digits CROSS JOIN n
     GROUP BY d, n.total
     """,
-    tags=("extension", "profiling", "audit"),
 )
 def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit profile of order totals: observed
@@ -993,7 +979,6 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n_name, c_custkey, c_name, revenue, CAST(rnk AS BIGINT) AS rnk
     FROM ranked WHERE rnk <= 3
     """,
-    tags=("extension", "analytics", "window"),
 )
 def top_spenders_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 customers by lifetime spend per nation — the canonical
@@ -1046,7 +1031,6 @@ def top_spenders_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(n_events * 1.0 / (SELECT total FROM tot), 6) AS share
     FROM g
     """,
-    tags=("extension", "events", "seasonality"),
 )
 def events_hourly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Traffic seasonality grid: event volume / distinct users / value by
@@ -1092,7 +1076,6 @@ def events_hourly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rev r JOIN tot t ON r.p_type = t.p_type
     GROUP BY r.p_type, t.n_suppliers
     """,
-    tags=("extension", "analytics", "concentration"),
 )
 def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier concentration per product type via the Herfindahl-
@@ -1144,7 +1127,6 @@ def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(CAST(quantile_cont(gap_days, 0.9) AS DOUBLE), 4) AS p90_gap_days
     FROM gaps
     """,
-    tags=("extension", "analytics", "retention"),
 )
 def repeat_purchase_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-purchase interval distribution — the repeat-buying cadence
@@ -1191,7 +1173,6 @@ def repeat_purchase_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(avg(l_quantity) / (SELECT baseline FROM base), 6) AS qty_lift
     FROM b GROUP BY disc_bucket
     """,
-    tags=("extension", "analytics", "pricing"),
 )
 def discount_quantity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discount→quantity lift curve: average order quantity per 5%%
@@ -1234,7 +1215,6 @@ def discount_quantity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
              > 2 * (SELECT sigma FROM stats) AS is_anomaly
     FROM daily
     """,
-    tags=("extension", "events", "anomaly"),
 )
 def events_daily_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily-volume anomaly flags: each day's event count z-scored
@@ -1283,7 +1263,6 @@ def events_daily_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN sell ON n.n_nationkey = sell.nationkey
     LEFT JOIN buy ON n.n_nationkey = buy.nationkey
     """,
-    tags=("extension", "analytics", "tpch-shape"),
 )
 def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation trade balance: value supplied (lineitem→supplier side)
@@ -1334,7 +1313,6 @@ def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS order_share
     FROM per_order GROUP BY n_lines
     """,
-    tags=("extension", "profiling", "fanout"),
 )
 def order_fanout_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-fanout profile: the distribution of lines-per-order (how many
@@ -1364,7 +1342,6 @@ def order_fanout_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(regr_r2(p_retailprice, p_size), 6) AS r2
     FROM part GROUP BY p_brand
     """,
-    tags=("extension", "stats", "regression"),
 )
 def price_size_regression_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED linear regression: price ~ size fitted independently per
@@ -1405,7 +1382,6 @@ def price_size_regression_by_brand(spark: SparkSession, sf_dir: str) -> DataFram
                  6) AS share_shift
     FROM shares
     """,
-    tags=("extension", "analytics", "trend"),
 )
 def segment_share_shift_quarterly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quarter-over-quarter revenue-share shift per market segment — the
@@ -1479,7 +1455,6 @@ def segment_share_shift_quarterly(spark: SparkSession, sf_dir: str) -> DataFrame
     JOIN rec r ON r.g = p.g AND r.i = p.i
     LEFT JOIN rec prev ON prev.g = p.g AND prev.i = p.i - 1
     """,
-    tags=("extension", "forecasting", "grouped-map"),
 )
 def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt linear-trend smoothing of monthly revenue per order priority
@@ -1561,7 +1536,6 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / CAST(SUM(rev) AS DOUBLE), 6) AS wape
     FROM j GROUP BY 1
     """,
-    tags=("extension", "analytics", "forecast"),
 )
 def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive forecast backtest: predict each day's revenue with
@@ -1629,7 +1603,6 @@ def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(CAST(SUM(converted) AS DOUBLE) / COUNT(*), 6) AS cvr_7d
     FROM conv GROUP BY 1
     """,
-    tags=("extension", "analytics", "events"),
 )
 def funnel_conversion_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-boxed funnel: of users whose FIRST view fell in month M, how
@@ -1710,7 +1683,6 @@ def funnel_conversion_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS is_changepoint
     FROM cs
     """,
-    tags=("extension", "analytics", "anomaly"),
 )
 def revenue_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM change-point detection over the daily revenue series: the
@@ -1861,7 +1833,6 @@ def _repeat_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
                  6) AS km_survival
     FROM r
     """,
-    tags=("extension", "analytics", "statistics"),
 )
 def repeat_purchase_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival analysis of time-to-repeat-purchase: each
@@ -1983,7 +1954,6 @@ def repeat_purchase_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM credits
     GROUP BY attributed_channel
     """,
-    tags=("extension", "analytics", "attribution"),
 )
 def attribution_position_based(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Position-based (U-shaped) multi-touch attribution: each purchase's
@@ -2208,7 +2178,6 @@ _MARKOV_P_SCALE = 1_000_000_000_000  # state values in pico-units
            END AS attribution_share
     FROM eff
     """,
-    tags=("extension", "analytics", "attribution"),
 )
 def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov-chain (removal-effect) attribution: model user journeys as

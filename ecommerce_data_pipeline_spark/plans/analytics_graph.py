@@ -131,7 +131,6 @@ from ecommerce_data_pipeline_spark.sources.readers import load_table
     JOIN touched ON phi.channel = touched.channel
     CROSS JOIN gv CROSS JOIN eff
     """,
-    tags=("extension", "analytics", "attribution"),
 )
 def attribution_shapley_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Shapley-value attribution over the journey framing shared
@@ -509,7 +508,6 @@ def _kcore_sql() -> str:
 @register(
     "kcore_peel_certificate",
     oracle=_kcore_sql(),
-    tags=("extension", "graph", "iterative"),
 )
 def kcore_peel_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-core of the RECURRENT co-purchase graph (edges = part pairs
@@ -713,7 +711,6 @@ def _lpa_vote(edges: DataFrame, labels: DataFrame) -> DataFrame:
 @register(
     "label_propagation_communities",
     oracle=_lpa_sql(),
-    tags=("extension", "graph", "iterative"),
 )
 def label_propagation_communities(
     spark: SparkSession, sf_dir: str
@@ -868,7 +865,6 @@ def _wilson_sql(lo: bool) -> str:
            END AS wilson_hi
     FROM steps
     """,
-    tags=("extension", "analytics", "events", "statistics"),
 )
 def wilson_interval_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wilson 95% score intervals for every step of the ordered
@@ -1013,7 +1009,6 @@ _COPURCHASE_CTES = ",\n    ".join(_copurchase_edges_sql())
            END AS assortativity_r
     FROM mom CROSS JOIN gstats
     """,
-    tags=("extension", "graph"),
 )
 def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman degree assortativity of the recurrent co-purchase graph
@@ -1195,7 +1190,6 @@ def _hits_sql() -> str:
 @register(
     "hits_hub_authority",
     oracle=_hits_sql(),
-    tags=("extension", "graph", "iterative"),
 )
 def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hub/authority scores over the directed supplier→customer
@@ -1405,7 +1399,6 @@ def _triangle_sql() -> str:
 @register(
     "triangle_clustering_coefficient",
     oracle=_triangle_sql(),
-    tags=("extension", "graph"),
 )
 def triangle_clustering_coefficient(
     spark: SparkSession, sf_dir: str
@@ -1597,7 +1590,6 @@ def _core_decomposition_sql() -> str:
 @register(
     "graph_core_decomposition_full",
     oracle=_core_decomposition_sql(),
-    tags=("extension", "graph", "iterative"),
 )
 def graph_core_decomposition_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full core decomposition of the recurrent co-purchase graph: one
@@ -1704,7 +1696,6 @@ _LPA_CTE_BLOCK = ",\n    ".join(_lpa_label_ctes())
              AS modularity
     FROM m
     """,
-    tags=("extension", "graph", "iterative"),
 )
 def modularity_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman modularity Q of the converged LPA partition over the
@@ -1845,7 +1836,6 @@ def modularity_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
            bf.n_butterflies
     FROM wed CROSS JOIN bf
     """,
-    tags=("extension", "graph"),
 )
 def butterfly_count_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact butterfly (2x2 biclique) census of the supplier↔customer
@@ -2029,7 +2019,6 @@ def _linkpred_sql() -> str:
 @register(
     "link_prediction_common_neighbors",
     oracle=_linkpred_sql(),
-    tags=("extension", "graph", "recommendation"),
 )
 def link_prediction_common_neighbors(
     spark: SparkSession, sf_dir: str
@@ -2140,7 +2129,6 @@ def _ktruss_sql() -> str:
 @register(
     "ktruss_peel_certificate",
     oracle=_ktruss_sql(),
-    tags=("extension", "graph", "iterative"),
 )
 def ktruss_peel_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-truss of the recurrent co-purchase graph by unrolled edge
@@ -2254,7 +2242,6 @@ def ktruss_peel_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY ra_nanos DESC, u ASC, v ASC
     LIMIT {_LINKPRED_K}
     """,
-    tags=("extension", "graph", "recommendation"),
 )
 def link_prediction_resource_allocation(
     spark: SparkSession, sf_dir: str

@@ -17,12 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ecommerce_data_pipeline_spark.plans._helpers import (
-    dec,
-    dsum,
-    rows_equal,
-    sql_dsum,
-)
+from ecommerce_data_pipeline_spark.plans._helpers import dec, rows_equal
 from ecommerce_data_pipeline_spark.plans.analytics import (
     _SQL_EPISODES,
     _repeat_episodes,
@@ -73,7 +68,6 @@ from ecommerce_data_pipeline_spark.sources.readers import load_table
            END AS residual
     FROM det LEFT JOIN sdow s ON det.dow_idx = s.dow_idx
     """,
-    tags=("extension", "analytics", "seasonality"),
 )
 def revenue_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical additive seasonal decomposition of the daily revenue
@@ -195,7 +189,6 @@ def revenue_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFram
              AS ltv_per_customer
     FROM monthly m JOIN sized s ON m.cohort_month = s.cohort_month
     """,
-    tags=("extension", "analytics", "cohort"),
 )
 def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer-lifetime-value accumulation triangle: customers grouped
@@ -326,7 +319,6 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn IN (CAST(FLOOR((cnt + 1) / 2.0) AS BIGINT),
                  CAST(FLOOR((cnt + 2) / 2.0) AS BIGINT))
     """,
-    tags=("extension", "analytics", "robust-regression"),
 )
 def siegel_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Siegel repeated-median robust trend of daily revenue: for each
@@ -449,7 +441,6 @@ _IVM_REV = (
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     GROUP BY 1, 2
     """,
-    tags=("extension", "incremental", "join"),
 )
 def incremental_join_view_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance of a JOIN view (classical IVM algebra):
@@ -543,7 +534,6 @@ _XCORR_MAX_LAG = 7
     JOIN y ON y.day = x.day + l.lag
     GROUP BY l.lag
     """,
-    tags=("extension", "analytics", "timeseries"),
 )
 def revenue_xcorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lagged cross-correlation between two segments' daily revenue
@@ -680,7 +670,6 @@ _LR_CHI2_CRIT = 3.8414588206941
            ome * ome / var1 > {_LR_CHI2_CRIT} AS significant_5pct
     FROM folded
     """,
-    tags=("extension", "stats", "survival", "hypothesis-test"),
 )
 def logrank_survival_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log-rank (Mantel-Cox) test comparing two segments'
@@ -849,7 +838,6 @@ _ACF_MAX_LAG = 14
                  6) AS ljung_box_q
     FROM acf CROSS JOIN tot
     """,
-    tags=("extension", "analytics", "timeseries", "hypothesis-test"),
 )
 def acf_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation function of daily revenue at lags 1..14 with the
@@ -966,7 +954,6 @@ _CROSTON_MIN_DATES = 3  # need >=2 intervals to smooth
            ROUND(z / p, 6) AS croston_daily_rate
     FROM sm
     """,
-    tags=("extension", "analytics", "forecast", "timeseries"),
 )
 def croston_intermittent_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Croston's method (Croston 1972) for INTERMITTENT demand — the
@@ -1154,7 +1141,6 @@ def _esd_r_col() -> F.Column:
 @register(
     "generalized_esd_outlier_test",
     oracle=_esd_oracle(),
-    tags=("extension", "analytics", "anomaly", "robust-statistics"),
 )
 def generalized_esd_outlier_test(
     spark: SparkSession, sf_dir: str
@@ -1313,7 +1299,6 @@ def _holt_sql() -> str:
 @register(
     "holt_winters_level_trend",
     oracle=_holt_sql(),
-    tags=("extension", "analytics", "forecast"),
 )
 def holt_winters_level_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt double-exponential smoothing over each segment's daily
@@ -1474,7 +1459,6 @@ def holt_winters_level_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS decrease_day
     FROM tops
     """,
-    tags=("extension", "timeseries", "drift"),
 )
 def page_hinkley_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sided Page-Hinkley drift statistic over the daily-revenue
@@ -1605,7 +1589,6 @@ def page_hinkley_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(med.m2 / 2.0 / 100.0, 6) AS theilsen_slope_dollars_per_day
     FROM tot CROSS JOIN med
     """,
-    tags=("extension", "timeseries", "robust"),
 )
 def theilsen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen slope of the daily-revenue series: the exact median of
@@ -1713,7 +1696,6 @@ def theilsen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS final_equals_batch,
            TRUE AS replay_stable
     """,
-    tags=("streaming", "timeseries", "drift", "certificate", "eager"),
 )
 def page_hinkley_stream_certificate(
     spark: SparkSession, sf_dir: str

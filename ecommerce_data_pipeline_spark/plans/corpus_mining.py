@@ -36,7 +36,6 @@ _SQL_TOKENS = (
     ORDER BY n DESC, bigram
     LIMIT 25
     """,
-    tags=("extension", "text", "ngram"),
 )
 def top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide frequent-bigram mining — the vocabulary/collocation
@@ -81,7 +80,6 @@ def top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS novelty
     FROM documents d LEFT JOIN per_doc p USING (doc_id)
     """,
-    tags=("extension", "text", "dedup"),
 )
 def doc_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document novelty: the share of the doc's distinct 3-gram
@@ -156,7 +154,6 @@ def doc_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tok t JOIN bounds b USING (lang)
     GROUP BY t.lang, b.lo, b.hi
     """,
-    tags=("extension", "text", "quality"),
 )
 def lang_adaptive_length_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language ADAPTIVE quality gate: instead of one global length
@@ -215,7 +212,6 @@ def lang_adaptive_length_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                  sum(count(*)) OVER (PARTITION BY lang), 6) AS lang_share
     FROM g GROUP BY lang, guessed_lang
     """,
-    tags=("extension", "text", "quality"),
 )
 def lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declared-vs-detected language confusion matrix — the drift monitor
@@ -268,7 +264,6 @@ def lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(regr_r2(ln(freq), ln(rnk)), 6) AS r2
     FROM ranked
     """,
-    tags=("extension", "text", "stats"),
 )
 def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf-law fit of the corpus token-frequency distribution:
@@ -350,7 +345,6 @@ def _pagerank_oracle() -> str:
 @register(
     "supplier_customer_pagerank",
     oracle=_pagerank_oracle(),
-    tags=("extension", "graph", "iterative"),
 )
 def supplier_customer_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the undirected supplier↔customer trade graph
@@ -402,7 +396,6 @@ def supplier_customer_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS upsample_factor
     FROM shares
     """,
-    tags=("extension", "text", "ml-prep"),
 )
 def temperature_resample_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based mixture resampling (the UniMax/mT5 recipe):
@@ -457,7 +450,6 @@ def temperature_resample_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_pair DESC, w1, w2
     LIMIT 20
     """,
-    tags=("extension", "text", "ngram", "stats"),
 )
 def bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pointwise mutual information of the 20 most frequent bigrams —
@@ -511,7 +503,6 @@ def bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(regr_r2(ln(vocab), ln(n_tokens)), 6) AS r2
     FROM per_source
     """,
-    tags=("extension", "text", "stats"),
 )
 def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law fit (vocab ≈ K·tokens^β) across sources — the
@@ -551,7 +542,6 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
                      * 1.0 / greatest(length(text), 1)), 6) AS symbol_ratio
     FROM documents GROUP BY source
     """,
-    tags=("extension", "text", "quality"),
 )
 def doc_char_class_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source character-class fingerprint (digit/upper/space/symbol
@@ -603,7 +593,6 @@ def doc_char_class_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN v
     GROUP BY db.doc_id
     """,
-    tags=("extension", "text", "quality", "lm"),
 )
 def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document average bigram log-probability under the corpus's own
@@ -683,7 +672,6 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(c * count(*) AS BIGINT) AS token_mass
     FROM cf GROUP BY c
     """,
-    tags=("extension", "text", "vocab"),
 )
 def token_frequency_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency-of-frequencies spectrum of the corpus vocabulary: for
@@ -724,7 +712,6 @@ def token_frequency_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sh.shared * 1.0 / za.n, 6) AS overlap_a_in_b
     FROM shared sh JOIN sizes za ON sh.source_a = za.source
     """,
-    tags=("extension", "dedup", "contamination"),
 )
 def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directional shingle-overlap matrix BETWEEN sources: what fraction
@@ -806,7 +793,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY md5(win)
     HAVING count(DISTINCT doc_id) >= 2
     """,
-    tags=("extension", "dedup", "text"),
 )
 def cross_doc_substring_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring-granular duplication detection (the ExactSubstr shape of
@@ -846,7 +832,6 @@ def cross_doc_substring_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # iterative data-dependent merge loop has no SQL twin;
     # tests pin the merge sequence against a naive reference BPE and
     # under repartition (tests/test_text_properties.py)
-    tags=("extension", "text", "tokenizer"),
 )
 def bpe_vocab_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn the first 20 BPE merges from the corpus (Sennrich et al.
@@ -871,7 +856,6 @@ def bpe_vocab_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "bpe_segmentation_stats",
     oracle=None,  # depends on the learned merge table (engine-side state)
-    tags=("extension", "text", "tokenizer"),
 )
 def bpe_segmentation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply the learned BPE vocabulary back to the corpus: per document,
@@ -948,7 +932,6 @@ def bpe_segmentation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS compression_within_bounds
     FROM tok
     """,
-    tags=("extension", "text", "tokenizer", "certificate"),
 )
 def bpe_roundtrip_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-correctness certificate for the BPE trainer
@@ -1051,7 +1034,6 @@ _SQL_SPLIT80 = (
     CROSS JOIN v
     GROUP BY db.doc_id
     """,
-    tags=("extension", "text", "quality", "lm", "ml-prep"),
 )
 def bigram_heldout_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HELD-OUT language-model evaluation: the add-one-smoothed bigram LM
@@ -1142,7 +1124,6 @@ _OOV_VOCAB_K = 10
     FROM tok LEFT JOIN vocab ON tok.term = vocab.term
     GROUP BY tok.source
     """,
-    tags=("extension", "text", "tokenizer"),
 )
 def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Out-of-vocabulary occurrence rate per source against the corpus
@@ -1235,7 +1216,6 @@ def _dsir_sql_poly() -> str:
     FROM docb JOIN lw ON docb.b = lw.b
     GROUP BY docb.doc_id
     """,
-    tags=("extension", "text", "curation", "llm-data"),
 )
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights: log p_target(doc) - p_raw(doc) under two
@@ -1371,7 +1351,6 @@ _DP_TOP_TERMS = 20
     FROM grid CROSS JOIN n
     GROUP BY term
     """,
-    tags=("extension", "text", "corpus-stats"),
 )
 def term_dispersion_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gries' DP (deviation of proportions) dispersion for the corpus
@@ -1474,7 +1453,6 @@ def term_dispersion_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
            pooled.v AS normalized_chars
     FROM mapped JOIN pooled ON mapped.k = pooled.k
     """,
-    tags=("extension", "text", "ml-prep", "normalization"),
 )
 def quantile_normalize_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile normalization of document length across sources: every
@@ -1561,7 +1539,6 @@ def quantile_normalize_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS cov_10000
     FROM ranked
     """,
-    tags=("extension", "text", "tokenizer"),
 )
 def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary coverage curve: the share of total corpus token mass
@@ -1700,7 +1677,6 @@ _MIX_BATCH_DOCS = 37
            CAST(ABS(r.dev_micros) AS BIGINT) AS max_abs_dev_micros
     FROM l1 JOIN ranked r ON l1.batch_id = r.batch_id AND r.rn = 1
     """,
-    tags=("extension", "curation", "monitoring", "mixture"),
 )
 def mixture_convergence_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-arrival-batch mixture convergence report: cumulative
@@ -1826,7 +1802,6 @@ def mixture_convergence_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS stream_equals_batch,
            TRUE AS replay_stable
     """,
-    tags=("streaming", "mixture", "certificate", "eager"),
 )
 def mixture_monitor_stream_certificate(
     spark: SparkSession, sf_dir: str
@@ -2046,7 +2021,6 @@ def _decon_curve(
                 AS BIGINT) AS n_cum_docs
     FROM sh LEFT JOIN per USING (shard_id)
     """,
-    tags=("extension", "text", "dedup", "streaming-twin"),
 )
 def decontamination_growth_monitor(
     spark: SparkSession, sf_dir: str
@@ -2100,7 +2074,6 @@ def decontamination_growth_monitor(
            TRUE AS curve_equals_monitor,
            TRUE AS replay_stable
     """,
-    tags=("streaming", "text", "dedup", "certificate", "eager"),
 )
 def decontam_monitor_stream_certificate(
     spark: SparkSession, sf_dir: str
@@ -2282,7 +2255,6 @@ def merge_spans(spans: DataFrame) -> DataFrame:
              AS contamination_permille
     FROM per_island GROUP BY doc_id
     """,
-    tags=("extension", "text", "dedup"),
 )
 def decontam_span_removal_stats(
     spark: SparkSession, sf_dir: str

@@ -70,7 +70,6 @@ from ecommerce_data_pipeline_spark.plans.registry import register
            END AS magnitude
     FROM agg
     """,
-    tags=("extension", "profiling", "statistics", "effect-size"),
 )
 def cliffs_delta_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cliff's delta between the BUILDING and MACHINERY order-value
@@ -186,7 +185,6 @@ def cliffs_delta_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        AS DOUBLE)))), 6) AS hellinger
     FROM s CROSS JOIN tot
     """,
-    tags=("extension", "profiling", "statistics", "drift"),
 )
 def hellinger_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hellinger distance and Bhattacharyya coefficient between the
@@ -329,7 +327,6 @@ def hellinger_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                         / CAST(n - 1 AS DOUBLE)), 6) AS z_score
     FROM agg
     """,
-    tags=("extension", "profiling", "statistics", "hypothesis-test"),
 )
 def ansari_bradley_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ansari-Bradley rank-dispersion test between the BUILDING and
@@ -486,7 +483,6 @@ def ansari_bradley_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS t_micros
     FROM u CROSS JOIN nn
     """,
-    tags=("extension", "statistics", "drift"),
 )
 def cramer_von_mises_two_sample(
     spark: SparkSession, sf_dir: str

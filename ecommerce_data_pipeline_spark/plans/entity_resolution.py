@@ -56,7 +56,6 @@ from ecommerce_data_pipeline_spark.sources.readers import load_table
            MAX(verified_cents) AS max_verified_cents
     FROM rec GROUP BY o_custkey
     """,
-    tags=("extension", "entity-resolution", "mdm"),
 )
 def survivorship_merge_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden-record assembly over each entity's record cluster (entity =
@@ -187,7 +186,6 @@ _KANON_K = 5
            class_size
     FROM qi JOIN decision USING (nation, segment, order_year)
     """,
-    tags=("extension", "privacy", "anonymization"),
 )
 def group_k_anonymity_generalize(
     spark: SparkSession, sf_dir: str
@@ -379,7 +377,6 @@ def group_k_anonymity_generalize(
     LEFT JOIN ev USING (c_nationkey)
     JOIN nation ON c_nationkey = n_nationkey
     """,
-    tags=("extension", "privacy", "governance"),
 )
 def gdpr_erasure_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-erasure blast-radius audit: given a deterministic batch
@@ -520,7 +517,6 @@ _BT_ASOF = (
     FROM visible WHERE rn = 1
     GROUP BY world
     """,
-    tags=("extension", "warehouse", "bitemporal"),
 )
 def bitemporal_as_of_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BITEMPORAL as-of reconstruction — the two-axis version query a
@@ -649,7 +645,6 @@ _DP_CLIP_CENTS = 30_000_000  # $300k per-order value clip
              AS bound_holds
     FROM per_seg p JOIN sens s ON p.segment = s.segment
     """,
-    tags=("extension", "privacy", "ml-prep"),
 )
 def dp_contribution_bounding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-user-contribution audit per market segment: each order's

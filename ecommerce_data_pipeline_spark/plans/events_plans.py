@@ -32,7 +32,6 @@ from ecommerce_data_pipeline_spark.sources.readers import load_table
     FROM events
     GROUP BY 1, 2
     """,
-    tags=("streaming", "window"),
 )
 def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 5-minute windows per event type — the per-minute landing
@@ -67,7 +66,6 @@ def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT window_start, COUNT(*) AS n_events, {sql_dsum('value')} AS total_value
     FROM e GROUP BY 1
     """,
-    tags=("streaming", "window"),
 )
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (10-minute length, 5-minute slide): each event lands
@@ -110,7 +108,6 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tagged
     GROUP BY user_id, session_seq
     """,
-    tags=("streaming", "session"),
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-minute gap) in batch form: lag +
@@ -153,7 +150,6 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2, 3
     """,
-    tags=("streaming", "dedup"),
 )
 def events_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of streaming dropDuplicates: collapse repeated
@@ -186,7 +182,6 @@ def events_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id
     HAVING COUNT(*) FILTER (WHERE event_type = 'error') > 0
     """,
-    tags=("streaming", "A1"),
 )
 def events_error_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user event profile with conditional counts (FILTER clauses) —
@@ -222,7 +217,6 @@ def events_error_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AND v.ts >= p.ts - INTERVAL 30 MINUTE
     GROUP BY p.user_id
     """,
-    tags=("extension", "events", "stream-twin"),
 )
 def view_purchase_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """View→purchase conversion latency per user: every (view, purchase)
@@ -300,7 +294,6 @@ def view_purchase_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS session_conversion_rate
     FROM per_session
     """,
-    tags=("extension", "events", "session", "funnel"),
 )
 def session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-SESSION conversion funnel: the share of sessions containing
@@ -384,7 +377,6 @@ def session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / CAST(SUM(dv) AS DOUBLE), 6) AS decay_ratio
     FROM contrib GROUP BY 1, 2
     """,
-    tags=("extension", "events", "features"),
 )
 def time_decay_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-decayed event value per event type at half-lives {1, 7, 30}
@@ -486,7 +478,6 @@ _BP_INF = 1 << 60  # lag default: "no prior running min"
            CAST(s - m AS BIGINT) AS backlog
     FROM lagged
     """,
-    tags=("streaming", "extension", "backpressure"),
 )
 def stream_rate_limit_backpressure(
     spark: SparkSession, sf_dir: str
@@ -618,7 +609,6 @@ _WM_JITTER_S = 21600  # deterministic arrival jitter: 0..6h (hash-drawn).
     FROM flagged
     GROUP BY 1, 2
     """,
-    tags=("extension", "streaming-adjacent", "observability"),
 )
 def watermark_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch replay of Structured Streaming watermark semantics over the

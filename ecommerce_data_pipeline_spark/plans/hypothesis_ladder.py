@@ -88,7 +88,6 @@ _MCN_CHI2_CRIT = {"05": _CHI2_CRIT_05[0], "01": _CHI2_CRIT_01[0]}
            x2 > {_MCN_CHI2_CRIT["01"]!r} AS significant_01
     FROM stat
     """,
-    tags=("extension", "stats", "hypothesis-test"),
 )
 def mcnemar_repeat_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """McNemar's test (Edwards continuity correction) for whether the
@@ -218,7 +217,6 @@ def _sql_crit_ladder(vals: tuple[float, ...]) -> str:
            q > ({_sql_crit_ladder(_CHI2_CRIT_01)}) AS significant_01
     FROM stat
     """,
-    tags=("extension", "stats", "hypothesis-test"),
 )
 def cochran_q_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cochran's Q over the user x event-type participation matrix: do
@@ -359,7 +357,6 @@ def cochran_q_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
            t > ({_sql_crit_ladder(_CHI2_CRIT_01)}) AS significant_01
     FROM stat
     """,
-    tags=("extension", "stats", "hypothesis-test"),
 )
 def friedman_rank_test_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Friedman's rank test over the user x event-type COUNT matrix
@@ -568,7 +565,6 @@ def friedman_rank_test_events(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS significant_01
     FROM fstat
     """,
-    tags=("extension", "stats", "hypothesis-test"),
 )
 def brown_forsythe_variance_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown-Forsythe test: do the five order-priority classes have
@@ -757,7 +753,6 @@ _RUNS_Z_01 = 2.5758293035489004  # Phi^-1(0.995)
            abs(z) > {_RUNS_Z_01!r} AS significant_01
     FROM stat
     """,
-    tags=("extension", "stats", "hypothesis-test"),
 )
 def runs_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald-Wolfowitz runs test on the daily-revenue sign sequence:
@@ -916,7 +911,6 @@ _KAPPA_MIN_SPACES = 30  # gate B: whitespace count (word-density proxy)
                 ELSE 'almost perfect' END AS agreement_level
     FROM k
     """,
-    tags=("extension", "stats", "curation"),
 )
 def cohens_kappa_quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between two binary document-quality gates (length
@@ -1055,7 +1049,6 @@ cohens_kappa_quality_gates.__doc__ = cohens_kappa_quality_gates.__doc__.format(
                  * CAST(LEAST(r - 1, c - 1) AS DOUBLE))), 6) AS cramers_v
     FROM stat
     """,
-    tags=("extension", "stats", "profiling"),
 )
 def cramers_v_segment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramér's V for the segment x priority contingency (the
@@ -1280,7 +1273,6 @@ def _jt_doubled_statistic(cells: DataFrame) -> DataFrame:
                      / (8.0 * CAST(s.n AS DOUBLE) * (s.n-1)))), 6) AS z_score
     FROM u CROSS JOIN s
     """,
-    tags=("extension", "stats", "hypothesis-test"),
 )
 def jonckheere_terpstra_priority_trend(
     spark: SparkSession, sf_dir: str
@@ -1436,7 +1428,6 @@ def jonckheere_terpstra_priority_trend(
              AS chi2_contribution
     FROM seg CROSS JOIN tot CROSS JOIN med
     """,
-    tags=("extension", "stats", "hypothesis-test"),
 )
 def moods_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mood's median test of order value across the five market
@@ -1563,7 +1554,6 @@ def moods_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                         / CAST(nn AS DOUBLE)), 6) AS z_score
     FROM agg
     """,
-    tags=("extension", "stats", "hypothesis-test"),
 )
 def cochran_armitage_priority_trend(
     spark: SparkSession, sf_dir: str
@@ -1680,7 +1670,6 @@ def cochran_armitage_priority_trend(
            round((l2 - e_l2) / sqrt(k * (k + 1) * s / 12.0), 6) AS z_score
     FROM agg CROSS JOIN kk CROSS JOIN mm
     """,
-    tags=("extension", "statistics"),
 )
 def page_trend_yearly_revenue(
     spark: SparkSession, sf_dir: str
@@ -1877,7 +1866,6 @@ def _page_trend_from_cells(cells: DataFrame) -> DataFrame:
            round(3.0 * s2x4 / (m*m*(k*k*k - k) - m*tsum), 6) AS w_stat
     FROM s2 CROSS JOIN tc CROSS JOIN kk CROSS JOIN mm
     """,
-    tags=("extension", "statistics"),
 )
 def kendalls_w_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall's W over the shared segment x year revenue grid (judges
@@ -2000,7 +1988,6 @@ def _kendalls_w_from_cells(cells: DataFrame) -> DataFrame:
                  / NULLIF(m * a2x16 - bx16m, 0), 6) AS f_stat
     FROM a2 CROSS JOIN bb CROSS JOIN kk CROSS JOIN mm
     """,
-    tags=("extension", "statistics"),
 )
 def quade_weighted_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quade's range-weighted rank test over the shared segment x year

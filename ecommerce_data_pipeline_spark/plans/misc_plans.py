@@ -23,7 +23,6 @@ from ecommerce_data_pipeline_spark.sources.readers import load_table
     SELECT o_orderkey, o_totalprice, 'h2' AS half FROM orders
     WHERE month(o_orderdate) > 6
     """,
-    tags=("setop",),
 )
 def union_all_quarters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL (bag semantics) — merging per-period partition loads, the
@@ -52,7 +51,6 @@ def union_all_quarters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n DESC, word
     LIMIT 20
     """,
-    tags=("extension", "text", "F6"),
 )
 def word_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus word frequencies: explode tokens → count → top-20 (the
@@ -77,7 +75,6 @@ def word_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT l_orderkey, l_linenumber, 'discount', l_discount FROM lineitem
     """,
-    tags=("reshape",),
 )
 def unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (wide → long reshape): the measure columns as
@@ -109,7 +106,6 @@ def unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
            round((sxy - sx * sy / n) / (n - 1), 4) AS qty_price_covar
     FROM m
     """,
-    tags=("A5", "stats"),
 )
 def stats_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlation / covariance from EXACT decimal moments: the engine-
@@ -153,7 +149,6 @@ def stats_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
            arg_max(n_name, n_nationkey) AS max_key_nation
     FROM nation GROUP BY n_regionkey
     """,
-    tags=("A6", "stats"),
 )
 def bool_and_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bool_and/bool_or, ordered string aggregation, and arg-max on a
@@ -180,7 +175,6 @@ def bool_and_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(1 AS INT) AS n_props
     FROM events
     """,
-    tags=("F6", "map"),
 )
 def map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MapType surface: parse the JSON payload into map<string,bigint>,
@@ -210,7 +204,6 @@ def map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_rows
     FROM lineitem GROUP BY l_returnflag
     """,
-    tags=("A1", "skew"),
 )
 def salted_revenue_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-proof two-phase aggregation (operators/skew.py::salted_sum):
@@ -251,7 +244,6 @@ def salted_revenue_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
            TIMESTAMP '2024-02-01', CAST(NULL AS TIMESTAMP), TRUE
     FROM updates u WHERE u.c_custkey IN (SELECT c_custkey FROM changed)
     """,
-    tags=("scd", "dimension"),
 )
 def scd2_dimension_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD type-2 dimension versioning (operators/scd.py): bootstrap the
@@ -287,7 +279,6 @@ def scd2_dimension_history(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRY_CAST(CAST(l_quantity AS VARCHAR) AS DOUBLE) AS qty_roundtrip
     FROM lineitem
     """,
-    tags=("F4", "error-tolerance"),
 )
 def try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Error-tolerant scalar surface: try_divide / try_cast return NULL
@@ -319,7 +310,6 @@ def try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
            c_mktsegment
     FROM customer
     """,
-    tags=("extension", "governance"),
 )
 def pii_pseudonymization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Privacy pass every training/analytics pipeline needs before data
@@ -350,7 +340,6 @@ def pii_pseudonymization(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     GROUP BY ROLLUP (c_mktsegment, c_nationkey)
     """,
-    tags=("aggregate", "rollup"),
 )
 def rollup_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP with grouping_id (A4 completion): the bitmask that lets a
@@ -402,7 +391,6 @@ _Z_SQL = " + ".join(
            CAST(({_Z_SQL}) // 1024 AS BIGINT) AS file_id
     FROM b
     """,
-    tags=("extension", "layout"),
 )
 def zorder_layout_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key over (customer, order-day): the
@@ -466,7 +454,6 @@ def zorder_layout_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked
     WHERE rn = 1 AND op = 'U'
     """,
-    tags=("extension", "cdc"),
 )
 def cdc_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change-data-capture log compaction: replay an ordered
@@ -509,7 +496,6 @@ def cdc_apply_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROW_NUMBER() OVER (ORDER BY o_orderkey) AS row_id
     FROM orders
     """,
-    tags=("extension", "layout"),
 )
 def global_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic dense global row enumeration (1..N in key order)
@@ -562,7 +548,6 @@ def global_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
            c_mktsegment
     FROM customer
     """,
-    tags=("scd", "dimension", "time-travel"),
 )
 def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-travel reads over SCD2 history (operators/scd.py::scd2_as_of):
@@ -613,7 +598,6 @@ def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # the queue's message generator is a Python RNG — not
     # SQL-replayable; determinism and stream==batch equality are pinned
     # in tests/test_streaming.py (txqueue tests)
-    tags=("S8", "source", "queue"),
 )
 def queue_drain_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8 queue consumer ON the graded surface: drain 2000 messages from
@@ -667,7 +651,6 @@ def queue_drain_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS redrain_identical,
            TRUE AS partition_layout_independent
     """,
-    tags=("S8", "source", "queue", "certificate", "eager"),
 )
 def queue_source_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Queue-source contract certificate (see oracle comment). The
@@ -757,7 +740,6 @@ def queue_source_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS neardup_equals_batch,
            TRUE AS replay_stable
     """,
-    tags=("streaming", "flagship", "certificate", "eager"),
 )
 def streaming_flagship_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the composed streaming flagship over a bounded queue and
@@ -906,7 +888,6 @@ def streaming_flagship_certificate(spark: SparkSession, sf_dir: str) -> DataFram
            CAST(3 AS BIGINT) AS n_statuses,
            CAST(1569968368443727713 AS BIGINT) AS rollup_fingerprint
     """,
-    tags=("S8", "source", "queue", "certificate"),
 )
 def queue_drain_values_certificate(
     spark: SparkSession, sf_dir: str
@@ -1001,7 +982,6 @@ _CDC_BUCKETS = 16  # base-table file layout: hash buckets of the key
                  / CAST(n_ops AS DOUBLE), 4) AS cow_write_amplification
     FROM per_batch
     """,
-    tags=("extension", "cdc", "layout"),
 )
 def cdc_compaction_io_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read vs copy-on-write IO ledger for the CDC changelog

@@ -114,7 +114,6 @@ def _train_test(spark: SparkSession, sf_dir: str):
              6) AS avg_logscore
     FROM scored GROUP BY doc_id
     """,
-    tags=("extension", "text", "quality", "lm", "ml-prep"),
 )
 def stupid_backoff_trigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Held-out trigram scoring under a Stupid-Backoff LM (Brants et al.
@@ -327,7 +326,6 @@ def _ftx_doc_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
            SUM(w_milli) > 0 AS predicted_keep
     FROM w GROUP BY doc_id
     """,
-    tags=("extension", "text", "quality", "classifier", "ml-prep"),
 )
 def hashed_linear_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style linear quality-classifier INFERENCE over hashed
@@ -432,7 +430,6 @@ _SQL_CP_BUCKET = _sql_cp_bucket()
     JOIN q ON test.segment = q.segment
     GROUP BY test.segment
     """,
-    tags=("extension", "stats", "ml-prep", "uncertainty"),
 )
 def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-conformal prediction intervals (Vovk et al.; Lei et al. 2018)
@@ -559,7 +556,6 @@ def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                        AND newc.pos = cent.pos
     GROUP BY newc.cluster_id
     """,
-    tags=("extension", "similarity", "clustering", "vector-agg"),
 )
 def kmeans_lloyd_step_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd (k-means) iteration computed ENTIRELY relationally — the
@@ -642,7 +638,6 @@ _CAL_POS_LANG = "en"
     FROM perdoc
     GROUP BY 1
     """,
-    tags=("extension", "text", "classifier", "certificate", "ml-prep"),
 )
 def classifier_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram for the hashed linear classifier: documents
@@ -717,7 +712,6 @@ def classifier_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(f.y_fit, 6) AS calibrated
     FROM pts p JOIN fit f ON f.x = p.x
     """,
-    tags=("extension", "classifier", "calibration", "certificate"),
 )
 def classifier_isotonic_recalibration(
     spark: SparkSession, sf_dir: str
@@ -797,7 +791,6 @@ def classifier_isotonic_recalibration(
              AS gini
     FROM agg
     """,
-    tags=("extension", "classifier", "certificate", "ml-prep"),
 )
 def classifier_auc_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROC AUC and Gini coefficient of the hashed classifier against the
@@ -867,7 +860,6 @@ def classifier_auc_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(g.n_docs * 5.0 / t.lang_total, 6) AS balance_vs_uniform
     FROM grid g JOIN totals t USING (lang)
     """,
-    tags=("extension", "ml", "split"),
 )
 def stratified_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-based 5-fold cross-validation assignment,
@@ -1012,7 +1004,6 @@ def _sql_huber_fit(m: str) -> str:
     JOIN f2 ON m0.p_brand = f2.p_brand
     JOIN m2 ON m0.p_brand = m2.p_brand
     """,
-    tags=("extension", "ml", "robust-statistics"),
 )
 def robust_regression_huber_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand robust linear regression of line-item price (cents) on
@@ -1184,7 +1175,6 @@ def robust_regression_huber_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(CAST(b_num AS DOUBLE) / (1e12 * n), 6) AS brier
     FROM tot CROSS JOIN brier
     """,
-    tags=("extension", "ml", "classifier", "evaluation"),
 )
 def expected_calibration_error_eval(
     spark: SparkSession, sf_dir: str
@@ -1348,7 +1338,6 @@ def _qini_sql() -> str:
 @register(
     "qini_uplift_curve",
     oracle=_qini_sql(),
-    tags=("extension", "ml-ops", "experimentation", "uplift"),
 )
 def qini_uplift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Qini uplift curve over banded score deciles: customers are
@@ -1588,7 +1577,6 @@ def _als_sql() -> str:
 @register(
     "als_implicit_step_certificate",
     oracle=_als_sql(),
-    tags=("extension", "ml-ops", "recommendation", "iterative"),
 )
 def als_implicit_step_certificate(
     spark: SparkSession, sf_dir: str
@@ -1775,7 +1763,6 @@ def _qte_sql() -> str:
 @register(
     "quantile_treatment_effect",
     oracle=_qte_sql(),
-    tags=("extension", "ml-ops", "experimentation", "statistics"),
 )
 def quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QTE curve over the hash-split A/A: per arm, the exact type-1

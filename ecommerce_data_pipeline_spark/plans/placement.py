@@ -54,7 +54,6 @@ _RANGE_PARTS = 32
     FROM sizes CROSS JOIN tot
     GROUP BY tot.n
     """,
-    tags=("extension", "layout", "audit"),
 )
 def range_partition_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT audit of rank-based range partitioning on the order-value
@@ -231,7 +230,6 @@ def _chr_sql() -> str:
 @register(
     "consistent_hashing_rebalance_audit",
     oracle=_chr_sql(),
-    tags=("extension", "layout", "placement"),
 )
 def consistent_hashing_rebalance_audit(
     spark: SparkSession, sf_dir: str
@@ -455,7 +453,6 @@ def _hrw_sql() -> str:
 @register(
     "rendezvous_hashing_audit",
     oracle=_hrw_sql(),
-    tags=("extension", "layout", "placement"),
 )
 def rendezvous_hashing_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rendezvous/HRW placement audit: every customer scores all 9
@@ -660,7 +657,6 @@ def _hilbert_sql() -> str:
 @register(
     "hilbert_layout_key",
     oracle=_hilbert_sql(),
-    tags=("extension", "layout"),
 )
 def hilbert_layout_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hilbert-curve clustering key over (customer, order-day) — the

@@ -14,8 +14,6 @@ sessionizer uses.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -47,7 +45,6 @@ from ecommerce_data_pipeline_spark.sources.readers import load_table
       ON a.block = b.block AND a.p_name < b.p_name
     WHERE levenshtein(a.p_name, b.p_name) <= 4
     """,
-    tags=("extension", "entity-resolution", "join"),
 )
 def entity_resolution_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy entity resolution over the part-name dimension: candidate
@@ -149,7 +146,6 @@ def entity_resolution_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'o_orderpriority', n_rows, nn_prio, nd_prio, min_prio,
            max_prio FROM s
     """,
-    tags=("extension", "profiling", "aggregate"),
 )
 def data_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-pass column profiler for the orders table: row count,
@@ -232,7 +228,6 @@ def data_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS p_transition
     FROM pairs
     """,
-    tags=("extension", "analytics", "window"),
 )
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over the event stream: for
@@ -293,7 +288,6 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE abs((o.o_totalprice - m.s1 / m.n)
               / sqrt((m.s2 - m.s1 * m.s1 / m.n) / (m.n - 1))) > 1.65
     """,
-    tags=("extension", "profiling", "outliers"),
 )
 def zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group z-score outlier detection over order totals — the
@@ -377,7 +371,6 @@ def zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                  - 3.0, 6) AS kurtosis_excess
     FROM m
     """,
-    tags=("extension", "profiling", "statistics"),
 )
 def skewness_kurtosis_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-moment distribution profile (population skewness + excess
@@ -509,7 +502,6 @@ def _chi_square_grid(joined: DataFrame) -> DataFrame:
              AS chi2_contribution
     FROM grid CROSS JOIN n
     """,
-    tags=("extension", "profiling", "statistics"),
 )
 def chi_square_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square independence profile between customer market segment
@@ -569,7 +561,6 @@ def chi_square_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN seg s ON j.segment = s.segment
     CROSS JOIN g_all g
     """,
-    tags=("extension", "ml-prep", "encoding"),
 )
 def target_mean_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Smoothed target (mean) encoding of a categorical feature — the
@@ -650,7 +641,6 @@ def target_mean_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS max_key_share
     FROM pred CROSS JOIN act
     """,
-    tags=("extension", "profiling", "join"),
 )
 def join_cardinality_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-explosion pre-flight: predict a join's exact output
@@ -723,7 +713,6 @@ def join_cardinality_preflight(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE abs((d.o_totalprice - d.med_price)
               / (1.4826 * a.mad_price)) > 3.5
     """,
-    tags=("extension", "profiling", "robust-stats"),
 )
 def mad_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median-absolute-deviation outlier gate (|robust z| > 3.5, the
@@ -793,7 +782,6 @@ def mad_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE gap_us IS NOT NULL
     GROUP BY user_id
     """,
-    tags=("extension", "profiling", "timeseries"),
 )
 def interevent_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-event arrival-gap distribution per user (median / p90 / max
@@ -858,7 +846,6 @@ def interevent_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM joined
     GROUP BY o_orderstatus
     """,
-    tags=("extension", "profiling", "audit"),
 )
 def order_reconciliation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-table reconciliation audit: does each order's header total
@@ -935,7 +922,6 @@ def order_reconciliation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) FILTER (o.o_orderkey IS NULL) = 0
     FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o ON l.l_orderkey = o.o_orderkey
     """,
-    tags=("extension", "profiling", "dq"),
 )
 def dq_constraint_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-quality constraint suite (the Deequ/dbt-tests
@@ -1038,7 +1024,6 @@ _PSI_BIN_SQL = " + ".join(
                       / ((n_ref + 1) * 1.0 / (t_ref + 10))), 6) AS psi_term
     FROM counts, tot
     """,
-    tags=("extension", "profiling", "monitoring"),
 )
 def orders_psi_decile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population-stability-index drift monitor: order-value distribution
@@ -1214,7 +1199,6 @@ _SQL_BOOT_K = (
     FROM rep_means r JOIN point p USING (o_orderpriority)
     GROUP BY p.o_orderpriority, p.point_mean, p.n_orders
     """,
-    tags=("extension", "profiling", "statistics"),
 )
 def bootstrap_ci_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson-bootstrap 95% confidence interval for mean order value per
@@ -1292,7 +1276,6 @@ def bootstrap_ci_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and oracle strings run against pre-registered VIEWS — the DuckDB
     # twin (read_parquet(..., filename=true)) is value-diffed with a
     # path-matched comparison in tests/test_operators.py instead
-    tags=("extension", "profiling", "layout"),
 )
 def parquet_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Physical-layout audit of the orders table: rows and key range per
@@ -1341,7 +1324,6 @@ def parquet_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS has_files
     FROM orders
     """,
-    tags=("extension", "profiling", "layout", "certificate"),
 )
 def layout_audit_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Path-independent invariants of the physical-layout audit (see
@@ -1423,7 +1405,6 @@ def layout_audit_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MAX(CASE WHEN r > 0 THEN c END) AS DOUBLE) / 100e0 AS high_cut
     FROM ret GROUP BY prio
     """,
-    tags=("extension", "profiling", "robust"),
 )
 def trimmed_order_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5%-trimmed and winsorized mean of order value per priority, via an
@@ -1527,7 +1508,6 @@ _PURGE_CUTOFF = "1999-01-01"
            COUNT(li_row) AS n_lineitems
     FROM cascade GROUP BY n_name
     """,
-    tags=("extension", "maintenance", "audit"),
 )
 def deletion_impact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-erasure impact preflight: customers inactive since the
@@ -1628,7 +1608,6 @@ def deletion_impact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                  6) AS welch_df
     FROM m a JOIN m b ON a.seg < b.seg
     """,
-    tags=("extension", "profiling", "statistics"),
 )
 def ab_welch_ttest_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Welch's unequal-variance t-test on order value across the
@@ -1743,7 +1722,6 @@ def _mk_sql_poly() -> str:
     WHERE tr.to_type IS NOT NULL AND tr.bucket = 4
     GROUP BY tr.from_type, p.predicted_next
     """,
-    tags=("extension", "analytics", "ml-eval"),
 )
 def markov_next_event_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Held-out top-1 accuracy of the first-order Markov next-event
@@ -1851,7 +1829,6 @@ def markov_next_event_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND((dg - db) * ln(dg / db), 6) AS iv_contrib
     FROM d
     """,
-    tags=("extension", "ml-prep", "encoding", "stats"),
 )
 def woe_information_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight-of-evidence encoding + information value of a categorical
@@ -1947,7 +1924,6 @@ def _sql_did_bucket() -> str:
            ROUND((m_t_post - m_t_pre) - (m_c_post - m_c_pre), 4) AS did
     FROM cells
     """,
-    tags=("extension", "stats", "causal"),
 )
 def did_revenue_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences estimate of a (synthetic) intervention
@@ -2085,7 +2061,6 @@ def _two_segment_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE cum.gap IS NOT NULL
     GROUP BY tot.na, tot.nb, tot.n_values
     """,
-    tags=("extension", "stats", "drift"),
 )
 def wasserstein_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT 1-D Wasserstein (earth-mover) distance between two
@@ -2191,7 +2166,6 @@ _ER_LEN_BAND = 5  # bucket width; edit<=4 implies |len diff|<=4 < width
                           * (n.n_names - 1) / 2), 6) AS reduction_ratio
     FROM n CROSS JOIN truth CROSS JOIN blocked CROSS JOIN retained
     """,
-    tags=("extension", "entity-resolution", "certificate"),
 )
 def blocking_quality_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocking-quality certificate for entity_resolution_fuzzy: pair
@@ -2322,7 +2296,6 @@ _KANON_K = 5
                  / SUM(class_size), 6) AS frac_rows_at_risk
     FROM cls
     """,
-    tags=("extension", "privacy", "audit"),
 )
 def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity / l-diversity audit of the order stream under the

@@ -55,7 +55,6 @@ from ecommerce_data_pipeline_spark.sources.readers import load_table
                  / ((q_all - sq_over_n) / (n_total - k)), 6) AS f_stat
     FROM folded
     """,
-    tags=("extension", "profiling", "statistics", "hypothesis-test"),
 )
 def anova_f_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA F statistic for order value across the five market
@@ -146,7 +145,6 @@ def anova_f_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                  , 6) AS z_score
     FROM agg
     """,
-    tags=("extension", "profiling", "statistics", "hypothesis-test"),
 )
 def mannwhitney_u_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U (Wilcoxon rank-sum) test between two segments'
@@ -235,7 +233,6 @@ def mannwhitney_u_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cum CROSS JOIN tot
     GROUP BY tot.na, tot.nb
     """,
-    tags=("extension", "profiling", "statistics", "hypothesis-test", "drift"),
 )
 def ks_test_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov statistic between two segments'
@@ -335,7 +332,6 @@ def ks_test_price(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS h_tie_corrected
     FROM folded CROSS JOIN ties
     """,
-    tags=("extension", "profiling", "statistics", "hypothesis-test"),
 )
 def kruskal_wallis_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kruskal-Wallis H across all five segments — the k-group
@@ -448,7 +444,6 @@ def kruskal_wallis_test(spark: SparkSession, sf_dir: str) -> DataFrame:
                         * (1.0 / n1 + 1.0 / n2)), 6) AS z_score
     FROM wide
     """,
-    tags=("extension", "profiling", "statistics", "hypothesis-test"),
 )
 def two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion z-test on purchase conversion (purchases as a
@@ -555,7 +550,6 @@ def two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS spearman_rho
     FROM mom
     """,
-    tags=("extension", "profiling", "statistics"),
 )
 def spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation between quantity and extended price per
@@ -689,7 +683,6 @@ def _sql_cuped_bucket() -> str:
                            AS DOUBLE)), 6) AS var_reduction_rho2
     FROM wide CROSS JOIN pooled
     """,
-    tags=("extension", "profiling", "statistics", "experimentation"),
 )
 def cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance-reduced A/B readout (Deng et al., WSDM 2013):
@@ -797,7 +790,7 @@ def cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the wrong file, a dropped file, a split double-count) flips the
     # multiset-equality boolean even when totals still balance. Oracle:
     # exact table-level values from the view + constants the audit must
-    # reproduce. Eager by nature (exceptAll set-diffs) → 'eager' tag.
+    # reproduce. Eager by nature (exceptAll set-diffs).
     oracle="""
     SELECT CAST(count(*) AS BIGINT) AS total_rows,
            min(o_orderkey) AS table_min_key,
@@ -807,7 +800,6 @@ def cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS has_files
     FROM orders
     """,
-    tags=("extension", "profiling", "layout", "certificate", "eager"),
 )
 def layout_values_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-file value check of the physical-layout audit (see oracle
@@ -933,7 +925,6 @@ def layout_values_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
                                AS DOUBLE)), 6) AS tau_b
     FROM agg CROSS JOIN nd
     """,
-    tags=("extension", "profiling", "statistics"),
 )
 def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall tau-b between daily order COUNT and daily revenue: every
@@ -1166,7 +1157,6 @@ def _bh_sql() -> str:
 @register(
     "benjamini_hochberg_fdr",
     oracle=_bh_sql(),
-    tags=("extension", "profiling", "statistics", "multiple-testing"),
 )
 def benjamini_hochberg_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BH step-up FDR control over the 25-brand discount-effect screen:
@@ -1374,7 +1364,6 @@ def _obf_sql() -> str:
 @register(
     "group_sequential_obf_monitor",
     oracle=_obf_sql(),
-    tags=("extension", "profiling", "statistics", "experimentation"),
 )
 def group_sequential_obf_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-sequential experiment monitor: orders are hash-split into
@@ -1559,7 +1548,6 @@ def _mom_sql() -> str:
 @register(
     "median_of_means_certificate",
     oracle=_mom_sql(),
-    tags=("extension", "profiling", "statistics", "robust-statistics"),
 )
 def median_of_means_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median-of-means over order values: orders shard into 32
@@ -1712,7 +1700,6 @@ def _mk_sql() -> str:
 @register(
     "mann_kendall_trend",
     oracle=_mk_sql(),
-    tags=("extension", "profiling", "statistics", "trend"),
 )
 def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall monotonic-trend test on daily revenue: S from the
@@ -1886,7 +1873,6 @@ def _tclose_sql() -> str:
 @register(
     "t_closeness_audit",
     oracle=_tclose_sql(),
-    tags=("extension", "privacy", "profiling"),
 )
 def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness over the k_anonymity_audit framing (QI = nation x

@@ -120,7 +120,6 @@ def _cf_scored_pairs(li: DataFrame) -> DataFrame:
     )
     WHERE rnk <= {_TOP_NEIGHBORS}
     """,
-    tags=("extension", "recommendation", "join"),
 )
 def item_item_cf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 co-purchased neighbors per part (_TOP_NEIGHBORS), scored by
@@ -265,7 +264,6 @@ _SQL_IDCG_CASE = (
     FROM peruser JOIN customer ON peruser.o_custkey = c_custkey
     GROUP BY c_mktsegment
     """,
-    tags=("extension", "recommendation", "backtest", "certificate"),
 )
 def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-last-basket-out backtest of the item-item CF recommender:
@@ -499,7 +497,6 @@ _SQL_REL_GAIN = (
            END AS ndcg
     FROM dcg d JOIN ideal i USING (segment)
     """,
-    tags=("extension", "recommendation", "evaluation"),
 )
 def ndcg_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nDCG@10 evaluation of a retrieval ranking against GRADED

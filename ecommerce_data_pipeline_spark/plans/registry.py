@@ -3,7 +3,10 @@
 This is the engine's public query surface (SURVEY.md §2 inventory). Each
 entry pairs a DataFrame-building callable ``(spark, sf_dir) -> DataFrame``
 with an equivalent ANSI/DuckDB SQL string the driver runs side-by-side at
-sf=0.01 (row-count + schema + order-insensitive value-hash).
+sf=0.01 (row-count + schema + order-insensitive value-hash). An entry is
+exactly (name, plan callable, oracle); what the tests declare per query
+(plan-invariant exemptions, pinned joins, rows-only pins) lives in
+``tests/``.
 
 Oracle-parity rules used throughout the plan modules:
 - Money/measure sums accumulate in DECIMAL(18,6) and cast the final value
@@ -22,7 +25,7 @@ Oracle-parity rules used throughout the plan modules:
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -34,7 +37,6 @@ class Query:
     name: str
     fn: QueryFn
     oracle: str | None
-    tags: tuple[str, ...] = field(default=())
 
 
 REGISTRY: dict[str, Query] = {}
@@ -110,13 +112,13 @@ def _ordered() -> list[Query]:
     return prio + [q for q in REGISTRY.values() if q.name not in seen]
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str | None = None):
     """Decorator: add a query to the engine's declared surface."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, tags=tags)
+        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle)
         return fn
 
     return deco

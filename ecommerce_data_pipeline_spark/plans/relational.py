@@ -14,7 +14,6 @@ from ecommerce_data_pipeline_spark.operators.joins import enrich_facts
 from ecommerce_data_pipeline_spark.pipeline import flagship_revenue
 from ecommerce_data_pipeline_spark.plans._helpers import (
     davg,
-    dec,
     dsum,
     sql_davg,
     sql_dsum,
@@ -48,7 +47,6 @@ register(
     JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY p.p_brand, c.c_mktsegment
     """,
-    tags=("J1", "J2", "A1", "flagship"),
 )(flagship_revenue)
 
 
@@ -58,7 +56,6 @@ register(
 @register(
     "scan_projection",
     oracle="SELECT p_partkey, p_name, p_retailprice FROM part",
-    tags=("S3", "P1"),
 )
 def scan_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projected scan (reference: SELECT product_id, price FROM dim_products,
@@ -76,7 +73,6 @@ def scan_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     WHERE l_quantity > 30 AND l_returnflag = 'R' AND l_discount BETWEEN 0.02 AND 0.08
     """,
-    tags=("P5",),
 )
 def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive WHERE predicates (P5) — all three comparisons reach the
@@ -100,7 +96,6 @@ def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT 1 FROM orders o
       WHERE o.o_custkey = c.c_custkey AND o.o_orderdate >= TIMESTAMP '1998-01-01')
     """,
-    tags=("J2", "P3"),
 )
 def dedup_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's load-bearing dedup semantic (NOT-IN key filter,
@@ -127,7 +122,6 @@ def dedup_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT 1 FROM orders o
       WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
     """,
-    tags=("J4",),
 )
 def semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI join: customers with at least one urgent order."""
@@ -151,7 +145,6 @@ def semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN part p ON l.l_partkey = p.p_partkey
     JOIN supplier s ON l.l_suppkey = s.s_suppkey
     """,
-    tags=("J1", "J5"),
 )
 def join_enrich_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Glue enrichment join (J1, transactions_mock_data.py:17): fact
@@ -189,7 +182,6 @@ def join_enrich_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY c.c_mktsegment
     """,
-    tags=("A1",),
 )
 def agg_revenue_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash aggregate over the enrichment join (A1): the canonical
@@ -210,7 +202,6 @@ def agg_revenue_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "distinct_rows",
     oracle="SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-    tags=("A2",),
 )
 def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "lineitem").select(
@@ -226,7 +217,6 @@ def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_customers
     FROM customer
     """,
-    tags=("A2",),
 )
 def count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "customer").agg(
@@ -247,7 +237,6 @@ def count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n
     FROM lineitem GROUP BY l_returnflag
     """,
-    tags=("A5",),
 )
 def stats_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """min/max/avg/stddev (A5). stddev is inherently floating — rounded to
@@ -271,7 +260,6 @@ def stats_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY ROLLUP (c.c_mktsegment, o.o_orderpriority)
     """,
-    tags=("A4",),
 )
 def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping sets (A4): segment × priority with subtotals and a
@@ -295,7 +283,6 @@ def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
-    tags=("A4",),
 )
 def cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
@@ -312,7 +299,6 @@ def cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
            array_to_string(list_sort(list(DISTINCT n_name)), ',') AS nations
     FROM nation GROUP BY n_regionkey
     """,
-    tags=("A6",),
 )
 def collect_set_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect_set (A6), sorted for cross-engine determinism. The public
@@ -342,7 +328,6 @@ def collect_set_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY total_spend DESC, c.c_custkey
     LIMIT 10
     """,
-    tags=("O3",),
 )
 def top_k_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic top-k (O3): orderBy+limit plans as
@@ -371,7 +356,6 @@ def top_k_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION
     SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F'
     """,
-    tags=("setop",),
 )
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -387,7 +371,6 @@ def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERSECT
     SELECT o_custkey FROM orders WHERE o_orderpriority = '5-LOW'
     """,
-    tags=("setop",),
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -403,7 +386,6 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT
     SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
     """,
-    tags=("setop",),
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT — the set-algebra form of the reference's P3 dedup:
@@ -425,7 +407,6 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
            MIN(doc_id) AS keep_id
     FROM documents GROUP BY sha256(text)
     """,
-    tags=("extension", "dedup"),
 )
 def exact_text_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact content dedup via sha2-256 hash-groupBy (one shuffle on the
@@ -469,7 +450,6 @@ def _skyline_sql() -> str:
 @register(
     "pareto_skyline_parts",
     oracle=_skyline_sql(),
-    tags=("extension", "relational", "skyline"),
 )
 def pareto_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skyline of parts on (price cents MIN, best lineitem quantity

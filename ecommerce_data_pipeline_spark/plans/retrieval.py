@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.operators.similarity import shingle_rows
-from ecommerce_data_pipeline_spark.operators.text import token_count, tokens
+from ecommerce_data_pipeline_spark.operators.text import tokens
 from ecommerce_data_pipeline_spark.plans.registry import register
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 
@@ -63,7 +63,6 @@ def _term_freqs(docs: DataFrame) -> DataFrame:
     )
     WHERE rnk <= 3
     """,
-    tags=("extension", "text", "retrieval"),
 )
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document (idf = ln(N/df), raw-count tf).
@@ -189,7 +188,6 @@ def _sql_bm25_part(term: str) -> str:
     FROM dl CROSS JOIN stats
     WHERE {" + ".join(f"tf_{t}" for t in _BM25_TERMS)} > 0
     """,
-    tags=("extension", "text", "retrieval"),
 )
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25(k1=1.2, b=0.75) document scores for a fixed 3-term query.
@@ -259,7 +257,6 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE g.doc_id >= 25
     GROUP BY g.doc_id
     """,
-    tags=("extension", "text", "dedup"),
 )
 def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination check: corpus documents sharing 5-gram
@@ -304,7 +301,6 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM mx
     GROUP BY doc_id
     """,
-    tags=("extension", "text", "quality"),
 )
 def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals: distinct-token ratio and the mass
@@ -380,7 +376,6 @@ def _sql_tfidf_part(term: str) -> str:
              AS rrf_score
     FROM lex FULL OUTER JOIN sem ON lex.doc_id = sem.doc_id
     """,
-    tags=("extension", "text", "retrieval"),
 )
 def rrf_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion of two retrieval rankings (raw term

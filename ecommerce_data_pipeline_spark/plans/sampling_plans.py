@@ -56,7 +56,6 @@ _SQL_MD5_POLY = _sql_poly("h")
     ORDER BY md5('k50#' || CAST(o_orderkey AS VARCHAR)), o_orderkey
     LIMIT 50
     """,
-    tags=("O1", "sampling"),
 )
 def sample_orders_k50(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1: the reference's `ORDER BY RANDOM() LIMIT 50` dim-sample pull
@@ -83,7 +82,6 @@ def sample_orders_k50(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hashed
     WHERE ({_SQL_MD5_POLY}) % 10000 < 100
     """,
-    tags=("O1", "sampling"),
 )
 def sample_lineitem_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB fractional-sampling path: 1% Bernoulli via hash
@@ -125,7 +123,6 @@ def sample_lineitem_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT d.event_id, d.user_id, i.p_partkey, i.p_brand
     FROM drawn d JOIN idx i USING (_idx)
     """,
-    tags=("O2", "J3", "sampling"),
 )
 def random_fk_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: the reference's random FK assignment (each generated fact picks
@@ -149,7 +146,7 @@ def random_fk_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("generate_reference_batch", oracle=None, tags=("generator", "reference"))
+@register("generate_reference_batch", oracle=None)
 def generate_reference_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's whole data-generation tier (EP1 candidates + EP2
     transaction batch, dimension_tables_mock.py / transactions_mock_data
@@ -201,7 +198,6 @@ _SQL_STRAT_CASE = (
     FROM hashed
     WHERE ({{poly}}) % 1000 < {_SQL_STRAT_CASE}
     """.replace("{poly}", _sql_poly("h")),
-    tags=("O1", "sampling", "extension"),
 )
 def stratified_sample_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-mix rebalancing: downsample the over-represented language
@@ -248,7 +244,6 @@ def stratified_sample_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'test' END AS split
     FROM bucketed
     """,
-    tags=("extension", "sampling", "ml-prep"),
 )
 def hash_split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/validation/test assignment by
@@ -300,7 +295,6 @@ def hash_split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, lang, CAST(rnk AS BIGINT) AS rnk
     FROM ranked WHERE rnk <= 20
     """,
-    tags=("O1", "sampling", "extension"),
 )
 def per_group_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic exact-k-per-group sampling: rank rows inside each
@@ -347,7 +341,6 @@ def per_group_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY race_key, o_orderkey
     LIMIT 50
     """,
-    tags=("extension", "sampling", "ml-prep"),
 )
 def weighted_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling WITHOUT replacement, k=50, P(pick) ∝ order value
@@ -402,7 +395,6 @@ def weighted_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS fk_targets_exist,
            TRUE AS fk_bin_coverage_plausible
     """,
-    tags=("O1", "O2", "J3", "sampling", "certificate", "eager"),
 )
 def sampling_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampling-correctness certificate for the three seeded samplers
@@ -496,7 +488,6 @@ def sampling_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS sample_subset_of_stratum
     FROM documents GROUP BY lang ORDER BY lang
     """,
-    tags=("O1", "sampling", "extension", "certificate", "eager"),
 )
 def stratified_sample_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified-sampling certificate (operators/sampling.py::
@@ -583,7 +574,6 @@ _RES_SHARDS = 8
     ORDER BY race_key, o_orderkey
     LIMIT {_RES_K}
     """,
-    tags=("O1", "sampling", "extension", "certificate"),
 )
 def reservoir_sample_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed reservoir sampling via hash-race merge: each of 8

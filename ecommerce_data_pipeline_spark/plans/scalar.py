@@ -26,7 +26,6 @@ from ecommerce_data_pipeline_spark.sources.readers import load_table
            replace(p_type, ' ', '_') AS type_slug
     FROM part
     """,
-    tags=("F1",),
 )
 def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 id/format strings: the reference's f\"prod-{6 digits}\" id scheme
@@ -55,7 +54,6 @@ def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY 1, 2
     """,
-    tags=("F2",),
 )
 def date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 date-part extraction — the partition-key derivation of the
@@ -84,7 +82,6 @@ def date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
            strptime(strftime(o_orderdate, '%Y-%m-%d-%H:%M:%S'), '%Y-%m-%d-%H:%M:%S') AS parsed_ts
     FROM orders
     """,
-    tags=("F2", "reference-format"),
 )
 def reference_ts_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's non-ISO timestamp format 'yyyy-MM-dd-HH:mm:ss'
@@ -110,7 +107,6 @@ def reference_ts_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sqrt(p_retailprice), 4) AS price_sqrt
     FROM part
     """,
-    tags=("F3",),
 )
 def math_rounding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3 math/rounding (reference: round(uniform(10,500),2),
@@ -134,7 +130,6 @@ def math_rounding(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_num
     FROM events
     """,
-    tags=("F5",),
 )
 def json_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5 JSON path extraction over events.props (the landing stream's
@@ -161,7 +156,6 @@ def json_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     GROUP BY 1
     """,
-    tags=("F4",),
 )
 def case_when_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4 conditional bucketing — the membership-level CDF thresholds of
@@ -194,7 +188,6 @@ def case_when_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
            list_sort(string_split(lower(n_name), ''))[1] AS first_letter
     FROM nation
     """,
-    tags=("F6",),
 )
 def array_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6 array ops: split a string to an array, sort it, index it."""
@@ -219,7 +212,6 @@ def array_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
            least(l_tax, 0.05) AS tax_cap5
     FROM lineitem
     """,
-    tags=("F4", "nulls"),
 )
 def null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NULL-handling surface: nullif/coalesce/greatest/least and a null
@@ -250,7 +242,6 @@ def null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_num
     FROM events
     """,
-    tags=("F5", "variant"),
 )
 def variant_json_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5 via Spark 4's VARIANT type: ``parse_json`` shreds the payload

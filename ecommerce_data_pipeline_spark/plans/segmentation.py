@@ -114,7 +114,6 @@ _RFM_CUST = """
     FROM scored
     GROUP BY r_score, f_score, m_score
     """,
-    tags=("extension", "segmentation"),
 )
 def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM (recency / frequency / monetary) quintile scoring of every
@@ -224,7 +223,6 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'C' END AS abc_class
     FROM s
     """,
-    tags=("extension", "segmentation"),
 )
 def pareto_abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto / ABC inventory classification: rank parts by revenue and
@@ -308,7 +306,6 @@ def pareto_abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / CAST(n * tot AS DOUBLE), 6) AS gini
     FROM s
     """,
-    tags=("extension", "segmentation"),
 )
 def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of customer revenue concentration (0 = perfectly

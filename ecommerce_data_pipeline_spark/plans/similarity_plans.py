@@ -112,7 +112,6 @@ _SQL_SHINGLES_EXACT = f"""
     oracle=f"""
     WITH {_SQL_SHINGLES_CAPPED},{_SQL_JACCARD_PAIRS}
     """,
-    tags=("extension", "dedup"),
 )
 def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram-shingle Jaccard near-dup pairs (threshold 0.8) over
@@ -135,7 +134,6 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SQL_SHINGLES_EXACT},{_SQL_JACCARD_PAIRS}
     """,
-    tags=("extension", "dedup"),
 )
 def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Jaccard ≥ 0.8 near-dup pairs via PREFIX FILTERING
@@ -173,7 +171,6 @@ def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS cluster_size
     FROM documents d LEFT JOIN labels l ON d.doc_id = l.node
     """,
-    tags=("extension", "dedup", "graph"),
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-CLUSTER assignment: exact-jaccard near-dup pairs →
@@ -197,7 +194,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "minhash_lsh_neardup",
     oracle=None,  # xxhash64 signatures are engine-specific; tests pin
     # this against ngram_jaccard_neardup (exact recall check)
-    tags=("extension", "dedup", "lsh"),
 )
 def minhash_lsh_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(4 bands × 4 rows) candidates, verified with exact
@@ -217,7 +213,6 @@ def minhash_lsh_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_SQL_SHINGLES_EXACT},{_SQL_JACCARD_PAIRS}
     """,
-    tags=("extension", "dedup", "lsh"),
 )
 def minhash_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs graded against the EXACT relation.
@@ -235,7 +230,6 @@ def minhash_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "simhash_signatures",
     oracle=None,  # xxhash64-based signature, engine-specific
-    tags=("extension", "dedup", "simhash"),
 )
 def simhash_signatures_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 64-bit SimHash (bitwise majority over shingle hashes) +
@@ -281,7 +275,6 @@ _SQL_EXACT_COSINE_TOPK = """
 embedding_cosine_topk = register(
     "embedding_cosine_topk",
     oracle=_SQL_EXACT_COSINE_TOPK,
-    tags=("extension", "similarity"),
 )(_ann.embedding_cosine_topk)
 
 
@@ -289,7 +282,6 @@ embedding_lsh_topk = register(
     "embedding_lsh_topk",
     oracle=None,  # approximate: bucket contents are scheme-specific;
     # tests measure recall against embedding_cosine_topk
-    tags=("extension", "similarity", "lsh"),
 )(_ann.embedding_lsh_topk)
 
 
@@ -304,7 +296,6 @@ lsh_recall_vs_exact = register(
     # breaks the driver hash. Production-parameter recall (H≤1) is pinned
     # by tests/test_similarity.py::test_lsh_ann_recall_vs_bruteforce.
     oracle=_SQL_EXACT_COSINE_TOPK,
-    tags=("extension", "similarity", "lsh", "certificate"),
 )(_ann.lsh_recall_vs_exact)
 
 
@@ -317,7 +308,6 @@ ivf_recall_vs_exact = register(
     # Production-parameter recall (nprobe=4/16) is pinned by
     # tests/test_similarity.py::test_ivf_recall_vs_bruteforce.
     oracle=_SQL_EXACT_COSINE_TOPK,
-    tags=("extension", "similarity", "ivf", "certificate"),
 )(_ann.ivf_recall_vs_exact)
 
 
@@ -331,7 +321,6 @@ pq_recall_vs_exact = register(
     # recall (rerank=50) is pinned by
     # tests/test_similarity.py::test_pq_recall_and_determinism.
     oracle=_SQL_EXACT_COSINE_TOPK,
-    tags=("extension", "similarity", "pq", "certificate"),
 )(_ann.pq_recall_vs_exact)
 
 
@@ -363,7 +352,6 @@ pq_recall_vs_exact = register(
            CAST(0 AS BIGINT) AS n_pigeonhole_misses
     FROM exact
     """,
-    tags=("extension", "dedup", "simhash", "certificate"),
 )
 def simhash_recall_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash banding recall certificate: count exact-Jaccard(≥0.8)
@@ -404,7 +392,6 @@ embedding_cosine_neardup = register(
                 / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))),
                 6) >= 0.35
     """,
-    tags=("extension", "dedup", "similarity"),
 )(_ann.embedding_cosine_neardup)
 
 
@@ -443,7 +430,6 @@ embedding_cosine_neardup = register(
     FROM documents d
     JOIN full_h f USING (doc_id) JOIN s USING (doc_id)
     """,
-    tags=("extension", "multimodal"),
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing end-to-end: documents → binary payload table
@@ -470,7 +456,6 @@ embedding_ivf_topk = register(
     "embedding_ivf_topk",
     oracle=None,  # approximate (coarse-quantizer probing); tests measure
     # recall against embedding_cosine_topk
-    tags=("extension", "similarity", "ivf"),
 )(_ann.embedding_ivf_topk)
 
 
@@ -478,7 +463,6 @@ embedding_pq_topk = register(
     "embedding_pq_topk",
     oracle=None,  # approximate (compressed-code ADC prefilter); tests
     # measure recall against embedding_cosine_topk
-    tags=("extension", "similarity", "pq"),
 )(_ann.embedding_pq_topk)
 
 
@@ -508,7 +492,6 @@ embedding_pq_topk = register(
            CAST(SUM(n_tokens) FILTER (doc_id = keeper) AS BIGINT) AS tokens_kept
     FROM kept GROUP BY source
     """,
-    tags=("extension", "dedup", "pipeline"),
 )
 def clean_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole training-data cleaning pass as ONE composed plan:
@@ -569,7 +552,6 @@ embedding_label_centroids = register(
            CAST(count(*) AS BIGINT) AS dim
     FROM m GROUP BY label
     """,
-    tags=("extension", "similarity", "vector-agg"),
 )(_ann.embedding_label_centroids)
 
 
@@ -595,7 +577,6 @@ embedding_standardize_by_label = register(
              AS z_embedding
     FROM z GROUP BY vec_id, label
     """,
-    tags=("extension", "similarity", "vector-agg"),
 )(_ann.embedding_standardize_by_label)
 
 
@@ -604,7 +585,6 @@ embedding_standardize_by_label = register(
     oracle=None,  # xxhash64 banding is engine-specific; pinned against
     # the full-corpus run in tests/test_similarity.py (exact equality on
     # the delta-touching pair set)
-    tags=("extension", "dedup", "incremental"),
 )
 def incremental_neardup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental corpus growth: docs with doc_id % 7 == 0 arrive as a
@@ -637,7 +617,6 @@ def incremental_neardup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_SQL_SHINGLES_EXACT},{_SQL_JACCARD_PAIRS}
       AND (id1 % 7 = 0 OR id2 % 7 = 0)
     """,
-    tags=("extension", "dedup", "incremental", "certificate"),
 )
 def incremental_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dedup graded against the exact delta-touching
@@ -673,7 +652,6 @@ def incremental_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sb ON p.id2 = sb.doc_id
     WHERE greatest(common * 1.0 / sa.n, common * 1.0 / sb.n) >= 0.9
     """,
-    tags=("extension", "dedup", "containment"),
 )
 def text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ASYMMETRIC near-dup: shingle containment |A∩B|/|A| ≥ 0.9 in either
@@ -736,7 +714,6 @@ def text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN documents d2 ON n.id2 = d2.doc_id
     GROUP BY d1.lang, d2.lang
     """,
-    tags=("extension", "dedup", "quality"),
 )
 def cross_lang_duplicate_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs bucketed by (lang1, lang2) — the audit that shows
@@ -788,7 +765,6 @@ embedding_norm_outliers = register(
            abs(n.norm - s.mu) > 2 * s.sigma AS is_outlier
     FROM n JOIN stats s ON n.label = s.label
     """,
-    tags=("extension", "similarity", "anomaly"),
 )(_ann.embedding_norm_outliers)
 
 
@@ -815,7 +791,6 @@ embedding_covariance_top_pairs = register(
     SELECT pos_i, pos_j, cov, corr, CAST(rnk AS INT) AS rnk
     FROM ranked WHERE rnk <= 25
     """,
-    tags=("extension", "similarity", "vector-agg"),
 )(_ann.embedding_covariance_top_pairs)
 
 
@@ -842,7 +817,6 @@ embedding_filtered_topk = register(
     SELECT query_id, cand_id, cosine, CAST(rnk AS INT) AS rnk
     FROM ranked WHERE rnk <= 10
     """,
-    tags=("extension", "similarity", "ann"),
 )(_ann.embedding_filtered_topk)
 
 
@@ -874,7 +848,6 @@ embedding_quantize_int8 = register(
     FROM err JOIN rng r USING (pos)
     GROUP BY err.pos, r.vmin, r.vmax, r.scale
     """,
-    tags=("extension", "similarity", "compression"),
 )(_ann.embedding_quantize_int8)
 
 
@@ -899,7 +872,6 @@ embedding_quantize_int8 = register(
     FROM th LEFT JOIN pairs p ON p.jaccard >= th.threshold
     GROUP BY th.threshold
     """,
-    tags=("extension", "dedup", "tuning"),
 )
 def dedup_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup THRESHOLD sweep in one pass: for jaccard thresholds
@@ -1067,7 +1039,6 @@ def semantic_neardup_pairs(
                 / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))),
                 6) >= 0.35
     """,
-    tags=("extension", "dedup", "similarity"),
 )
 def semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs with DETERMINISTIC
@@ -1112,7 +1083,6 @@ def semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY chunk_sha
     HAVING count(*) >= 2
     """,
-    tags=("extension", "dedup", "multimodal"),
 )
 def multimodal_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-level binary dedup over the multimodal payload column: the
@@ -1175,7 +1145,6 @@ _SQL_H_POLY = " + ".join(
                 ELSE 'test' END AS split
     FROM hashed
     """,
-    tags=("extension", "dedup", "ml-prep"),
 )
 def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/validation/test split that CANNOT leak near-duplicates
@@ -1218,7 +1187,6 @@ embedding_pca_project = register(
     "embedding_pca_project",
     oracle=None,  # eigh has no SQL twin; tests pin variance ordering,
     # orthonormality, centering, and layout-independence instead
-    tags=("extension", "similarity", "hygiene"),
 )(_ann.embedding_pca_project)
 
 
@@ -1249,7 +1217,6 @@ pca_variance_certificate = register(
            TRUE AS projection_var_matches_eigvals,
            TRUE AS projections_decorrelated
     """,
-    tags=("extension", "similarity", "hygiene", "certificate", "eager"),
 )(_ann.pca_variance_certificate)
 
 
@@ -1257,7 +1224,6 @@ ivf_probe_recall_curve = register(
     "ivf_probe_recall_curve",
     oracle=None,  # k-means centroids are engine-specific; pytest pins
     # recall monotonicity in nprobe and the exact-at-full-probe limit
-    tags=("extension", "similarity", "tuning"),
 )(_ann.ivf_probe_recall_curve)
 
 
@@ -1285,7 +1251,6 @@ ivf_probe_recall_curve = register(
            (coalesce(l.label, emb.vec_id) = emb.vec_id) AS is_keeper
     FROM embeddings emb LEFT JOIN labels l ON emb.vec_id = l.node
     """,
-    tags=("extension", "dedup", "similarity", "pipeline"),
 )
 def semantic_dedup_keeplist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup end-to-end: sign-orthant-blocked cosine near-dup pairs →
@@ -1342,7 +1307,6 @@ embedding_drift_by_label = register(
     FROM j JOIN n ON j.label = n.label
     GROUP BY j.label, n.n0, n.n1
     """,
-    tags=("extension", "similarity", "monitoring"),
 )(_ann.embedding_drift_by_label)
 
 
@@ -1368,7 +1332,6 @@ embedding_hard_negatives = register(
       FROM scored
     ) WHERE rnk <= 5
     """,
-    tags=("extension", "similarity", "ml-prep"),
 )(_ann.embedding_hard_negatives)
 
 
@@ -1409,7 +1372,6 @@ knn_label_vote = register(
     JOIN (SELECT vec_id AS query_id, label AS true_label
           FROM embeddings WHERE vec_id < 16) t USING (query_id)
     """,
-    tags=("extension", "similarity", "classification"),
 )(_ann.knn_label_vote)
 
 
@@ -1468,7 +1430,6 @@ mmr_diverse_topk = register(
            unnest(chosen) AS cand_id
     FROM mmr WHERE step = 5
     """,
-    tags=("extension", "similarity", "diversity", "grouped-map"),
 )(_ann.mmr_diverse_topk)
 
 
@@ -1526,7 +1487,6 @@ matryoshka_recall_curve = register(
     FROM ({_SQL_MATRYOSHKA})
     ORDER BY dims
     """,
-    tags=("extension", "similarity", "hygiene", "tuning"),
 )(_ann.matryoshka_recall_curve)
 
 
@@ -1570,7 +1530,6 @@ matryoshka_recall_curve = register(
              AS is_survivor
     FROM assigned
     """,
-    tags=("extension", "dedup", "survivorship"),
 )
 def dedup_quality_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-based dedup survivorship: every document gets its near-dup
@@ -1666,7 +1625,6 @@ jl_projection_certificate = register(
                  * 1.0 / COUNT(*), 6) AS frac_within_30pct
     FROM micro
     """,
-    tags=("extension", "similarity", "certificate"),
 )(_ann.jl_projection_certificate)
 
 
@@ -1741,7 +1699,6 @@ _SQL_BAND_GRID = ", ".join(
            round(c.n_pairs * g.p_detect, 4) AS expected_hits
     FROM binned c JOIN grid g USING (s_bin)
     """,
-    tags=("extension", "dedup", "lsh", "tuning"),
 )
 def minhash_band_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding design curve, evaluated against the corpus's OWN pair

@@ -108,7 +108,6 @@ _CMS_W = 512  # buckets per row
     FROM est
     WHERE exact_count >= 45
     """,
-    tags=("extension", "sketch"),
 )
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min Sketch heavy-hitter report: estimate per-part order
@@ -232,7 +231,6 @@ _BLOOM_K = 3  # hashes
                   - (SELECT COUNT(*) FROM truth)) * 1.0
                  / (SELECT COUNT(*) FROM orders), 6) AS fp_rate
     """,
-    tags=("extension", "sketch", "join"),
 )
 def bloom_join_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter join pre-filter, measured: build an m=8192/k=3 Bloom
@@ -409,7 +407,6 @@ _HLLU_SMALL = 2.5 * _HLLU_M
                  / exact_distinct, 4) AS rel_error
     FROM est JOIN exact ON est.day = exact.day
     """,
-    tags=("extension", "sketch", "streaming-adjacent"),
 )
 def hyperloglog_union_over_time(
     spark: SparkSession, sf_dir: str
@@ -585,7 +582,6 @@ _HQ_QS = (("p50", 0.5), ("p90", 0.9), ("p99", 0.99))
            est_p50, exact_p50, est_p90, exact_p90, est_p99, exact_p99
     FROM est_wide e JOIN exact USING (gday)
     """,
-    tags=("extension", "sketch", "streaming-adjacent"),
 )
 def histogram_quantile_window_merge(
     spark: SparkSession, sf_dir: str
@@ -798,7 +794,6 @@ def _kmv_sql() -> str:
 @register(
     "kmv_sketch_intersection",
     oracle=_kmv_sql(),
-    tags=("extension", "sketch", "approximate"),
 )
 def kmv_sketch_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV/theta sketch estimate of |customers active in 1996 AND in

@@ -40,7 +40,6 @@ _SQL_STOPWORDS = "['the', 'a', 'of', 'and', 'to', 'in']"
            n_chars
     FROM documents
     """,
-    tags=("extension", "text"),
 )
 def token_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace/punctuation token counting (the sizing primitive of any
@@ -68,7 +67,6 @@ def token_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ELSE 0.0 END, 6) AS mean_token_len
     FROM documents
     """,
-    tags=("extension", "text"),
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality features: punctuation density, stopword ratio, mean token
@@ -97,7 +95,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY lang
     """,
-    tags=("extension", "text"),
 )
 def lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus language distribution + size profile (the partition-planning
@@ -131,7 +128,6 @@ def lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN 'en' ELSE 'es' END AS guessed_lang
     FROM documents
     """,
-    tags=("extension", "text"),
 )
 def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram/stopword language-ID heuristic: ASCII ratio + per-language
@@ -166,7 +162,6 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
            substr(md5(list_aggregate({_SQL_TOKENS}, 'string_agg', ' ')), 1, 4) AS shard_key
     FROM documents
     """,
-    tags=("extension", "text", "dedup"),
 )
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprint over the normalized token stream (md5) + a
@@ -192,7 +187,6 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY 1, 2
     """,
-    tags=("extension", "text"),
 )
 def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-length histogram (100-char buckets) — the width_bucket
@@ -221,7 +215,6 @@ def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(least(len(ts) - chunk_id*48, 64) AS INT) AS n_tokens
     FROM starts
     """,
-    tags=("extension", "text", "chunking"),
 )
 def chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking (64-token windows, 16 overlap →
@@ -252,7 +245,6 @@ def chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
            array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
     FROM binned GROUP BY shard, bin_id
     """,
-    tags=("extension", "text", "packing"),
 )
 def pack_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic sequence packing into 512-token bins via prefix-sum
@@ -293,7 +285,6 @@ def pack_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY term
     HAVING COUNT(*) >= 5
     """,
-    tags=("extension", "text", "retrieval"),
 )
 def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the posting lists of an inverted index (term -> sorted doc
@@ -350,7 +341,6 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM counts
     GROUP BY doc_id
     """,
-    tags=("extension", "text", "quality"),
 )
 def token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document Shannon entropy of the token distribution — the
@@ -423,7 +413,6 @@ def token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM flags
     )
     """,
-    tags=("extension", "text", "quality"),
 )
 def filter_funnel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-rule rejection attribution for a corpus-cleaning chain: how
@@ -512,7 +501,6 @@ def filter_funnel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS needs_repetition
     FROM avail a JOIN targets t ON a.lang = t.lang
     """,
-    tags=("extension", "text", "ml-prep"),
 )
 def curriculum_mix_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-mixture planner: given per-language available token
@@ -575,7 +563,6 @@ def curriculum_mix_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN totals
     GROUP BY dt.doc_id
     """,
-    tags=("extension", "text", "quality"),
 )
 def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document average unigram log-probability under the corpus's
@@ -699,7 +686,6 @@ def _gopher_metrics():
             AND alpha_token_ratio >= 0.8 AND stop_hits >= 2) AS passes_all
     FROM m
     """,
-    tags=("extension", "text", "quality"),
 )
 def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style rule-based quality gate (Rae et al. 2021 §A1.1,
@@ -774,7 +760,6 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m
     GROUP BY source, lang
     """,
-    tags=("extension", "text", "quality", "dashboard"),
 )
 def source_quality_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-(source, language) curation dashboard: document and token
@@ -858,7 +843,6 @@ _RAKE_STOP_RE = "\\b(the|a|of|and|to|in)\\b"
     ) r
     WHERE rnk <= 3
     """,
-    tags=("extension", "text", "keywords"),
 )
 def rake_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword extraction: top-3 candidate phrases per document.
@@ -973,7 +957,6 @@ def rake_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS boost_permille
     FROM sq CROSS JOIN tot
     """,
-    tags=("extension", "text", "mixture"),
 )
 def lang_temperature_sampling_weights(
     spark: SparkSession, sf_dir: str
@@ -1071,7 +1054,6 @@ def _temperature_weights_from_masses(src: DataFrame) -> DataFrame:
     FROM tf CROSS JOIN tot
     ORDER BY chi2_micros DESC, term LIMIT 20
     """,
-    tags=("extension", "text", "quality"),
 )
 def keyness_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 keyness terms for the English subcorpus vs the rest by
@@ -1189,7 +1171,6 @@ def keyness_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS epochs_millis
     FROM flagged CROSS JOIN pool
     """,
-    tags=("extension", "text", "mixture"),
 )
 def token_budget_epoch_allocation(
     spark: SparkSession, sf_dir: str

@@ -44,7 +44,6 @@ def _rev() -> F.Column:
     WHERE l_shipdate <= TIMESTAMP '2001-09-02'
     GROUP BY l_returnflag, l_linestatus
     """,
-    tags=("tpch", "A1", "bench"),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: full-scan hash aggregate with 8 measures over 6
@@ -83,7 +82,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, l.l_orderkey
     LIMIT 10
     """,
-    tags=("tpch", "J1", "O3", "bench"),
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective filters on both fact tables, customer dim
@@ -130,7 +128,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o.o_orderdate < TIMESTAMP '1997-01-01'
     GROUP BY n.n_name
     """,
-    tags=("tpch", "J1", "bench"),
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join with a non-FK equality (customer nation =
@@ -169,7 +166,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.03 AND 0.07
       AND l_quantity < 24
     """,
-    tags=("tpch", "P5", "bench"),
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan-filter-aggregate; every predicate reaches
@@ -208,7 +204,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c.c_custkey
     LIMIT 20
     """,
-    tags=("tpch", "J1", "O3", "bench"),
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: returned-item revenue ranking, customer+nation
@@ -246,7 +241,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY c.c_custkey, c.c_name, o.o_orderkey, o.o_orderdate, o.o_totalprice
     """,
-    tags=("tpch", "J4", "A1", "bench"),
 )
 def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: HAVING-subquery semi-join against an aggregated key
@@ -287,7 +281,6 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l.l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
     GROUP BY 1, 2, 3
     """,
-    tags=("tpch", "J1", "bench"),
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bidirectional nation-pair filter (disjunctive
@@ -334,7 +327,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     WHERE l.l_shipdate >= TIMESTAMP '1997-01-01' AND l.l_shipdate < TIMESTAMP '1997-02-01'
     """,
-    tags=("tpch", "F4", "bench"),
 )
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: conditional aggregation ratio (promo share of
@@ -372,7 +364,6 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p.p_brand = 'Brand#7' AND p.p_size BETWEEN 10 AND 30 AND l.l_quantity BETWEEN 10 AND 35)
        OR (p.p_brand = 'Brand#13' AND p.p_size BETWEEN 20 AND 50 AND l.l_quantity BETWEEN 20 AND 50)
     """,
-    tags=("tpch", "P5", "bench"),
 )
 def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-of-ANDs across both join sides — the planner
@@ -419,7 +410,6 @@ def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_lines
     FROM volumes GROUP BY o_year
     """,
-    tags=("tpch", "A1", "bench"),
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one nation's share of a region's order volume by
@@ -472,7 +462,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY c.c_custkey
     ) GROUP BY c_count
     """,
-    tags=("tpch", "J1", "bench"),
 )
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: LEFT OUTER join with an ON-clause filter (kept
@@ -510,7 +499,6 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND o.o_orderdate >= TIMESTAMP '1999-01-01')
     GROUP BY c.c_mktsegment
     """,
-    tags=("tpch", "J2", "bench"),
 )
 def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: scalar-subquery threshold + anti-join (customers

@@ -67,7 +67,6 @@ def _rev() -> F.Column:
     SELECT * FROM j
     QUALIFY unit_cost = min(unit_cost) OVER (PARTITION BY p_partkey)
     """,
-    tags=("tpch", "J1", "correlated-min"),
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape (min-cost supplier per part). The correlated
@@ -120,7 +119,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     GROUP BY o_orderpriority
     """,
-    tags=("tpch", "J4", "exists"),
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS → left-semi join (the join condition spans
@@ -158,7 +156,6 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.p_name LIKE '%bolt%'
     GROUP BY n.n_name, year(o.o_orderdate)
     """,
-    tags=("tpch", "J1", "A1"),
 )
 def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (profit by nation×year): 5-way join where only
@@ -212,7 +209,6 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_partkey, part_value FROM v
     WHERE part_value > (SELECT SUM(part_value) FROM v) * 0.001
     """,
-    tags=("tpch", "A1", "scalar-subquery"),
 )
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: grouped value per part for one nation's suppliers,
@@ -255,7 +251,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l.l_shipdate < TIMESTAMP '1998-01-01'
     GROUP BY l.l_returnflag
     """,
-    tags=("tpch", "F4", "A1"),
 )
 def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: conditional CASE-sums split by order priority
@@ -294,7 +289,6 @@ def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier s JOIN revenue r ON s.s_suppkey = r.l_suppkey
     WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
     """,
-    tags=("tpch", "A1", "scalar-subquery"),
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape (top supplier by quarterly revenue): the MAX
@@ -334,7 +328,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     GROUP BY p.p_brand, p.p_type, p.p_size
     """,
-    tags=("tpch", "A2", "not-in"),
 )
 def q16_parts_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct-supplier counts per (brand,type,size)
@@ -378,7 +371,6 @@ def q16_parts_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN pa ON pa.l_partkey = l.l_partkey
     WHERE p.p_brand = 'Brand#3' AND l.l_quantity < 0.2 * pa.avg_qty
     """,
-    tags=("tpch", "correlated-avg"),
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape (small-quantity orders): the correlated per-part
@@ -430,7 +422,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE p.p_name LIKE 'small%' AND sh.qty > 40
     )
     """,
-    tags=("tpch", "J4", "semi"),
 )
 def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape (suppliers with excess stock of promo parts): IN
@@ -490,7 +481,6 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY s.s_name
     """,
-    tags=("tpch", "exists", "anti"),
 )
 def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (sole late supplier on multi-supplier orders).

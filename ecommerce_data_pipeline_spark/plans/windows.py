@@ -33,7 +33,6 @@ from ecommerce_data_pipeline_spark.sources.readers import load_table
       FROM part
     ) WHERE rnk <= 3
     """,
-    tags=("window", "rank"),
 )
 def window_rank_in_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 parts by price within each brand (ranking window; partkey
@@ -62,7 +61,6 @@ def window_rank_in_group(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(ntile(4) OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS INT) AS quartile
     FROM orders
     """,
-    tags=("window", "rank"),
 )
 def window_dense_rank_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dense_rank + ntile over per-customer order values."""
@@ -88,7 +86,6 @@ def window_dense_rank_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
            ) AS DOUBLE) AS running_spend
     FROM orders
     """,
-    tags=("window", "frame"),
 )
 def window_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running per-customer spend (aggregate-over-frame). Decimal
@@ -116,7 +113,6 @@ def window_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
            lead(o_orderpriority) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS next_priority
     FROM orders
     """,
-    tags=("window", "analytic"),
 )
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead purchase sequencing: days between consecutive orders and
@@ -145,7 +141,6 @@ def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
     """,
-    tags=("window", "frame"),
 )
 def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-row moving average of order value per customer — exact-decimal
@@ -178,7 +173,6 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
     """,
-    tags=("window", "analytic"),
 )
 def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first/last order priority per customer over the full history."""
@@ -214,7 +208,6 @@ def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY user_id ORDER BY sec
                  RANGE BETWEEN 600 PRECEDING AND CURRENT ROW)
     """,
-    tags=("window", "frame", "events"),
 )
 def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user rolling 10-minute event count/value via a RANGE frame on

@@ -7,13 +7,14 @@ Reference parity:
   ``.explain``).
 - S5 CSV source (the Glue job's ``--s3_key`` input,
   ``transactions_mock_data.py:112-118``) → ``read_transactions_csv`` with
-  an explicit schema: no inference pass, deterministic types at any scale.
+  the declared ``TRANSACTIONS_RAW`` schema: no inference pass,
+  deterministic types at any scale.
+- Warehouse tables that may not exist yet → ``read_parquet_or_none``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 from ecommerce_data_pipeline_spark.schemas import TRANSACTIONS_RAW
 
@@ -57,21 +58,33 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def read_transactions_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType = TRANSACTIONS_RAW,
-) -> DataFrame:
+def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read a Parquet table, or None if it was never created.
+
+    ONLY path-resolution failures mean "does not exist" — a broader
+    except would let a transient filesystem error or one corrupt footer
+    masquerade as an empty table: a warehouse first-load would OVERWRITE
+    every accumulated row, and a streaming store would band a batch
+    against nothing, dropping its cross-batch pairs for good."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        return None
+
+
+def read_transactions_csv(spark: SparkSession, path: str) -> DataFrame:
     """Read the reference's CSV landing zone (S5).
 
     The path may be a single file or the root of the Hive-partitioned layout
-    ``year=/month=/day=/hour=/min=`` (``transactions_mock_data.py:85-91``);
-    Spark discovers the partition columns and prunes on any filter over
-    them (time-range queries never touch out-of-range files).
+    ``year=/month=/day=/hour=`` (``write_partitioned_csv``; the reference's
+    ``transactions_mock_data.py:85-91`` adds ``min=``); Spark discovers the
+    partition columns and prunes on any filter over them (time-range
+    queries never touch out-of-range files).
     """
     return (
         spark.read.option("header", True)
-        .schema(schema)
+        .schema(TRANSACTIONS_RAW)
         .csv(path)
     )
-

@@ -379,22 +379,16 @@ def neardup_store_increment(
     crash-replayed batch replaces its own output; the replay guards
     are below. The caller pins ``batch`` (it is read by the banding,
     the verify and the docs sink)."""
-    from pyspark.errors import AnalysisException
-
     from ecommerce_data_pipeline_spark.operators.similarity import (
         incremental_neardup,
         signature_store,
     )
+    from ecommerce_data_pipeline_spark.sources.readers import read_parquet_or_none
 
     spark = batch.sparkSession
-    try:
-        base_docs = spark.read.parquet(docs_path)
-        base_sigs = spark.read.parquet(sigs_path)
-    except AnalysisException:  # first batch: store paths not created yet.
-        # ONLY path-resolution errors mean "empty store" — a broader
-        # except would swallow transient storage failures and silently
-        # band this batch against nothing, permanently dropping its
-        # cross-batch pairs (the checkpoint never retries a "success").
+    base_docs = read_parquet_or_none(spark, docs_path)
+    base_sigs = None if base_docs is None else read_parquet_or_none(spark, sigs_path)
+    if base_sigs is None:  # first batch: store paths not created yet
         base_docs = batch.limit(0)
         base_sigs = signature_store(batch.limit(0))
     else:

@@ -137,18 +137,6 @@ def test_sampling_seed_property(spark, seed):
     assert ids <= set(range(500))
 
 
-def test_with_time_partitions_rejects_unknown_granularity(spark):
-    import pytest as _pytest
-
-    from ecommerce_data_pipeline_spark.sources.writers import (
-        with_time_partitions,
-    )
-
-    df = spark.sql("SELECT TIMESTAMP '2024-01-01 10:00:00' AS ts")
-    with _pytest.raises(ValueError, match="granularity"):
-        with_time_partitions(df, "ts", granularity="minute")
-
-
 def test_ingest_orphans_surfaced_and_optin_fact_dedup(spark, wh_dir):
     """Facts whose FK has no dimension row must be COUNTED
     (facts_orphaned), not silently dropped; and dedup_key makes a

@@ -83,20 +83,23 @@ def test_range_join(spark):
 
 
 def test_partitioned_sinks_roundtrip(spark):
-    """S4: the reference's year=/month=/... landing layout, written
-    distributed and pruned on read."""
-    orders = load_table(spark, SF_SMOKE, "orders").limit(500)
+    """S4: the year=/month=/day=/hour= landing layout, written
+    distributed and pruned on read. One quarter of orders keeps the
+    write to a few dozen day directories."""
+    orders = load_table(spark, SF_SMOKE, "orders").filter(
+        F.col("o_orderdate").between("1995-01-01", "1995-03-31")
+    )
     d = tempfile.mkdtemp(prefix="sink_")
     try:
-        names = write_partitioned_parquet(orders, "o_orderdate", f"{d}/pq", "month")
-        assert names == ["year", "month"]
+        names = write_partitioned_parquet(orders, "o_orderdate", f"{d}/pq")
+        assert names == ["year", "month", "day", "hour"]
         back = spark.read.parquet(f"{d}/pq")
-        assert back.count() == 500
+        assert back.count() == orders.count()
         # partition pruning: filter on the partition column
         pruned = back.filter((F.col("year") == 1995) & (F.col("month") == 3))
-        assert pruned.count() == orders.filter(
-            (F.year("o_orderdate") == 1995) & (F.month("o_orderdate") == 3)
-        ).count()
+        n_march = orders.filter(F.month("o_orderdate") == 3).count()
+        assert n_march > 0
+        assert pruned.count() == n_march
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -120,22 +123,17 @@ def test_csv_landing_roundtrip(spark):
         "transaction_id string, customer_id string, product_id string, "
         "quantity int, price double, ts timestamp, payment_type string, status string",
     ).withColumn("transaction_date", format_reference_ts("ts"))
-    # land the 8 reference columns in their CSV order (+ ts for
-    # partition derivation; CSV reads are positional under an explicit
-    # schema, so the read schema mirrors the landed order)
-    landed_order = df.select(
-        "transaction_id", "customer_id", "product_id", "quantity", "price",
-        "transaction_date", "payment_type", "status", "ts",
-    )
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    read_schema = StructType(
-        list(TRANSACTIONS_RAW.fields) + [StructField("ts", StringType(), True)]
-    )
+    # land the 8 reference columns in their CSV order; the hour
+    # partitions derive from the landed non-ISO string itself
+    landed_order = df.select(*TRANSACTIONS_RAW.fieldNames())
     d = tempfile.mkdtemp(prefix="csvzone_")
     try:
-        write_partitioned_csv(landed_order, "ts", f"{d}/txn", "day")
-        back = read_transactions_csv(spark, f"{d}/txn", read_schema)
+        write_partitioned_csv(
+            landed_order, parse_reference_ts("transaction_date"), f"{d}/txn"
+        )
+        back = read_transactions_csv(spark, f"{d}/txn")
+        assert back.columns == TRANSACTIONS_RAW.fieldNames() + ["year", "month", "day", "hour"]
+        assert {r["hour"] for r in back.collect()} == {12, 13}
         got = back.withColumn("parsed", parse_reference_ts("transaction_date"))
         out = {r["transaction_id"]: r["parsed"] for r in got.collect()}
         assert out["TXN202401010000000001"] == datetime.datetime(2024, 1, 1, 12, 30, 5)

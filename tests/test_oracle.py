@@ -25,21 +25,11 @@ ORACLE_QUERIES = sorted(name for name, q in REGISTRY.items() if q.oracle)
 ROWS_ONLY_QUERIES = sorted(name for name, q in REGISTRY.items() if not q.oracle)
 
 
-def _assert_plan_invariants(name, q, df):
-    """tests/plan_invariants.py on the plan of the DataFrame about to run.
-    'eager'-tagged certificate plans are skipped: their plan fn RUNS the
-    full audit (streaming drains, exceptAll set-diffs) before returning
-    a constants row, and that 1-row relation has no plan shape worth
-    checking."""
-    if "eager" not in q.tags:
-        assert plan_violations(name, executed_plan(df)) == []
-
-
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_query_matches_oracle(spark, oracle_con, name):
     q = REGISTRY[name]
     df = q.fn(spark, SF_SMOKE)
-    _assert_plan_invariants(name, q, df)
+    assert plan_violations(name, executed_plan(df)) == []
     compare(df, oracle_con, q.oracle)
 
 
@@ -47,7 +37,7 @@ def test_query_matches_oracle(spark, oracle_con, name):
 def test_rows_only_query_runs(spark, name):
     q = REGISTRY[name]
     df = q.fn(spark, SF_SMOKE)
-    _assert_plan_invariants(name, q, df)
+    assert plan_violations(name, executed_plan(df)) == []
     assert df.count() >= 0  # materializes without error; driver checks same
 
 

@@ -234,19 +234,6 @@ def test_page_trend_registered_dense_grid(spark):
 
 
 # ---------------------------------------------------------------------------
-# slate emission pin (supersedes test_round12's --through 11 pin: the
-# r13 arrivals lead every emission by design, so each round re-pins)
-
-import sys
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-# (the r13 slate-emission pin moved to tests/test_round14.py with the
-# r14 slate — each round's test supersedes the last, the r12->r13
-# precedent)
-
-
-# ---------------------------------------------------------------------------
 # Kendall's W (r13 batch 2): hand-pinned examples through the
 # production helper, plus registered-query invariants.
 

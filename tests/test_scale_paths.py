@@ -127,17 +127,12 @@ def test_dynamic_partition_pruning(spark):
     directories at runtime — the partition-pruning story of the
     reference's time-partitioned landing zone, upgraded from static to
     dynamic (SURVEY.md §4)."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    from ecommerce_data_pipeline_spark.sources.writers import (
-        write_partitioned_parquet,
-    )
-
-    d = _tempfile.mkdtemp(prefix="dpp_")
+    d = tempfile.mkdtemp(prefix="dpp_")
     try:
         orders = load_table(spark, SF_SMOKE, "orders")
-        write_partitioned_parquet(orders, "o_orderdate", f"{d}/orders", "year")
+        orders.withColumn("year", F.year("o_orderdate")).write.partitionBy(
+            "year"
+        ).parquet(f"{d}/orders")
         fact = spark.read.parquet(f"{d}/orders")
         # dim: one row per year, filtered to a single year
         years = fact.select("year").distinct().filter(F.col("year") == 1997)
@@ -147,7 +142,7 @@ def test_dynamic_partition_pruning(spark):
         expected = orders.filter(F.year("o_orderdate") == 1997).count()
         assert joined.count() == expected
     finally:
-        _shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_topk_per_group_plans_window_group_limit(spark):

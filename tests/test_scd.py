@@ -118,36 +118,3 @@ def test_cdc_compact_properties_random_logs(spark):
         # idempotence
         again = cdc_compact(snap, "k", ["seq"]).collect()
         assert sorted(map(tuple, again)) == sorted(map(tuple, rows))
-
-
-def test_scd2_merge_compare_cols_subset_carries_all_columns(spark):
-    """compare_cols narrows change DETECTION only — non-compared
-    attributes must still be carried into the new versions (this
-    previously dropped them and crashed the unionByName)."""
-    import datetime as dt
-
-    from ecommerce_data_pipeline_spark.operators.scd import scd2_init, scd2_merge
-
-    t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
-    base = spark.createDataFrame(
-        [(1, "Electronics", 10.0), (2, "Toys", 5.0)],
-        "product_id long, category string, price double",
-    )
-    hist = scd2_init(base, t0)
-    updates = spark.createDataFrame(
-        [(1, "Electronics-renamed", 12.0), (2, "Toys", 5.0)],
-        "product_id long, category string, price double",
-    )
-    out = scd2_merge(hist, updates, "product_id", t1, compare_cols=["price"])
-    rows = {(r["product_id"], r["is_current"]): r for r in out.collect()}
-    # product 1: price changed -> closed old + new current carrying the
-    # UPDATED category column (it rides along even though un-compared)
-    assert rows[(1, True)]["price"] == 12.0
-    assert rows[(1, True)]["category"] == "Electronics-renamed"
-    assert rows[(1, False)]["price"] == 10.0
-    # product 2: price unchanged -> untouched, category compare skipped
-    assert rows[(2, True)]["price"] == 5.0
-    import pytest
-
-    with pytest.raises(ValueError, match="compare_cols"):
-        scd2_merge(hist, updates, "product_id", t1, compare_cols=["nope"])

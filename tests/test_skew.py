@@ -71,82 +71,6 @@ def test_aqe_splits_skewed_join_partition(spark):
                 spark.conf.set(k, v)
 
 
-def test_flagship_skewed_orderkey_probe(spark):
-    """VERDICT r5 task #7: the flagship's one non-bucketed fact shuffle
-    under a deliberately hot order key (~10% of all rows on one key).
-
-    The default single-exchange plan (repartition serving dedup + join)
-    is structurally UNSPLITTABLE by AQE — the repartition is
-    user-specified and the join's fact side arrives co-partitioned from
-    the aggregate, so OptimizeSkewedJoin never fires and the hot key is
-    one straggler task. ``skewed_fact=True`` drops the shared exchange:
-    the dedup groupBy spreads the hot key across its linenumbers
-    (composite-key hashing) and the orders join gets an
-    ENSURE_REQUIREMENTS shuffle that AQE splits at runtime. The probe
-    pins all three facts: identical results, ``skew=true`` in the
-    mitigated plan, and no skew handling in the default plan — the
-    motivation for the flag, documented in BASELINE.md."""
-    from ecommerce_data_pipeline_spark.pipeline import flagship_revenue_over
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    orders = load_table(spark, SF_SMOKE, "orders")
-    part = load_table(spark, SF_SMOKE, "part")
-    customer = load_table(spark, SF_SMOKE, "customer")
-    hot_key = orders.agg(F.min("o_orderkey")).first()[0]
-
-    # 16x corpus; ~10% of rows remapped onto the hot order key with
-    # collision-unlikely synthetic linenumbers (dedup must not collapse
-    # the hot key's rows — the point is a genuinely fat partition)
-    reps = spark.range(16).withColumnRenamed("id", "rep")
-    big = li.crossJoin(reps)
-    is_hot = F.pmod(F.xxhash64("l_orderkey", "l_linenumber", "rep"), F.lit(10)) == 0
-    skewed = big.select(
-        F.when(is_hot, F.lit(hot_key)).otherwise(F.col("l_orderkey")).alias("l_orderkey"),
-        F.pmod(
-            F.xxhash64("l_orderkey", "l_linenumber", "rep"), F.lit(1 << 30)
-        ).cast("int").alias("l_linenumber"),
-        *[c for c in li.columns if c not in ("l_orderkey", "l_linenumber")],
-    )
-
-    confs = {
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
-        # at sf0.001 orders would broadcast and hide the fact shuffle this
-        # probe is about; at 100 TB orders is fact-sized and cannot
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-    }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-
-        def run(skewed_fact: bool):
-            df = flagship_revenue_over(
-                skewed, orders, part, customer, skewed_fact=skewed_fact
-            )
-            rows = sorted(map(tuple, df.collect()))
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            return rows, plan
-
-        rows_default, plan_default = run(False)
-        rows_mitigated, plan_mitigated = run(True)
-
-        assert rows_mitigated == rows_default  # pure plan-shape flag
-        assert "isFinalPlan=true" in plan_mitigated
-        assert "skew=true" in plan_mitigated  # AQE split the hot join read
-        # the single-exchange default CANNOT be split — the documented
-        # motivation for the skewed_fact escape hatch
-        assert "skew=true" not in plan_default
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def test_gdpr_cascade_skewed_lineitem_probe(spark, tmp_path):
     """VERDICT r8 task #4: the erasure cascade under a celebrity
     requester — one REQUESTED order key carrying ~10% of a 16x lineitem

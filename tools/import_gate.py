@@ -15,7 +15,9 @@ with no Spark session, this gate
    missing-column references fail without executing anything;
 3. names every top-level engine def or constant that no non-test root
    reaches (``check_reachability``): engine code must have a caller
-   outside ``tests/``.
+   outside ``tests/``;
+4. names every imported name its module never reads
+   (``check_unused_imports``).
 
 A helper import dropped inside a query function only fails when that
 function runs: ``tests/test_oracle.py`` builds and executes every
@@ -48,6 +50,8 @@ ROOT_PATHS = ("bench.py", "__spark_entry__.py", "perfbench", "tools")
 # module docstring): kept as the format's reader and writer although
 # only tests land or read CSV.
 REACH_EXEMPT = ("read_transactions_csv", "write_partitioned_csv")
+# Code whose imports must all be read (perfbench/ keeps its own idiom).
+IMPORT_PATHS = (ENGINE, "tests", "tools", "bench.py", "__spark_entry__.py")
 
 
 def check_oracles() -> int:
@@ -154,9 +158,37 @@ def check_reachability() -> int:
     return failures
 
 
+def check_unused_imports() -> int:
+    """Name every imported name that no Name in its module reads, at any
+    scope. ``__init__.py`` files are skipped: their imports (and
+    ``__all__``) are the package's re-exports. Returns #failures."""
+    failures = 0
+    for path in IMPORT_PATHS:
+        for f in _py_files(os.path.join(REPO, path)):
+            if os.path.basename(f) == "__init__.py":
+                continue
+            tree = ast.parse(open(f).read())
+            read = {
+                n.id for n in ast.walk(tree)
+                if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+            }
+            for n in ast.walk(tree):
+                if not isinstance(n, (ast.Import, ast.ImportFrom)) or (
+                    isinstance(n, ast.ImportFrom) and n.module == "__future__"
+                ):
+                    continue
+                for a in n.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    if bound not in read:
+                        failures += 1
+                        where = os.path.relpath(f, REPO)
+                        print(f"GATE FAIL unused import [{where}:{n.lineno}::{bound}]", flush=True)
+    return failures
+
+
 def main() -> int:
     t0 = time.perf_counter()
-    failures = check_reachability() + check_oracles()
+    failures = check_reachability() + check_unused_imports() + check_oracles()
     wall = time.perf_counter() - t0
     status = "GREEN" if failures == 0 else f"{failures} FAILURES"
     print(f"import gate: {status} ({wall:.1f}s)", flush=True)
