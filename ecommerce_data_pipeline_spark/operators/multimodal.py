@@ -109,7 +109,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
 
 
-def frame_sample(media: DataFrame, frame_bytes: int = 32) -> DataFrame:
+def frame_sample(media: DataFrame, frame_bytes: int = 16) -> DataFrame:
     """'Video' frame sampling as pure Column ops: slice the payload into
     4 evenly-spaced fixed-size binary chunks (array<binary>). The real
     implementation would seek keyframes inside the codec stub."""

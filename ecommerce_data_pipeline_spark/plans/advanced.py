@@ -522,9 +522,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    frames = frame_sample(
-        attach_binary_payload(docs), frame_bytes=16
-    )
+    frames = frame_sample(attach_binary_payload(docs))
     return frames.select(
         "media_id",
         "media_type",

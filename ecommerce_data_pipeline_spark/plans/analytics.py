@@ -9,12 +9,11 @@ makes the engine's aggregation tier restartable/streamable at 100 TB
 (state + delta → same result as full recompute, verified by the oracle
 being the plain full-table aggregation).
 
-Timestamp parity: load_table normalizes events.ts to a microsecond
-TIMESTAMP for any stored layout (epoch-nanos int64 in older testdata,
-TIMESTAMP_NTZ now — see sources/readers.py); oracle-side CASTs of ts to
-TIMESTAMP are no-ops on the current layout and a matching truncation on
-the old one, so both engines always order on identical microsecond
-instants.
+Timestamp parity: load_table reads events.ts as its declared
+TIMESTAMP_NTZ (the stored microsecond wall clock) and casts it to the
+session TIMESTAMP — see sources/readers.py; oracle-side CASTs of ts to
+TIMESTAMP are no-ops on that layout, so both engines order on identical
+microsecond instants.
 """
 
 from __future__ import annotations

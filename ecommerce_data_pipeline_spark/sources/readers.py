@@ -2,9 +2,10 @@
 
 Reference parity:
 - S2/S3 table scans (``transactions_mock_data.py:61-62``) → ``load_table``
-  + ``.select``; Catalyst does column pruning, so a projected scan reads
-  only the requested Parquet columns (visible as ``ReadSchema`` in
-  ``.explain``).
+  + ``.select``, read with the declared ``TABLE_SCHEMAS`` (building a
+  plan submits no inference job). Catalyst does column pruning, so a
+  projected scan reads only the requested Parquet columns (visible as
+  ``ReadSchema`` in ``.explain``).
 - S5 CSV source (the Glue job's ``--s3_key`` input,
   ``transactions_mock_data.py:112-118``) → ``read_transactions_csv`` with
   the declared ``TRANSACTIONS_RAW`` schema: no inference pass,
@@ -16,45 +17,27 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ecommerce_data_pipeline_spark.schemas import TRANSACTIONS_RAW
+from ecommerce_data_pipeline_spark.schemas import TABLE_SCHEMAS, TRANSACTIONS_RAW
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one testdata table (S2). Projection/pushdown is left to Catalyst.
+    """Scan one star-schema table (S2) with its declared schema
+    (``schemas.TABLE_SCHEMAS``): no schema inference, so no Spark job.
+    Projection/pushdown is left to Catalyst. A column stored under
+    another physical type fails at scan time; a column missing from the
+    file reads as NULL (``tests/test_operators.py`` guards the fixtures).
 
-    Timestamp normalization: the generated data has stored timestamps as
-    int64 epoch-nanos (older rounds) and as Parquet TIMESTAMP(MICROS)
-    without UTC adjustment (current), which Spark ≥3.4 surfaces as
-    TIMESTAMP_NTZ when `inferTimestampNTZ` is on. Every engine plan is
-    written against plain TIMESTAMP, so both shapes are normalized here —
-    the single chokepoint for testdata scans — rather than in each query.
-    The NTZ→LTZ cast preserves the wall clock in the session timezone, so
-    collected values always equal the stored (and DuckDB-oracle) values.
+    The declared TIMESTAMP_NTZ columns are cast to the session TIMESTAMP
+    every plan is written against. The cast keeps the stored wall clock
+    in any session time zone, so collected values equal the DuckDB
+    oracle's; a TIMESTAMP read would shift them by the session offset.
     """
     from pyspark.sql import functions as F
 
-    if name == "events":
-        # Scoped legacy-conf read: set nanosAsLong only around DataFrame
-        # resolution, then restore, so other parquet reads in the same
-        # session keep failing loudly on unexpected nanos timestamps.
-        # (Safe with lazy execution: the scan's schema is resolved — and
-        # the conf captured into the plan — at read time.)
-        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        finally:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-        if dict(df.dtypes)["ts"] == "bigint":  # legacy epoch-nanos layout
-            # integer `div`, not float division: no precision loss
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
     if ntz_cols:
-        df = df.withColumns(
-            {c: F.col(c).cast("timestamp") for c in ntz_cols}
-        )
+        df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
     return df
 
 

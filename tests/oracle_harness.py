@@ -15,14 +15,12 @@ from typing import Any
 
 import duckdb
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from ecommerce_data_pipeline_spark.schemas import TABLE_SCHEMAS
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_SCHEMAS:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )

@@ -10,6 +10,7 @@ import shutil
 import tempfile
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ecommerce_data_pipeline_spark.operators.dedup import (
     dedup_by_key,
@@ -20,7 +21,7 @@ from ecommerce_data_pipeline_spark.operators.sampling import (
     random_fk_assignment,
     sample_exact_k,
 )
-from ecommerce_data_pipeline_spark.schemas import TRANSACTIONS_RAW
+from ecommerce_data_pipeline_spark.schemas import TABLE_SCHEMAS, TRANSACTIONS_RAW
 from ecommerce_data_pipeline_spark.sources.readers import (
     load_table,
     read_transactions_csv,
@@ -29,7 +30,7 @@ from ecommerce_data_pipeline_spark.sources.writers import (
     write_partitioned_csv,
     write_partitioned_parquet,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def test_dedup_by_key_deterministic(spark):
@@ -125,14 +126,15 @@ def test_csv_landing_roundtrip(spark):
     ).withColumn("transaction_date", format_reference_ts("ts"))
     # land the 8 reference columns in their CSV order; the hour
     # partitions derive from the landed non-ISO string itself
-    landed_order = df.select(*TRANSACTIONS_RAW.fieldNames())
+    raw_cols = StructType.fromDDL(TRANSACTIONS_RAW).fieldNames()
+    landed_order = df.select(*raw_cols)
     d = tempfile.mkdtemp(prefix="csvzone_")
     try:
         write_partitioned_csv(
             landed_order, parse_reference_ts("transaction_date"), f"{d}/txn"
         )
         back = read_transactions_csv(spark, f"{d}/txn")
-        assert back.columns == TRANSACTIONS_RAW.fieldNames() + ["year", "month", "day", "hour"]
+        assert back.columns == raw_cols + ["year", "month", "day", "hour"]
         assert {r["hour"] for r in back.collect()} == {12, 13}
         got = back.withColumn("parsed", parse_reference_ts("transaction_date"))
         out = {r["transaction_id"]: r["parsed"] for r in got.collect()}
@@ -140,6 +142,53 @@ def test_csv_landing_roundtrip(spark):
         assert len(out) == 2
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_declared_table_layout_matches_every_fixture(spark, tmp_path):
+    """``TABLE_SCHEMAS`` is the layout every fixture directory stores:
+    each declared schema equals the one Parquet infers from the table's
+    footers, at all three testdata sizes and in a perfbench fixture. A
+    fixture that loses or retypes a column fails here instead of reading
+    back as NULLs through the declared read."""
+    import os
+
+    from perfbench.fixture import write_fixture
+
+    fixture = str(tmp_path / "perfbench")
+    write_fixture(fixture, seed=1, sf=0.001)
+    sf01 = os.path.join(os.path.dirname(SF_SMOKE), "sf0.1")
+    for sf_dir in (SF_SMOKE, SF_CORRECT, sf01, fixture):
+        for name, ddl in TABLE_SCHEMAS.items():
+            inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+            assert StructType.fromDDL(ddl) == inferred, (sf_dir, name)
+
+
+def test_load_table_keeps_wall_clock_in_any_session_time_zone(spark):
+    """The stored timestamps are wall clocks (TIMESTAMP without UTC
+    adjustment). A New York session that infers no TIMESTAMP_NTZ would
+    take them from the footers as UTC instants and show them 5 h early;
+    the declared NTZ read shows DuckDB's values."""
+    from tests.oracle_harness import duckdb_connection
+
+    ny = spark.newSession()
+    ny.conf.set("spark.sql.session.timeZone", "America/New_York")
+    ny.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    got = [
+        r[0]
+        for r in load_table(ny, SF_SMOKE, "events")
+        .orderBy("event_id")
+        .select(F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS"))
+        .limit(5)
+        .collect()
+    ]
+    con = duckdb_connection(SF_SMOKE)
+    want = [
+        ts.strftime("%Y-%m-%d %H:%M:%S.%f")
+        for (ts,) in con.sql("SELECT ts FROM events ORDER BY event_id LIMIT 5")
+        .fetchall()
+    ]
+    con.close()
+    assert got == want
 
 
 def test_anti_join_null_key_semantics(spark):

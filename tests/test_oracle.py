@@ -11,7 +11,12 @@ import pytest
 from ecommerce_data_pipeline_spark.plans import REGISTRY
 from tests.conftest import SF_SMOKE
 from tests.oracle_harness import compare, duckdb_connection
-from tests.plan_invariants import SCAN_RE, executed_plan, plan_violations
+from tests.plan_invariants import (
+    _BUILD_JOBS_OK,
+    SCAN_RE,
+    executed_plan,
+    plan_violations,
+)
 
 
 @pytest.fixture(scope="module")
@@ -25,18 +30,36 @@ ORACLE_QUERIES = sorted(name for name, q in REGISTRY.items() if q.oracle)
 ROWS_ONLY_QUERIES = sorted(name for name, q in REGISTRY.items() if not q.oracle)
 
 
+def _build(spark, name):
+    """Build ``name``'s plan under its own job group (as bench.py's
+    run_query does) and check the Spark jobs the build submitted: none
+    unless the query is declared in ``_BUILD_JOBS_OK``, some if it is."""
+    sc = spark.sparkContext
+    group = f"build:{name}"
+    sc.setJobGroup(group, name)
+    try:
+        df = REGISTRY[name].fn(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the store has seen every job
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    if name in _BUILD_JOBS_OK:
+        assert jobs > 0, f"{name} is in _BUILD_JOBS_OK but its build ran no job"
+    else:
+        assert jobs == 0, f"{name}'s build ran {jobs} Spark jobs undeclared"
+    return df
+
+
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_query_matches_oracle(spark, oracle_con, name):
-    q = REGISTRY[name]
-    df = q.fn(spark, SF_SMOKE)
+    df = _build(spark, name)
     assert plan_violations(name, executed_plan(df)) == []
-    compare(df, oracle_con, q.oracle)
+    compare(df, oracle_con, REGISTRY[name].oracle)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
 def test_rows_only_query_runs(spark, name):
-    q = REGISTRY[name]
-    df = q.fn(spark, SF_SMOKE)
+    df = _build(spark, name)
     assert plan_violations(name, executed_plan(df)) == []
     assert df.count() >= 0  # materializes without error; driver checks same
 

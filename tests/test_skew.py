@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.operators.skew import salted_sum
+from ecommerce_data_pipeline_spark.schemas import TABLE_SCHEMAS
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 from tests.conftest import SF_SMOKE
 
@@ -118,8 +119,7 @@ def test_gdpr_cascade_skewed_lineitem_probe(spark, tmp_path):
     d = str(tmp_path / "sfskew")
     os.makedirs(d)
     skewed.write.parquet(f"{d}/lineitem.parquet")
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "events", "documents", "embeddings"):
+    for t in TABLE_SCHEMAS.keys() - {"lineitem"}:
         os.symlink(f"{SF_SMOKE}/{t}.parquet", f"{d}/{t}.parquet")
 
     confs = {
@@ -219,8 +219,7 @@ def test_shapley_celebrity_user_probe(spark, tmp_path):
     d = str(tmp_path / "sfskew_events")
     os.makedirs(d)
     _land_single_parquet(skewed, f"{d}/events.parquet")
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "documents", "embeddings"):
+    for t in TABLE_SCHEMAS.keys() - {"events"}:
         os.symlink(f"{SF_SMOKE}/{t}.parquet", f"{d}/{t}.parquet")
     q = REGISTRY["attribution_shapley_values"]
     # the celebrity mass really flowed: ~10% of 16x rows on one user
@@ -265,8 +264,7 @@ def test_dp_bounding_celebrity_customer_probe(spark, tmp_path):
     d = str(tmp_path / "sfskew_orders")
     os.makedirs(d)
     _land_single_parquet(skewed, f"{d}/orders.parquet")
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "lineitem", "events", "documents", "embeddings"):
+    for t in TABLE_SCHEMAS.keys() - {"orders"}:
         os.symlink(f"{SF_SMOKE}/{t}.parquet", f"{d}/{t}.parquet")
     q = REGISTRY["dp_contribution_bounding"]
     compare(q.fn(spark, d), duckdb_connection(d), q.oracle)

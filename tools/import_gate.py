@@ -39,10 +39,6 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
 ENGINE = "ecommerce_data_pipeline_spark"
 # Non-engine code whose every name reference is a root.
 ROOT_PATHS = ("bench.py", "__spark_entry__.py", "perfbench", "tools")
@@ -56,19 +52,13 @@ IMPORT_PATHS = (ENGINE, "tests", "tools", "bench.py", "__spark_entry__.py")
 
 def check_oracles() -> int:
     """DuckDB EXPLAIN (bind-only) every oracle string; return #failures."""
-    import duckdb
-
     sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod  # first: the cold import under test
 
     from tests.conftest import SF_SMOKE
+    from tests.oracle_harness import duckdb_connection
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_SMOKE}/{t}.parquet')"
-        )
+    con = duckdb_connection(SF_SMOKE)
     failures = 0
     for name, sql in entrymod.oracle_sql().items():
         try:
