@@ -1601,7 +1601,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # which source deviates most. Its incremental twin is
 # ``streaming/pipeline.py::mixture_monitor_stream`` (same integer
 # arithmetic folded one batch at a time; stream == batch pinned in
-# tests/test_round12.py).
+# tests/test_streaming.py).
 
 # Arrival-batch width in doc_ids. Deliberately NOT a multiple of the
 # fixture's 20-source round-robin period, so interior batches carry

@@ -439,7 +439,7 @@ def ansari_bradley_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the closed form g(a, c) = 3ac^2 - 6ca(a+1) + 2a(a+1)(2a+1) with
 # c = r2 - 2*prefix (r2 = doubled combined midrank) — EXACT integers
 # end to end (verified against direct midrank enumeration and a
-# Fraction replay in tests/test_round13.py); the statistic is emitted
+# Fraction replay in tests/test_statistics.py); the statistic is emitted
 # as exact u12 plus half-up micros, zero floats anywhere.
 
 

@@ -213,7 +213,8 @@ def group_k_anonymity_generalize(
     dataset has ≥ k unresolvable rows (in a real release those rows
     would be withheld; here they carry the all-'*' QI plus the audit
     level). class_size is the true released-class size, and the pytest
-    pins ≥ k on the released Counter (tests/test_round8.py).
+    pins ≥ k on the released Counter
+    (tests/test_sampling_sketches_privacy.py).
 
     Scale shape: the ENTIRE promotion ladder runs on the class-count
     relation (≤ nations × segments × years ≈ 10³ rows — metadata

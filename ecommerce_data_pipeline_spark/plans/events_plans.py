@@ -627,7 +627,7 @@ def watermark_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     window_end ≤ wm_late. Emits per (window, event_type) the
     accepted/dropped
     split and the dropped value mass — the "what did my SLA lose"
-    table; the streaming twin in tests/test_round9.py pins this replay
+    table; tests/test_streaming.py pins this replay
     row-for-row against a real withWatermark query drained
     file-per-trigger.
 

@@ -1632,7 +1632,7 @@ def cochran_armitage_priority_trend(
 # m*k*(k+1)^2/2 and the tie-conditional 12*Var(L2) = k*(k+1)*
 # sum_cells (R2 - (k+1))^2 are all exact integers; with no ties this
 # reduces to the textbook Var(L) = m*k^2*(k+1)^2*(k-1)/144 (verified
-# in tests/test_round13.py). Only the final z folds to a double,
+# in tests/test_statistics.py). Only the final z folds to a double,
 # rounded at 6dp from identical integer inputs on both engines.
 
 

@@ -1127,7 +1127,8 @@ def keyness_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (B - prefix_cap) * w_j > R*n_j * (suffix_w), then fold the
     # uncapped pool's exact rational share. Validated against a
     # brute-force exact waterfill on 5000 random instances
-    # (tests/test_round13.py drives the same check via hypothesis).
+    # (tests/test_text_properties.py drives the same check on seeded
+    # random instances).
     oracle=f"""
     WITH src AS (
       SELECT lang, CAST(SUM(len({_SQL_TOKENS})) AS BIGINT) AS n

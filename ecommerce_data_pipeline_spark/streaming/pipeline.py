@@ -454,7 +454,7 @@ def page_hinkley_stream(daily: DataFrame) -> DataFrame:
     (t, Σx, last day), the drift cumsum m with its running extrema,
     and the two gap maxima with their argmax days. Emits one cumulative
     row per trigger in update mode; the final row must equal the batch
-    query's published values (pinned in tests/test_round11.py,
+    query's published values (pinned in tests/test_streaming.py,
     including checkpoint restart).
 
     Ordering contract (the ``_fold_by_key`` frontier discipline):
@@ -608,7 +608,7 @@ def mixture_monitor_stream(
     batch_id), the cumulative doc total, and the per-source cumulative
     counts serialized as a sorted ``src:cnt`` CSV. Emits ONE row per
     folded batch in update mode; the union of emitted rows must equal
-    the batch query's relation (pinned in tests/test_round12.py,
+    the batch query's relation (pinned in tests/test_streaming.py,
     including checkpoint restart).
 
     Integer parity: shares round to micros with the SAME exact rational
@@ -770,7 +770,7 @@ def decontam_monitor_stream(hits: DataFrame) -> DataFrame:
     construction and is tolerated.
 
     The union of emitted rows must equal the batch ``(doc_id,
-    first_shard)`` relation (pinned in tests/test_round13.py, including
+    first_shard)`` relation (pinned in tests/test_streaming.py, including
     checkpoint restart); the eager registry certificate
     ``decontam_monitor_stream_certificate`` grades the full lifecycle
     as driver signal."""

@@ -1,8 +1,12 @@
 from __future__ import annotations
 
+import hashlib
+from collections import defaultdict, namedtuple
+
 import pytest
 
 from ecommerce_data_pipeline_spark.session import get_spark
+from ecommerce_data_pipeline_spark.sources.readers import load_table
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
@@ -46,3 +50,59 @@ def _clear_cache_after_each_test(request):
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+def md5_60(text: str) -> int:
+    """The portable 60-bit hash behind the plans' salted draws: the
+    first 15 hex digits of md5(text)."""
+    return int(hashlib.md5(text.encode()).hexdigest()[:15], 16)
+
+
+# Replay inputs shared by the Python replays at SF_SMOKE. Each is
+# collected once per session; tests read them and never mutate them.
+
+OrderCents = namedtuple("OrderCents", "o_orderkey o_custkey o_orderdate cents")
+
+
+@pytest.fixture(scope="session")
+def order_cents(spark) -> list[OrderCents]:
+    """Every order with its ``o_totalprice`` in integer cents.
+    ``int(round(p * 100))`` equals the plans' ``decimal(18,2) × 100``
+    cents for every ``o_totalprice`` at all three fixture sizes."""
+    return [
+        OrderCents(
+            r.o_orderkey,
+            r.o_custkey,
+            r.o_orderdate,
+            int(round(r.o_totalprice * 100)),
+        )
+        for r in load_table(spark, SF_SMOKE, "orders")
+        .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
+        .collect()
+    ]
+
+
+@pytest.fixture(scope="session")
+def daily_cents(order_cents) -> dict:
+    """Order cents summed per order day (``datetime.date`` -> int)."""
+    days = defaultdict(int)
+    for r in order_cents:
+        days[r.o_orderdate.date()] += r.cents
+    return dict(days)
+
+
+@pytest.fixture(scope="session")
+def segment_of(spark) -> dict:
+    """``c_custkey`` -> ``c_mktsegment`` for every customer."""
+    return {
+        r.c_custkey: r.c_mktsegment
+        for r in load_table(spark, SF_SMOKE, "customer")
+        .select("c_custkey", "c_mktsegment")
+        .collect()
+    }
+
+
+@pytest.fixture(scope="session")
+def custkeys(segment_of) -> list[int]:
+    """Every customer key."""
+    return list(segment_of)

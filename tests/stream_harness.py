@@ -1,14 +1,20 @@
-"""Streaming test plumbing: a memory-sink drain and the near-dedup
-foreachBatch sink shell. Neither is engine code: the engine's streaming
-jobs land through ``fold_landing`` and ``streaming/flagship.py``."""
+"""Streaming test plumbing: a memory-sink drain, the land-then-fold
+helper of the stateful monitors, and the near-dedup foreachBatch sink
+shell. None is engine code: the engine's streaming jobs land through
+``fold_landing`` and ``streaming/flagship.py``."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from ecommerce_data_pipeline_spark.streaming.pipeline import (
     _start_foreach_batch,
+    fold_landing,
+    land_chunks,
     neardup_store_increment,
 )
 
@@ -33,6 +39,26 @@ def run_available_now(
         .start()
     )
     return q, name
+
+
+def land_and_fold(
+    spark: SparkSession,
+    tmp_path,
+    op: Callable[[DataFrame], DataFrame],
+    schema: StructType,
+    chunks: list[list[tuple]],
+    ckpt: str = "ckpt",
+) -> DataFrame:
+    """Land each chunk as one file in ``tmp_path/landing`` (numbering
+    continues on a later call, so a second call is the restart) and fold
+    the landing file-per-trigger through the stateful ``op`` into
+    ``tmp_path/out`` under the checkpoint ``tmp_path/<ckpt>``; returns
+    everything the output holds."""
+    landing = str(tmp_path / "landing")
+    land_chunks(chunks, schema, landing)
+    return fold_landing(
+        spark, op, landing, schema, str(tmp_path / "out"), str(tmp_path / ckpt)
+    )
 
 
 def foreach_batch_incremental_neardup(

@@ -1,17 +1,24 @@
 """Plan-shape and property tests for plans/ml_ops.py (Stupid-Backoff LM,
-hashed linear classifier, relational Lloyd step). Value-level oracle
-parity is covered by tests/test_oracle.py; these pin the SCALE contracts
-(join strategies, no corpus-sized state) and the algorithmic invariants
-the oracle diff can't express (Lloyd SSE monotonicity, margin bounds).
+hashed linear classifier, relational Lloyd step, Huber IRLS, calibration
+error, Qini uplift, the ALS step, quantile treatment effects) and the
+nDCG ranking eval. Value-level oracle parity is covered by
+tests/test_oracle.py; these pin the SCALE contracts (join strategies,
+no corpus-sized state) and the algorithmic invariants the oracle diff
+can't express (Lloyd SSE monotonicity, margin bounds).
 """
 
 from __future__ import annotations
 
+import math
+from collections import defaultdict
+from datetime import datetime
+
+import pytest
 from pyspark.sql import functions as F
 
 from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
 from ecommerce_data_pipeline_spark.sources.readers import load_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, md5_60
 from tests.plan_invariants import executed_plan
 
 
@@ -595,17 +602,9 @@ def test_two_proportion_and_spearman_references(spark):
         assert abs(out[flag]["spearman_rho"] - rho) < 1e-5
 
 
-def test_acf_ljung_box_matches_python_reference(spark):
+def test_acf_ljung_box_matches_python_reference(spark, daily_cents):
     """ACF and cumulative Q recomputed from the collected daily series."""
-    daily = sorted(
-        (r["day"], int(round(r["cents"])))
-        for r in load_table(spark, SF_SMOKE, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                   .cast("long")).alias("cents"))
-        .collect()
-    )
-    xs = [c for _, c in daily]
+    xs = [daily_cents[d] for d in sorted(daily_cents)]
     n = len(xs)
     m = sum(xs) / n
     ssd = sum((x - m) ** 2 for x in xs)
@@ -686,8 +685,6 @@ def test_quantile_normalize_invariants_and_reference(spark):
         "doc_id", "source", "n_chars"
     ).collect()
     assert len(out) == len(docs)
-    import math
-
     pooled = sorted(d["n_chars"] for d in docs)
     n = len(pooled)
     by_src = {}
@@ -884,3 +881,304 @@ def test_huber_degenerate_zero_variance_brand_is_null_both_engines(
         o = dict(zip(cols, oracle[brand]))
         for c in r.asDict():
             assert r[c] == o[c], (brand, c, r[c], o[c])
+
+
+# ---------------------------------------------------------------------------
+# robust_regression_huber_irls
+
+
+def test_huber_irls_weights_and_slope_sanity(spark):
+    rows = REGISTRY["robust_regression_huber_irls"].fn(spark, SF_SMOKE).collect()
+    assert rows
+    for r in rows:
+        assert r["n_rows"] >= 1
+        assert 0 <= r["n_downweighted"] <= r["n_rows"]
+        assert r["sum_w_milli"] <= 1000 * r["n_rows"]
+        # the synthetic data draws quantity and price independently
+        # (corr ≈ −0.01), so the slope's SIGN is noise — pin finiteness
+        # and the location scale instead: intercepts must sit near the
+        # positive mean price (cents), far from degenerate fits
+        assert math.isfinite(r["slope_ols"]) and math.isfinite(
+            r["slope_huber"]
+        )
+        assert r["intercept_ols"] > 0 and r["intercept_huber"] > 0
+
+
+# ---------------------------------------------------------------------------
+# expected_calibration_error_eval
+
+
+def test_ece_mce_brier_bounds_and_consistency(spark):
+    r = REGISTRY["expected_calibration_error_eval"].fn(spark, SF_SMOKE).first()
+    docs = load_table(spark, SF_SMOKE, "documents")
+    # every doc with >= 1 token gets a probability row
+    assert 0 < r["n_docs"] <= docs.count()
+    assert 1 <= r["n_bins_occupied"] <= 10
+    assert 0.0 <= r["ece"] <= r["mce"] <= 1.0  # ECE is a weighted mean of
+    # per-bin gaps, MCE their max
+    assert 0.0 <= r["brier"] <= 1.0
+    # the bins query and the scalar query must agree: recompute ECE from
+    # classifier_calibration_bins' published rows
+    bins = REGISTRY["classifier_calibration_bins"].fn(spark, SF_SMOKE).collect()
+    n = sum(b["n_docs"] for b in bins)
+    ece = (
+        sum(
+            b["n_docs"] * abs(b["frac_positive"] - b["avg_confidence"])
+            for b in bins
+        )
+        / n
+    )
+    assert r["n_docs"] == n
+    assert r["ece"] == pytest.approx(ece, abs=5e-6)  # bins are 6dp-rounded
+
+
+# ---------------------------------------------------------------------------
+# ndcg_ranking_eval
+
+
+def test_ndcg_bounds_and_dcg_le_idcg(spark):
+    rows = REGISTRY["ndcg_ranking_eval"].fn(spark, SF_SMOKE).collect()
+    assert rows  # one row per segment present in both periods
+    for r in rows:
+        assert r["n_ranked"] >= 1
+        assert r["dcg_micro"] <= r["idcg_micro"]
+        assert 0.0 <= r["ndcg"] <= 1.0
+
+
+def test_ndcg_perfect_ranking_scores_one(spark):
+    """A system that ranks by the true relevance must score nDCG = 1 —
+    sanity-pins the weight-grid/ideal-DCG alignment (same grid, same
+    tiebreak family)."""
+    from ecommerce_data_pipeline_spark.plans.recommendation import (
+        _NDCG_K,
+        _REL_GAIN,
+        _W_MICRO,
+    )
+
+    rel = [3, 3, 2, 1, 1, 0, 0]
+    ranked = sorted(rel, reverse=True)[:_NDCG_K]
+    dcg = sum(_REL_GAIN[g] * _W_MICRO[i] for i, g in enumerate(ranked))
+    ideal = sum(
+        _REL_GAIN[g] * _W_MICRO[i]
+        for i, g in enumerate(sorted(rel, reverse=True)[:_NDCG_K])
+    )
+    assert dcg == ideal and ideal > 0
+
+
+# ---------------------------------------------------------------------------
+# qini_uplift_curve
+
+
+def test_qini_matches_python_replay(spark, order_cents, custkeys):
+    """Python replay of the banded-decile Qini construction, including
+    the portable md5-polynomial arm assignment: per-decile arm sizes,
+    converter counts, uplift and Qini values must match the plan."""
+    from ecommerce_data_pipeline_spark.plans.ml_ops import (
+        _QINI_BIN_CAP,
+        _QINI_BIN_CENTS,
+        _QINI_CUTOVER,
+        _QINI_SALT,
+    )
+
+    cut = datetime.fromisoformat(_QINI_CUTOVER)
+    pre = defaultdict(int)
+    post = defaultdict(int)
+    for r in order_cents:
+        if r.o_orderdate < cut:
+            pre[r.o_custkey] += r.cents
+        else:
+            post[r.o_custkey] += 1
+
+    def treat(key):
+        return 1 if md5_60(f"{_QINI_SALT}{key}") % 100 < 50 else 0
+
+    binned = defaultdict(lambda: [0, 0])  # (bin, treat) -> [n, conv]
+    for key in custkeys:
+        b = min(pre[key] // _QINI_BIN_CENTS, _QINI_BIN_CAP)
+        cell = binned[(b, treat(key))]
+        cell[0] += 1
+        cell[1] += 1 if post[key] > 0 else 0
+    n_total = sum(v[0] for v in binned.values())
+    bins_desc = sorted({b for b, _ in binned}, reverse=True)
+    decile_of, before = {}, 0
+    for b in bins_desc:
+        decile_of[b] = (10 * before) // n_total
+        before += sum(binned[(b, t)][0] for t in (0, 1) if (b, t) in binned)
+    agg = defaultdict(lambda: [0, 0, 0, 0])  # decile -> n_t,conv_t,n_c,conv_c
+    for (b, t), (n, conv) in binned.items():
+        row = agg[decile_of[b]]
+        if t == 1:
+            row[0] += n
+            row[1] += conv
+        else:
+            row[2] += n
+            row[3] += conv
+    got = {
+        r.decile: r
+        for r in REGISTRY["qini_uplift_curve"].fn(spark, SF_SMOKE).collect()
+    }
+    assert set(got) == set(agg)
+    cn_t = cconv_t = cn_c = cconv_c = 0
+    for d in sorted(agg):
+        n_t, conv_t, n_c, conv_c = agg[d]
+        cn_t += n_t
+        cconv_t += conv_t
+        cn_c += n_c
+        cconv_c += conv_c
+        r = got[d]
+        assert (r.n_treat, r.conv_treat, r.n_ctrl, r.conv_ctrl) == (
+            n_t,
+            conv_t,
+            n_c,
+            conv_c,
+        ), d
+        if n_t and n_c:
+            assert abs(r.uplift_rate_diff - (conv_t / n_t - conv_c / n_c)) < 1e-6
+        if cn_c:
+            assert (
+                abs(r.qini_value - (cconv_t * cn_c - cconv_c * cn_t) / cn_c)
+                < 1e-4
+            )
+
+
+# ---------------------------------------------------------------------------
+# als_implicit_step_certificate
+
+
+def test_als_step_matches_python_replay(spark, segment_of):
+    """Exact-Fraction replay of the rank-2 ridge solve: per-segment
+    aggregates must match, and for a sample of users the closed-form
+    improvement b^T A^-1 b must equal loss(0) - loss(x*) computed by
+    actually solving the 2x2 system in rationals."""
+    from fractions import Fraction
+
+    from ecommerce_data_pipeline_spark.plans.ml_ops import (
+        _ALS_LAMBDA,
+        _ALS_SALT_1,
+        _ALS_SALT_2,
+        _ALS_SCALE,
+    )
+
+    part_brand = {
+        r.p_partkey: r.p_brand
+        for r in load_table(spark, SF_SMOKE, "part")
+        .select("p_partkey", "p_brand")
+        .collect()
+    }
+    fac = {}
+    for b in set(part_brand.values()):
+        y1 = md5_60(f"{_ALS_SALT_1}{b}") % 5 - 2
+        y2 = md5_60(f"{_ALS_SALT_2}{b}") % 5 - 2
+        if y1 == 0 and y2 == 0:
+            y1 = 1
+        fac[b] = (y1, y2)
+    cust_of = {
+        r.o_orderkey: r.o_custkey
+        for r in load_table(spark, SF_SMOKE, "orders")
+        .select("o_orderkey", "o_custkey")
+        .collect()
+    }
+    ratings = defaultdict(int)
+    for r in (
+        load_table(spark, SF_SMOKE, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .collect()
+    ):
+        ratings[(cust_of[r.l_orderkey], part_brand[r.l_partkey])] += 1
+    users = defaultdict(lambda: [0, 0, 0, 0, 0, 0])  # a11,a12,a22,b1,b2,sse0
+    for (u, b), r in ratings.items():
+        y1, y2 = fac[b]
+        s = users[u]
+        s[0] += y1 * y1
+        s[1] += y1 * y2
+        s[2] += y2 * y2
+        s[3] += r * y1
+        s[4] += r * y2
+        s[5] += r * r
+    seg = defaultdict(lambda: [0, 0, 0, None])  # n, sse0, imp_q, min_imp
+    for u, (q11, q12, q22, b1, b2, sse0) in users.items():
+        a11, a22 = _ALS_LAMBDA + q11, _ALS_LAMBDA + q22
+        det = a11 * a22 - q12 * q12
+        num = a22 * b1 * b1 - 2 * q12 * b1 * b2 + a11 * b2 * b2
+        imp_q = (_ALS_SCALE * num) // det
+        s = seg[segment_of[u]]
+        s[0] += 1
+        s[1] += sse0
+        s[2] += imp_q
+        s[3] = imp_q if s[3] is None else min(s[3], imp_q)
+    got = {
+        r.segment: r
+        for r in REGISTRY["als_implicit_step_certificate"]
+        .fn(spark, SF_SMOKE)
+        .collect()
+    }
+    assert set(got) == set(seg)
+    for name, (n, sse0, imp_q, min_imp) in seg.items():
+        r = got[name]
+        assert r.n_users == n
+        assert r.sse_before == sse0
+        assert r.loss_improvement == imp_q / _ALS_SCALE
+        assert r.min_user_improvement_q == min_imp
+        assert r.never_increases_loss == (min_imp >= 0)
+        assert min_imp >= 0  # PD system: the step can never hurt
+    # algebra check on a user sample: b^T A^-1 b == loss(0) - loss(x*)
+    for u in sorted(users)[:20]:
+        q11, q12, q22, b1, b2, _ = users[u]
+        a11, a22 = _ALS_LAMBDA + q11, _ALS_LAMBDA + q22
+        det = a11 * a22 - q12 * q12
+        x1 = Fraction(a22 * b1 - q12 * b2, det)
+        x2 = Fraction(a11 * b2 - q12 * b1, det)
+        # ridge loss difference: loss(x) - loss(0)
+        #   = x^T A x - 2 b^T x  (ratings-squared terms cancel)
+        dloss = (
+            a11 * x1 * x1
+            + 2 * q12 * x1 * x2
+            + a22 * x2 * x2
+            - 2 * (b1 * x1 + b2 * x2)
+        )
+        num = a22 * b1 * b1 - 2 * q12 * b1 * b2 + a11 * b2 * b2
+        assert dloss == -Fraction(num, det)
+
+
+# ---------------------------------------------------------------------------
+# quantile_treatment_effect
+
+
+def test_qte_matches_python_replay(spark, order_cents, custkeys):
+    """Python replay of the type-1 per-arm quantiles (ceil(p*n/100)
+    order statistic) and the QTE differences, hash arm split included."""
+    from ecommerce_data_pipeline_spark.plans.ml_ops import (
+        _QTE_CUTOVER,
+        _QTE_PS,
+        _QTE_SALT,
+    )
+
+    cut = datetime.fromisoformat(_QTE_CUTOVER)
+    y = {k: 0 for k in custkeys}
+    for r in order_cents:
+        if r.o_orderdate >= cut:
+            y[r.o_custkey] += r.cents
+    arms = {0: [], 1: []}
+    for k in custkeys:
+        arms[1 if md5_60(f"{_QTE_SALT}{k}") % 100 < 50 else 0].append(y[k])
+    for a in arms.values():
+        a.sort()
+
+    def q(vals, p):
+        n = len(vals)
+        rank = -(-p * n // 100)  # ceil(p*n/100)
+        return vals[rank - 1]
+
+    got = {
+        r.quantile_pct: r
+        for r in REGISTRY["quantile_treatment_effect"]
+        .fn(spark, SF_SMOKE)
+        .collect()
+    }
+    assert set(got) == set(_QTE_PS)
+    for p in _QTE_PS:
+        r = got[p]
+        qt, qc = q(arms[1], p), q(arms[0], p)
+        assert r.q_treat == qt / 100.0, p
+        assert r.q_ctrl == qc / 100.0, p
+        assert r.qte == (qt - qc) / 100.0, p

@@ -1,6 +1,8 @@
 """Unit tests for operator semantics the oracle can't express:
 EP1 anti-join insert semantics, seeded sampling determinism, as-of and
-range joins, partitioned sinks, CSV ingest round-trip (SURVEY.md §5.3-5.4).
+range joins, partitioned sinks, CSV ingest round-trip (SURVEY.md §5.3-5.4),
+and the attribution family (position, Markov removal, Shapley, time
+decay).
 """
 
 from __future__ import annotations
@@ -471,6 +473,91 @@ def test_markov_attribution_invariants(spark):
     # collect boundedness: 4 channels + START/CONV/DROP
     n_channels = len(rows)
     assert n_channels <= 6
+
+
+def test_shapley_matches_python_replay(spark):
+    """Independent exact-Fraction replay of the coalition game: journey
+    masks, v(S) over all 2^k subsets, phi_i from factorial weights —
+    channel credits, touched counts and the efficiency identity must
+    match the plan bit-for-bit (the published division is int/int in
+    float, reproducible in Python)."""
+    import math
+    from collections import defaultdict
+
+    from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
+
+    rows = (
+        load_table(spark, SF_SMOKE, "events")
+        .select(
+            "user_id",
+            "ts",
+            "event_id",
+            "event_type",
+            (F.col("value").cast("decimal(18,2)") * 100)
+            .cast("long")
+            .alias("val_cents"),
+        )
+        .collect()
+    )
+    by_user = defaultdict(list)
+    for r in rows:
+        by_user[r.user_id].append(r)
+    channels = sorted(
+        {r.event_type for r in rows if r.event_type != "purchase"}
+    )
+    bit = {c: 1 << i for i, c in enumerate(channels)}
+    k = len(channels)
+    coal_v = defaultdict(int)
+    coal_n = defaultdict(int)
+    for evs in by_user.values():
+        evs.sort(key=lambda r: (r.ts, r.event_id))
+        mask = 0
+        for r in evs:
+            if r.event_type == "purchase":
+                coal_v[mask] += r.val_cents
+                coal_n[mask] += 1
+                mask = 0
+            else:
+                mask |= bit[r.event_type]
+
+    def v(s):
+        return sum(cv for m, cv in coal_v.items() if (m & s) == m)
+
+    full = (1 << k) - 1
+    fact = math.factorial
+    expected = {}
+    for c in channels:
+        b = bit[c]
+        phi_num = sum(
+            fact(bin(s).count("1")) * fact(k - 1 - bin(s).count("1"))
+            * (v(s | b) - v(s))
+            for s in range(1 << k)
+            if not s & b
+        )
+        touched = sum(n for m, n in coal_n.items() if m & b)
+        expected[c] = (
+            touched,
+            phi_num / (fact(k) * 100.0),
+            (v(full) - v(0)) / 100.0,
+        )
+    got = {
+        r.channel: r
+        for r in REGISTRY["attribution_shapley_values"]
+        .fn(spark, SF_SMOKE)
+        .collect()
+    }
+    assert set(got) == set(channels)
+    for c, (touched, shap, attributable) in expected.items():
+        r = got[c]
+        assert r.touched_journeys == touched, c
+        assert r.shapley_value == shap, c
+        assert r.attributable_value == attributable, c
+        assert r.efficiency_gap_num == 0, c
+    # efficiency: credits distribute exactly v(N) - v(empty)
+    assert (
+        sum(round(e[1] * 100 * fact(k)) for e in expected.values())
+        == fact(k) * (v(full) - v(0))
+    )
 
 
 def test_time_decay_weighted_value_kernel_properties(spark):

@@ -6,6 +6,9 @@ speed (the driver re-runs the same comparison at sf0.01).
 
 from __future__ import annotations
 
+import pathlib
+import re
+
 import pytest
 
 from ecommerce_data_pipeline_spark.plans import REGISTRY
@@ -89,39 +92,41 @@ _ROWS_ONLY_PINS = {
     "bpe_segmentation_stats": "test_bpe_merge_sequence_matches_reference_and_is_layout_independent",
     "bpe_vocab_learn": "test_bpe_merge_sequence_matches_reference_and_is_layout_independent",
     "embedding_ivf_topk": "test_ivf_recall_vs_bruteforce",
-    "embedding_lsh_topk": "test_lsh_recall_vs_bruteforce",
+    "embedding_lsh_topk": "test_lsh_ann_recall_vs_bruteforce",
     "embedding_pca_project": "test_pca_axes_and_projection",
     "embedding_pq_topk": "test_pq_recall_and_determinism",
     "generate_reference_batch": "test_transaction_generator_contract",
     "incremental_neardup_delta": "test_incremental_neardup_matches_full_run",
     "ivf_probe_recall_curve": "test_ivf_probe_recall_curve_monotone",
-    "minhash_lsh_neardup": "test_minhash_lsh_recall_vs_exact_jaccard",
-    "multimodal_chunk_dedup": "test_chunk_dedup",
-    "multimodal_features": "test_multimodal_feature",
-    "parquet_layout_audit": "test_parquet_layout_audit",
+    "minhash_lsh_neardup": "test_minhash_lsh_matches_exact_jaccard",
+    "multimodal_chunk_dedup": "test_multimodal_chunk_dedup_matches_sha256_replay",
+    "multimodal_features": "test_multimodal_feature_schema_and_determinism",
+    "parquet_layout_audit": "test_parquet_layout_audit_matches_duckdb_filename_scan",
     "queue_drain_summary": "test_txqueue_batch_source_deterministic_partitioned",
-    "semantic_dedup_pairs": "test_sign_grid",
+    "semantic_dedup_pairs": "test_sign_grid_bits_bound_pair_join_volume",
     "simhash_signatures": "test_simhash_finds_planted_neardups",
-    # r8: sample_orders_k50 / sample_lineitem_fraction /
-    # random_fk_enrichment / stratified_sample_langs left this map —
-    # converted to engine-portable salted-hash draws with REAL oracles
-    # (VERDICT r7 task #1); the seeded-rand operator forms stay pinned
-    # by sampling_certificate / stratified_sample_certificate.
 }
 
 
-def test_every_rows_only_query_declares_a_pytest_pin():
-    import pathlib
+def dangling_pins(pins: dict[str, str], sources: str) -> dict[str, str]:
+    """The entries of ``pins`` whose test no ``def <pin>(`` in
+    ``sources`` defines: a pin named only in the map itself, or only as
+    the prefix of a longer test name, does not resolve."""
+    return {
+        n: pin
+        for n, pin in pins.items()
+        if not re.search(rf"^def {re.escape(pin)}\(", sources, re.M)
+    }
 
+
+def test_every_rows_only_query_declares_a_pytest_pin():
     rows_only = sorted(name for name, q in REGISTRY.items() if not q.oracle)
     undeclared = [n for n in rows_only if n not in _ROWS_ONLY_PINS]
     assert undeclared == [], f"rows-only queries without a declared pin: {undeclared}"
     sources = "\n".join(
         p.read_text() for p in pathlib.Path(__file__).parent.glob("test_*.py")
     )
-    dangling = {
-        n: pin for n, pin in _ROWS_ONLY_PINS.items() if pin not in sources
-    }
+    dangling = dangling_pins(_ROWS_ONLY_PINS, sources)
     assert dangling == {}, f"declared pins not found in tests/: {dangling}"
 
 

@@ -1,19 +1,17 @@
-"""Property tests for the round-10 queries: the consistent-hashing
-rebalance audit (Python replay of the ring walk, the
-exactly-one-owning-arc partition property, and the conservation
-identities). The HITS and triangle tests live in test_graph.py.
-Value-level oracle parity is covered by the registry-wide oracle diff
-in test_oracle.py.
+"""Placement-family tests: Python replays of the consistent-hashing and
+rendezvous (HRW) rebalance audits with their pure-add conservation
+identities, the consistent-hashing plan shape, the Hilbert layout key,
+and the Pareto skyline of parts. Value-level oracle parity is covered
+by the registry-wide oracle diff in test_oracle.py.
 """
 
 from __future__ import annotations
 
-import hashlib
-import math
+import datetime
 
 from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
 from ecommerce_data_pipeline_spark.sources.readers import load_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, md5_60
 from tests.plan_invariants import executed_plan
 
 
@@ -21,13 +19,9 @@ from tests.plan_invariants import executed_plan
 # consistent_hashing_rebalance_audit
 
 
-def _hash60_py(salt: str, key: str) -> int:
-    return int(hashlib.md5((salt + key).encode()).hexdigest()[:15], 16)
-
-
 def _ring(n_shards: int, vnodes: int, salt: str):
     return sorted(
-        (_hash60_py(salt, f"{s}:{v}"), s)
+        (md5_60(f"{salt}{s}:{v}"), s)
         for s in range(n_shards)
         for v in range(vnodes)
     )
@@ -40,7 +34,7 @@ def _owner(ring, kpos: int) -> int:
     return ring[0][1]  # wrap
 
 
-def test_consistent_hashing_matches_python_ring_walk(spark):
+def test_consistent_hashing_matches_python_ring_walk(spark, custkeys):
     from ecommerce_data_pipeline_spark.plans.placement import (
         _CHR_KEY_SALT,
         _CHR_RING_SALT,
@@ -48,18 +42,12 @@ def test_consistent_hashing_matches_python_ring_walk(spark):
         _CHR_VNODES,
     )
 
-    custkeys = [
-        r["c_custkey"]
-        for r in load_table(spark, SF_SMOKE, "customer")
-        .select("c_custkey")
-        .collect()
-    ]
     ring_a = _ring(_CHR_SHARDS, _CHR_VNODES, _CHR_RING_SALT)
     ring_b = _ring(_CHR_SHARDS + 1, _CHR_VNODES, _CHR_RING_SALT)
     asg = {
         k: (
-            _owner(ring_a, _hash60_py(_CHR_KEY_SALT, str(k))),
-            _owner(ring_b, _hash60_py(_CHR_KEY_SALT, str(k))),
+            _owner(ring_a, md5_60(f"{_CHR_KEY_SALT}{k}")),
+            _owner(ring_b, md5_60(f"{_CHR_KEY_SALT}{k}")),
         )
         for k in custkeys
     }
@@ -113,18 +101,13 @@ def test_consistent_hashing_conservation_and_bound(spark):
     assert rows[0]["n_moved"] == new_shard["n_after"]
 
 
-# ---------------------------------------------------------------------------
-# plan-shape pins for the r10 queries
-
-
 def test_consistent_hashing_plans_case_lookup_no_joins(spark):
-    """The ring-audit scale claim, re-pinned for the r13 form: the ring
-    is a plan-build-time constant, so key->shard assignment compiles to
-    a sorted CASE chain over literal positions — NO join of any kind
-    touches the fact (the two BroadcastNestedLoopJoins, the persisted
-    fact-shaped intermediate, and the three fact passes of the r10 form
-    are gone; the audit is one projection + one hash aggregate to the
-    <=81-row transition matrix, everything after is grid-sized)."""
+    """The ring-audit scale claim: the ring is a plan-build-time
+    constant, so key->shard assignment compiles to a sorted CASE chain
+    over literal positions — NO join of any kind touches the fact, and
+    no fact-shaped intermediate is persisted; the audit is one
+    projection + one hash aggregate to the <=81-row transition matrix,
+    everything after is grid-sized."""
     import uuid
 
     from perfbench.trace import job_group_counters
@@ -145,7 +128,7 @@ def test_consistent_hashing_plans_case_lookup_no_joins(spark):
     plan = executed_plan(df)
     assert "SortMergeJoin" not in plan
     assert "CASE WHEN" in plan and "kpos" in plan  # the literal lookup
-    # r10's persisted fact-shaped intermediate is gone...
+    # no persisted fact-shaped intermediate...
     assert "InMemoryTableScan" not in plan
     # ...and the matrix serves all its consumers from ONE fact pass: the
     # audit reads exactly the bytes of one scan of customer.c_custkey
@@ -161,165 +144,20 @@ def test_consistent_hashing_plans_case_lookup_no_joins(spark):
 
 
 # ---------------------------------------------------------------------------
-# mcnemar_repeat_purchase
-
-
-def test_mcnemar_matches_python_replay(spark):
-    import datetime
-
-    from ecommerce_data_pipeline_spark.plans.hypothesis_ladder import (
-        _MCN_CHI2_CRIT,
-        _MCN_SPLIT,
-    )
-
-    split = datetime.datetime.fromisoformat(_MCN_SPLIT)
-    flags = {}
-    for r in (
-        load_table(spark, SF_SMOKE, "orders")
-        .select("o_custkey", "o_orderdate")
-        .collect()
-    ):
-        a, b = flags.get(r["o_custkey"], (0, 0))
-        if r["o_orderdate"] < split:
-            a = 1
-        else:
-            b = 1
-        flags[r["o_custkey"]] = (a, b)
-    custs = [
-        r["c_custkey"]
-        for r in load_table(spark, SF_SMOKE, "customer")
-        .select("c_custkey")
-        .collect()
-    ]
-    cells = {"both": 0, "neither": 0, "a": 0, "b": 0}
-    for c in custs:
-        a, b = flags.get(c, (0, 0))
-        cells[
-            "both" if a and b else "neither" if not (a or b) else "a" if a else "b"
-        ] += 1
-    row = REGISTRY["mcnemar_repeat_purchase"].fn(spark, SF_SMOKE).collect()[0]
-    assert row["n_customers"] == len(custs)
-    assert (row["n_both"], row["n_neither"], row["n_a_only"], row["n_b_only"]) == (
-        cells["both"],
-        cells["neither"],
-        cells["a"],
-        cells["b"],
-    )
-    b_, c_ = cells["a"], cells["b"]
-    if b_ + c_:
-        x2 = (abs(b_ - c_) - 1) ** 2 / (b_ + c_)
-        assert row["mcnemar_stat"] == round(x2, 6)
-        assert row["significant_05"] == (x2 > _MCN_CHI2_CRIT["05"])
-        assert row["significant_01"] == (x2 > _MCN_CHI2_CRIT["01"])
-
-
-# ---------------------------------------------------------------------------
-# cochran_q_event_types
-
-
-def test_cochran_q_matches_python_replay(spark):
-    from ecommerce_data_pipeline_spark.plans.hypothesis_ladder import (
-        _CHI2_CRIT_01,
-        _CHI2_CRIT_05,
-    )
-
-    pairs = {
-        (r["user_id"], r["event_type"])
-        for r in load_table(spark, SF_SMOKE, "events")
-        .select("user_id", "event_type")
-        .collect()
-    }
-    col = {}
-    row = {}
-    for u, t in pairs:
-        col[t] = col.get(t, 0) + 1
-        row[u] = row.get(u, 0) + 1
-    k = len(col)
-    t_tot = sum(col.values())
-    scs = sum(c * c for c in col.values())
-    srs = sum(r * r for r in row.values())
-    den = k * t_tot - srs
-    q = (k - 1) * (k * scs - t_tot * t_tot) / den if den > 0 else None
-    r0 = REGISTRY["cochran_q_event_types"].fn(spark, SF_SMOKE).collect()[0]
-    assert (
-        r0["n_users"],
-        r0["k_treatments"],
-        r0["grand_total"],
-        r0["sum_col_sq"],
-        r0["sum_row_sq"],
-        r0["df"],
-    ) == (len(row), k, t_tot, scs, srs, k - 1)
-    if q is None:
-        assert r0["q_stat"] is None
-    else:
-        assert r0["q_stat"] == round(q, 6)
-        assert r0["significant_05"] == (q > _CHI2_CRIT_05[k - 2])
-        assert r0["significant_01"] == (q > _CHI2_CRIT_01[k - 2])
-
-
-def test_cochran_q_reduces_to_uncorrected_mcnemar_at_k2(spark):
-    """The ladder claim, pinned algebraically on the live data: restrict
-    the matrix to two treatments and Cochran's Q equals the UNCORRECTED
-    McNemar statistic (b-c)^2/(b+c) — the identity that makes Q the
-    k-treatment rung above mcnemar_repeat_purchase."""
-    pairs = {
-        (r["user_id"], r["event_type"])
-        for r in load_table(spark, SF_SMOKE, "events")
-        .select("user_id", "event_type")
-        .collect()
-    }
-    types = sorted({t for _, t in pairs})[:2]
-    users = {u for u, _ in pairs}
-    b = sum(
-        1
-        for u in users
-        if (u, types[0]) in pairs and (u, types[1]) not in pairs
-    )
-    c = sum(
-        1
-        for u in users
-        if (u, types[0]) not in pairs and (u, types[1]) in pairs
-    )
-    # Q over the 2-column matrix, rows = users touching either type
-    rows2 = {
-        u: ((u, types[0]) in pairs) + ((u, types[1]) in pairs)
-        for u in users
-    }
-    rows2 = {u: r for u, r in rows2.items() if r}
-    k = 2
-    col = [
-        sum(1 for u in rows2 if (u, t) in pairs) for t in types
-    ]
-    t_tot = sum(col)
-    scs = sum(x * x for x in col)
-    srs = sum(r * r for r in rows2.values())
-    den = k * t_tot - srs
-    if den and b + c:
-        q = (k - 1) * (k * scs - t_tot * t_tot) / den
-        assert math.isclose(q, (b - c) ** 2 / (b + c), rel_tol=1e-12)
-
-
-# ---------------------------------------------------------------------------
 # rendezvous_hashing_audit
 
 
-def test_hrw_matches_python_replay(spark):
+def test_hrw_matches_python_replay(spark, custkeys):
     from ecommerce_data_pipeline_spark.plans.placement import (
         _HRW_SALT,
         _HRW_SHARDS,
     )
 
     n = _HRW_SHARDS
-    custkeys = [
-        r["c_custkey"]
-        for r in load_table(spark, SF_SMOKE, "customer")
-        .select("c_custkey")
-        .collect()
-    ]
     asg = {}
     for k in custkeys:
         scores = [
-            _hash60_py(f"{_HRW_SALT}{j}:", str(k)) for j in range(n + 1)
+            md5_60(f"{_HRW_SALT}{j}:{k}") for j in range(n + 1)
         ]
         asg[k] = (
             scores[:n].index(max(scores[:n])),
@@ -354,6 +192,45 @@ def test_hrw_pure_add_conservation(spark):
     assert new["n_before"] == 0
     assert new["n_moved_in"] == new["n_after"] == rows[0]["n_moved"]
     assert sum(r["n_moved_in"] for r in rows) == new["n_after"]
+
+
+# ---------------------------------------------------------------------------
+# hilbert_layout_key
+
+
+def test_hilbert_curve_properties_and_replay(spark, order_cents):
+    """Three independent checks: (1) the full 256x256 walk is a
+    BIJECTION onto [0, 65536); (2) consecutive keys are always
+    grid-ADJACENT (|dx|+|dy| = 1 — the locality property that
+    distinguishes Hilbert from Morton order, which has 255-cell
+    diagonal jumps); (3) the query's per-order keys equal the Python
+    walk re-derived from (custkey, order-day)."""
+    from ecommerce_data_pipeline_spark.plans.placement import (
+        _HILBERT_SIDE,
+        _hilbert_d,
+    )
+
+    cells = {}
+    for x in range(_HILBERT_SIDE):
+        for y in range(_HILBERT_SIDE):
+            cells[_hilbert_d(x, y)] = (x, y)
+    assert len(cells) == _HILBERT_SIDE * _HILBERT_SIDE  # bijection
+    for d in range(_HILBERT_SIDE * _HILBERT_SIDE - 1):
+        x1, y1 = cells[d]
+        x2, y2 = cells[d + 1]
+        assert abs(x1 - x2) + abs(y1 - y2) == 1, d  # unit-step locality
+
+    epoch = datetime.date(1970, 1, 1)
+    rows = REGISTRY["hilbert_layout_key"].fn(spark, SF_SMOKE).collect()
+    src = {r.o_orderkey: (r.o_custkey, r.o_orderdate) for r in order_cents}
+    assert len(rows) == len(src)
+    for r in rows:
+        ck, od = src[r.o_orderkey]
+        xb = ck % 256
+        yb = (od.date() - epoch).days % 256
+        assert (r.xb, r.yb) == (xb, yb)
+        assert r.hval == _hilbert_d(xb, yb)
+        assert r.file_id == r.hval // 1024
 
 
 # ---------------------------------------------------------------------------

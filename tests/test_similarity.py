@@ -77,6 +77,33 @@ def test_multimodal_feature_schema_and_determinism(spark):
     assert 16 <= r["width"] < 80 and 16 <= r["height"] < 80
 
 
+def test_multimodal_chunk_dedup_matches_sha256_replay(spark):
+    """Python replay of the chunk digest: sha256 over the first 64
+    payload bytes of every media row, grouped by digest; every group of
+    two or more copies appears with its size, min id as keeper and the
+    numerically sorted id list."""
+    import hashlib
+
+    from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
+
+    media = attach_binary_payload(load_table(spark, SF_SMOKE, "documents"))
+    groups = {}
+    for r in media.select("media_id", "payload").collect():
+        sha = hashlib.sha256(bytes(r["payload"][:64])).hexdigest()
+        groups.setdefault(sha, []).append(r["media_id"])
+    expected = {
+        sha: (len(ids), min(ids), ",".join(map(str, sorted(ids))))
+        for sha, ids in groups.items()
+        if len(ids) >= 2
+    }
+    got = {
+        r["chunk_sha"]: (r["n_copies"], r["keeper_id"], r["member_ids"])
+        for r in REGISTRY["multimodal_chunk_dedup"].fn(spark, SF_SMOKE).collect()
+    }
+    assert expected, "fixture must contain duplicated chunks"
+    assert got == expected
+
+
 def test_frame_sample_shapes(spark):
     docs = load_table(spark, SF_SMOKE, "documents").limit(10)
     media = attach_binary_payload(docs)
@@ -482,7 +509,7 @@ def test_recall_certificates_hold_on_smoke(spark):
     assert cert["n_exact_pairs"] > 0
 
 
-def test_mmr_rerank_invariants_and_nondefault_columns(spark):
+def test_mmr_rerank_invariants(spark):
     """MMR picks come from the relevance pool, rank 1 is the most
     relevant candidate, and picks are distinct."""
     from ecommerce_data_pipeline_spark.operators.similarity import (

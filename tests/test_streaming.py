@@ -1,30 +1,62 @@
 """Structured Streaming tests: file-stream ingest, stateful dedup,
-windowed aggregation, session windows, foreachBatch sinks — each run to
-completion with availableNow triggers and compared against the batch
-equivalent (SURVEY.md §5.3).
+windowed aggregation, session windows, foreachBatch sinks, the stateful
+stream monitors (Page-Hinkley, mixture convergence, decontamination),
+the watermark late-data audit against a real watermarked stream, and
+the backpressure replay — each run to completion with availableNow
+triggers and compared against the batch equivalent (SURVEY.md §5.3).
 """
 
 from __future__ import annotations
 
+import datetime
 import shutil
 import tempfile
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryException
+from pyspark.sql.types import (
+    DateType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
+from ecommerce_data_pipeline_spark.plans.registry import REGISTRY
 from ecommerce_data_pipeline_spark.sources.readers import load_table
 from ecommerce_data_pipeline_spark.streaming.pipeline import (
+    decontam_monitor_stream,
     drain,
     fold_landing,
     is_worker_handshake_timeout,
     land_chunks,
+    mixture_monitor_stream,
+    page_hinkley_stream,
     read_file_stream,
     run_stream_with_handshake_retry,
 )
 from tests.conftest import SF_SMOKE
 from tests.stream_harness import (
     foreach_batch_incremental_neardup,
+    land_and_fold,
     run_available_now,
+)
+
+
+_PH_SCHEMA = StructType(
+    [StructField("day", DateType()), StructField("x", LongType())]
+)
+_MIX_SCHEMA = StructType(
+    [
+        StructField("batch_id", LongType()),
+        StructField("source", StringType()),
+        StructField("cnt", LongType()),
+    ]
+)
+_PAIR_SCHEMA = StructType(
+    [StructField("shard_id", LongType()), StructField("doc_id", LongType())]
 )
 
 
@@ -393,20 +425,14 @@ def test_land_chunks_round_trips_mapped_types_in_chunk_order(
     declared schema, one micro-batch per chunk in landing order — also
     across a second call that continues the numbering. An unmapped
     type is refused."""
-    import datetime
     import decimal
     import os
 
     from pyspark.sql.types import (
         BooleanType,
-        DateType,
         DecimalType,
         DoubleType,
         IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
         TimestampType,
     )
 
@@ -473,25 +499,16 @@ def test_fold_landing_empty_landing_is_empty_relation(spark, tmp_path):
     """No landed chunk means no trigger ever writes the output, and a
     trigger over an empty chunk lands no file: either way the fold still
     returns a relation — empty, with the operator's schema."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from ecommerce_data_pipeline_spark.streaming.pipeline import (
-        decontam_monitor_stream,
-    )
-
-    schema = StructType(
-        [StructField("shard_id", LongType()), StructField("doc_id", LongType())]
-    )
     landing = str(tmp_path / "landing")
-    assert land_chunks([], schema, landing) == []
-    want = decontam_monitor_stream(read_file_stream(spark, landing, schema))
+    assert land_chunks([], _PAIR_SCHEMA, landing) == []
+    want = decontam_monitor_stream(read_file_stream(spark, landing, _PAIR_SCHEMA))
     for chunks in ([], [[]]):  # the second fold is the restart
-        land_chunks(chunks, schema, landing)
+        land_chunks(chunks, _PAIR_SCHEMA, landing)
         got = fold_landing(
             spark,
             decontam_monitor_stream,
             landing,
-            schema,
+            _PAIR_SCHEMA,
             str(tmp_path / "out"),
             str(tmp_path / "ckpt"),
         )
@@ -560,3 +577,379 @@ def test_retry_retries_only_on_handshake_and_is_bounded():
     with pytest.raises(RuntimeError):
         run_stream_with_handshake_retry(always_flaky, backoff_sec=0.0)
     assert calls["n"] == 3
+
+
+# --------------------------------------------------------------------------
+# The stateful stream monitors (`_fold_by_key` folds): each streaming
+# twin against its batch query, across a checkpoint restart, and on the
+# ordering contract it must refuse loudly.
+
+def _ph_final_row(rows):
+    last = max(rows, key=lambda r: r["n_days"])
+    return (
+        last["n_days"],
+        last["ph_increase_dollars"],
+        last["increase_day"],
+        last["ph_decrease_dollars"],
+        last["decrease_day"],
+    )
+
+
+def test_page_hinkley_stream_checkpoint_restart(spark, tmp_path, daily_cents):
+    """Kill-and-restart across a half-drained landing zone: the resumed
+    fold must continue from checkpointed state and land on the same
+    final row as the batch computation."""
+    ordered = sorted(daily_cents)
+    n = len(ordered)
+    chunks = [
+        [(day, daily_cents[day]) for day in sl]
+        for sl in (ordered[: n // 3], ordered[n // 3 : 2 * n // 3],
+                   ordered[2 * n // 3 :])
+    ]
+    land_and_fold(spark, tmp_path, page_hinkley_stream, _PH_SCHEMA, chunks[:2])
+    rows = land_and_fold(
+        spark, tmp_path, page_hinkley_stream, _PH_SCHEMA, chunks[2:]
+    ).collect()
+    batch = REGISTRY["page_hinkley_drift_daily"].fn(spark, SF_SMOKE)
+    dtypes = dict(batch.dtypes)
+    assert (dtypes["increase_day"], dtypes["decrease_day"]) == ("date", "date")
+    assert _ph_final_row(rows) == _ph_final_row(batch.collect())
+
+
+def test_page_hinkley_stream_rejects_reordered_days(spark, tmp_path):
+    """A day at or before the folded frontier must RAISE (the running
+    mean makes every statistic a prefix fold — a silent re-fold would
+    corrupt the whole suffix), not be silently absorbed."""
+    day0 = datetime.date(1995, 1, 2)
+    chunks = [
+        [(day0, 100), (day0 + datetime.timedelta(days=1), 200)],
+        [(day0, 300)],
+    ]
+    with pytest.raises(StreamingQueryException, match="folded frontier"):
+        land_and_fold(spark, tmp_path, page_hinkley_stream, _PH_SCHEMA, chunks)
+
+
+def _mix_fold(spark, tmp_path, chunks, target):
+    return land_and_fold(
+        spark,
+        tmp_path,
+        lambda s: mixture_monitor_stream(s, target),
+        _MIX_SCHEMA,
+        chunks,
+    )
+
+
+def test_mixture_stream_checkpoint_restart(spark, tmp_path):
+    """Kill-and-restart across a half-drained landing zone: the resumed
+    fold must continue from checkpointed per-source counts and land on
+    the same relation as the batch computation."""
+    from ecommerce_data_pipeline_spark.plans.corpus_mining import (
+        _MIX_BATCH_DOCS,
+        mixture_convergence_monitor,
+    )
+
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "source")
+    cells = Counter(
+        (int(r.doc_id) // _MIX_BATCH_DOCS, r.source) for r in docs.collect()
+    )
+    # planned target mixture (source -> integer micros) from the full
+    # corpus with the same exact rational half-up rule as both twins
+    total_s = Counter()
+    for (_, s), c in cells.items():
+        total_s[s] += c
+    total = sum(total_s.values())
+    target = {
+        s: (2 * 1000000 * t + total) // (2 * total)
+        for s, t in total_s.items()
+    }
+    # three chunks of whole batches (a batch must close within one trigger)
+    batches = sorted({b for b, _ in cells})
+    n = len(batches)
+    chunks = [
+        [(b, s, c) for (b, s), c in sorted(cells.items()) if b in set(cut)]
+        for cut in (batches[: n // 3], batches[n // 3 : 2 * n // 3],
+                    batches[2 * n // 3 :])
+    ]
+
+    def mix_rows(rows):
+        return sorted(
+            (
+                r["batch_id"],
+                r["n_docs_cum"],
+                r["l1_dev_micros"],
+                r["max_dev_source"],
+                r["max_abs_dev_micros"],
+            )
+            for r in rows
+        )
+
+    _mix_fold(spark, tmp_path, chunks[:2], target)
+    got = mix_rows(_mix_fold(spark, tmp_path, chunks[2:], target).collect())
+    assert got == mix_rows(mixture_convergence_monitor(spark, SF_SMOKE).collect())
+
+
+def test_mixture_stream_rejects_reordered_batches(spark, tmp_path):
+    """A batch at or before the folded frontier must RAISE (cumulative
+    counts make every report a prefix fold), not be silently
+    re-absorbed."""
+    chunks = [[(0, "a", 3), (1, "b", 2)], [(1, "a", 1)]]
+    # the stream must fail on THE frontier contract specifically — a
+    # bare StreamingQueryException would let any unrelated failure
+    # (schema error, landing-path error) pass
+    with pytest.raises(StreamingQueryException, match="folded frontier"):
+        _mix_fold(spark, tmp_path, chunks, {"a": 600000, "b": 400000})
+
+
+def test_mixture_stream_rejects_unplanned_source(spark, tmp_path):
+    """A source outside the planned target mixture must RAISE — counting
+    it would silently shift every other source's share."""
+    with pytest.raises(StreamingQueryException, match="target mixture"):
+        _mix_fold(spark, tmp_path, [[(0, "rogue", 1)]], {"a": 1000000})
+
+
+def test_mixture_stream_state_survives_colon_source(spark, tmp_path):
+    """A source name containing ':' must round-trip through the state
+    CSV (the count is the LAST field, parsed with rsplit) — and a
+    target with ',' in a name is rejected at construction."""
+    with pytest.raises(ValueError, match="record separator"):
+        mixture_monitor_stream(None, {"bad,name": 1_000_000})
+
+    # two chunks => two triggers => the colon-bearing counts must be
+    # parsed back OUT of checkpointed state on the second trigger
+    chunks = [
+        [(0, "lang:en", 3), (0, "lang:fr", 1)],
+        [(1, "lang:en", 1), (1, "lang:fr", 3)],
+    ]
+    got = _mix_fold(
+        spark, tmp_path, chunks, {"lang:en": 500_000, "lang:fr": 500_000}
+    )
+    rows = {r["batch_id"]: r for r in got.collect()}
+    # batch 0: en 3/4 = 750000 (dev +250000), fr 1/4 (dev -250000)
+    assert rows[0]["l1_dev_micros"] == 500_000
+    assert rows[0]["max_dev_source"] == "lang:en"
+    # batch 1 cumulative: en 4/8, fr 4/8 — exactly on target
+    assert rows[1]["l1_dev_micros"] == 0
+    assert rows[1]["n_docs_cum"] == 8
+
+
+def _first_shards(spark, tmp_path, chunks, ckpt="ckpt"):
+    """Fold (shard_id, doc_id) pairs through decontam_monitor_stream;
+    the emitted rows as a sorted list of (doc_id, first_shard)."""
+    out = land_and_fold(
+        spark, tmp_path, decontam_monitor_stream, _PAIR_SCHEMA, chunks, ckpt
+    )
+    return sorted((r["doc_id"], r["first_shard"]) for r in out.collect())
+
+
+def test_decontam_stream_matches_batch_ledger(spark, tmp_path):
+    """Planted pairs across 3 in-order triggers: the union of emitted
+    rows must be exactly one (doc, min shard) row per doc — including a
+    doc hit twice WITHIN a trigger (folded by min, order-free) and a
+    doc re-hit in a LATER trigger (no second emission)."""
+    chunks = [
+        [(0, 100), (1, 100), (0, 101)],  # doc 100 twice in-trigger
+        [(2, 102), (2, 100)],            # doc 100 re-hit later: no-op
+        [(4, 103)],
+    ]
+    got = _first_shards(spark, tmp_path, chunks)
+    assert got == [(100, 0), (101, 0), (102, 2), (103, 4)]
+
+
+def test_decontam_stream_tolerates_harmless_disorder(spark, tmp_path):
+    """A doc whose FIRST-ever hit arrives after a globally larger shard
+    has already streamed is still graded correctly — the per-doc
+    contract only rejects disorder that would corrupt an emitted row."""
+    chunks = [
+        [(3, 200)],          # shard 3 first, globally out of order
+        [(1, 201)],          # smaller shard later, but a NEW doc: fine
+        [(4, 200), (4, 201)],  # re-hits above both frontiers: no-ops
+    ]
+    got = _first_shards(spark, tmp_path, chunks)
+    assert got == [(200, 3), (201, 1)]
+
+
+def test_decontam_stream_checkpoint_restart(spark, tmp_path):
+    """Kill-and-restart across a half-drained landing zone: the resumed
+    fold must restore per-doc flagged state — doc 300, flagged in the
+    first run, must NOT re-emit when re-hit after the restart. Refolding
+    the whole landing under a fresh checkpoint into the same output
+    re-runs each trigger with its old batch id, which replaces its own
+    emissions: the output still holds each emission once."""
+    _first_shards(spark, tmp_path, [[(0, 300), (1, 301)]])
+    # 300 re-hit post-restart: restored state
+    got = _first_shards(spark, tmp_path, [[(2, 300), (2, 302)]])
+    assert got == [(300, 0), (301, 1), (302, 2)]
+    assert _first_shards(spark, tmp_path, [], ckpt="ckpt_fresh") == got
+
+
+def test_decontam_stream_rejects_shard_regression(spark, tmp_path):
+    """A benchmark shard arriving BELOW a doc's flagged shard would make
+    the already-emitted first_shard wrong — append-only landings cannot
+    retract, so the fold must fail loudly on THE specific contract."""
+    chunks = [
+        [(3, 400)],  # doc 400 graded contaminated at shard 3
+        [(1, 400)],  # shard 1 arrives late: first_shard=3 was WRONG
+    ]
+    with pytest.raises(StreamingQueryException, match="graded contaminated"):
+        _first_shards(spark, tmp_path, chunks)
+
+
+# --------------------------------------------------------------------------
+# watermark_late_data_audit: batch replay vs REAL Structured Streaming
+
+
+def test_watermark_audit_matches_real_streaming(spark, tmp_path):
+    """THE semantics pin: the batch replay's accepted counts must equal
+    a real ``withWatermark('ts','5 minutes')`` windowed count drained
+    with one arrival-hour file per trigger, in APPEND mode — the mode
+    whose late-input filter (drop iff window.end <= watermark) is
+    exactly the audit's contract. (Update mode was probed and does NOT
+    filter: an evicted window RE-OPENS with reset state when a too-late
+    row arrives — the loss manifests as a count reset, not a missing
+    row, so only append can pin the audit row-for-row.) Append emits
+    each window once, when the watermark passes its end — so the
+    comparison set is the replay's windows with w_end <= final
+    watermark; tail windows never finalize by stream end."""
+    from collections import defaultdict
+
+    from ecommerce_data_pipeline_spark.plans.events_plans import (
+        _WM_DELAY_MS,
+        _WM_JITTER_S,
+        _WM_SLOT_MS,
+    )
+    from ecommerce_data_pipeline_spark.plans.sketches import _hash60
+
+    # land events as one file per ARRIVAL hour (the audit's trigger
+    # definition), restricted to the first 24 arrival hours; the same
+    # row subset is also a tmp sf-dir for the batch replay
+    events = load_table(spark, SF_SMOKE, "events")
+    arr_ms = F.unix_millis("ts") + (
+        _hash60(F.col("event_id"), "wm#") % _WM_JITTER_S
+    ) * 1000
+    tagged = events.withColumn("arr_ms", arr_ms).withColumn(
+        "trig", F.expr(f"arr_ms div {_WM_SLOT_MS}")
+    ).drop("arr_ms")
+    trigs = [
+        r["trig"]
+        for r in tagged.select("trig").distinct().orderBy("trig").collect()
+    ][:24]
+    subset = tagged.filter(F.col("trig").isin(trigs))
+    land, sfdir = str(tmp_path / "wm_landing"), str(tmp_path / "wm_sf")
+    subset.drop("trig").write.mode("overwrite").parquet(
+        f"{sfdir}/events.parquet"
+    )
+    by_trig = defaultdict(list)
+    for r in subset.collect():
+        by_trig[r["trig"]].append(r[:-1])  # trig is the last column
+    land_chunks([by_trig[t] for t in trigs], events.schema, land)
+
+    replay = {
+        (r["window_start"], r["event_type"]): (
+            r["n_total"],
+            r["n_accepted"],
+        )
+        for r in REGISTRY["watermark_late_data_audit"]
+        .fn(spark, sfdir)
+        .collect()
+    }
+    assert sum(t for t, _ in replay.values()) > 0
+    assert any(a < t for t, a in replay.values()), (
+        "fixture produced no late drops — jitter/trigger mismatch?"
+    )
+    # final watermark after the availableNow tail batch: global max
+    # event time minus delay (epoch ms, session-tz consistent with
+    # the replay's unix_millis)
+    ev = spark.read.parquet(f"{sfdir}/events.parquet")
+    final_wm = (
+        ev.agg(F.max(F.unix_millis("ts"))).first()[0] - _WM_DELAY_MS
+    )
+
+    stream = read_file_stream(
+        spark, land, events.schema, max_files_per_trigger=1
+    )
+    agg = (
+        stream.withWatermark("ts", "5 minutes")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .count()
+    )
+    q, name = run_available_now(
+        agg, str(tmp_path / "wm_ckpt"), output_mode="append"
+    )
+    drain(q)
+    rows = spark.table(name).collect()
+    got = {
+        (r["window"]["start"], r["event_type"]): r["count"]
+        for r in rows
+    }
+    assert len(got) == len(rows), "append emitted a window twice"
+
+    starts = sorted({k[0] for k in replay})
+    ms_of = dict(
+        spark.createDataFrame([(s,) for s in starts], "ws timestamp")
+        .select("ws", F.unix_millis("ws").alias("ms"))
+        .collect()
+    )
+    expected = {
+        k: acc
+        for k, (_tot, acc) in replay.items()
+        if acc > 0 and ms_of[k[0]] + _WM_SLOT_MS <= final_wm
+    }
+    assert got == expected
+
+
+def test_watermark_audit_invariants(spark):
+    rows = REGISTRY["watermark_late_data_audit"].fn(spark, SF_SMOKE).collect()
+    assert rows
+    n_events = load_table(spark, SF_SMOKE, "events").count()
+    assert sum(r["n_total"] for r in rows) == n_events
+    for r in rows:
+        assert r["n_total"] == r["n_accepted"] + r["n_dropped"]
+        if r["n_dropped"] == 0:
+            assert r["dropped_value"] is None
+        else:
+            assert r["dropped_value"] is not None
+
+
+# --------------------------------------------------------------------------
+# stream_rate_limit_backpressure: the batch replay vs a dense simulation
+
+
+def _dense_simulation(events_rows, cap):
+    """Reference Lindley simulation over a DENSE slot grid — the naive
+    form the closed-form replay must reproduce exactly."""
+    arr: dict[str, Counter] = {}
+    for r in events_rows:
+        days = (r["ts"].date() - datetime.date(2024, 1, 1)).days
+        slot = days * 24 + r["ts"].hour
+        arr.setdefault(r["event_type"], Counter())[slot] += 1
+    expected = {}
+    for key, counts in arr.items():
+        backlog = 0
+        for slot in range(min(counts), max(counts) + 1):
+            a = counts.get(slot, 0)
+            carry = backlog
+            admitted = min(carry + a, cap)
+            backlog = carry + a - admitted
+            if a > 0:
+                expected[(key, slot)] = (a, carry, admitted, backlog)
+    return expected
+
+
+@pytest.mark.parametrize("cap", [1, 3])
+def test_backpressure_replay_matches_dense_simulation(spark, cap):
+    from ecommerce_data_pipeline_spark.plans.events_plans import (
+        backpressure_replay,
+    )
+
+    events = load_table(spark, SF_SMOKE, "events")
+    got = {
+        (r["event_type"], r["slot"]): (
+            r["arrivals"],
+            r["carry_in"],
+            r["admitted"],
+            r["backlog"],
+        )
+        for r in backpressure_replay(events, cap=cap).collect()
+    }
+    expected = _dense_simulation(events.select("event_type", "ts").collect(), cap)
+    assert got == expected
